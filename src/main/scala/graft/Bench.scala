@@ -10,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     // ERROR, not WARN: the driver may merge stderr into stdout; a
     // stray WARN after the metric line would break a last-line parse
     spark.sparkContext.setLogLevel("ERROR")
@@ -71,7 +63,7 @@ object Bench {
     // on times scaled by the round's mean probe time.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 27, 1L, cpus.toInt)
+      spark.range(0L, 1L << 27, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id % 1000003)").collect()
       (System.nanoTime() - t0) / 1e9
     }

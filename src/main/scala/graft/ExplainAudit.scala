@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Plan audit main — prints the plan facts the 100 TB design claims:
@@ -17,10 +16,7 @@ object ExplainAudit {
   private var checked = 0
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     for (n <- Seq("q1_agg", "q3_topn", "q5_region", "q_discover", "q_manifest_delta")) {
@@ -267,13 +263,14 @@ object ExplainAudit {
       asPlan.contains("TakeOrdered"))
 
     // slice-overlap signatures: the one corpus-sized fold is the
-    // ObjectHashAggregate with a map-side partial pass; pairwise joins
-    // downstream are signature-sized with the pair list broadcast
+    // ObjectHashAggregate with a map-side partial pass; the pairing is
+    // a self-join of the one-row-per-source signature frame, broadcast
     val soPlan = operators.SliceOverlap.sliceOverlap(spark, d)
       .queryExecution.executedPlan.toString
-    flag("slice overlap: partial-agg signature fold + broadcast pair list",
+    flag("slice overlap: partial-agg signature fold + broadcast signature pairing",
       soPlan.contains("ObjectHashAggregate") &&
-        soPlan.contains("BroadcastHashJoin"))
+        soPlan.contains("BroadcastNestedLoopJoin") &&
+        !soPlan.contains("SortMergeJoin") && !soPlan.contains("CartesianProduct"))
 
     // round-5 closing invariants: the new breadth keeps the shapes
     val rpPlan = operators.RandProj
@@ -761,7 +758,7 @@ object ExplainAudit {
       codePlan.linesIterator.count(_.contains("FileScan")) == 1 &&
         !codePlan.contains("Generate") && !codePlan.contains("Join"))
 
-    val cropPlan = operators.MediaCrop.cropPairsRaw(
+    val cropPlan = operators.MediaCrop.cropPairs(
       Tables.mediaCropAug(spark, d)).queryExecution.executedPlan.toString
     // tiled detector keeps the MediaDedup shape: salted band self-join
     // (per-tile keys), payloads never in a cartesian

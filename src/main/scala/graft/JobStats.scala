@@ -17,15 +17,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object JobStats {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger

@@ -191,14 +191,7 @@ object ScaleExponents {
     val mLo = args.lift(0).map(_.toInt).getOrElse(2)
     val mHi = args.lift(1).map(_.toInt).getOrElse(16)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val rows = families.map { case (name, fam) =>
       val (tLo, tHi, e, nLo, nHi) = measure(spark, sfDir, fam, mLo, mHi)
@@ -220,14 +213,7 @@ object ScaleExponents {
     // optional CSV family filter (r11: re-measure one family on a
     // variant fixture — e.g. prefix_pairs on the open-vocabulary pair)
     val only = args.lift(4).map(_.split(',').map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val rows = realFamiliesAt(sfRatio)
       .filter { case (name, _, _) => only.forall(_.contains(name)) }

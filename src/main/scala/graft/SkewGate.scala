@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skewed-key rehearsal gate (r10 verdict item 4) — runs the salted
@@ -51,15 +51,7 @@ object SkewGate {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("testdata_sf1_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
 
@@ -99,7 +91,7 @@ object SkewGate {
       operators.Dedup.minhashPairs(docs).count()
     }
     run("prefix_pairs", gated = true) {
-      operators.PrefixJoin.prefixPairsRaw(docs).count()
+      operators.PrefixJoin.prefixPairs(docs).count()
     }
     run("para_fuzzy", gated = true) {
       operators.Scrub.paraFuzzyPairs(docs).count()

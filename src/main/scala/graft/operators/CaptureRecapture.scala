@@ -36,12 +36,8 @@ object CaptureRecapture {
 
   def captureRecapture(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.docsAug(s, d)
-    // raw (unsorted) pair pipelines: the catches feed a groupBy fold,
-    // so the declared queries' presentation orderBy would be a full
-    // pair-set sort the next exchange destroys (guide §2.4)
-    capOf(Dedup.minhashPairsRaw(Dedup.minhashSignatures(Dedup.shingleDocs(docs)))
-      .select(col("a_id"), col("b_id")),
-      Dedup.simhashPairsRaw(docs).select(col("a_id"), col("b_id")))
+    capOf(Dedup.minhashPairs(docs).select(col("a_id"), col("b_id")),
+      Dedup.simhashPairs(docs).select(col("a_id"), col("b_id")))
   }
 
   /** Chapman readout over two canonical (a_id, b_id) catch frames.

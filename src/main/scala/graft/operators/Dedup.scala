@@ -123,17 +123,9 @@ object Dedup {
   /** Verified near-dup pairs from a `(doc_id, sh, sig)` signature
     * table (persisted or storage-backed): 16 bands × 4 rows → salted
     * bucket self-join (the one shuffle, bare ids only) → exact-Jaccard
-    * verify ≥ 0.8 on unique candidates.
+    * verify ≥ 0.8 on unique candidates. Unordered.
     */
-  def minhashPairsFrom(sig: DataFrame): DataFrame =
-    minhashPairsRaw(sig).orderBy(col("a_id"), col("b_id"))
-
-  /** [[minhashPairsFrom]] without the final presentation sort — the
-    * form internal consumers ([[keep]]'s connected components) use:
-    * a global orderBy before a groupBy/join is a full-corpus sort the
-    * downstream exchange immediately destroys.
-    */
-  private[graft] def minhashPairsRaw(sig: DataFrame): DataFrame = {
+  def minhashPairsFrom(sig: DataFrame): DataFrame = {
     val cand = Skew.saltedSelfJoin(bandsOf(sig), "doc_id", Seq("band", "bsig"), LshSalt)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
@@ -281,7 +273,7 @@ object Dedup {
 
   private[graft] def sharedLabels(s: SparkSession, d: String): DataFrame =
     labelMemo.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
-      val pairs = minhashPairsRaw(minhashSignatures(shingleDocs(Tables.docsAug(s, d))))
+      val pairs = minhashPairs(Tables.docsAug(s, d))
         .select(col("a_id"), col("b_id")).persist()
       val labels = Components.fromPairs(pairs).localCheckpoint()
       pairs.unpersist()
@@ -317,17 +309,9 @@ object Dedup {
     * MAINTAINED, [[Components.mergePairs]]) label table — the last mile
     * of the weekly-ingest story: stored labels + this one left join =
     * the deduplicated corpus, with no pair recompute and no iteration.
+    * Unordered.
     */
   def keepFromLabels(nodes: DataFrame, labels: DataFrame): DataFrame =
-    keepFromLabelsRaw(nodes, labels).orderBy(col("doc_id"))
-
-  /** [[keepFromLabels]] without the presentation sort — for consumers
-    * that aggregate or re-sort the labeling anyway (a global orderBy
-    * feeding a crossJoin/groupBy is a full range exchange the next
-    * operator immediately destroys).
-    */
-  private[graft] def keepFromLabelsRaw(nodes: DataFrame,
-    labels: DataFrame): DataFrame =
     nodes
       .join(labels, col("doc_id") === labels("id"), "left_outer")
       .select(col("doc_id"),
@@ -615,17 +599,9 @@ object Dedup {
   /** 48-bit SimHash near-dup pairs (Hamming ≤ 3) over any
     * `(doc_id, text)` frame. 4 × 12-bit band blocking is exact for
     * Hamming ≤ 3 (pigeonhole: 3 differing bits can dirty at most 3 of
-    * 4 bands).
+    * 4 bands). Unordered.
     */
-  def simhashPairs(docs: DataFrame): DataFrame =
-    simhashPairsRaw(docs).orderBy(col("a_id"), col("b_id"))
-
-  /** [[simhashPairs]] without the final presentation sort — the form
-    * internal consumers ([[CaptureRecapture]]'s union-tag fold) use: a
-    * global orderBy feeding a groupBy is a full sort the downstream
-    * exchange immediately destroys.
-    */
-  private[graft] def simhashPairsRaw(docs: DataFrame): DataFrame = {
+  def simhashPairs(docs: DataFrame): DataFrame = {
     // Same barrier pattern as minhash: materialize md5 pairs once, then
     // the 48-bit signature once, before the band self-join.
     val paired = docs

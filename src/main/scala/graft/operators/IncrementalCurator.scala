@@ -41,15 +41,9 @@ object IncrementalCurator {
     */
   def init(spark: SparkSession, docs: DataFrame, sigTable: String,
     labelTable: String): Unit = {
-    // ONE shingle+minhash pass serves the table write AND the pair
-    // derivation (the ingest discipline applied to bootstrap): the old
-    // shape wrote the table, then re-read it to derive pairs — and paid
-    // SignatureStore.pairs' presentation sort, a full range exchange
-    // the CC groupBy immediately destroys (guide §2.4: an orderBy used
-    // only for output determinism is an accidental shuffle).
     val sig = Dedup.minhashSignatures(Dedup.shingleDocs(docs))
     SignatureStore.buildFromSignatures(sig, sigTable)
-    val pairs = Dedup.minhashPairsRaw(sig)
+    val pairs = Dedup.minhashPairsFrom(sig)
       .select(col("a_id"), col("b_id"))
     Components.fromPairs(pairs)
       .write.mode(SaveMode.Overwrite).saveAsTable(labelTable)
@@ -83,10 +77,7 @@ object IncrementalCurator {
     */
   def ingestSig(spark: SparkSession, newSig: DataFrame, newDocs: DataFrame,
     sigTable: String, labelTable: String): Unit = {
-    // raw (unsorted) pairs: they feed mergePairs' groupBy/joins, so the
-    // old presentation sort was a full range exchange paid per batch
-    // for nothing (guide §2.4)
-    val pairs = SignatureStore.incrementalPairsRawFrom(spark, newSig, sigTable)
+    val pairs = SignatureStore.incrementalPairsFrom(spark, newSig, sigTable)
       .select(col("a_id"), col("b_id")).localCheckpoint()
     val merged = Components.mergePairs(spark.table(labelTable), pairs)
       .localCheckpoint()
@@ -157,14 +148,8 @@ object IncrementalCurator {
     // the keeper frame feeds TWO consumers (the broadcast counts fold
     // and the readout rows) — persist so the second pass reuses the
     // first's work instead of re-running the distinct + label join
-    // (guide §5 caching note). The inner orderBy of curated() would be
-    // destroyed by the crossJoin and re-done below, so the readout
-    // uses the unsorted labeling (same rows; the final orderBy is the
-    // only sort the result needs).
-    val cur = Dedup.keepFromLabelsRaw(
-      SignatureStore.liveSignatures(s, sigT)
-        .select(col("doc_id")).distinct(),
-      s.table(lblT)).persist()
+    // (guide §5 caching note)
+    val cur = curated(s, sigT, lblT).persist()
     val counts = cur.agg(count(lit(1)).cast("long").as("n_docs"),
       sum((!col("is_kept")).cast("long")).cast("long").as("n_dropped"))
     val out = cur.crossJoin(broadcast(counts))

@@ -22,7 +22,7 @@ object IncrementalRunner {
     * PAGE_ID_FILTER, DRY_RUN) as a typed config. Limits are
     * deterministic (lowest ids win) and applied as pushed-down
     * filters/limits, not driver-side loops; dry-run builds the full
-    * plan and skips only the sink action.
+    * plan and writes nothing to the store.
     */
   case class Config(
     maxSources: Option[Int] = None,
@@ -82,7 +82,7 @@ object IncrementalRunner {
     run(s, d, path, Config())
 
   /** Configured run. `dryRun` returns the rows that WOULD be upserted
-    * (full plan, no sink action — the reference's dry-run prints what
+    * (full plan, no store write — the reference's dry-run prints what
     * it would upload); limits/filters prune the delta before any
     * chunking happens, so a capped run does capped work.
     */
@@ -107,8 +107,8 @@ object IncrementalRunner {
     *
     * Scale: the sink rewrites only delta partitions; the readback
     * groups by the partition key (src_id), so the census shuffle is
-    * partition-aligned; stats are four aggregate actions over
-    * already-classified frames.
+    * partition-aligned; stats are `observe()` metrics on the upsert
+    * write.
     *
     * The query runs a deterministic 1-in-[[E2eMod]] SOURCE SUBSET:
     * the pipeline is per-source independent, so the subset exercises
@@ -200,68 +200,56 @@ object IncrementalRunner {
     * failed and excluded from chunking — the run completes like the
     * reference's skip-and-continue loop, it doesn't abort.
     *
-    * Stats collection (optimization guide §1.4/§5 — fewer actions, no
-    * driver loops): in the sink path every counter rides the ONE
-    * upsert write as an `observe()` metric — `skipped` on the
+    * Every counter rides the ONE sink write as an `observe()` metric
+    * (optimization guide §1.4/§5 — no extra actions): `skipped` on the
     * classified frame (all rows flow through the node; the
     * needs_vector filter sits above it), `processed`/`failed` on the
-    * delta⋈docs join, `vectorizedChunks` on the chunk rows. The old
-    * shape paid three extra full passes (two over the classified
-    * join, one re-running the whole chunker for `rows.count()`).
-    * Values are identical: the same frames feed the same aggregates.
-    * `maxSources` falls back to eager counts — its `limit` can stop
-    * consuming input early, which would undercount flow-through
-    * metrics; dry-run has no sink action to observe.
+    * delta⋈docs join, `vectorizedChunks` on the chunk rows.
+    * `maxSources`' `orderBy(id).limit(n)` sits above a sort that drains
+    * its input, so `skipped` still sees every classified row. Dry-run
+    * swaps only the sink: the join is written to `noop` instead of the
+    * chunk rows to the store, so no chunk is counted.
     */
   def runWithStats(s: SparkSession, d: String, path: String,
     cfg: Config = Config()): (DataFrame, RunStats) = {
     val classified0 = Etl.manifestDelta(s, d)
-    val classifiedF = cfg.snapshotFilter.map(classified0.filter)
-      .getOrElse(classified0)
     val bad = col("text").isNull || trim(col("text")) === ""
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    if (!cfg.dryRun && cfg.maxSources.isEmpty) {
-      val obsC = org.apache.spark.sql.Observation()
-      val obsJ = org.apache.spark.sql.Observation()
-      val obsR = org.apache.spark.sql.Observation()
-      val classified = classifiedF.observe(obsC,
-        sum((!col("needs_vector")).cast("long")).as("skipped"))
-      var delta = classified.filter(col("needs_vector"))
-        .select(col("id"), col("content_hash"))
-      cfg.sourceFilter.foreach(p => delta = delta.filter(p))
-      val joined = delta.join(docs, delta("id") === docs("doc_id"), "left_outer")
-        .observe(obsJ, count(lit(1)).as("n"),
-          sum(bad.cast("long")).as("failed"))
-      val good = joined.filter(!bad)
-        .select(col("id"), col("content_hash"))
-      val rows = vectorRows(s, d, good)
-        .observe(obsR, count(lit(1)).as("n_chunks"))
-      VectorStoreWriter.upsert(rows, path)
-      val store = VectorStoreWriter.read(s, path)
-      def m(o: org.apache.spark.sql.Observation, k: String): Long =
-        o.get(k) match { case null => 0L; case v => v.asInstanceOf[Long] }
-      val failed = m(obsJ, "failed")
-      (store, RunStats(m(obsJ, "n") - failed, m(obsC, "skipped"), failed,
-        m(obsR, "n_chunks")))
-    } else {
-      var delta = classifiedF.filter(col("needs_vector"))
-        .select(col("id"), col("content_hash"))
-      cfg.sourceFilter.foreach(p => delta = delta.filter(p))
-      cfg.maxSources.foreach(n => delta = delta.orderBy(col("id")).limit(n))
-      val joined = delta.join(docs, delta("id") === docs("doc_id"), "left_outer")
-      val failed = joined.filter(bad).count()
-      val good = joined.filter(!bad)
-        .select(col("id"), col("content_hash"))
-      val rows = vectorRows(s, d, good)
-      val skipped = classifiedF.filter(!col("needs_vector")).count()
-      val processed = joined.count() - failed
-      if (cfg.dryRun) (rows, RunStats(processed, skipped, failed, 0L))
-      else {
+    val obsC = org.apache.spark.sql.Observation()
+    val obsJ = org.apache.spark.sql.Observation()
+    val obsR = org.apache.spark.sql.Observation()
+    val classified = cfg.snapshotFilter.map(classified0.filter)
+      .getOrElse(classified0)
+      .observe(obsC, sum((!col("needs_vector")).cast("long")).as("skipped"))
+    var delta = classified.filter(col("needs_vector"))
+      .select(col("id"), col("content_hash"))
+    cfg.sourceFilter.foreach(p => delta = delta.filter(p))
+    cfg.maxSources.foreach(n => delta = delta.orderBy(col("id")).limit(n))
+    val joined = delta.join(docs, delta("id") === docs("doc_id"), "left_outer")
+      .observe(obsJ, count(lit(1)).as("n"), sum(bad.cast("long")).as("failed"))
+    val good = joined.filter(!bad)
+      .select(col("id"), col("content_hash"))
+    val rows = vectorRows(s, d, good)
+      .observe(obsR, count(lit(1)).as("n_chunks"))
+    val out =
+      if (cfg.dryRun) {
+        joined.write.format("noop").mode("overwrite").save()
+        rows
+      } else {
         VectorStoreWriter.upsert(rows, path)
-        val store = VectorStoreWriter.read(s, path)
-        val nChunks = rows.count()
-        (store, RunStats(processed, skipped, failed, nChunks))
+        VectorStoreWriter.read(s, path)
       }
-    }
+    // AQE drops a finished stage whose join partner came up empty, and
+    // an observed node inside it reports nothing: count that one again
+    def m(o: org.apache.spark.sql.Observation, k: String)(recount: => Long): Long =
+      o.get.get(k) match {
+        case None => recount
+        case Some(v: Long) => v
+        case Some(_) => 0L // a sum over no rows
+      }
+    val failed = m(obsJ, "failed")(joined.filter(bad).count())
+    val skipped = m(obsC, "skipped")(classified.filter(!col("needs_vector")).count())
+    (out, RunStats(m(obsJ, "n")(joined.count()) - failed, skipped, failed,
+      if (cfg.dryRun) 0L else m(obsR, "n_chunks")(0L)))
   }
 }

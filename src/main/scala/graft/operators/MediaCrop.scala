@@ -74,8 +74,9 @@ object MediaCrop {
 
   /** Qualifying pairs `(a_id, b_id, tiles_matched)` — ≥ [[VoteK]]
     * same-position tiles within Hamming ≤ [[MediaDedup.MaxHamming]].
+    * Unordered.
     */
-  private[graft] def cropPairsRaw(media: DataFrame): DataFrame = {
+  def cropPairs(media: DataFrame): DataFrame = {
     val sigs = tileSignatures(media)
     val bandCols = (0 until MediaDedup.Bands).map { b =>
       struct(lit(b).as("band"),
@@ -105,7 +106,7 @@ object MediaCrop {
     * qualifies via its preserved end's two byte-identical tiles.
     */
   def mediaCrop(s: SparkSession, d: String): DataFrame =
-    cropPairsRaw(Tables.mediaCropAug(s, d))
+    cropPairs(Tables.mediaCropAug(s, d))
       .orderBy(col("a_id"), col("b_id"))
 
   val mediaCropSql: String = {

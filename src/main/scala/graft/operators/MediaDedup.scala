@@ -50,17 +50,10 @@ object MediaDedup {
       .select(col("media_id"), DHash64.dhash64(col("payload")).as("sig"))
 
   /** Near-dup pairs `(a_id, b_id, hamming)` with Hamming ≤
-    * [[MaxHamming]] over any `(media_id, payload binary)` frame.
+    * [[MaxHamming]] over any `(media_id, payload binary)` frame,
+    * unordered.
     */
-  def nearDupPairs(media: DataFrame): DataFrame =
-    nearDupPairsRaw(media).orderBy(col("a_id"), col("b_id"))
-
-  /** [[nearDupPairs]] without the final presentation sort — the form
-    * internal consumers (survivor labeling) use (the
-    * [[Dedup.minhashPairsRaw]] rule: a global sort before a groupBy is
-    * a full sort the next exchange destroys).
-    */
-  private[graft] def nearDupPairsRaw(media: DataFrame): DataFrame = {
+  def nearDupPairs(media: DataFrame): DataFrame = {
     val sigs = signatures(media)
     val bandCols = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
@@ -88,7 +81,7 @@ object MediaDedup {
   def mediaKeep(s: SparkSession, d: String): DataFrame =
     Dedup.keepFrom(
       Tables.mediaAug(s, d).select(col("media_id").as("doc_id")),
-      nearDupPairsRaw(Tables.mediaAug(s, d)).select(col("a_id"), col("b_id")))
+      nearDupPairs(Tables.mediaAug(s, d)).select(col("a_id"), col("b_id")))
       .select(col("doc_id").as("media_id"), col("keep_id"), col("is_kept"))
 
   /** q_media_neardup — [[nearDupPairs]] on the perceptual-dup-injected
@@ -112,7 +105,7 @@ object MediaDedup {
     val media = Tables.mediaAug(s, d)
     val keep = Dedup.keepFrom(
       media.select(col("media_id").as("doc_id")),
-      nearDupPairsRaw(media).select(col("a_id"), col("b_id")))
+      nearDupPairs(media).select(col("a_id"), col("b_id")))
     val bytes = media.select(col("media_id").as("doc_id"),
       octet_length(col("payload")).cast("long").as("n_bytes"))
     val clusters = keep.join(bytes, "doc_id")

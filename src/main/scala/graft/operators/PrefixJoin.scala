@@ -53,12 +53,12 @@ object PrefixJoin {
   val TauDen = 5
 
   /** Complete τ-similar pairs `(a_id, b_id, jaccard)` of any
-    * `(doc_id, text)` frame, without the presentation sort.
+    * `(doc_id, text)` frame, unordered.
     */
-  def prefixPairsRaw(docs: DataFrame): DataFrame =
+  def prefixPairs(docs: DataFrame): DataFrame =
     prefixPairsFromShingles(Dedup.shingleDocs(docs).persist())
 
-  /** [[prefixPairsRaw]] over an already-shingled (ideally persisted)
+  /** [[prefixPairs]] over an already-shingled (ideally persisted)
     * `(doc_id, sh)` frame — the shared-barrier entry
     * [[detectorEval]] uses so the detector and the truth join pay the
     * shingle pass ONCE.
@@ -91,10 +91,6 @@ object PrefixJoin {
       .distinct()
     Dedup.verifyJaccard(cand, sh.select(col("doc_id"), col("sh")))
   }
-
-  /** [[prefixPairsRaw]] with the `(a_id, b_id)` presentation sort. */
-  def prefixPairs(docs: DataFrame): DataFrame =
-    prefixPairsRaw(docs).orderBy(col("a_id"), col("b_id"))
 
   /** q_dedup_prefix — the complete τ=0.8 pair set on the dup-injected
     * corpus (the exact counterpart of `q_dedup_minhash`).
@@ -176,7 +172,7 @@ object PrefixJoin {
     val sh = Dedup.shingleDocs(docs).persist()
     val truth = prefixPairsFromShingles(sh)
       .select(col("a_id"), col("b_id")).persist()
-    val det = Dedup.minhashPairsRaw(Dedup.minhashSignatures(sh))
+    val det = Dedup.minhashPairsFrom(Dedup.minhashSignatures(sh))
       .select(col("a_id"), col("b_id")).persist()
     val hit = det.join(truth, Seq("a_id", "b_id"), "left_semi")
     truth.agg(count(lit(1)).cast("long").as("n_truth"))

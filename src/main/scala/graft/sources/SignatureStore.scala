@@ -124,25 +124,13 @@ object SignatureStore {
     * uses so one shingle+minhash pass serves both the pair derivation
     * and the store append (computing it twice doubled the dominant
     * batch-side cost, measured in the curator rehearsal stage).
+    * Unordered.
     */
   def incrementalPairsFrom(spark: SparkSession, newSig: DataFrame,
     table: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    incrementalPairsRawFrom(spark, newSig, table)
-      .orderBy(col("a_id"), col("b_id"))
-  }
-
-  /** [[incrementalPairsFrom]] without the presentation sort — the
-    * [[Dedup.minhashPairsRaw]] discipline: a consumer that feeds the
-    * pairs straight into a groupBy/join (the curator's label merge)
-    * must not pay a full range exchange + sort the next operator
-    * immediately destroys.
-    */
-  def incrementalPairsRawFrom(spark: SparkSession, newSig: DataFrame,
-    table: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val oldSig = liveSignatures(spark, table)
-    val newNew = Dedup.minhashPairsRaw(newSig)
+    val newNew = Dedup.minhashPairsFrom(newSig)
     val cand = Dedup.bandsOf(oldSig).as("o")
       .join(broadcast(Dedup.bandsOf(newSig).as("n")), Seq("band", "bsig"))
       .select(least(col("o.doc_id"), col("n.doc_id")).as("a_id"),

@@ -29,17 +29,9 @@ object VectorStoreWriter {
     * `delta`, keep every other partition as-is. Idempotent — re-running
     * the same delta rewrites the same partitions to the same bytes.
     */
-  def upsert(delta: DataFrame, path: String): Unit = {
-    val spark = delta.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try delta.write.partitionBy("src_id").mode("overwrite").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def upsert(delta: DataFrame, path: String): Unit =
+    delta.write.partitionBy("src_id").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

@@ -32,7 +32,7 @@ class MediaCropSpec extends AnyFunSuite {
       .toSet
     assert(planted.size >= 20, s"fixture too small: ${planted.size} plants")
 
-    val tiled = MediaCrop.cropPairsRaw(media)
+    val tiled = MediaCrop.cropPairs(media)
       .select(col("a_id"), col("b_id")).as[(Long, Long)].collect().toSet
     val missedByTiled = planted.filterNot(tiled)
     assert(missedByTiled.isEmpty,
@@ -59,7 +59,7 @@ class MediaCropSpec extends AnyFunSuite {
     val hamming = java.lang.Long.bitCount(wholeH(1L) ^ wholeH(2L))
     assert(hamming > MediaDedup.MaxHamming,
       s"whole-image Hamming $hamming — crop did not break the fixed-grid hash")
-    val pairs = MediaCrop.cropPairsRaw(df)
+    val pairs = MediaCrop.cropPairs(df)
       .as[(Long, Long, Long)].collect()
     assert(pairs.length == 1 && pairs.head._1 == 1L && pairs.head._2 == 2L)
     assert(pairs.head._3 >= MediaCrop.VoteK,
@@ -70,6 +70,6 @@ class MediaCropSpec extends AnyFunSuite {
     val a = Array.tabulate(600)(i => ((i * 7) % 256).toByte)
     val b = Array.tabulate(600)(i => ((i * 11 + 3) % 256).toByte)
     val df = Seq((1L, a), (2L, b)).toDF("media_id", "payload")
-    assert(MediaCrop.cropPairsRaw(df).count() == 0L)
+    assert(MediaCrop.cropPairs(df).count() == 0L)
   }
 }

@@ -136,6 +136,36 @@ class ScaleSpec extends AnyFunSuite {
     assert(full == direct)
   }
 
+  test("library pair and label functions return unordered frames (no global Sort)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import operators.{Dedup, MediaCrop, MediaDedup, PrefixJoin}
+    val docs = Tables.docsAug(spark, sf).select(col("doc_id"), col("text"))
+    val media = Tables.mediaAug(spark, sf)
+    graft.sources.SignatureStore.build(docs.filter(col("doc_id") % 2 === 0),
+      "sig_store_unordered", buckets = 4)
+    val newSig = Dedup.minhashSignatures(Dedup.shingleDocs(
+      docs.filter(col("doc_id") % 2 =!= 0)))
+    val labels = Seq((2L, 1L)).toDF("id", "lbl")
+    val frames: Seq[(String, DataFrame)] = Seq(
+      "minhashPairsFrom" -> Dedup.minhashPairsFrom(
+        Dedup.minhashSignatures(Dedup.shingleDocs(docs))),
+      "simhashPairs" -> Dedup.simhashPairs(docs),
+      "keepFromLabels" -> Dedup.keepFromLabels(docs.select(col("doc_id")), labels),
+      "prefixPairs" -> PrefixJoin.prefixPairs(docs),
+      "nearDupPairs" -> MediaDedup.nearDupPairs(media),
+      "incrementalPairsFrom" -> graft.sources.SignatureStore
+        .incrementalPairsFrom(spark, newSig, "sig_store_unordered"),
+      "cropPairs" -> MediaCrop.cropPairs(Tables.mediaCropAug(spark, sf)))
+    frames.foreach { case (name, df) =>
+      val sorts = df.queryExecution.optimizedPlan.collect {
+        case s: Sort if s.global => s
+      }
+      assert(sorts.isEmpty, s"$name ends in a global sort:\n${df.queryExecution.optimizedPlan}")
+    }
+    spark.sql("DROP TABLE IF EXISTS sig_store_unordered")
+  }
+
   test("vocab head cut compiles to a partial top-k merge, not a global sort") {
     val plan = operators.Corpus.vocab(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),

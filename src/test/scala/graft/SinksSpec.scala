@@ -119,6 +119,26 @@ class SinksSpec extends AnyFunSuite {
       IncrementalRunner.Config(dryRun = true))
     assert(dry.processed == stats.processed && dry.failed == stats.failed &&
       dry.skipped == stats.skipped && dry.vectorizedChunks == 0)
+    // capped real run into a fresh store: the limit caps processed +
+    // failed, skipped still counts every classified row
+    val k = deltaIds.size - 1
+    val capped = deltaIds.toSeq.sorted.take(k)
+    val store2 = Files.createTempDirectory("accstore").toString + "/store"
+    IncrementalRunner.initStore(spark, dataDir, store2)
+    val (storeDf2, cap) = IncrementalRunner.runWithStats(spark, dataDir, store2,
+      IncrementalRunner.Config(maxSources = Some(k)))
+    val capFailed = capped.count(_ % 7 == 0)
+    assert(cap.processed + cap.failed == math.min(k, deltaIds.size))
+    assert(cap.failed == capFailed && cap.processed == k - capFailed)
+    assert(cap.skipped == 20 - deltaIds.size)
+    val cappedGood = capped.filter(_ % 7 != 0)
+    val upserted2 = storeDf2.filter(col("src_id").isin(cappedGood: _*)).count()
+    assert(cap.vectorizedChunks == upserted2 && upserted2 > 0)
+    // a filter that selects no source: nothing processed, and every
+    // unchanged source still counts as skipped
+    val (_, none) = IncrementalRunner.runWithStats(spark, dataDir, store2,
+      IncrementalRunner.Config(sourceFilter = Some(col("id") < 0)))
+    assert(none == IncrementalRunner.RunStats(0, 20 - deltaIds.size, 0, 0))
   }
 
   test("missing manifest loads empty and classifies everything new (first run)") {

@@ -88,13 +88,7 @@ object IncrementalCurator {
     // newSig are both materialized/cached BEFORE this point, so
     // neither chain lazily reads state the other mutates.
     Concurrently.both(
-      {
-        // swap, not in-place overwrite: the crash-safe table-replace
-        // discipline of SignatureStore.compactTombstones
-        merged.write.mode(SaveMode.Overwrite).saveAsTable(s"${labelTable}_next")
-        spark.sql(s"DROP TABLE $labelTable")
-        spark.sql(s"ALTER TABLE ${labelTable}_next RENAME TO $labelTable")
-      },
+      SignatureStore.replaceTable(spark, labelTable, merged.write),
       SignatureStore.appendSignatures(newSig, newDocs, sigTable))
     ()
   }

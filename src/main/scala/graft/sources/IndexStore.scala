@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   *  - `lists/`     — `(vec_id, codes, rec_nrm)` partitioned by `cent_id`:
   *                   the resident set, 8 bytes of codes + one double per
   *                   vector instead of d floats
+  *  - `lists_g<n>/` — the same table rewritten by [[compact]] as
+  *                   generation n; readers serve the highest sealed
+  *                   generation ([[Generations]])
   *  - `centroids/` — `(cent_id, c_emb, c_nrm)`: nlist rows, the coarse
   *                   quantizer (driver-resident at probe time, the
   *                   [[graft.functions.NearestCentroids]] contract)
@@ -64,7 +67,7 @@ object IndexStore {
       if (opq && !fullOpq) OPQ.fitPermutation(v0, dim, m)
       else Array.tabulate(dim)(identity)
     // a REBUILD at a previously-used path must not inherit stale
-    // layout state: without this, an old gen/ pointer would keep
+    // layout state: without this, an old sealed lists_g<n> would keep
     // serving a compacted generation encoded by the OLD quantizers,
     // and a leftover rot/ would rotate queries the new codes were
     // never encoded under
@@ -134,12 +137,11 @@ object IndexStore {
               KMeansVec.assign(e, t).withColumnRenamed("cent_id", "top_id"), bc)
           case None => KMeansVec.assign(e, cents)
         }
-        PQ.encodeFromRows(
+        Lists.write(PQ.encodeFromRows(
           assigned.select(col("vec_id"), col("cent_id"), col("embedding")),
           perSub, dim, passthrough = Seq("cent_id"))
           .withColumn("rec_nrm", PQ.recNorm(col("codes"), books))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("cent_id").parquet(s"$path/lists")
+          .write.partitionBy("cent_id"), path, 0L)
       })
     graft.operators.Concurrently(writes)(_.apply())
   }
@@ -200,45 +202,28 @@ object IndexStore {
         OPQ.rotate(col("embedding"), rot).as("embedding"))
     else maybePermute(v, perm)
 
-  /** Current list-table generation. Generation 0 is the `lists/` dir
-    * written by [[build]]; each [[compact]] writes a fresh
-    * `lists_g<n>/` dir and flips the `gen/` pointer. The pointer is
-    * the ONLY object ever mutated after a generation is sealed — no
-    * renames, no in-place rewrites — so the scheme survives object
-    * stores where directory renames are neither atomic nor cheap.
-    * A missing pointer table means a never-compacted index.
-    */
-  def currentGen(spark: SparkSession, path: String): Long = {
-    val genPath = new org.apache.hadoop.fs.Path(s"$path/gen")
-    val fs = genPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(genPath))
-      spark.read.parquet(s"$path/gen").head().getAs[Long]("gen")
-    else 0L
-  }
+  private val Lists = Generations("lists")
 
-  private def listsDir(path: String, gen: Long): String =
-    if (gen == 0L) s"$path/lists" else s"$path/lists_g$gen"
-
-  /** Remove generation pointer, sealed generations, and any stored
-    * input transform — everything [[build]] does not itself rewrite.
-    * The fresh build then starts at generation 0 with only its own
-    * geometry on disk.
+  /** Current list-table generation: the highest sealed one of the
+    * `lists/` dir written by [[build]] (generation 0) and the
+    * `lists_g<n>/` dirs each [[compact]] writes. No pointer object, no
+    * renames — so the scheme survives object stores where directory
+    * renames are neither atomic nor cheap.
     */
-  private def resetLayout(spark: SparkSession, path: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base))
-      fs.listStatus(base).map(_.getPath).foreach { p =>
-        val n = p.getName
-        if (n == "gen" || n == "rot" || n == "nbrs" || n == "topcents" ||
-          n.startsWith("lists_g"))
-          fs.delete(p, true)
-      }
-  }
+  def currentGen(spark: SparkSession, path: String): Long =
+    Lists.current(spark, path)
+
+  /** Remove compacted generations and any stored input transform —
+    * everything [[build]] does not itself rewrite. The fresh build
+    * then starts at generation 0 with only its own geometry on disk.
+    */
+  private def resetLayout(spark: SparkSession, path: String): Unit =
+    Generations.reset(spark, path, Seq(Lists),
+      Set("rot", "nbrs", "topcents"))
 
   /** The current generation's list-table directory. */
   def listsPath(spark: SparkSession, path: String): String =
-    listsDir(path, currentGen(spark, path))
+    Lists.dir(path, currentGen(spark, path))
 
   /** The stored PQ codebooks as `(cent_id, c_emb, c_nrm)` frames, one
     * per subspace — the shape [[PQ.encode]] consumes. `c_nrm` is
@@ -377,13 +362,8 @@ object IndexStore {
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cent_id").parquet(lp)
-    // a fully-emptied list writes no partition, so dynamic overwrite
-    // leaves its old files in place — drop those directories directly
-    val fs = new org.apache.hadoop.fs.Path(lp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.filterNot(keptCents).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$lp/cent_id=$c"), true)
-    }
+    Generations.dropPartitions(spark, lp, "cent_id",
+      affected.filterNot(keptCents))
     affected.length.toLong
   }
 
@@ -394,7 +374,7 @@ object IndexStore {
     * offline maintenance job of the index lifecycle: one shuffle of the
     * CODE rows (8 code bytes + a norm per vector — the point of PQ is
     * that this is ~30× narrower than the corpus) into exactly one task
-    * per list, written as generation `n+1`, then the pointer flip.
+    * per list, sealed as generation `n+1` by the write's commit.
     * Serving is never interrupted: an open [[Handle]] keeps reading its
     * pinned generation; the next [[open]]/[[search]]/[[append]] sees
     * the compacted one. Old generations are reclaimed by [[vacuum]].
@@ -402,8 +382,8 @@ object IndexStore {
     * WRITER CONTRACT: compaction and ingest must be serialized by the
     * caller (pause the append/streaming job, or run [[maintain]] from
     * the same scheduler slot that owns ingest). A batch appended to
-    * generation n after the rewrite's snapshot but before the pointer
-    * flip would be absent from n+1 and lost once n is vacuumed —
+    * generation n after the rewrite's snapshot but before n+1 seals
+    * would be absent from n+1 and lost once n is vacuumed —
     * the standard single-writer rule of every external-compaction
     * store; readers need no coordination.
     *
@@ -411,13 +391,10 @@ object IndexStore {
     */
   def compact(spark: SparkSession, path: String): Long = {
     val next = currentGen(spark, path) + 1L
-    spark.read.parquet(listsDir(path, next - 1))
+    Lists.write(spark.read.parquet(Lists.dir(path, next - 1))
       .select(col("cent_id"), col("vec_id"), col("codes"), col("rec_nrm"))
       .repartition(col("cent_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cent_id").parquet(listsDir(path, next))
-    spark.range(1).select(lit(next).as("gen"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/gen")
+      .write.partitionBy("cent_id"), path, next)
     next
   }
 
@@ -431,31 +408,17 @@ object IndexStore {
     */
   def maintain(spark: SparkSession, path: String,
     maxFilesPerList: Int = 8): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(listsPath(spark, path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val over = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cent_id="))
-      .exists(d => fs.listStatus(d.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerList)
-    if (over) Some(compact(spark, path)) else None
+    if (Generations.overFileBudget(spark, listsPath(spark, path), "cent_id",
+      maxFilesPerList)) Some(compact(spark, path))
+    else None
   }
 
   /** Delete list generations older than the current one. Separate from
     * [[compact]] so operators control the grace window for readers
     * still pinned (via an open [[Handle]]) to a sealed generation.
     */
-  def vacuum(spark: SparkSession, path: String): Unit = {
-    val cur = currentGen(spark, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(base).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val stale = (n == "lists" && cur > 0L) ||
-        (n.startsWith("lists_g") &&
-          n.stripPrefix("lists_g").toLongOption.exists(_ < cur))
-      if (stale) fs.delete(p, true)
-    }
-  }
+  def vacuum(spark: SparkSession, path: String): Unit =
+    Lists.dropBelow(spark, path, currentGen(spark, path))
 
   /** Materialize the scan-shaped "graph-lite" side table: each
     * vector's top-`r` ADC neighbors ACROSS lists, as
@@ -925,16 +888,14 @@ object IndexStore {
     * the sealed-generation layout gives for free: a sealed lists dir
     * is immutable, so serving yesterday's index during a staged
     * rollout (or reproducing a result against the exact generation
-    * that produced it) is just opening gen n-1 while ingest moves the
-    * pointer forward. Only generations not yet reclaimed by [[vacuum]]
+    * that produced it) is just opening gen n-1 while compaction seals
+    * newer ones. Only sealed generations not yet reclaimed by [[vacuum]]
     * are openable — vacuum defines the retention window.
     */
   def openAt(spark: SparkSession, path: String, gen: Long): Handle = {
-    val ld = listsDir(path, gen)
-    val fs = new org.apache.hadoop.fs.Path(ld)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(ld)),
-      s"generation $gen of $path does not exist (vacuumed, or never sealed)")
+    require(Lists.isSealed(spark, path, gen),
+      s"generation $gen of $path is not sealed (vacuumed, torn, or never written)")
+    val ld = Lists.dir(path, gen)
     val metaDf = spark.read.parquet(s"$path/meta")
     val metaRow = metaDf.head()
     val dim = metaRow.getAs[Int]("dim")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.{Md5Buckets, Md5Kit, TextSim}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *     row (+8 bytes each): BM25's length normalization then needs no
   *     side table, so a query never touches a corpus-sized frame.
   *   - `stats_g<n>/` — one row `(n_docs, dl_sum, last_batch)`. Each
-  *     writer seals a NEW generation; readers take the highest one
-  *     whose `_SUCCESS` marker exists. Nothing is ever overwritten,
-  *     so a crash mid-write leaves an unsealed dir that readers skip
-  *     — stats are at worst stale by one batch, never absent.
+  *     writer seals a NEW generation; readers take the highest sealed
+  *     one ([[Generations]]), so a crash mid-write leaves an unsealed
+  *     dir that readers skip — stats are at worst stale by one batch,
+  *     never absent.
   *   - `commits/b<id>` — empty marker files recording fully-applied
   *     streaming batch ids (the replay guard for [[append]]).
   *   - `meta/` — the store-owned bucket spec (`n_buckets`).
@@ -49,8 +49,8 @@ object PostingsStore {
   val B = graft.operators.Relevance.B
   val DefaultBuckets = 64
 
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val Postings = Generations("postings")
+  private val Stats = Generations("stats", bareZero = false)
 
   /** `(doc_id, t)` token arrays; empty docs dropped (they carry no
     * postings and would only distort avgdl).
@@ -72,70 +72,32 @@ object PostingsStore {
       .withColumn("bkt",
         element_at(Md5Buckets.salted(array(col("term")), "", nBuckets.toLong), 1))
 
-  /** Highest generation of `<zero>/` | `<prefix><n>/` dirs sealed by a
-    * `_SUCCESS` marker. The marker-based convention (vs a mutable
-    * pointer object) means NO object in the store is ever rewritten:
-    * a torn write can only produce an unsealed dir readers ignore.
-    */
-  private def sealedGen(spark: SparkSession, path: String,
-    zero: Option[String], prefix: String): Option[Long] = {
-    val base = new Path(path)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(base)) None
-    else {
-      val gens = fs.listStatus(base).map(_.getPath).flatMap { p =>
-        val n = p.getName
-        val g =
-          if (zero.contains(n)) Some(0L)
-          else if (n.startsWith(prefix)) n.stripPrefix(prefix).toLongOption
-          else None
-        g.filter(_ => fs.exists(new Path(p, "_SUCCESS")))
-      }
-      if (gens.isEmpty) None else Some(gens.max)
-    }
-  }
-
   /** Current postings generation (0 = the `postings/` dir from
     * [[build]]; `postings_g<n>` from [[compact]]).
     */
   def currentGen(spark: SparkSession, path: String): Long =
-    sealedGen(spark, path, Some("postings"), "postings_g").getOrElse(0L)
-
-  private def postingsDir(path: String, gen: Long): String =
-    if (gen == 0L) s"$path/postings" else s"$path/postings_g$gen"
+    Postings.current(spark, path)
 
   /** The current generation's postings directory. */
   def postingsPath(spark: SparkSession, path: String): String =
-    postingsDir(path, currentGen(spark, path))
-
-  private def currentStatsGen(spark: SparkSession, path: String): Long =
-    sealedGen(spark, path, None, "stats_g").getOrElse(
-      sys.error(s"no sealed stats generation under $path — not a postings store"))
+    Postings.dir(path, currentGen(spark, path))
 
   private def readStats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/stats_g${currentStatsGen(spark, path)}")
+    spark.read.parquet(Stats.dir(path, Stats.current(spark, path)))
 
   private def writeStatsGen(spark: SparkSession, path: String,
     nDocs: Long, dlSum: Long, lastBatch: Long, gen: Long): Unit = {
     import spark.implicits._
-    Seq((nDocs, dlSum, lastBatch)).toDF("n_docs", "dl_sum", "last_batch")
-      .coalesce(1).write.parquet(s"$path/stats_g$gen")
+    Stats.write(Seq((nDocs, dlSum, lastBatch))
+      .toDF("n_docs", "dl_sum", "last_batch").coalesce(1).write, path, gen)
   }
 
-  /** Drop sealed stats generations older than `current - 1` (one
-    * grace generation for readers that resolved the gen just before a
+  /** Drop stats generations older than `current - 1` (one grace
+    * generation for readers that resolved the gen just before a
     * writer sealed a new one).
     */
-  private def pruneStatsGens(spark: SparkSession, path: String): Unit = {
-    val cur = currentStatsGen(spark, path)
-    val fs = fsOf(spark, path)
-    fs.listStatus(new Path(path)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith("stats_g") &&
-        n.stripPrefix("stats_g").toLongOption.exists(_ < cur - 1))
-        fs.delete(p, true)
-    }
-  }
+  private def pruneStatsGens(spark: SparkSession, path: String): Unit =
+    Stats.dropBelow(spark, path, Stats.current(spark, path) - 1L)
 
   private def markerPath(path: String, batchId: Long): Path =
     new Path(s"$path/commits/b$batchId")
@@ -144,33 +106,25 @@ object PostingsStore {
     * [[append]], so a present marker proves postings + stats landed).
     */
   def committed(spark: SparkSession, path: String, batchId: Long): Boolean =
-    fsOf(spark, path).exists(markerPath(path, batchId))
+    Generations.fsOf(spark, path).exists(markerPath(path, batchId))
 
   private def writeMarker(spark: SparkSession, path: String,
     batchId: Long): Unit = {
-    val fs = fsOf(spark, path)
+    val fs = Generations.fsOf(spark, path)
     val p = markerPath(path, batchId)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
     out.close()
   }
 
-  /** Everything [[build]]'s own overwrites don't cover: compacted
-    * postings generations, stats generations, commit markers. Without
+  /** Everything [[build]]'s own overwrites don't cover: postings and
+    * stats generations above 0, commit markers. Without
     * this a rebuild would leave a stale higher generation shadowing
     * the fresh one.
     */
-  private def resetLayout(spark: SparkSession, path: String): Unit = {
-    val base = new Path(path)
-    val fs = fsOf(spark, path)
-    if (fs.exists(base))
-      fs.listStatus(base).map(_.getPath).foreach { p =>
-        val n = p.getName
-        if (n.startsWith("postings_g") || n.startsWith("stats_g") ||
-          n == "commits" || n == "doclens")
-          fs.delete(p, true)
-      }
-  }
+  private def resetLayout(spark: SparkSession, path: String): Unit =
+    Generations.reset(spark, path, Seq(Postings, Stats),
+      Set("commits", "doclens"))
 
   /** Corpus stats ride the postings write as an `observe()` metric on
     * the token frame (every tokenized row flows through the node on
@@ -192,8 +146,8 @@ object PostingsStore {
     val spark = docs.sparkSession
     resetLayout(spark, path)
     val (toks, obs) = statsObs(tokenize(docs))
-    postingsOf(toks, nBuckets)
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$path/postings")
+    Postings.write(postingsOf(toks, nBuckets).write.partitionBy("bkt"),
+      path, 0L)
     writeStatsGen(spark, path, obsLong(obs, "n_docs"), obsLong(obs, "dl_sum"),
       lastBatch = -1L, gen = 0L)
     // the bucket spec is part of the STORE, not a caller argument:
@@ -239,7 +193,7 @@ object PostingsStore {
     batchId: Option[Long] = None): Unit = {
     val spark = docs.sparkSession
     if (batchId.exists(committed(spark, path, _))) return
-    val statsGen = currentStatsGen(spark, path)
+    val statsGen = Stats.current(spark, path)
     val statsRow = readStats(spark, path).collect()(0)
     val statsApplied =
       batchId.exists(_ == statsRow.getAs[Long]("last_batch"))
@@ -300,11 +254,8 @@ object PostingsStore {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bkt").parquet(pp)
     survivors.unpersist()
-    val fs = fsOf(spark, path)
-    affected.filterNot(keptBkts).foreach { b =>
-      fs.delete(new Path(s"$pp/bkt=$b"), true)
-    }
-    val statsGen = currentStatsGen(spark, path)
+    Generations.dropPartitions(spark, pp, "bkt", affected.filterNot(keptBkts))
+    val statsGen = Stats.current(spark, path)
     val statsRow = readStats(spark, path).collect()(0)
     writeStatsGen(spark, path,
       statsRow.getAs[Long]("n_docs") - st.getLong(0),
@@ -318,8 +269,8 @@ object PostingsStore {
     * one file per bucket (append debris merged), (doc_id, term) rows
     * re-aggregated so any replay-duplicated postings are physically
     * dropped. Same sealed-generation convention as the stats row —
-    * readers resolve the highest `_SUCCESS`-sealed dir, so a crash
-    * mid-compact leaves them on generation `n`. Same single-writer
+    * readers resolve the highest sealed dir, so a crash mid-compact
+    * leaves them on generation `n`. Same single-writer
     * contract as [[IndexStore.compact]]: serialize with ingest (a
     * batch appended to gen `n` after the rewrite's snapshot would be
     * absent from `n+1`). Returns the new generation.
@@ -333,11 +284,11 @@ object PostingsStore {
     // the old groupBy-then-repartition shape shuffled the postings
     // twice (guide §2.4 "two operations keyed the same way can share
     // one exchange").
-    spark.read.parquet(postingsDir(path, next - 1))
+    Postings.write(spark.read.parquet(Postings.dir(path, next - 1))
       .repartition(col("bkt"))
       .groupBy(col("bkt"), col("doc_id"), col("term"))
       .agg(max(col("tf")).as("tf"), max(col("dl")).as("dl"))
-      .write.partitionBy("bkt").parquet(postingsDir(path, next))
+      .write.partitionBy("bkt"), path, next)
     next
   }
 
@@ -345,17 +296,8 @@ object PostingsStore {
     * reader grace window is controlled by the caller, exactly as in
     * [[IndexStore.vacuum]].
     */
-  def vacuum(spark: SparkSession, path: String): Unit = {
-    val cur = currentGen(spark, path)
-    val fs = fsOf(spark, path)
-    fs.listStatus(new Path(path)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val stale = (n == "postings" && cur > 0L) ||
-        (n.startsWith("postings_g") &&
-          n.stripPrefix("postings_g").toLongOption.exists(_ < cur))
-      if (stale) fs.delete(p, true)
-    }
-  }
+  def vacuum(spark: SparkSession, path: String): Unit =
+    Postings.dropBelow(spark, path, currentGen(spark, path))
 
   /** Compact iff any bucket of the current generation has accumulated
     * more than `maxFilesPerBucket` files — the scheduled-maintenance
@@ -367,13 +309,9 @@ object PostingsStore {
   def maintain(spark: SparkSession, path: String,
     maxFilesPerBucket: Int = 8): Option[Long] = {
     pruneStatsGens(spark, path)
-    val dir = new Path(postingsPath(spark, path))
-    val fs = fsOf(spark, path)
-    val over = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bkt="))
-      .exists(d => fs.listStatus(d.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
-    if (over) Some(compact(spark, path)) else None
+    if (Generations.overFileBudget(spark, postingsPath(spark, path), "bkt",
+      maxFilesPerBucket)) Some(compact(spark, path))
+    else None
   }
 
   /** BM25 top-k for ad-hoc `terms`: a partition-pruned postings read,

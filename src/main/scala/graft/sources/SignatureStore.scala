@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 
 /** Storage-backed signature table — the cluster-scale form of the
   * persist barrier in [[Dedup.minhashSignatures]].
@@ -38,6 +38,36 @@ object SignatureStore {
 
   private def tombTable(table: String): String = s"${table}_del"
 
+  /** `df`'s writer carrying the bucket spec stored on catalog table
+    * `table` — an append with a DIFFERENT bucket count than the build
+    * would fail at runtime (or silently break the bucket-pruned verify
+    * joins), so the store, not the caller, is the authority on its own
+    * layout.
+    */
+  private def bucketedWriter(df: DataFrame, table: String): DataFrameWriter[Row] = {
+    val spark = df.sparkSession
+    val spec = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .bucketSpec.getOrElse(throw new IllegalArgumentException(
+        s"$table is not a bucketed signature store"))
+    val w = df.write.bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+      spec.bucketColumnNames.tail: _*)
+    if (spec.sortColumnNames.nonEmpty)
+      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+    else w
+  }
+
+  /** Replace catalog table `table` with `w`'s output: write
+    * `<table>_next`, then drop `table` and rename. `table` stays intact
+    * until the write has committed, so `w` may read it.
+    */
+  private[graft] def replaceTable(spark: SparkSession, table: String,
+    w: DataFrameWriter[Row]): Unit = {
+    w.mode(SaveMode.Overwrite).saveAsTable(s"${table}_next")
+    spark.sql(s"DROP TABLE $table")
+    spark.sql(s"ALTER TABLE ${table}_next RENAME TO $table")
+  }
+
   /** Stored signatures minus tombstoned docs — what every consumer
     * reads. Deletion is a broadcast anti-join against the (bounded)
     * tombstone table, not a table rewrite: a bucketed catalog table
@@ -73,22 +103,8 @@ object SignatureStore {
     */
   def compactTombstones(spark: SparkSession, table: String): Unit = {
     if (!spark.catalog.tableExists(tombTable(table))) return
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table is not a bucketed signature store"))
-    // no materialization barrier needed: the filtered rewrite targets
-    // the tmp table while the source stays intact; the source drops
-    // only after the write committed
-    val tmp = s"${table}_compact_tmp"
-    val w = liveSignatures(spark, table).write.mode(SaveMode.Overwrite)
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
+    replaceTable(spark, table,
+      bucketedWriter(liveSignatures(spark, table), table))
     spark.sql(s"DROP TABLE ${tombTable(table)}")
   }
 
@@ -147,10 +163,7 @@ object SignatureStore {
   }
 
   /** Append a new batch's signatures to the store, reading the bucket
-    * spec off the existing catalog table — an append with a DIFFERENT
-    * bucket count than the build would fail at runtime (or silently
-    * break the bucket-pruned verify joins), so the store, not the
-    * caller, is the authority on its own layout.
+    * spec off the existing catalog table.
     */
   def append(newDocs: DataFrame, table: String): Unit =
     appendSignatures(Dedup.minhashSignatures(Dedup.shingleDocs(newDocs)),
@@ -163,17 +176,7 @@ object SignatureStore {
   def appendSignatures(newSig: DataFrame, newDocs: DataFrame,
     table: String): Unit = {
     val spark = newDocs.sparkSession
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table is not a bucketed signature store"))
-    val w = newSig
-      .write.mode(SaveMode.Append)
-      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-        spec.bucketColumnNames.tail: _*)
-    (if (spec.sortColumnNames.nonEmpty)
-      w.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w).saveAsTable(table)
+    bucketedWriter(newSig, table).mode(SaveMode.Append).saveAsTable(table)
     // a NEW observation of an id supersedes its tombstone (re-consent /
     // takedown reversal): without this, a doc forgotten then re-ingested
     // before the next compaction would stay hidden by the anti-join and
@@ -181,12 +184,9 @@ object SignatureStore {
     // tombstone table is bounded, so the rewrite is O(deletes)
     if (spark.catalog.tableExists(tombTable(table))) {
       import org.apache.spark.sql.functions.col
-      spark.table(tombTable(table))
+      replaceTable(spark, tombTable(table), spark.table(tombTable(table))
         .join(newDocs.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-        .write.mode(SaveMode.Overwrite)
-        .saveAsTable(s"${tombTable(table)}_next")
-      spark.sql(s"DROP TABLE ${tombTable(table)}")
-      spark.sql(s"ALTER TABLE ${tombTable(table)}_next RENAME TO ${tombTable(table)}")
+        .write)
     }
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * aggregates them; the DuckDB oracle recomputes the expected
   * contents from the base tables alone. A divergence in any layout
   * step — a lost append row, a forget that misses a partition, a
-  * compact that drops or duplicates postings, a generation pointer
-  * that reads the wrong dir — lands directly in the hash.
+  * compact that drops or duplicates postings, a generation resolved
+  * to the wrong dir — lands directly in the hash.
   *
   * Mirrors the reference's vector-store upsert contract
   * (Notion_openai_vector_etl.py:600-614: the store, not the caller,
@@ -44,8 +44,8 @@ object StoreCensus {
     * Every column is layout-independent of the k-means routing
     * (counts/extremes/sum over vec_id + the PQ code width), so the
     * oracle derives it from `embeddings` alone; `gen` pins the
-    * pointer flip and `vacuum` guarantees the read dir is the
-    * compacted one.
+    * sealed compacted generation and `vacuum` guarantees the read dir
+    * is that one.
     */
   def indexCensus(s: SparkSession, d: String): DataFrame = {
     val dir = java.nio.file.Files

@@ -193,14 +193,14 @@ class IndexStoreSpec extends AnyFunSuite {
     val before = pinned.search(queries, k = 10, nprobe = 2)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(before.nonEmpty)
-    // compact flips the pointer; the pinned handle must keep serving
-    // its sealed generation byte-identically (gen 0 still on disk —
+    // the pinned handle must keep serving its sealed generation
+    // byte-identically across compact (gen 0 still on disk —
     // vacuum's grace window is what makes this safe)
     assert(IndexStore.compact(spark, p) == 1L)
     val after = pinned.search(queries, k = 10, nprobe = 2)
       .as[(Long, Long, Long, Double)].collect().toSeq
-    assert(after == before, "a pinned handle must not see the pointer flip")
-    // a handle opened after the flip serves the compacted generation
+    assert(after == before, "a pinned handle must not see the new generation")
+    // a handle opened after compact serves the compacted generation
     // with the same results
     val fresh = IndexStore.open(spark, p).search(queries, k = 10, nprobe = 2)
       .as[(Long, Long, Long, Double)].collect().toSeq
@@ -216,7 +216,7 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.compact(spark, p)
     assert(IndexStore.currentGen(spark, p) == 1L)
     assert(IndexStore.rotation(spark, p).nonEmpty)
-    // rebuild WITHOUT fullOpq: the old pointer and rotation must not
+    // rebuild WITHOUT fullOpq: the old generation and rotation must not
     // leak into the new index
     IndexStore.build(vecs, p, Dim, nlist = 8, m = 8, kcode = 16, iters = 3)
     assert(IndexStore.currentGen(spark, p) == 0L,
@@ -572,6 +572,45 @@ class IndexStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       IndexStore.openAt(spark, p, 0L)
     }
+  }
+
+  test("torn write: the current generation needs no gen/ pointer table") {
+    val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_nogen_").toString
+    IndexStore.build(vecs.filter(col("vec_id") % 2 === 0), p, Dim,
+      nlist = 8, m = 8, kcode = 16, iters = 3)
+    assert(IndexStore.compact(spark, p) == 1L)
+    val extra = queries.limit(1)
+      .select((col("vec_id") + 3000000L).as("vec_id"), col("embedding"))
+    IndexStore.append(extra, p)
+    // an overwrite of a pointer table deletes it before writing the new
+    // one; a crash in between must not send readers back to generation 0
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p/gen"), true)
+    assert(IndexStore.currentGen(spark, p) == 1L)
+    val got = IndexStore.search(spark, queries, p, k = 10, nprobe = 8)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(got.exists(_._3 >= 3000000L),
+      "the vector appended after compaction must stay searchable")
+  }
+
+  test("torn write: an unsealed generation is skipped, refused by openAt, and overwritten by the next compact") {
+    val p = java.nio.file.Files.createTempDirectory("graft_ivfpq_torn_").toString
+    IndexStore.build(vecs.filter(col("vec_id") % 2 === 0), p, Dim,
+      nlist = 8, m = 8, kcode = 16, iters = 3)
+    assert(IndexStore.compact(spark, p) == 1L)
+    // the compact's data files landed but its commit never sealed them
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p/lists_g1/_SUCCESS"), false)
+    assert(IndexStore.currentGen(spark, p) == 0L)
+    intercept[IllegalArgumentException] {
+      IndexStore.openAt(spark, p, 1L)
+    }
+    assert(IndexStore.compact(spark, p) == 1L)
+    assert(IndexStore.currentGen(spark, p) == 1L)
+    assert(IndexStore.openAt(spark, p, 1L).search(queries, k = 10, nprobe = 2)
+      .count() > 0)
   }
 
   /** Mean kept SDC cosine over the stored neighbor table — the

@@ -127,6 +127,44 @@ class PostingsStoreSpec extends AnyFunSuite {
       "last_batch guard must prevent a second postings append")
   }
 
+  test("torn write: an unsealed stats generation is skipped, then overwritten by the next append") {
+    val docs = Tables.documents(spark, sf)
+    val d = java.nio.file.Files.createTempDirectory("postings_ts_").toString
+    PostingsStore.build(docs.filter(col("doc_id") % 2 === 0), d)
+    // a stats write that crashed before its commit: the dir exists, unsealed
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$d/stats_g1"))
+    PostingsStore.append(docs.filter(col("doc_id") % 2 === 1), d,
+      batchId = Some(9L))
+    assert(PostingsStore.committed(spark, d, 9L))
+    val got = PostingsStore.search(spark, d, Relevance.Terms, k = 20)
+      .as[(Long, Long, Double)].collect().toSeq
+    val clean = PostingsStore.search(spark, dir, Relevance.Terms, k = 20)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(got.map(r => (r._1, r._2)) == clean.map(r => (r._1, r._2)))
+    got.zip(clean).foreach { case ((dd, _, s), (_, _, sw)) =>
+      assert(math.abs(s - sw) <= 2e-6, s"score diverged for doc $dd: $s vs $sw")
+    }
+  }
+
+  test("torn write: an unsealed postings generation is skipped, then overwritten by the next compact") {
+    val docs = Tables.documents(spark, sf).limit(60)
+    val d = java.nio.file.Files.createTempDirectory("postings_tc_").toString
+    PostingsStore.build(docs, d, nBuckets = 4)
+    val before = PostingsStore.search(spark, d, Relevance.Terms, k = 20)
+      .as[(Long, Long, Double)].collect().toSeq
+    // a compact that crashed before its commit: a partition dir, no marker
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$d/postings_g1/bkt=0"))
+    assert(PostingsStore.currentGen(spark, d) == 0L)
+    assert(PostingsStore.compact(spark, d) == 1L)
+    assert(PostingsStore.currentGen(spark, d) == 1L)
+    assert(PostingsStore.search(spark, d, Relevance.Terms, k = 20)
+      .as[(Long, Long, Double)].collect().toSeq == before)
+  }
+
   test("maintain compacts only past the file-count threshold") {
     val docs = Tables.documents(spark, sf).limit(60)
     val d = java.nio.file.Files.createTempDirectory("postings_mn_").toString

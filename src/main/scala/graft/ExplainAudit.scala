@@ -1008,6 +1008,27 @@ object ExplainAudit {
       cmsPlan.contains("partial_count") && !cmsPlan.contains("Join") &&
         cmsPlan.linesIterator.count(_.contains("FileScan")) == 1)
 
+    // the keyed BFS hop — the q_closeness landmark hop, (root, node)
+    // keyed: one equi-join on node = src and one left-anti join on
+    // (root, node); a cartesian or nested-loop shape here is |V|·k
+    val bfsEdges = Tables.edgesShared(spark, d)
+    val lmSeed = operators.Iterate.materialize(bfsEdges
+      .select(col("src").as("root")).distinct()
+      .orderBy(md5(col("root").cast("string")), col("root"))
+      .limit(operators.Closeness.NumLandmarks)
+      .select(col("root"), col("root").as("node"), lit(0L).as("depth")))
+    val hopPlan = operators.Crawl.hop(lmSeed, bfsEdges, lmSeed, Seq("root"), 1L)
+      .queryExecution.executedPlan.toString
+    flag("keyed bfs hop: equi-join on node = src, left-anti keyed on " +
+      "(root, node), no CartesianProduct / BroadcastNestedLoopJoin",
+      "Join \\[node#\\d+L?\\], \\[src#\\d+L?\\], Inner".r
+        .findFirstIn(hopPlan).isDefined &&
+        // the frontier side's node is the projected edge dst
+        "Join \\[root#\\d+L?, (node|dst)#\\d+L?\\], \\[root#\\d+L?, node#\\d+L?\\], LeftAnti".r
+          .findFirstIn(hopPlan).isDefined &&
+        !hopPlan.contains("CartesianProduct") &&
+        !hopPlan.contains("BroadcastNestedLoopJoin"))
+
     spark.stop()
     println(s"== ExplainAudit: ${checked - violated}/$checked OK, $violated VIOLATED")
     if (violated > 0) sys.exit(1)

@@ -54,8 +54,7 @@ object Autocorr {
   def acf(cellsRaw: DataFrame): DataFrame = {
     val agg = Iterate.materialize(
       cellsRaw.select(col("event_type"), unix_micros(col("h")).as("hu"),
-        col("y")),
-      None)
+        col("y")))
     // 1-row bounded statistic: the span collects once (the q_heaps rule)
     val b = agg.agg(min(col("hu")).as("lo"), max(col("hu")).as("hi")).head()
     if (b.isNullAt(0))

@@ -53,8 +53,7 @@ object Backtest {
     val spark = cellsRaw.sparkSession
     val agg = Iterate.materialize(
       cellsRaw
-        .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y")),
-      None)
+        .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y")))
     // 1-row bounded statistic, collected once (the q_heaps rule)
     val b = agg.agg(min(col("hu")).as("lo"), max(col("hu")).as("hi")).head()
     if (b.isNullAt(0))
@@ -69,7 +68,7 @@ object Backtest {
       types.crossJoin(
         spark.range(nH).select((lit(lo) + col("id") * HourUs).as("hu")))
         .join(agg, Seq("event_type", "hu"), "left")
-        .withColumn("y", coalesce(col("y"), lit(0L))), None)
+        .withColumn("y", coalesce(col("y"), lit(0L))))
     val horizons = spark.range(1L, Horizons + 1L).select(col("id").as("h"))
     val tgt = dense
       .filter(col("hu") >= lo + SeasonLag * HourUs)

@@ -49,8 +49,7 @@ object Betweenness {
   def betweennessQuery(s: SparkSession, d: String): DataFrame =
     betweenness(Tables.edgesShared(s, d)).orderBy(col("node"))
 
-  def betweenness(edges: DataFrame,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def betweenness(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst")).persist()
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct().persist()
@@ -59,15 +58,14 @@ object Betweenness {
     var w = Iterate.materialize(
       nodes.filter(col("node") % PivotMod === 0)
         .select(col("node").as("p"), col("node").as("v"), lit(1L).as("w"),
-          lit(0L).as("d")), checkpointDir)
+          lit(0L).as("d")))
     var all = w
     for (d <- 1 to MaxDepth) {
       w = Iterate.materialize(
         w.join(e, w("v") === e("src"))
           .groupBy(col("p"), e("dst").as("v"))
           .agg(sum(col("w")).as("w"))
-          .select(col("p"), col("v"), col("w"), lit(d.toLong).as("d")),
-        checkpointDir)
+          .select(col("p"), col("v"), col("w"), lit(d.toLong).as("d")))
       all = all.unionAll(w)
     }
     val dists = all.groupBy(col("p"), col("v")).agg(min(col("d")).as("dist"))
@@ -76,8 +74,7 @@ object Betweenness {
         col("w").as("sigma"), col("d").as("ad")),
         col("ap") === col("p") && col("av") === col("v") &&
           col("ad") === col("dist"))
-        .select(col("p"), col("v"), col("dist"), col("sigma")),
-      checkpointDir)
+        .select(col("p"), col("v"), col("dist"), col("sigma")))
     // backward: integer-lattice dependency accumulation, deepest
     // layer first (delta at the horizon is 0 by the distance bound)
     var deltas = List.empty[DataFrame]
@@ -100,8 +97,7 @@ object Betweenness {
           .join(succD, col("tp") === sigma("p") && col("tv") === e("dst"))
           .select(sigma("p"), sigma("v"),
             expr("(sigma * (1000000 + tdelta)) div tsigma").as("t"))
-          .groupBy(col("p"), col("v")).agg(sum(col("t")).as("delta")),
-        checkpointDir)
+          .groupBy(col("p"), col("v")).agg(sum(col("t")).as("delta")))
       deltas = cur :: deltas
       deeper = Some(cur)
     }

@@ -69,7 +69,7 @@ object Bootstrap {
     * micro-units.
     */
   def bootstrap(rows: DataFrame): DataFrame = {
-    val base = Iterate.materialize(rows, None)
+    val base = Iterate.materialize(rows)
     val point = base.agg(count(lit(1)).cast("long").as("n_docs"),
       sum(col("x")).cast("long").as("sx"))
       .select(col("n_docs"),

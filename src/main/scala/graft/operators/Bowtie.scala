@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Everything derives from three label propagations over the SAME
   * materialized edge frame ([[Tables.edgesShared]]): SCC labels
   * ([[Scc.scc]]), reachability-from-core forward and backward
-  * ([[Scc.minReachFrom]] with the core seeded at a sentinel below
+  * ([[Components.minLabel]] with the core seeded at a sentinel below
   * every node id — min propagation then IS reachability), and one
   * undirected CC for the weak-component split. No transitive closure
   * anywhere; the oracle, as with q_scc, is the canonical definition
@@ -65,11 +65,11 @@ object Bowtie {
     def seedFromCore = lab.select(col("id"),
       when(col("in_core"), lit(CoreSentinel)).otherwise(col("id")).as("lbl"))
     // forward propagation of the sentinel = reachable FROM core (OUT)
-    val outReach = Scc.minReachFrom(seedFromCore, e, None)
+    val outReach = Components.minLabel(e, seedFromCore)
       .select(col("id"), (col("lbl") === CoreSentinel).as("from_core"))
     // reversed edges: reaches the core (IN)
-    val inReach = Scc.minReachFrom(seedFromCore,
-      e.select(col("dst").as("src"), col("src").as("dst")), None)
+    val inReach = Components.minLabel(
+      e.select(col("dst").as("src"), col("src").as("dst")), seedFromCore)
       .select(col("id").as("iid"), (col("lbl") === CoreSentinel).as("to_core"))
     // weak components: the core's component vs everything else
     val weak = Components.connectedComponents(nodes,

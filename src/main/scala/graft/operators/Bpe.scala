@@ -74,22 +74,18 @@ object Bpe {
   /** Train `rounds` merges. Returns the merge table
     * `(rank, left, right, merged, n)` in learned order — the artifact
     * a tokenizer ships. Stops early if no pair remains (every word
-    * fully merged). `checkpointDir` as in [[Crawl.bfs]]: reliable
-    * checkpointing for cluster runs, `localCheckpoint` locally.
+    * fully merged).
     */
-  def train(docs: DataFrame, rounds: Int,
-    checkpointDir: Option[String] = None): DataFrame =
-    trainVocab(initVocab(docs), rounds, checkpointDir)
+  def train(docs: DataFrame, rounds: Int): DataFrame =
+    trainVocab(initVocab(docs), rounds)
 
   /** [[train]] over a caller-built `(syms, tf)` vocabulary — the entry
     * [[bpeEncode]] needs (its vocab carries extra constraints and is
     * reused for the census).
     */
-  def trainVocab(vocab0: DataFrame, rounds: Int,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def trainVocab(vocab0: DataFrame, rounds: Int): DataFrame = {
     val spark = vocab0.sparkSession
-    var vocab = Iterate.materialize(vocab0.select(col("syms"), col("tf")),
-      checkpointDir)
+    var vocab = Iterate.materialize(vocab0.select(col("syms"), col("tf")))
     var merges = Vector.empty[(Int, String, String, String, Long)]
     var done = false
     var r = 0
@@ -105,8 +101,7 @@ object Bpe {
         merges :+= ((r + 1, a, b, a + b, n))
         val prev = vocab
         vocab = Iterate.materialize(
-          vocab.select(mergeFold(col("syms"), a, b).as("syms"), col("tf")),
-          checkpointDir)
+          vocab.select(mergeFold(col("syms"), a, b).as("syms"), col("tf")))
         prev.unpersist()
       }
       r += 1
@@ -248,13 +243,13 @@ object Bpe {
     * that blew up there).
     */
   def segment(vocab: DataFrame, merges: Seq[(String, String)],
-    checkpointDir: Option[String] = None, block: Int = 8): DataFrame =
+    block: Int = 8): DataFrame =
     merges.grouped(block).foldLeft(vocab) { (v0, grp) =>
       Iterate.materialize(
         grp.foldLeft(v0) { case (v, (a, b)) =>
           // withColumn, not select: carrier columns (the word itself,
           // per-source keys) ride through the segmentation untouched
           v.withColumn("syms", mergeFold(col("syms"), a, b))
-        }, checkpointDir)
+        })
     }
 }

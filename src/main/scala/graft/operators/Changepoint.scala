@@ -70,7 +70,7 @@ object Changepoint {
       cells(ev)
         .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y"))
         .observe(obs, count(lit(1)).as("n"),
-          min(col("hu")).as("lo"), max(col("hu")).as("hi")), None)
+          min(col("hu")).as("lo"), max(col("hu")).as("hi")))
     if (obs.get("n").asInstanceOf[Long] == 0L) (c, 0L, 0)
     else {
       val lo = obs.get("lo").asInstanceOf[Long]
@@ -93,7 +93,7 @@ object Changepoint {
     // entries are never auto-released — checkpoint blocks are GC'd
     // with the frame reference (the ContextCleaner contract), so a
     // long-lived monitor cannot accumulate cache entries.
-    val agg = Iterate.materialize(aggRaw, None)
+    val agg = Iterate.materialize(aggRaw)
     val span = agg.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
     val hours = span.select(
       explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("h"))

@@ -58,7 +58,7 @@ object Churn {
     // checkpoint barrier: the per-user frame feeds BOTH the horizon
     // aggregate and the lifetime projection — without it the events
     // fold executes twice (the q_heaps double-scan lesson)
-    val users = Iterate.materialize(spans, None)
+    val users = Iterate.materialize(spans)
     val horizon = users.agg(max(col("last_day_idx")).as("h_day"))
     val lifed = users.crossJoin(broadcast(horizon))
       .select(expr("(last_day_idx - first_day_idx) div 7").as("k"),

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** q_closeness — LANDMARK closeness/harmonic centrality over the crawl
   * link graph: how quickly the rest of the graph reaches each page,
@@ -41,38 +40,13 @@ object Closeness {
   val MaxDepth = 20
 
   /** Exact per-landmark BFS distances with provenance: one row per
-    * (root, node) reached within `maxDepth`, depth = exact hop count.
+    * (root, node) reached within `maxDepth`, depth = exact hop count —
+    * [[Crawl.bfs]] keyed by `root`.
     */
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
-    maxDepth: Int, checkpointDir: Option[String] = None): DataFrame = {
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = Iterate.materialize(
-        df.observe(obs, count(lit(1)).as("n")), checkpointDir)
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    val (seed, seedN) = materializeCounted(
-      landmarks.select(col("root"), col("root").as("node"),
-        lit(0L).as("depth")))
-    var visited = seed
-    var frontier = seed
-    var frontierN = seedN
-    var depth = 0L
-    while (depth < maxDepth && frontierN > 0) {
-      depth += 1
-      val (next, n) = materializeCounted(
-        frontier.join(edges, frontier("node") === edges("src"))
-          .select(frontier("root"), edges("dst").as("node")).distinct()
-          .join(visited, Seq("root", "node"), "left_anti")
-          .select(col("root"), col("node"), lit(depth).as("depth")))
-      if (n > 0) visited = visited.unionAll(next)
-      frontier = next
-      frontierN = n
-    }
-    edges.unpersist()
-    visited
-  }
+    maxDepth: Int): DataFrame =
+    Crawl.bfs(edges, landmarks.select(col("root"), col("root").as("node")),
+      maxDepth)
 
   def closenessQuery(s: SparkSession, d: String): DataFrame =
     closeness(Tables.edgesShared(s, d), NumLandmarks, MaxDepth)

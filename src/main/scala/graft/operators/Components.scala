@@ -35,8 +35,7 @@ object Components {
     * @param pairs undirected edges as `a_id`, `b_id`
     * @return (id, lbl) where lbl = min id of the component
     */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     val sym = symmetric(pairs).persist()
     // seed with min(self, direct neighbours): one groupBy, and the
     // common dedup shape (star clusters around the min id) converges at
@@ -45,7 +44,7 @@ object Components {
     val seed = nodes.join(minNbr, nodes("id") === minNbr("src"), "left_outer")
       .select(nodes("id"),
         least(nodes("id"), coalesce(col("mn"), nodes("id"))).as("lbl"))
-    val labels = propagate(sym, seed, checkpointDir)
+    val labels = minLabel(sym, seed)
     sym.unpersist()
     labels
   }
@@ -57,12 +56,11 @@ object Components {
     * dedup survivor labeling, where the isolated majority is handled
     * by a final left join ([[Dedup.keepFrom]]), not by the iteration.
     */
-  def fromPairs(pairs: DataFrame,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def fromPairs(pairs: DataFrame): DataFrame = {
     val sym = symmetric(pairs).persist()
     val seed = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl"))
-    val labels = propagate(sym, seed, checkpointDir)
+    val labels = minLabel(sym, seed)
     sym.unpersist()
     labels
   }
@@ -82,8 +80,7 @@ object Components {
     * semantics are preserved: the min id of a merged component is the
     * min over its old components' mins and the new ids.
     */
-  def mergePairs(labels: DataFrame, newPairs: DataFrame,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def mergePairs(labels: DataFrame, newPairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     // self-pairs carry no edge information but would leak their endpoint
     // into the new-node set below — drop them at the door
@@ -101,7 +98,7 @@ object Components {
       coalesce(col("b_lbl"), col("b_id")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
     // CC over representatives + new ids only
-    val rep = fromPairs(contracted, checkpointDir)
+    val rep = fromPairs(contracted)
     // ids the store has never seen (they were their own contraction)
     val newIds = looked.select(
       when(col("a_lbl").isNull, col("a_id")).as("na"),
@@ -127,22 +124,27 @@ object Components {
     pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
 
-  /** Min-label rounds to fixpoint. Each round is ONE job: the round
-    * frame carries the previous label (`old`) alongside the new min,
-    * and the changed-label count rides the materialization job as an
-    * [[org.apache.spark.sql.Observation]] metric — no second
+  /** Min-label rounds to fixpoint over DIRECTED `(src, dst)` edges:
+    * every node of the `(id, lbl)` seed ends labeled with the min seed
+    * label of any node that reaches it. Symmetric edges give connected
+    * components; one direction gives [[Scc]]'s min ancestor (reversed
+    * edges: min descendant) and, seeded with a sentinel, [[Bowtie]]'s
+    * reachability-from-core.
+    *
+    * Each round is ONE job: the round frame carries the previous label
+    * (`old`) alongside the new min, and the changed-label count rides
+    * the materialization job as an observe() metric — no second
     * fixpoint-detection scan over the labels (which at 10^10 nodes is
-    * a full pass per round saved).
+    * a full pass per round saved). Records [[lastRounds]].
     */
-  private def propagate(sym: DataFrame, seed: DataFrame,
-    checkpointDir: Option[String]): DataFrame = {
-    var labels = Iterate.materialize(seed, checkpointDir)
-    var done = false
+  private[graft] def minLabel(edges: DataFrame, seed: DataFrame): DataFrame = {
+    var labels = Iterate.materialize(seed.select(col("id"), col("lbl")))
+    var changed = 1L
     var rounds = 0
-    while (!done) {
+    while (changed > 0) {
       rounds += 1
-      val viaEdges = labels.join(sym, labels("id") === sym("src"))
-        .select(sym("dst").as("id"), labels("lbl").as("lbl"),
+      val viaEdges = labels.join(edges, labels("id") === edges("src"))
+        .select(edges("dst").as("id"), labels("lbl").as("lbl"),
           lit(null).cast("long").as("old"))
       // every id keeps exactly one labels row, so min(old) recovers its
       // previous label; the union keeps that row a min() candidate, so
@@ -155,14 +157,11 @@ object Components {
         .unionAll(viaEdges)
         .groupBy(col("id"))
         .agg(min(col("lbl")).as("lbl"), min(col("old")).as("old"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Iterate.materialize(
-        merged.observe(obs,
-          sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
-            .otherwise(0L)).as("changed"))
-          .select(col("id"), col("lbl")), checkpointDir)
+      val (next, n) = Iterate.materialize(merged,
+        sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
+          .otherwise(0L)), col("id"), col("lbl"))
       labels = next
-      done = obs.get("changed").asInstanceOf[Long] == 0L
+      changed = n
     }
     lastRounds = rounds
     labels

@@ -60,7 +60,7 @@ object Concurrency {
         .groupBy(col("h"))
         .agg(sum(col("d")).cast("long").as("delta"),
           sum(col("st")).cast("long").as("started"),
-          sum(col("en")).cast("long").as("ended")), None)
+          sum(col("en")).cast("long").as("ended")))
     val bounds = cells.agg(min(when(col("started") > 0, col("h"))).as("h_lo"),
       max(when(col("ended") > 0, col("h"))).as("h_hi"))
     bounds.select(explode(sequence(col("h_lo"), col("h_hi"))).as("h"))

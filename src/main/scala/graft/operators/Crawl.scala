@@ -21,36 +21,34 @@ object Crawl {
 
   /** Min-depth BFS from `roots` over `edges(src, dst)`.
     *
+    * Every column of `roots` other than `node` is a source KEY carried
+    * through each hop: one BFS per distinct key, all run as one frame —
+    * `(key…, node, depth)` rows, depth = exact hop count from that
+    * key's roots. Node-only roots give the single-source `(node,
+    * depth)` crawl; a `(root, node)` seed gives per-landmark distances
+    * ([[Closeness.landmarkDistances]]); an all-nodes `(x, node)` seed
+    * gives all-pairs balls ([[Neighborhood.pairBalls]]).
+    *
     * Each hop's frontier is materialized via [[Iterate.materialize]]:
     * cuts the iterative lineage and mints fresh attribute ids (so hop
-    * N+1's join with `edges` isn't an ambiguous self-join). Pass
-    * `checkpointDir` for a reliable cluster run — `localCheckpoint`
-    * dies with an executor; `checkpoint` survives it.
+    * N+1's join with `edges` isn't an ambiguous self-join); the
+    * frontier size rides that one job as an observe() metric instead
+    * of a separate isEmpty scan.
     */
-  def bfs(edges: DataFrame, roots: DataFrame, maxDepth: Int,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def bfs(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
+    val keys = roots.columns.toSeq.filter(_ != "node")
     edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // each hop is ONE job: the frontier size rides the materialization
-    // as an Observation metric instead of a separate isEmpty scan
-    def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = Iterate.materialize(
-        df.observe(obs, count(lit(1)).as("n")), checkpointDir)
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    val (seed, seedN) = materializeCounted(
-      roots.select(col("node"), lit(0L).as("depth")))
+    val (seed, seedN) = Iterate.materialize(
+      roots.select(keys.map(col) :+ col("node") :+ lit(0L).as("depth"): _*),
+      count(lit(1)))
     var visited = seed
     var frontier = seed
     var frontierN = seedN
     var depth = 0L
     while (depth < maxDepth && frontierN > 0) {
       depth += 1
-      val (next, n) = materializeCounted(
-        frontier.join(edges, frontier("node") === edges("src"))
-          .select(edges("dst").as("node")).distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .select(col("node"), lit(depth).as("depth")))
+      val (next, n) = Iterate.materialize(
+        hop(frontier, edges, visited, keys, depth), count(lit(1)))
       if (n > 0) {
         // plain union: both inputs are already materialized, so the
         // visited lineage stays a shallow tree of checkpointed hops —
@@ -63,6 +61,19 @@ object Crawl {
     edges.unpersist()
     visited
   }
+
+  /** One [[bfs]] hop: the frontier's out-neighbors per key, minus
+    * every `(key…, node)` already visited, at `depth`. Each hop is an
+    * equi-join on `node` = `src` (both sides bucket by node id at
+    * scale) plus one anti-join keyed on `(key…, node)` — ExplainAudit
+    * pins that shape.
+    */
+  private[graft] def hop(frontier: DataFrame, edges: DataFrame,
+    visited: DataFrame, keys: Seq[String], depth: Long): DataFrame =
+    frontier.join(edges, frontier("node") === edges("src"))
+      .select(keys.map(frontier(_)) :+ edges("dst").as("node"): _*).distinct()
+      .join(visited, keys :+ "node", "left_anti")
+      .select(keys.map(col) :+ col("node") :+ lit(depth).as("depth"): _*)
 
   /** q_crawl_bfs — reachable set with first-visit depth from node 0. */
   def crawlBfs(s: SparkSession, d: String): DataFrame =
@@ -97,54 +108,40 @@ object Crawl {
     * same key layout every round, so at 100 TB both sides bucket by
     * node and the per-round exchange disappears) + one partial-agg
     * groupBy on dst + a left join back to the node set, materialized
-    * per round ([[Iterate.materialize]], reliable-checkpoint knob) —
-    * the BFS discipline applied to rank propagation.
+    * per round ([[Iterate.materialize]]) — the BFS discipline applied
+    * to rank propagation. The leaking form IS [[Ppr]] with every node
+    * a seed (base 0.15/N, start 1/N), so it delegates there.
     */
   def pageRank(edges: DataFrame, iters: Int = PrIters,
-    checkpointDir: Option[String] = None,
-    conserveDangling: Boolean = false): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct().persist()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val n = nodes.count()
-    val base = (3L * PrScale) / (20L * n) // 0.15/N in fixed point
-    // When conserving, the node frame carries a static has_out flag so
-    // each round's dangling mass can ride the round's materialization
-    // as an observe() metric (the Components-fixpoint discipline) —
-    // round i needs only Σ pr_{i-1}[¬has_out], which round i-1's
-    // action already computed. No per-round aggregate job, no
-    // broadcast subtree re-deriving unmaterialized lineage.
-    val nodesF =
-      if (!conserveDangling) nodes
-      else nodes
+    conserveDangling: Boolean = false): DataFrame =
+    if (!conserveDangling) Ppr.personalizedPageRank(edges, lit(true), iters)
+    else {
+      val e = edges.select(col("src"), col("dst")).persist()
+      val nodes = e.select(col("src").as("node"))
+        .unionAll(e.select(col("dst").as("node"))).distinct().persist()
+      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      val n = nodes.count()
+      val base = (3L * PrScale) / (20L * n) // 0.15/N in fixed point
+      // the node frame carries a static has_out flag so each round's
+      // dangling mass can ride the round's materialization as an
+      // observe() metric (the Components-fixpoint discipline) — round
+      // i needs only Σ pr_{i-1}[¬has_out], which round i-1's action
+      // already computed. No per-round aggregate job, no broadcast
+      // subtree re-deriving unmaterialized lineage.
+      val nodesF = nodes
         .join(e.select(col("src").as("node")).distinct()
           .withColumn("has_out", lit(true)), Seq("node"), "left")
         .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
         .persist()
-    // round 1's mass is exact without a scan: every node starts at the
-    // same literal, so dm = |dangling| · (PrScale div n)
-    var dm: Long =
-      if (conserveDangling) nodesF.filter(!col("has_out")).count() * (PrScale / n)
-      else 0L
-    var pr = nodes.select(col("node"), lit(PrScale / n).as("pr"))
-    for (i <- 1 to iters) {
-      val contrib = pr.join(e, pr("node") === e("src"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr("pr div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      if (!conserveDangling) {
-        val next = nodes
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr("(850 * coalesce(m, 0)) div 1000")).as("pr"))
-        // materialize every SECOND round: rank frames are constant-size
-        // (unlike shrinking BFS frontiers), so two rounds of lineage are
-        // safe and the eager-checkpoint job count halves — measured 2×
-        // on the per-round fixed overhead that dominates small graphs
-        pr = if (i % 2 == 0 || i == iters) Iterate.materialize(next, checkpointDir)
-        else next
-      } else {
+      // round 1's mass is exact without a scan: every node starts at
+      // the same literal, so dm = |dangling| · (PrScale div n)
+      var dm: Long = nodesF.filter(!col("has_out")).count() * (PrScale / n)
+      var pr = nodes.select(col("node"), lit(PrScale / n).as("pr"))
+      for (_ <- 1 to iters) {
+        val contrib = pr.join(e, pr("node") === e("src"))
+          .join(outdeg, "src")
+          .select(col("dst"), expr("pr div outdeg").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("m"))
         // each node receives an equal integer share of the stranded
         // mass; the < n units lost to the floor are the "within
         // fixed-point rounding" of the conservation theorem. dm is a
@@ -157,18 +154,14 @@ object Crawl {
               s"(850 * (coalesce(m, 0) + ${dm / n}L)) div 1000")).as("pr"))
         // conserve rounds materialize EVERY round: the next round's dm
         // rides this action as an observation instead of costing a job
-        val obs = org.apache.spark.sql.Observation()
-        pr = Iterate.materialize(
-          next.observe(obs,
-            sum(when(!col("has_out"), col("pr")).otherwise(0L)).as("dm")),
-          checkpointDir).select(col("node"), col("pr"))
-        dm = obs.get("dm").asInstanceOf[Long]
+        val (ranked, nextDm) = Iterate.materialize(next,
+          sum(when(!col("has_out"), col("pr")).otherwise(0L)))
+        pr = ranked.select(col("node"), col("pr"))
+        dm = nextDm
       }
+      nodesF.unpersist(); nodes.unpersist(); e.unpersist()
+      pr
     }
-    if (conserveDangling) nodesF.unpersist()
-    nodes.unpersist(); e.unpersist()
-    pr
-  }
 
   /** q_pagerank — [[pageRank]] on the crawl edge graph, 5 rounds. */
   def pageRankQuery(s: SparkSession, d: String): DataFrame =

@@ -57,7 +57,7 @@ object Cusum {
     val cells = Iterate.materialize(cellsRaw
       .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y"))
       .observe(obs, count(lit(1)).as("n"),
-        min(col("hu")).as("lo"), max(col("hu")).as("hi")), None)
+        min(col("hu")).as("lo"), max(col("hu")).as("hi")))
     if (obs.get("n").asInstanceOf[Long] == 0L)
       return s.emptyDataFrame.select(lit("").as("event_type"),
         lit(0L).as("n_hours"), lit(0L).as("n_ref"), lit(0L).as("mu0_micro"),

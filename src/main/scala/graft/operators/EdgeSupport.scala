@@ -31,7 +31,7 @@ object EdgeSupport {
 
   /** Per-edge support over any `(src, dst)` frame (undirected view). */
   def edgeSupport(edges: DataFrame): DataFrame = {
-    val und = Iterate.materialize(Graph.undirected(edges), None)
+    val und = Iterate.materialize(Graph.undirected(edges))
     val tris = Graph.closedTriangles(und)
     val credits = tris.select(explode(array(
       struct(least(col("x"), col("y1")).as("a"),

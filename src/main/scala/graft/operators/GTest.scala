@@ -44,8 +44,7 @@ object GTest {
       Window.unboundedFollowing)
     val joint = Iterate.materialize(
       rows.groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).cast("long").as("o")),
-      None)
+        .agg(count(lit(1)).cast("long").as("o")))
     val ra = joint.groupBy(col("a")).agg(sum(col("o")).cast("long").as("r"))
     val cb = joint.groupBy(col("b")).agg(sum(col("o")).cast("long").as("c"))
     val tot = joint.agg(sum(col("o")).cast("long").as("n"),

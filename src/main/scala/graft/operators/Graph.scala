@@ -179,11 +179,10 @@ object Graph {
     * + one partial-agg groupBy on (node, label) + one groupBy(node)
     * picking the argmax via `max(struct(c, -label))` — NO window, so
     * the round is two map-side-combined aggregates and every exchange
-    * keys on node ids. Rounds are lineage-cut ([[Iterate.materialize]],
-    * reliable-checkpoint knob) like every iterative driver here.
+    * keys on node ids. Rounds are lineage-cut ([[Iterate.materialize]])
+    * like every iterative driver here.
     */
-  def labelProp(edges: DataFrame, rounds: Int = LpaRounds,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def labelProp(edges: DataFrame, rounds: Int = LpaRounds): DataFrame = {
     val sym = edges
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
@@ -192,7 +191,7 @@ object Graph {
       .distinct().persist()
     var labels = Iterate.materialize(
       sym.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label")), checkpointDir)
+        .select(col("node"), col("node").as("label")))
     for (_ <- 1 to rounds) {
       val next = labels.join(sym, labels("node") === sym("src"))
         .groupBy(sym("dst").as("node"), labels("label"))
@@ -200,7 +199,7 @@ object Graph {
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("best"))
         .select(col("node"), (-col("best.nl")).as("label"))
-      labels = Iterate.materialize(next, checkpointDir)
+      labels = Iterate.materialize(next)
     }
     sym.unpersist()
     labels
@@ -276,19 +275,19 @@ object Graph {
     * Scale shape: each round is two semi-joins of the edge set
     * against the shrinking survivor set (id-keyed hash shuffles, the
     * CC/LPA round shape) + one partial-agg degree count; rounds are
-    * lineage-cut ([[Iterate.materialize]], reliable-checkpoint knob).
-    * The `removed` count rides each round's materialization as an
-    * observe() metric — the fixpoint test costs zero extra jobs.
+    * lineage-cut ([[Iterate.materialize]]). The survivor count rides
+    * each round's materialization as an observe() metric — the
+    * fixpoint test (nobody peeled) costs zero extra jobs.
     */
-  def kcore(edges: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def kcore(edges: DataFrame, k: Int = KcoreK,
+    rounds: Int = KcoreRounds): DataFrame = {
     val und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct().persist()
     val nodes = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node"))).distinct().persist()
-    var alive = Iterate.materialize(nodes, checkpointDir)
+    var (alive, aliveN) = Iterate.materialize(nodes, count(lit(1)))
     var round = 0
     var done = false
     while (round < rounds && !done) {
@@ -298,16 +297,14 @@ object Graph {
       val deg = live.select(col("a").as("node"))
         .unionAll(live.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Iterate.materialize(
+      val (next, n) = Iterate.materialize(
         alive.join(deg, Seq("node"), "left_outer")
-          .observe(obs, sum(when(coalesce(col("deg"), lit(0L)) < k, 1L)
-            .otherwise(0L)).as("removed"))
           .filter(coalesce(col("deg"), lit(0L)) >= k)
-          .select(col("node")), checkpointDir)
+          .select(col("node")), count(lit(1)))
       alive = next
       round += 1
-      done = obs.get("removed").asInstanceOf[Long] == 0L
+      done = n == aliveN
+      aliveN = n
     }
     val out = nodes
       .join(alive.select(col("node"), lit(true).as("core")),

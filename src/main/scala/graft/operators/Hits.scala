@@ -25,8 +25,7 @@ import org.apache.spark.sql.functions._
   * 100 TB — identical to the PageRank contrib round); Σraw rides the
   * round's materialization as an `observe()` metric, so normalization
   * costs NO extra job — the [[Components]] fixpoint discipline. Every
-  * round is lineage-cut via [[Iterate.materialize]] with the reliable
-  * `checkpointDir` knob for cluster runs.
+  * round is lineage-cut via [[Iterate.materialize]].
   */
 object Hits {
 
@@ -36,8 +35,7 @@ object Hits {
   /** `(node, auth, hub)` after `iters` full rounds over
     * `edges(src, dst)`; hubs init at Scale each.
     */
-  def hits(edges: DataFrame, iters: Int = HitsIters,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = HitsIters): DataFrame = {
     val e = edges.select(col("src"), col("dst")).persist()
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct().persist()
@@ -63,13 +61,10 @@ object Hits {
         if (pad) nodes.join(contrib, Seq("node"), "left")
           .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
         else contrib
-      val obs = org.apache.spark.sql.Observation()
-      // coalesce: an unpadded raw frame can be EMPTY (edgeless graph)
-      // and sum-over-nothing observes null, not 0
-      val rawM = Iterate.materialize(
-        raw.observe(obs, coalesce(sum(col("raw")), lit(0L)).as("t")),
-        checkpointDir)
-      val total = math.max(1L, obs.get("t").asInstanceOf[Long])
+      // an unpadded raw frame can be EMPTY (edgeless graph): Σraw
+      // observes 0 and the normalizer floors at 1
+      val (rawM, t) = Iterate.materialize(raw, sum(col("raw")))
+      val total = math.max(1L, t)
       rawM.select(col("node"),
         expr(s"(raw * ${HitsScale}L) div ${total}L").as(outCol))
     }
@@ -78,7 +73,7 @@ object Hits {
     // from `e`, so joining it straight back to `e` would be an
     // ambiguous self-join; later rounds are fresh by construction
     var hub = Iterate.materialize(
-      nodes.select(col("node"), lit(HitsScale).as("hub")), checkpointDir)
+      nodes.select(col("node"), lit(HitsScale).as("hub")))
     var auth = nodes.select(col("node"), lit(0L).as("auth"))
     for (i <- 1 to iters) {
       auth = halfRound(hub, "hub", from = "src", to = "dst", outCol = "auth",

@@ -1,29 +1,45 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{coalesce, lit}
 
 /** Materialization for iterative drivers (BFS frontier, Lloyd rounds,
   * label propagation): every hop must cut lineage — at depth 20 over
   * 100 TB of edges one recursive plan would not even compile — and
   * mint fresh attribute ids so hop N+1's self-joins aren't ambiguous.
   *
-  * Two strategies, chosen per call:
-  * - `localCheckpoint` (default): blocks cached on executors. Fast, but
-  *   NOT fault-tolerant — losing an executor loses lineage-less blocks
+  * The strategy follows the session, never a per-call argument:
+  * reliable `checkpoint` happens iff the SparkContext has a checkpoint
+  * directory, and `localCheckpoint` otherwise. graft never sets one —
+  * a cluster deployment sets it once, before any job (Spark's
+  * `spark.checkpoint.dir` conf, or the SparkContext setter), so
+  * concurrent driver chains never rewrite shared session state.
+  * - `localCheckpoint`: blocks cached on executors. Fast, but NOT
+  *   fault-tolerant — losing an executor loses lineage-less blocks
   *   and kills the job. Right for local/interactive runs.
-  * - reliable `checkpoint` to `checkpointDir`: blocks written to
-  *   shared storage (HDFS/S3 on a cluster); an executor loss just
-  *   re-reads. Right for long multi-hour iterative jobs at scale.
+  * - reliable `checkpoint`: blocks written to shared storage
+  *   (HDFS/S3 on a cluster); an executor loss just re-reads. Right
+  *   for long multi-hour iterative jobs at scale.
   */
 object Iterate {
 
-  def materialize(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
-          sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
+  def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint()
+    else df.localCheckpoint()
+
+  /** [[materialize]] with one long aggregate `metric` over `df` riding
+    * the same job as an observe() metric — the per-hop frontier size
+    * or changed-label count costs no extra scan. An empty frame
+    * observes 0. `keep` (all columns when empty) projects the frame
+    * after the metric is observed, so a bookkeeping column the metric
+    * reads is never materialized.
+    */
+  def materialize(df: DataFrame, metric: Column,
+    keep: Column*): (DataFrame, Long) = {
+    val obs = Observation()
+    val observed = df.observe(obs, coalesce(metric, lit(0L)).as("m"))
+    val out = materialize(if (keep.isEmpty) observed else observed.select(keep: _*))
+    (out, obs.get("m").asInstanceOf[Long])
+  }
 }

@@ -35,13 +35,28 @@ object KMeansVec {
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", Ann.norm(col("embedding")))
 
-  /** `iters` Lloyd rounds from a deterministic init; returns
-    * (cent_id, c_emb, c_nrm). `checkpointDir` selects reliable
-    * `checkpoint` over `localCheckpoint` for the per-round centroid
-    * materialization ([[Iterate.materialize]]).
+  /** One Lloyd recentering over assigned `(cent_id, embedding)` rows:
+    * per-centroid means dim by dim — posexplode + one (cent_id, dim)
+    * partial-agg groupBy, reassembled in dim order — normalized and
+    * materialized as the next `(cent_id, c_emb, c_nrm)` centroids.
     */
-  def fit(vectors: DataFrame, k: Int, iters: Int,
-    checkpointDir: Option[String] = None): DataFrame = {
+  private def recenter(assigned: DataFrame): DataFrame = {
+    val centered = assigned
+      .select(col("cent_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .groupBy(col("cent_id"), col("dim"))
+      .agg(avg(col("v").cast("double")).as("m"))
+      .groupBy(col("cent_id"))
+      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
+        s => s("m").cast("float")).as("embedding"))
+    Iterate.materialize(withNorm(centered)
+      .select(col("cent_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
+  }
+
+  /** `iters` Lloyd rounds from a deterministic init; returns
+    * (cent_id, c_emb, c_nrm), every round's centroids materialized
+    * ([[Iterate.materialize]]).
+    */
+  def fit(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
     val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
       .persist()
     // init = the k lowest vec_ids with ranks 1..k. The ids come back
@@ -59,20 +74,8 @@ object KMeansVec {
     var cents = Iterate.materialize(
       e.join(broadcast(idMap), "vec_id")
         .select(col("cent_id"), col("embedding").as("c_emb"),
-          col("nrm").as("c_nrm")), checkpointDir)
-    for (_ <- 1 to iters) {
-      val centered = assign(e, cents)
-        .select(col("cent_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("cent_id"), col("dim"))
-        .agg(avg(col("v").cast("double")).as("m"))
-        .groupBy(col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s("m").cast("float")).as("c_emb"))
-      cents = Iterate.materialize(
-        withNorm(centered.withColumnRenamed("c_emb", "embedding"))
-          .select(col("cent_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm")),
-        checkpointDir)
-    }
+          col("nrm").as("c_nrm")))
+    for (_ <- 1 to iters) cents = recenter(assign(e, cents))
     e.unpersist()
     cents
   }
@@ -94,11 +97,11 @@ object KMeansVec {
     * kTop + kSub dots per row, and the leaf matrix rides a real
     * `Broadcast` (once per executor).
     */
-  def fitRouted(vectors: DataFrame, kTop: Int, kSub: Int, iters: Int,
-    checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def fitRouted(vectors: DataFrame, kTop: Int, kSub: Int,
+    iters: Int): (DataFrame, DataFrame) = {
     val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
       .persist()
-    val top = fit(vectors, kTop, iters, checkpointDir)
+    val top = fit(vectors, kTop, iters)
     val routed = assign(e, top)
       .select(col("cent_id").as("top_id"), col("vec_id"),
         col("embedding"), col("nrm"))
@@ -110,9 +113,8 @@ object KMeansVec {
       routed.withColumn("rn", row_number().over(wInit).cast("long"))
         .filter(col("rn") <= kSub)
         .select(((col("top_id") - 1) * kSub + col("rn")).as("cent_id"),
-          col("embedding").as("c_emb"), col("nrm").as("c_nrm")),
-      checkpointDir)
-    val leaves = lloydLeaves(routed, init, kTop, kSub, iters, checkpointDir)
+          col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
+    val leaves = lloydLeaves(routed, init, kTop, kSub, iters)
     routed.unpersist(); e.unpersist()
     (top, leaves)
   }
@@ -138,13 +140,12 @@ object KMeansVec {
     * (topCents, leafCents).
     */
   def fitRoutedBalanced(vectors: DataFrame, kTop: Int, kSubMax: Int,
-    leafBudget: Int, iters: Int,
-    checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+    leafBudget: Int, iters: Int): (DataFrame, DataFrame) = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
       .persist()
-    val top = fit(vectors, kTop, iters, checkpointDir)
+    val top = fit(vectors, kTop, iters)
     val routed = assign(e, top)
       .select(col("cent_id").as("top_id"), col("vec_id"),
         col("embedding"), col("nrm"))
@@ -159,9 +160,8 @@ object KMeansVec {
         .withColumn("rn", row_number().over(wInit).cast("long"))
         .filter(col("rn") <= col("k_c"))
         .select(((col("top_id") - 1) * kSubMax + col("rn")).as("cent_id"),
-          col("embedding").as("c_emb"), col("nrm").as("c_nrm")),
-      checkpointDir)
-    val leaves = lloydLeaves(routed, init, kTop, kSubMax, iters, checkpointDir)
+          col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
+    val leaves = lloydLeaves(routed, init, kTop, kSubMax, iters)
     routed.unpersist(); e.unpersist()
     (top, leaves)
   }
@@ -206,22 +206,11 @@ object KMeansVec {
     * sub-level trains in `iters` jobs, not kTop·iters.
     */
   private def lloydLeaves(routed: DataFrame, init: DataFrame, kTop: Int,
-    grid: Int, iters: Int, checkpointDir: Option[String]): DataFrame = {
+    grid: Int, iters: Int): DataFrame = {
     var leaves = init
     for (_ <- 1 to iters) {
       val bc = graft.functions.RoutedNearest.broadcastFrom(leaves, kTop, grid)
-      val centered = assignRouted(routed, bc)
-        .select(col("cent_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("cent_id"), col("dim"))
-        .agg(avg(col("v").cast("double")).as("m"))
-        .groupBy(col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s("m").cast("float")).as("c_emb"))
-      leaves = Iterate.materialize(
-        withNorm(centered.withColumnRenamed("c_emb", "embedding"))
-          .select(col("cent_id"), col("embedding").as("c_emb"),
-            col("nrm").as("c_nrm")),
-        checkpointDir)
+      leaves = recenter(assignRouted(routed, bc))
       bc.unpersist(blocking = false)
     }
     leaves

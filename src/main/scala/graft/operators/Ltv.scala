@@ -42,7 +42,7 @@ object Ltv {
       expr("cast(floor(value * 1000000 + 0.5) AS bigint)").as("v_micro"))
     val firstw = Iterate.materialize(
       ev.groupBy(col("user_id"))
-        .agg(min(col("w")).as("cohort"), max(col("w")).as("lastw")), None)
+        .agg(min(col("w")).as("cohort"), max(col("w")).as("lastw")))
     val sizes = firstw.groupBy(col("cohort"))
       .agg(count(lit(1)).cast("long").as("cohort_users"))
     val span = firstw.agg(max(col("lastw")).as("w_hi"))

@@ -47,8 +47,7 @@ object MutualInfo {
   def mutualInfo(df: DataFrame, x: String, y: String): DataFrame = {
     val joint = Iterate.materialize(
       df.groupBy(col(x).as("xv"), col(y).as("yv"))
-        .agg(count(lit(1)).cast("long").as("c")),
-      None)
+        .agg(count(lit(1)).cast("long").as("c")))
     val jStats = joint.agg(
       sum(col("c")).cast("long").as("n"),
       count(lit(1)).cast("long").as("n_cells"),

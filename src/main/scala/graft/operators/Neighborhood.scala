@@ -46,40 +46,13 @@ object Neighborhood {
   val EffQ = 0.9
 
   /** All-pairs min-distance frame `(x, node, depth)` over `(src,
-    * dst)` edges — every ordered pair with dist ≤ maxT, exact.
-    * [[Crawl.bfs]]'s loop with pair state (each round one join + one
-    * anti-join, materialized to cut lineage).
+    * dst)` edges — every ordered pair with dist ≤ maxT, exact:
+    * [[Crawl.bfs]] keyed by source `x`, seeded at every node.
     */
-  def pairBalls(edges: DataFrame, maxT: Int = MaxT,
-    checkpointDir: Option[String] = None): DataFrame = {
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    def step(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = Iterate.materialize(
-        df.observe(obs, count(lit(1)).as("n")), checkpointDir)
-      (out, obs.get("n").asInstanceOf[Long])
-    }
+  def pairBalls(edges: DataFrame, maxT: Int = MaxT): DataFrame = {
     val nodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
-    val (seed, seedN) = step(nodes.select(col("node").as("x"),
-      col("node"), lit(0L).as("depth")))
-    var visited = seed
-    var frontier = seed
-    var frontierN = seedN
-    var depth = 0L
-    while (depth < maxT && frontierN > 0) {
-      depth += 1
-      val (next, n) = step(
-        frontier.join(edges, frontier("node") === edges("src"))
-          .select(col("x"), edges("dst").as("node")).distinct()
-          .join(visited, Seq("x", "node"), "left_anti")
-          .select(col("x"), col("node"), lit(depth).as("depth")))
-      if (n > 0) visited = visited.unionAll(next)
-      frontier = next
-      frontierN = n
-    }
-    edges.unpersist()
-    visited
+    Crawl.bfs(edges, nodes.select(col("node").as("x"), col("node")), maxT)
   }
 
   /** Exact neighborhood function: per radius t (0..saturation),
@@ -148,13 +121,11 @@ object Neighborhood {
     * lossless union of sketches). Estimates via [[Hll.estimate]]'s
     * formula read per node.
     */
-  def hyperBall(edges: DataFrame, rounds: Int, m: Int = Hll.M,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def hyperBall(edges: DataFrame, rounds: Int, m: Int = Hll.M): DataFrame = {
     edges.persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
-    var regs = Iterate.materialize(
-      Hll.sketchBy(nodes, "node", col("node"), m), checkpointDir)
+    var regs = Iterate.materialize(Hll.sketchBy(nodes, "node", col("node"), m))
     var out = regs.withColumn("t", lit(0L))
     var t = 0
     while (t < rounds) {
@@ -165,7 +136,7 @@ object Neighborhood {
       regs = Iterate.materialize(
         regs.unionAll(received)
           .groupBy(col("node"), col("bucket"))
-          .agg(max(col("max_rho")).as("max_rho")), checkpointDir)
+          .agg(max(col("max_rho")).as("max_rho")))
       out = out.unionAll(regs.withColumn("t", lit(t.toLong)))
     }
     edges.unpersist()

@@ -80,7 +80,7 @@ object PQ {
         .select(col("cent_id"), explode(subStructs(col("embedding"))).as("sc"))
         .select(col("sc.sub").as("sub"), col("cent_id"),
           col("sc.c_emb").as("c_emb"))
-        .withColumn("c_nrm", Ann.norm(col("c_emb"))), None)
+        .withColumn("c_nrm", Ann.norm(col("c_emb"))))
     for (_ <- 1 to iters) {
       // one k·m-row collect serves all m per-row argmax expressions
       // (the sequential form collected k rows once per subspace)
@@ -107,7 +107,7 @@ object PQ {
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
           s => s("m").cast("float")).as("c_emb"))
       books = Iterate.materialize(
-        centered.withColumn("c_nrm", Ann.norm(col("c_emb"))), None)
+        centered.withColumn("c_nrm", Ann.norm(col("c_emb"))))
     }
     e.unpersist()
     books

@@ -42,7 +42,7 @@ object Ppr {
     * directed path from any seed hold exactly 0.
     */
   def personalizedPageRank(edges: DataFrame, seedPred: Column,
-    iters: Int = Iters, checkpointDir: Option[String] = None): DataFrame = {
+    iters: Int = Iters): DataFrame = {
     val e = edges.select(col("src"), col("dst")).persist()
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
@@ -65,8 +65,7 @@ object Ppr {
             + expr("(850 * coalesce(m, 0)) div 1000")).as("pr"))
       // rank frames are constant-size: two rounds of lineage are safe,
       // halve the eager-materialization jobs (the pageRank schedule)
-      pr = if (i % 2 == 0 || i == iters) Iterate.materialize(next, checkpointDir)
-      else next
+      pr = if (i % 2 == 0 || i == iters) Iterate.materialize(next) else next
     }
     nodes.unpersist(); e.unpersist()
     pr.select(col("node"), col("pr"))

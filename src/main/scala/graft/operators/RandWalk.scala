@@ -40,7 +40,7 @@ object RandWalk {
   /** Walks over any `(src, dst)` edge frame: one walk per node,
     * `(start, n_steps, final_node, path)`.
     */
-  def walks(edges: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
+  def walks(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val ranked = e.withColumn("rk",
       (row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
@@ -52,7 +52,7 @@ object RandWalk {
     var walks = Iterate.materialize(
       nodes.select(col("node").as("start"), col("node").as("cur"),
         lit(0L).as("steps"), col("node").cast("string").as("path"),
-        lit(false).as("done")), checkpointDir)
+        lit(false).as("done")))
     for (t <- 0 until Steps) {
       val active = walks.filter(!col("done"))
       val withIdx = active.join(deg, active("cur") === deg("src"), "left_outer")
@@ -72,7 +72,7 @@ object RandWalk {
             .otherwise(col("path")).as("path"),
           col("e_dst").isNull.as("done"))
       walks = Iterate.materialize(
-        stepped.unionByName(walks.filter(col("done"))), checkpointDir)
+        stepped.unionByName(walks.filter(col("done"))))
     }
     walks.select(col("start"), col("steps").as("n_steps"),
       col("cur").as("final_node"), col("path"))

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * subgraph compute for every node
   *   f(v) = min{u active : u →* v}  (min ancestor, incl. self)
   *   r(v) = min{u active : v →* u}  (min descendant, incl. self)
-  * by directed min-label propagation ([[Components.propagate]]'s
-  * discipline, one edge join + one min groupBy per hop, changed
-  * counts riding `observe()`, every hop lineage-cut). f(v) = r(v) = m
+  * by directed min-label propagation ([[Components.minLabel]]: one
+  * edge join + one min groupBy per hop, changed counts riding
+  * `observe()`, every hop lineage-cut). f(v) = r(v) = m
   * certifies m →* v →* m, i.e. v ∈ SCC(m), and m is then provably
   * min(SCC): both f and r are ≤ every SCC member, and m is a member.
   * Peel every such node (label = m), shrink the active set, repeat.
@@ -58,39 +58,8 @@ object Scc {
     * any node u to v accumulates at v — i.e. the min ancestor. Pass
     * reversed edges for min descendant.
     */
-  private def minReach(nodes: DataFrame, edges: DataFrame,
-    checkpointDir: Option[String]): DataFrame =
-    minReachFrom(nodes.select(col("id"), col("id").as("lbl")), edges,
-      checkpointDir)
-
-  /** [[minReach]] with a caller-supplied seed labeling — the reuse
-    * [[Bowtie]] needs: seeding the core at a sentinel below every id
-    * turns min-ancestor propagation into plain reachability-from-core.
-    */
-  private[graft] def minReachFrom(seed: DataFrame, edges: DataFrame,
-    checkpointDir: Option[String]): DataFrame = {
-    var labels = Iterate.materialize(
-      seed.select(col("id"), col("lbl")), checkpointDir)
-    var done = false
-    while (!done) {
-      val viaEdges = labels.join(edges, labels("id") === edges("src"))
-        .select(edges("dst").as("id"), labels("lbl").as("lbl"),
-          lit(null).cast("long").as("old"))
-      val merged = labels.select(col("id"), col("lbl"), col("lbl").as("old"))
-        .unionAll(viaEdges)
-        .groupBy(col("id"))
-        .agg(min(col("lbl")).as("lbl"), min(col("old")).as("old"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Iterate.materialize(
-        merged.observe(obs,
-          sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
-            .otherwise(0L)).as("changed"))
-          .select(col("id"), col("lbl")), checkpointDir)
-      labels = next
-      done = obs.get("changed").asInstanceOf[Long] == 0L
-    }
-    labels
-  }
+  private def minReach(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Components.minLabel(edges, nodes.select(col("id"), col("id").as("lbl")))
 
   /** SCC labels over a directed edge frame.
     *
@@ -99,12 +68,11 @@ object Scc {
     * @return (id, scc) — scc = min node id of the strongly connected
     *         component (singletons label themselves)
     */
-  def scc(nodes: DataFrame, edges: DataFrame,
-    checkpointDir: Option[String] = None): DataFrame = {
+  def scc(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    var active = Iterate.materialize(nodes.select(col("id")), checkpointDir)
-    var nActive = active.count()
+    var (active, nActive) =
+      Iterate.materialize(nodes.select(col("id")), count(lit(1)))
     var result: Option[DataFrame] = None
     var rounds = 0
     while (nActive > 0) {
@@ -115,27 +83,25 @@ object Scc {
       val e = Iterate.materialize(
         e0.join(active.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(active.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")), checkpointDir)
-      val f = minReach(active, e, checkpointDir)
+          .select(col("src"), col("dst")))
+      val f = minReach(active, e)
       val r = minReach(active,
-        e.select(col("dst").as("src"), col("src").as("dst")), checkpointDir)
+        e.select(col("dst").as("src"), col("src").as("dst")))
       val joined = Iterate.materialize(
         f.select(col("id"), col("lbl").as("f"))
           .join(r.select(col("id").as("rid"), col("lbl").as("r")),
             col("id") === col("rid"))
-          .select(col("id"), col("f"), col("r")), checkpointDir)
+          .select(col("id"), col("f"), col("r")))
       val peeled = joined.filter(col("f") === col("r"))
         .select(col("id"), col("f").as("scc"))
       result = Some(result.map(_.unionAll(peeled)).getOrElse(peeled))
-      val obs = org.apache.spark.sql.Observation()
-      active = Iterate.materialize(
-        joined.filter(col("f") =!= col("r"))
-          .observe(obs, count(lit(1)).as("n"))
-          .select(col("id")), checkpointDir)
-      nActive = obs.get("n").asInstanceOf[Long]
+      val (next, n) = Iterate.materialize(
+        joined.filter(col("f") =!= col("r")).select(col("id")), count(lit(1)))
+      active = next
+      nActive = n
     }
     lastRounds = rounds
-    result.map(Iterate.materialize(_, checkpointDir))
+    result.map(Iterate.materialize(_))
       .getOrElse(nodes.select(col("id"), col("id").as("scc")).limit(0))
   }
 
@@ -196,8 +162,8 @@ object Scc {
       .join(broadcast(lb), Seq("dst"), "left_outer")
   }
 
-  def mergeEdges(labels: DataFrame, cond: DataFrame, newEdges: DataFrame,
-    checkpointDir: Option[String] = None): (DataFrame, DataFrame) = {
+  def mergeEdges(labels: DataFrame, cond: DataFrame,
+    newEdges: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.broadcast
     // endpoint → stored SCC representative (itself if unseen):
     // [[lookupLabels]] guarantees the stored label table streams past
@@ -223,7 +189,7 @@ object Scc {
       .unionAll(delta.select(col("dst").as("id")))
       .unionAll(newIds).distinct()
     // SCC over representatives only — bounded by the SCC count
-    val rep = scc(nodes, delta, checkpointDir)
+    val rep = scc(nodes, delta)
     val moved = rep.select(col("id").as("rep"), col("scc").as("new_scc"))
     val updated = labels.join(broadcast(moved),
       labels("scc") === col("rep"), "left_outer")
@@ -231,13 +197,12 @@ object Scc {
     val newLabeled = newIds.join(broadcast(moved),
       newIds("id") === col("rep"), "left_outer")
       .select(newIds("id"), coalesce(col("new_scc"), newIds("id")).as("scc"))
-    val outLabels = Iterate.materialize(
-      updated.unionAll(newLabeled), checkpointDir)
+    val outLabels = Iterate.materialize(updated.unionAll(newLabeled))
     // refresh the condensation under the NEW labels (the rep graph's
     // own condensation, relabeled — still SCC-count bounded)
     val outCond = Iterate.materialize(
       condensation(outLabels.select(col("id"), col("scc")),
-        delta.select(col("src"), col("dst"))), checkpointDir)
+        delta.select(col("src"), col("dst"))))
     (outLabels, outCond)
   }
 

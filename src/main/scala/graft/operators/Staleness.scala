@@ -33,7 +33,7 @@ object Staleness {
   def stalenessQuery(s: SparkSession, d: String): DataFrame = {
     val latest = Iterate.materialize(
       Snapshots.fetchLog(s, d).groupBy(col("doc_id"))
-        .agg(max(col("ts")).cast("long").as("ts")), None)
+        .agg(max(col("ts")).cast("long").as("ts")))
     val horizon = latest.agg(max(col("ts")).as("h"))
     val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
     val stal = latest.crossJoin(broadcast(horizon))

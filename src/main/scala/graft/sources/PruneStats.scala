@@ -50,7 +50,7 @@ object PruneStats {
     */
   def pruneStats(rows: DataFrame, rowsPerFile: Int, numPreds: Int): DataFrame = {
     val pts = Iterate.materialize(
-      rows.withColumn("z", Layout.morton(col("x"), col("y"))), None)
+      rows.withColumn("z", Layout.morton(col("x"), col("y"))))
 
     val fa = pts.withColumn("rk",
       row_number().over(GridWindow.ord(col("k"))))

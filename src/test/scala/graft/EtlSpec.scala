@@ -107,6 +107,23 @@ class EtlSpec extends AnyFunSuite {
     assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L))
   }
 
+  test("keyed bfs equals the union of single-root runs tagged with their root") {
+    import spark.implicits._
+    // two roots whose reach overlaps (0 and 4 both reach 2 and 3) at
+    // different depths, plus a node only one of them reaches
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
+      (4L, 2L), (3L, 5L), (6L, 4L)).toDF("src", "dst")
+    val keyed = Crawl.bfs(edges, Seq((0L, 0L), (4L, 4L)).toDF("root", "node"), 10)
+      .as[(Long, Long, Long)].collect().toSet
+    val single = Seq(0L, 4L).flatMap { r =>
+      Crawl.bfs(edges, Seq(r).toDF("node"), 10).as[(Long, Long)].collect()
+        .map { case (n, d) => (r, n, d) }
+    }.toSet
+    assert(keyed == single)
+    assert(keyed.contains((0L, 3L, 2L)) && keyed.contains((4L, 3L, 2L)) &&
+      keyed.contains((4L, 0L, 3L)) && !keyed.exists(_._2 == 6L))
+  }
+
   test("sessionize splits on 30-minute gaps") {
     val sess = Analytics.sessionize(spark, sf)
     assert(sess.count() > 0)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.operators.Skew
 import graft.streaming.{DocIn, StreamingDedup}
+import org.apache.spark.CheckpointDirScope
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -266,21 +267,25 @@ class ScaleSpec extends AnyFunSuite {
     val nodes = spark.range(1, 13).select(col("id"))
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 5L))
       .toDF("a_id", "b_id")
-    val got = operators.Components
-      .connectedComponents(nodes, pairs, Some(tmp))
-      .as[(Long, Long)].collect().toMap
+    // reliable checkpointing follows the session's checkpoint dir,
+    // scoped so the shared test session never keeps it
+    val got = CheckpointDirScope(spark.sparkContext, tmp) {
+      operators.Components.connectedComponents(nodes, pairs)
+        .as[(Long, Long)].collect().toMap
+    }
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L) ++
       Seq(4L, 6L, 7L, 8L, 9L, 12L).map(i => i -> i)
     assert(got == expect)
     // reliable checkpoint actually wrote RDD blocks to the dir
-    def rddFiles(p: java.io.File): Long =
-      if (p.isDirectory) p.listFiles.map(rddFiles).sum
-      else if (p.getName.startsWith("rdd-") || p.getParentFile.getName.startsWith("rdd-")) 1L
-      else 0L
     assert(rddFiles(new java.io.File(tmp)) > 0,
       s"no checkpoint files written under $tmp")
   }
+
+  private def rddFiles(p: java.io.File): Long =
+    if (p.isDirectory) p.listFiles.map(rddFiles).sum
+    else if (p.getName.startsWith("rdd-") || p.getParentFile.getName.startsWith("rdd-")) 1L
+    else 0L
 
   test("bfs with reliable checkpoint matches localCheckpoint bfs") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_bfs").toString
@@ -288,9 +293,19 @@ class ScaleSpec extends AnyFunSuite {
     val roots = spark.range(1).select(lit(0L).as("node"))
     val local = operators.Crawl.bfs(edges, roots, 20)
       .as[(Long, Long)].collect().toSet
-    val reliable = operators.Crawl.bfs(edges, roots, 20, Some(tmp))
-      .as[(Long, Long)].collect().toSet
+    val sc = spark.sparkContext
+    val before = sc.getCheckpointDir
+    val (reliable, during) = CheckpointDirScope(sc, tmp) {
+      (operators.Crawl.bfs(edges, roots, 20).as[(Long, Long)].collect().toSet,
+        sc.getCheckpointDir)
+    }
     assert(reliable == local && reliable.nonEmpty)
+    assert(rddFiles(new java.io.File(tmp)) > 0,
+      s"no checkpoint files written under $tmp")
+    // a 20-hop reliable BFS leaves the session's directory exactly as
+    // set: the operators read it, never rewrite it
+    assert(during == Some(tmp), s"checkpoint dir rewritten to $during")
+    assert(sc.getCheckpointDir == before)
   }
 
   test("heavy-family count laws are exactly linear under distinct-replica growth") {

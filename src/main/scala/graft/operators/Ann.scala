@@ -214,17 +214,8 @@ object Ann {
     */
   def ivfSearch(s: SparkSession, vectorsWithNorm: DataFrame,
     queriesWithNorm: DataFrame, cents: DataFrame, k: Int = TopK,
-    nprobe: Int = NProbe): DataFrame = {
-    val assigned = KMeansVec.assign(vectorsWithNorm, cents)
-    val scored = probeLists(queriesWithNorm, cents, nprobe)
-      .join(assigned, "cent_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("q_emb"), col("q_nrm"), col("embedding"), col("nrm")).as("cos_sim"))
-    // a vector reached via both probed lists dedups inside the top-k
-    // buffer — no distinct() shuffle of the candidate set
-    rankTopK(s, scored, k)
-  }
+    nprobe: Int = NProbe): DataFrame =
+    ivfProbe(s, vectorsWithNorm, queriesWithNorm, cents, k, nprobe, None)
 
   /** IVF search with PER-QUERY ADAPTIVE probe widths: a fixed nprobe
     * wastes reads on easy queries (one dominant list) and starves hard
@@ -241,14 +232,24 @@ object Ann {
     */
   def ivfSearchAdaptive(s: SparkSession, vectorsWithNorm: DataFrame,
     queriesWithNorm: DataFrame, cents: DataFrame, k: Int = TopK,
-    nprobeMax: Int = NProbe, margin: Double = 0.05): DataFrame = {
+    nprobeMax: Int = NProbe, margin: Double = 0.05): DataFrame =
+    ivfProbe(s, vectorsWithNorm, queriesWithNorm, cents, k, nprobeMax,
+      Some(margin))
+
+  /** The body of [[ivfSearch]] (fixed width) and [[ivfSearchAdaptive]]
+    * (`margin` set).
+    */
+  private def ivfProbe(s: SparkSession, vectorsWithNorm: DataFrame,
+    queriesWithNorm: DataFrame, cents: DataFrame, k: Int, nprobe: Int,
+    margin: Option[Double]): DataFrame = {
     val assigned = KMeansVec.assign(vectorsWithNorm, cents)
-    val scored = probeLists(queriesWithNorm, cents, nprobeMax,
-      margin = Some(margin))
+    val scored = probeLists(queriesWithNorm, cents, nprobe, margin = margin)
       .join(assigned, "cent_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("q_emb"), col("q_nrm"), col("embedding"), col("nrm")).as("cos_sim"))
+    // a vector reached via both probed lists dedups inside the top-k
+    // buffer — no distinct() shuffle of the candidate set
     rankTopK(s, scored, k)
   }
 
@@ -624,24 +625,53 @@ object Ann {
   def ivfPqSearch(s: SparkSession, vectors: DataFrame, queries: DataFrame,
     dim: Int, nlist: Int = 16, m: Int = 8, kcode: Int = 16,
     k: Int = TopK, nprobe: Int = NProbe): DataFrame = {
-    val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
-    // the coarse quantizer and the fused PQ codebook chain are
-    // independent — overlap them (guide §2.6), then ONE collect of the
-    // fused frame serves the LUTs and all m encode argmaxes
-    val (cents, bookFrame) = Concurrently.both(
-      KMeansVec.fit(vectors.select(col("vec_id"), col("embedding")),
-        nlist, iters = 3),
-      PQ.fitFrame(vectors.select(col("vec_id"), col("embedding")),
-        dim, m, kcode))
-    val perSub = PQ.collectFrameRows(bookFrame, m)
+    val v = vectors.select(col("vec_id"), col("embedding"))
+    val (cents, _, perSub) = trainIvfPq(v, dim, m, kcode)(
+      KMeansVec.fit(v, nlist, iters = 3))
     val books = PQ.collectBooksFromRows(perSub)
-    // index build: list id + m codes + rec norm in one projection
-    val resident = PQ.encodeFromRows(
-      KMeansVec.assign(e, cents).select(col("vec_id"), col("cent_id"), col("embedding")),
-      perSub, dim, passthrough = Seq("cent_id"))
-      .withColumn("rec_nrm", PQ.recNorm(col("codes"), books))
     val q = withNorm(queries.select(col("vec_id"), col("embedding")))
-    rankCodes(s, resident, adcProbes(q, cents, books, dim, nprobe), books, k)
+    rankCodes(s, encodeResident(withNorm(v), cents, None, perSub, dim),
+      adcProbes(q, cents, books, dim, nprobe), books, k)
+  }
+
+  /** The IVF-PQ training prologue shared by [[ivfPqSearch]] and
+    * [[graft.sources.IndexStore.build]]: the `coarse` quantizer chain
+    * and the fused PQ codebook chain ([[PQ.fitFrame]]) train on the
+    * same corpus but are independent, so they overlap (guide §2.6)
+    * and the PQ fits back-fill the executors the coarse rounds leave
+    * idle; then ONE collect of the codebook frame serves the PqBooks
+    * LUTs and all m encode argmaxes. Returns (coarse, codebook frame,
+    * per-subspace codebook rows).
+    */
+  private[graft] def trainIvfPq[C](v: DataFrame, dim: Int, m: Int,
+    kcode: Int)(coarse: => C): (C, DataFrame, Seq[Seq[(Long, Array[Float])]]) = {
+    val (c, bookFrame) = Concurrently.both(coarse, PQ.fitFrame(v, dim, m, kcode))
+    (c, bookFrame, PQ.collectRows(bookFrame))
+  }
+
+  /** The one resident encoder — what [[ivfPqSearch]] scores and
+    * [[graft.sources.IndexStore.build]]/`append` write: coarse list
+    * assignment, all m codes ([[PQ.encodeFromRows]]) and the
+    * reconstruction norm ([[PQ.recNorm]]) as per-row expressions over
+    * ONE narrow pass of `e` `(vec_id, embedding, nrm)` — no shuffle, no
+    * join. Returns `(vec_id, cent_id, codes, rec_nrm)`. Assignment is
+    * flat against `cents`, or with `route = Some((top, kTop, kSub))`
+    * routed: to the nearest of the `top` cells, then to the nearest of
+    * that cell's leaves on the `kSub` grid ([[KMeansVec.fitRouted]]).
+    */
+  private[graft] def encodeResident(e: DataFrame, cents: DataFrame,
+    route: Option[(DataFrame, Int, Int)],
+    perSub: Seq[Seq[(Long, Array[Float])]], dim: Int): DataFrame = {
+    val assigned = route match {
+      case None => KMeansVec.assign(e, cents)
+      case Some((top, kTop, kSub)) => KMeansVec.assignRouted(
+        KMeansVec.assign(e, top).withColumnRenamed("cent_id", "top_id"),
+        graft.functions.RoutedNearest.broadcastFrom(cents, kTop, kSub))
+    }
+    PQ.encodeFromRows(
+      assigned.select(col("vec_id"), col("cent_id"), col("embedding")),
+      perSub, dim, passthrough = Seq("cent_id"))
+      .withColumn("rec_nrm", PQ.recNorm(col("codes"), PQ.collectBooksFromRows(perSub)))
   }
 
   /** Exact re-rank of an ANN shortlist — the stage that buys back PQ

@@ -53,7 +53,7 @@ object Bowtie {
     * frame — the unit BowtieSpec drives with a planted bow-tie.
     */
   def classify(nodes: DataFrame, e: DataFrame): DataFrame = {
-    val labels = Scc.scc(nodes, e).localCheckpoint()
+    val labels = Scc.scc(nodes, e)
     // giant SCC: largest size, min scc id on ties — a 1-row argmax
     val giant = labels.groupBy(col("scc"))
       .agg(count(lit(1)).cast("long").as("sz"))

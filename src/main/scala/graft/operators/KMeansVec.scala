@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,12 +8,16 @@ import org.apache.spark.sql.functions._
   * column — trains the coarse quantizer for [[Ann.ivfTrained]]
   * (replacing the fixed modulo-sampled centroids of [[Ann.ivf]]).
   *
+  * ONE Lloyd loop ([[fitParts]]) trains both this flat quantizer and
+  * [[PQ.fitFrame]]'s m subspace codebooks; the routed trainers reuse
+  * its rounds and recentering with a routed assignment.
+  *
   * Iteration shape at scale: assignment ships k centroids to the tasks
-  * and makes one shuffle-free pass over the vectors ([[assign]]); the
-  * re-centering groupBy shuffles (cent_id, dim) pairs — k·dim groups,
-  * partial-aggregated map-side. Each round's centroids are
-  * materialized ([[Iterate.materialize]]): k rows, cuts the iterative
-  * lineage exactly like [[Crawl.bfs]] does for its frontier.
+  * and makes one shuffle-free pass over the vectors; the re-centering
+  * groupBy shuffles (cent_id, dim) pairs — k·dim groups, partial-
+  * aggregated map-side. Each round's centroids are materialized
+  * ([[Iterate.materialize]]): k rows, cuts the iterative lineage
+  * exactly like [[Crawl.bfs]] does for its frontier.
   *
   * Determinism: init = the k lowest vec_ids; ties in assignment break
   * on lowest cent_id; means are exact double sums in dim order.
@@ -35,49 +39,89 @@ object KMeansVec {
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", Ann.norm(col("embedding")))
 
-  /** One Lloyd recentering over assigned `(cent_id, embedding)` rows:
-    * per-centroid means dim by dim — posexplode + one (cent_id, dim)
-    * partial-agg groupBy, reassembled in dim order — normalized and
-    * materialized as the next `(cent_id, c_emb, c_nrm)` centroids.
+  /** One Lloyd recentering over assigned `(keys…, cent_id, embedding)`
+    * rows: per-centroid means dim by dim — posexplode + one
+    * `(keys…, cent_id, dim)` partial-agg groupBy, reassembled in dim
+    * order — normalized and materialized as the next
+    * `(keys…, cent_id, c_emb, c_nrm)` centroids.
     */
-  private def recenter(assigned: DataFrame): DataFrame = {
-    val centered = assigned
-      .select(col("cent_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy(col("cent_id"), col("dim"))
+  private def recenter(assigned: DataFrame, keys: Seq[String]): DataFrame = {
+    val g = keys.map(col) :+ col("cent_id")
+    Iterate.materialize(assigned
+      .select(g :+ posexplode(col("embedding")).as(Seq("dim", "v")): _*)
+      .groupBy(g :+ col("dim"): _*)
       .agg(avg(col("v").cast("double")).as("m"))
-      .groupBy(col("cent_id"))
+      .groupBy(g: _*)
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-        s => s("m").cast("float")).as("embedding"))
-    Iterate.materialize(withNorm(centered)
-      .select(col("cent_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
+        s => s("m").cast("float")).as("c_emb"))
+      .withColumn("c_nrm", Ann.norm(col("c_emb"))))
   }
+
+  /** `iters` Lloyd rounds from `init`: each round recenters the rows
+    * `assigned(cents)` labels with their nearest centroid.
+    */
+  private def lloyd(init: DataFrame, iters: Int, keys: Seq[String])(
+    assigned: DataFrame => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init)((cents, _) => recenter(assigned(cents), keys))
 
   /** `iters` Lloyd rounds from a deterministic init; returns
     * (cent_id, c_emb, c_nrm), every round's centroids materialized
     * ([[Iterate.materialize]]).
     */
-  def fit(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
-      .persist()
-    // init = the k lowest vec_ids with ranks 1..k. The ids come back
-    // via TakeOrdered (partial top-k per partition, never a full
-    // sort) and the k-row rank map is built driver-side and broadcast
-    // back — a k-long bounded-statistic collect, replacing the
-    // unpartitioned row_number window (the r5 test-log-noise source:
-    // a corpus-shaped construct for a k-row job)
+  def fit(vectors: DataFrame, k: Int, iters: Int): DataFrame =
+    fitParts(vectors, k, iters, Seq(col("embedding")), keyed = false)
+
+  /** The one Lloyd chain behind [[fit]] and [[PQ.fitFrame]]: every
+    * `parts` view of the embedding (the whole vector for flat k-means,
+    * the m subspace slices for PQ) trains its own k centroids, all in
+    * one chain of jobs. `keyed` tags each centroid with its part index
+    * as `sub`. Returns the materialized
+    * `([sub,] cent_id, c_emb, c_nrm)` frame.
+    *  - init: the k lowest vec_ids, shared by every part. The ids come
+    *    back via TakeOrdered (partial top-k per partition, never a full
+    *    sort) and the k-row rank map is built driver-side and broadcast
+    *    back — a k-long bounded-statistic collect, not an unpartitioned
+    *    row_number window.
+    *  - each round: ONE centroid collect feeds one
+    *    [[graft.functions.NearestCentroids]] argmax per part (rows
+    *    sorted by cent_id, as `fromFrame` does), and ONE [[recenter]]
+    *    covers all parts.
+    */
+  private[operators] def fitParts(vectors: DataFrame, k: Int, iters: Int,
+    parts: Seq[Column], keyed: Boolean): DataFrame = {
     val spark = vectors.sparkSession
+    val keys = if (keyed) Seq("sub") else Nil
+    val e = vectors.select(col("vec_id"), col("embedding")).persist()
+    // one `(keys…, cent_id, embedding)` row per (vector, part): part j's
+    // slice labeled with `cid(j)`
+    def perPart(df: DataFrame, cid: Int => Column): DataFrame =
+      df.select(explode(array(parts.zipWithIndex.map { case (p, j) =>
+        struct(lit(j).as("sub"), cid(j).as("cent_id"), p.as("embedding"))
+      }: _*)).as("x"))
+        .select(keys.map(c => col(s"x.$c")) ++
+          Seq(col("x.cent_id"), col("x.embedding")): _*)
     val initIds = e.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id")).collect().map(_.getLong(0)).sorted
     val idMap = spark.createDataFrame(
       initIds.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
       .toDF("vec_id", "cent_id")
-    var cents = Iterate.materialize(
-      e.join(broadcast(idMap), "vec_id")
-        .select(col("cent_id"), col("embedding").as("c_emb"),
-          col("nrm").as("c_nrm")))
-    for (_ <- 1 to iters) cents = recenter(assign(e, cents))
+    val init = Iterate.materialize(
+      perPart(e.join(broadcast(idMap), "vec_id"), _ => col("cent_id"))
+        .select(keys.map(col) ++ Seq(col("cent_id"),
+          col("embedding").as("c_emb"), Ann.norm(col("embedding")).as("c_nrm")): _*))
+    val out = lloyd(init, iters, keys) { cents =>
+      val rows = cents.collect()
+      perPart(e, j => {
+        val rj = rows.filter(r => !keyed || r.getAs[Int]("sub") == j)
+          .sortBy(_.getAs[Long]("cent_id"))
+        element_at(graft.functions.NearestCentroids(parts(j),
+          rj.map(_.getAs[Long]("cent_id")),
+          rj.map(_.getAs[Seq[Float]]("c_emb").toArray),
+          rj.map(_.getAs[Double]("c_nrm")), 1), 1).getField("cent_id")
+      })
+    }
     e.unpersist()
-    cents
+    out
   }
 
   /** Two-level ROUTED coarse quantizer: [[fit]] trains `kTop` top
@@ -98,26 +142,8 @@ object KMeansVec {
     * `Broadcast` (once per executor).
     */
   def fitRouted(vectors: DataFrame, kTop: Int, kSub: Int,
-    iters: Int): (DataFrame, DataFrame) = {
-    val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
-      .persist()
-    val top = fit(vectors, kTop, iters)
-    val routed = assign(e, top)
-      .select(col("cent_id").as("top_id"), col("vec_id"),
-        col("embedding"), col("nrm"))
-      .persist()
-    // init: the kSub lowest vec_ids OF EACH CELL (fit's init rule,
-    // applied per group)
-    val wInit = Window.partitionBy(col("top_id")).orderBy(col("vec_id"))
-    val init = Iterate.materialize(
-      routed.withColumn("rn", row_number().over(wInit).cast("long"))
-        .filter(col("rn") <= kSub)
-        .select(((col("top_id") - 1) * kSub + col("rn")).as("cent_id"),
-          col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
-    val leaves = lloydLeaves(routed, init, kTop, kSub, iters)
-    routed.unpersist(); e.unpersist()
-    (top, leaves)
-  }
+    iters: Int): (DataFrame, DataFrame) =
+    fitTwoLevel(vectors, kTop, kSub, iters)(routed => (routed, lit(kSub)))
 
   /** BALANCE-AWARE two-level quantizer: [[fitRouted]] with the leaf
     * budget allocated to top cells IN PROPORTION TO THEIR MASS instead
@@ -140,9 +166,23 @@ object KMeansVec {
     * (topCents, leafCents).
     */
   def fitRoutedBalanced(vectors: DataFrame, kTop: Int, kSubMax: Int,
-    leafBudget: Int, iters: Int): (DataFrame, DataFrame) = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
+    leafBudget: Int, iters: Int): (DataFrame, DataFrame) =
+    fitTwoLevel(vectors, kTop, kSubMax, iters) { routed =>
+      val cnts = routed.groupBy(col("top_id")).count().collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val alloc = vectors.sparkSession.createDataFrame(
+        allocateLeaves(cnts, kSubMax, leafBudget).toSeq).toDF("top_id", "k_c")
+      (routed.join(broadcast(alloc), "top_id"), col("k_c"))
+    }
+
+  /** The routed trainer behind [[fitRouted]] and [[fitRoutedBalanced]]:
+    * fit the top cells, route every row to one, seed each cell's
+    * leaves with its lowest vec_ids ([[fit]]'s init rule, per group)
+    * up to the per-cell leaf cap `caps` returns for the routed rows,
+    * and train all leaves on the `grid` layout with [[lloydLeaves]].
+    */
+  private def fitTwoLevel(vectors: DataFrame, kTop: Int, grid: Int,
+    iters: Int)(caps: DataFrame => (DataFrame, Column)): (DataFrame, DataFrame) = {
     val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
       .persist()
     val top = fit(vectors, kTop, iters)
@@ -150,18 +190,14 @@ object KMeansVec {
       .select(col("cent_id").as("top_id"), col("vec_id"),
         col("embedding"), col("nrm"))
       .persist()
-    val cnts = routed.groupBy(col("top_id")).count().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val alloc = allocateLeaves(cnts, kSubMax, leafBudget)
-    val allocDf = broadcast(alloc.toSeq.toDF("top_id", "k_c"))
+    val (capped, cap) = caps(routed)
     val wInit = Window.partitionBy(col("top_id")).orderBy(col("vec_id"))
     val init = Iterate.materialize(
-      routed.join(allocDf, "top_id")
-        .withColumn("rn", row_number().over(wInit).cast("long"))
-        .filter(col("rn") <= col("k_c"))
-        .select(((col("top_id") - 1) * kSubMax + col("rn")).as("cent_id"),
+      capped.withColumn("rn", row_number().over(wInit).cast("long"))
+        .filter(col("rn") <= cap)
+        .select(((col("top_id") - 1) * grid + col("rn")).as("cent_id"),
           col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
-    val leaves = lloydLeaves(routed, init, kTop, kSubMax, iters)
+    val leaves = lloydLeaves(routed, init, kTop, grid, iters)
     routed.unpersist(); e.unpersist()
     (top, leaves)
   }
@@ -198,21 +234,22 @@ object KMeansVec {
     alloc.toArray.sortBy(_._1)
   }
 
-  /** The grouped Lloyd pass shared by [[fitRouted]] and
-    * [[fitRoutedBalanced]]: every cell's leaves recenter
-    * simultaneously — assignment is the broadcast-backed routed argmax
-    * (each row considers only its own top cell's leaves on the `grid`
-    * layout), recentering is one leaf-id groupBy — so the whole
-    * sub-level trains in `iters` jobs, not kTop·iters.
+  /** The grouped Lloyd pass of [[fitTwoLevel]]: the same [[lloyd]]
+    * rounds and recentering as [[fit]], with every cell's leaves
+    * recentering simultaneously — assignment is the broadcast-backed
+    * routed argmax (each row considers only its own top cell's leaves
+    * on the `grid` layout) — so the whole sub-level trains in `iters`
+    * jobs, not kTop·iters.
     */
   private def lloydLeaves(routed: DataFrame, init: DataFrame, kTop: Int,
     grid: Int, iters: Int): DataFrame = {
-    var leaves = init
-    for (_ <- 1 to iters) {
-      val bc = graft.functions.RoutedNearest.broadcastFrom(leaves, kTop, grid)
-      leaves = recenter(assignRouted(routed, bc))
-      bc.unpersist(blocking = false)
+    val bcs = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.broadcast.Broadcast[graft.functions.RoutedCents]]
+    val leaves = lloyd(init, iters, Nil) { cents =>
+      bcs += graft.functions.RoutedNearest.broadcastFrom(cents, kTop, grid)
+      assignRouted(routed, bcs.last)
     }
+    bcs.foreach(_.unpersist(blocking = false))
     leaves
   }
 

@@ -5,16 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** Product quantization — the memory side of a production ANN index
   * (IVF-PQ): the d-dim embedding space is split into `m` subspaces of
-  * d/m dims, each with its own k-centroid codebook ([[KMeansVec]] per
-  * subspace), and a vector is stored as `m` small codes instead of `d`
-  * floats (m·log2(k) bits — 64 floats → 8 bytes at m=8, k=256). The
+  * d/m dims, each with its own k-centroid codebook, and a vector is
+  * stored as `m` small codes instead of `d` floats (m·log2(k) bits —
+  * 64 floats → 8 bytes at m=8, k=256). The
   * coarse IVF quantizer prunes WHICH vectors to score;
   * PQ compresses WHAT is resident to score them with.
   *
-  * Scale shape: training is m independent [[KMeansVec.fit]] runs on
-  * sliced columns (each assignment pass shuffle-free); encoding is m
-  * chained [[graft.functions.NearestCentroids]] per-row argmaxes over
-  * the sliced embedding — one narrow pass over the corpus, zero
+  * Scale shape: training is [[KMeansVec]]'s one Lloyd loop with the m
+  * slices as its parts — one job chain, each assignment pass
+  * shuffle-free ([[fitFrame]]); encoding is m chained
+  * [[graft.functions.NearestCentroids]] per-row argmaxes over the
+  * sliced embedding — one narrow pass over the corpus, zero
   * shuffle; decoding is m broadcast joins against k-row codebooks.
   * Nothing but the corpus scan grows with the data.
   *
@@ -36,90 +37,40 @@ object PQ {
       .select(col("cent_id"), col("c_emb"), col("c_nrm")))
   }
 
-  /** All m subspace Lloyd chains FUSED into one grouped iteration —
-    * the [[KMeansVec.lloydLeaves]] idea applied to PQ training. The m
-    * quantizers are mathematically independent, but running them as m
-    * separate [[KMeansVec.fit]] chains paid m× the per-round driver
-    * actions (each round = a k-row centroid collect + a checkpoint
-    * materialization), ~8× the jobs of the work's true depth — pure
-    * scheduling overhead at any scale, and the dominant cost of
-    * [[graft.sources.IndexStore.build]] (guide §1.2 step 1: fix the
-    * job shape before the per-task work; §2.6 overlap only recovers
-    * part of what fusion removes outright).
+  /** All m subspace Lloyd chains FUSED into one grouped iteration:
+    * the m subspace slices are the parts of [[KMeansVec]]'s one Lloyd
+    * loop. The m quantizers are mathematically independent, but
+    * running them as m separate [[KMeansVec.fit]] chains paid m× the
+    * per-round driver actions (each round = a k-row centroid collect +
+    * a checkpoint materialization), ~8× the jobs of the work's true
+    * depth — pure scheduling overhead at any scale, and the dominant
+    * cost of [[graft.sources.IndexStore.build]].
     *
     * Returns ONE materialized frame `(sub, cent_id, c_emb, c_nrm)`.
     * Per-subspace values are IDENTICAL to the sequential per-subspace
-    * [[KMeansVec.fit]] (parity-asserted in PQSpec):
-    *  - init: the k lowest vec_ids — the same TakeOrdered the
-    *    sequential form ran m times (every subspace sees all vec_ids,
-    *    so the id set is shared); slice j of those vectors is exactly
-    *    subspace j's init.
-    *  - assignment: the same [[graft.functions.NearestCentroids]]
-    *    expression per subspace (rows sorted by cent_id as
-    *    `fromFrame` does), applied to the same slice.
-    *  - recentering: groupBy (sub, cent_id, dim) feeds each
-    *    (cent_id, dim) group the same value multiset the sequential
-    *    per-subspace groupBy folded.
+    * [[KMeansVec.fit]] (parity-asserted in PQSpec): every subspace sees
+    * all vec_ids, so the init id set is shared; assignment is the same
+    * [[graft.functions.NearestCentroids]] argmax per slice; and the
+    * (sub, cent_id, dim) groupBy feeds each (cent_id, dim) group the
+    * same value multiset the sequential per-subspace groupBy folded.
     */
   def fitFrame(vectors: DataFrame, dim: Int, m: Int, k: Int,
     iters: Int = 3): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    val spark = vectors.sparkSession
-    val e = vectors.select(col("vec_id"), col("embedding")).persist()
-    val initIds = e.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted
-    val idMap = spark.createDataFrame(
-      initIds.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
-      .toDF("vec_id", "cent_id")
-    def subStructs(embCol: Column): Column = array((0 until m).map(j =>
-      struct(lit(j).as("sub"),
-        slice(embCol, j * sub + 1, sub).as("c_emb"))): _*)
-    var books = Iterate.materialize(
-      e.join(broadcast(idMap), "vec_id")
-        .select(col("cent_id"), explode(subStructs(col("embedding"))).as("sc"))
-        .select(col("sc.sub").as("sub"), col("cent_id"),
-          col("sc.c_emb").as("c_emb"))
-        .withColumn("c_nrm", Ann.norm(col("c_emb"))))
-    for (_ <- 1 to iters) {
-      // one k·m-row collect serves all m per-row argmax expressions
-      // (the sequential form collected k rows once per subspace)
-      val rows = books.select(col("sub"), col("cent_id"), col("c_emb"),
-        col("c_nrm")).collect()
-      val coded = (0 until m).foldLeft(e) { case (df, j) =>
-        val rj = rows.filter(_.getInt(0) == j).sortBy(_.getLong(1))
-        df.withColumn(s"__c$j",
-          element_at(graft.functions.NearestCentroids(
-            slice(col("embedding"), j * sub + 1, sub),
-            rj.map(_.getLong(1)), rj.map(_.getSeq[Float](2).toArray),
-            rj.map(_.getDouble(3)), 1), 1).getField("cent_id"))
-      }
-      // all m recenterings ride ONE exchange: (sub, cent_id, dim) → avg
-      val centered = coded
-        .select(explode(array((0 until m).map(j =>
-          struct(lit(j).as("sub"), col(s"__c$j").as("cent_id"),
-            slice(col("embedding"), j * sub + 1, sub).as("v"))): _*)).as("x"))
-        .select(col("x.sub").as("sub"), col("x.cent_id").as("cent_id"),
-          posexplode(col("x.v")).as(Seq("dim", "v")))
-        .groupBy(col("sub"), col("cent_id"), col("dim"))
-        .agg(avg(col("v").cast("double")).as("m"))
-        .groupBy(col("sub"), col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s("m").cast("float")).as("c_emb"))
-      books = Iterate.materialize(
-        centered.withColumn("c_nrm", Ann.norm(col("c_emb"))))
-    }
-    e.unpersist()
-    books
+    KMeansVec.fitParts(vectors, k, iters,
+      (0 until m).map(j => slice(col("embedding"), j * sub + 1, sub)),
+      keyed = true)
   }
 
-  /** One collect of a [[fitFrame]] result as per-subspace
-    * `(cent_id, c_emb)` rows — the shared driver-side source for
-    * [[collectBooksFromRows]], [[encodeFromRows]] and a codebooks
-    * write, replacing m separate frame collects.
+  /** One collect of a `(sub, cent_id, c_emb)` codebook frame — a
+    * [[fitFrame]] result or the stored table — as per-subspace
+    * `(cent_id, c_emb)` rows: the one driver-side form that
+    * [[collectBooksFromRows]] and [[encodeFromRows]] read.
     */
-  def collectFrameRows(books: DataFrame, m: Int): Seq[Seq[(Long, Array[Float])]] = {
+  def collectRows(books: DataFrame): Seq[Seq[(Long, Array[Float])]] = {
     val rows = books.select(col("sub"), col("cent_id"), col("c_emb")).collect()
+    val m = rows.iterator.map(_.getInt(0)).max + 1
     (0 until m).map { j =>
       rows.filter(_.getInt(0) == j)
         .map(r => r.getLong(1) -> r.getSeq[Float](2).toArray).toSeq
@@ -127,35 +78,25 @@ object PQ {
   }
 
   /** `(vec_id[, passthrough...], codes: array<long>)` — code j is the
-    * nearest subspace-j centroid of the vector's j-th slice. One
-    * narrow pass, no shuffle; `passthrough` columns (e.g. the coarse
-    * IVF list id) ride the same pass, which is how a production index
-    * build writes list assignment + codes together instead of paying
-    * an id-shuffle join to recombine them.
+    * nearest subspace-j centroid of the vector's j-th slice
+    * ([[encodeFromRows]] over the m collected codebook frames).
     */
   def encode(vectors: DataFrame, codebooks: Seq[DataFrame], dim: Int,
-    passthrough: Seq[String] = Nil): DataFrame = {
-    val m = codebooks.size
-    val sub = dim / m
-    val coded = codebooks.zipWithIndex.foldLeft(vectors) { case (df, (cb, j)) =>
-      df.withColumn(s"__c$j",
-        element_at(graft.functions.NearestCentroids.fromFrame(
-          slice(col("embedding"), j * sub + 1, sub), cb, 1), 1)
-          .getField("cent_id"))
-    }
-    coded.select(col("vec_id") +: passthrough.map(col) :+
-      array((0 until m).map(j => col(s"__c$j")): _*).as("codes"): _*)
-  }
+    passthrough: Seq[String] = Nil): DataFrame =
+    encodeFromRows(vectors, codebooks.map(_.select(col("cent_id"), col("c_emb"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq),
+      dim, passthrough)
 
   /** [[encode]] from already-collected `(cent_id, c_emb)` codebook
-    * rows (one per subspace, exactly the stored rows) — the form
-    * [[graft.sources.IndexStore.append]] uses so one codebooks
-    * read+collect serves all m argmaxes instead of m+2 re-reads of the
-    * same tiny parquet. Rows are sorted by cent_id and norms recomputed
-    * with the same ascending-index double fold as [[graft.operators.Ann.norm]]
-    * ([[graft.functions.VecDot]] order), so the built
-    * [[graft.functions.NearestCentroids]] expression is value-identical
-    * to the frame-collected one.
+    * rows, one per subspace. One narrow pass, no shuffle;
+    * `passthrough` columns (e.g. the coarse IVF list id) ride the same
+    * pass, which is how a production index build writes list
+    * assignment + codes together instead of paying an id-shuffle join
+    * to recombine them. Rows are sorted by cent_id and norms recomputed
+    * with the same ascending-index double fold as
+    * [[graft.operators.Ann.norm]] ([[graft.functions.VecDot]] order),
+    * so the [[graft.functions.NearestCentroids]] expression is
+    * value-identical to one built from the fitted frame.
     */
   def encodeFromRows(vectors: DataFrame, perSub: Seq[Seq[(Long, Array[Float])]],
     dim: Int, passthrough: Seq[String] = Nil): DataFrame = {
@@ -163,20 +104,27 @@ object PQ {
     val sub = dim / m
     val coded = perSub.zipWithIndex.foldLeft(vectors) { case (df, (rows0, j)) =>
       val rows = rows0.sortBy(_._1)
-      val ids = rows.map(_._1).toArray
       val vecs = rows.map(_._2).toArray
-      val nrms = vecs.map { v =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-        math.sqrt(s)
-      }
       df.withColumn(s"__c$j",
         element_at(graft.functions.NearestCentroids(
-          slice(col("embedding"), j * sub + 1, sub), ids, vecs, nrms, 1), 1)
+          slice(col("embedding"), j * sub + 1, sub), rows.map(_._1).toArray,
+          vecs, vecs.map(v => math.sqrt(dot(v, v))), 1), 1)
           .getField("cent_id"))
     }
     coded.select(col("vec_id") +: passthrough.map(col) :+
       array((0 until m).map(j => col(s"__c$j")): _*).as("codes"): _*)
+  }
+
+  /** Σ a_i·b_i as an ascending-index double fold — the
+    * [[graft.functions.VecDot]] order every norm and codebook table
+    * here is computed in.
+    */
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
   }
 
   /** Reconstructed vectors from codes: concat of the m looked-up
@@ -211,23 +159,8 @@ object PQ {
       * [[recNorm]]: a reconstruction's norm² is the SUM of its subspace
       * norm²s (concatenation), so the resident set never materializes.
       */
-    lazy val norm2: Array[Array[Double]] = books.map(_.map { v =>
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      s
-    })
+    lazy val norm2: Array[Array[Double]] = books.map(_.map(v => dot(v, v)))
   }
-
-  /** Collect fitted codebook frames into [[PqBooks]] (m·k rows — the
-    * same bounded collect that ships centroids to
-    * [[graft.functions.NearestCentroids]]).
-    */
-  def collectBooks(codebooks: Seq[DataFrame]): PqBooks =
-    collectBooksFromRows(Concurrently(codebooks) { cb =>
-      cb.select(col("cent_id"), col("c_emb")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    })
 
   /** [[PqBooks]] from already-collected `(cent_id, c_emb)` rows per
     * subspace (how [[graft.sources.IndexStore]] rehydrates a stored
@@ -287,14 +220,7 @@ object PQ {
     */
   def sdcTables(books: PqBooks): Array[Array[Array[Double]]] =
     Array.tabulate(books.m) { j =>
-      Array.tabulate(books.codeSlots, books.codeSlots) { (a, b) =>
-        val va = books.books(j)(a)
-        val vb = books.books(j)(b)
-        var s = 0.0
-        var i = 0
-        val n = math.min(va.length, vb.length)
-        while (i < n) { s += va(i).toDouble * vb(i).toDouble; i += 1 }
-        s
-      }
+      Array.tabulate(books.codeSlots, books.codeSlots)((a, b) =>
+        dot(books.books(j)(a), books.books(j)(b)))
     }
 }

@@ -91,12 +91,10 @@ object IndexStore {
     // so a skewed corpus can't grow hot-cell lists toward mass/kSub.
     // Leaf ids stay on the nlist grid (meta unchanged); cells just own
     // <= kSub live leaves, which every reader already tolerates.
-    // The coarse quantizer and the PQ codebooks train on the same
-    // corpus but are INDEPENDENT job chains — overlap them (guide
-    // §2.6, [[graft.operators.Concurrently]]) so the PQ subspace fits
-    // back-fill the executors the coarse Lloyd rounds leave idle
-    // between jobs. Each chain's own jobs and results are unchanged.
-    val (coarse, bookFrame) = graft.operators.Concurrently.both(
+    // The coarse quantizer and the PQ codebooks train concurrently,
+    // then ONE collect of the codebook frame serves the rec-norm LUTs
+    // and all m encode argmaxes (`Ann.trainIvfPq`).
+    val ((cents, topOpt), bookFrame, perSub) = Ann.trainIvfPq(v, dim, m, kcode)(
       if (routeTop > 0 && routeBudget > 0) {
         val (t, l) = KMeansVec.fitRoutedBalanced(v, routeTop,
           nlist / routeTop, routeBudget, iters)
@@ -104,15 +102,7 @@ object IndexStore {
       } else if (routeTop > 0) {
         val (t, l) = KMeansVec.fitRouted(v, routeTop, nlist / routeTop, iters)
         (l, Some(t))
-      } else (KMeansVec.fit(v, nlist, iters), None),
-      PQ.fitFrame(v, dim, m, kcode))
-    val (cents, topOpt) = coarse
-    // ONE collect of the fused codebook frame serves the PqBooks LUTs
-    // AND all m encode argmaxes (the append-path discipline applied to
-    // build: the old shape collected the m book frames twice — once
-    // for collectBooks, once inside encode's fromFrame calls)
-    val perSub = PQ.collectFrameRows(bookFrame, m)
-    val books = PQ.collectBooksFromRows(perSub)
+      } else (KMeansVec.fit(v, nlist, iters), None))
     // The four metadata writes (centroids/topcents/codebooks/meta) and
     // the encode-and-write of the list table are mutually independent
     // output jobs over already-materialized inputs — run them as one
@@ -128,21 +118,9 @@ object IndexStore {
           lit(m).as("m"), lit(kcode).as("kcode"),
           lit(routeTop).as("ktop"), typedLit(perm.toSeq).as("perm"))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/meta"),
-      () => {
-        val assigned = topOpt match {
-          case Some(t) =>
-            val bc = graft.functions.RoutedNearest.broadcastFrom(
-              cents, routeTop, nlist / routeTop)
-            KMeansVec.assignRouted(
-              KMeansVec.assign(e, t).withColumnRenamed("cent_id", "top_id"), bc)
-          case None => KMeansVec.assign(e, cents)
-        }
-        Lists.write(PQ.encodeFromRows(
-          assigned.select(col("vec_id"), col("cent_id"), col("embedding")),
-          perSub, dim, passthrough = Seq("cent_id"))
-          .withColumn("rec_nrm", PQ.recNorm(col("codes"), books))
-          .write.partitionBy("cent_id"), path, 0L)
-      })
+      () => Lists.write(Ann.encodeResident(e, cents,
+        topOpt.map(t => (t, routeTop, nlist / routeTop)), perSub, dim)
+        .write.partitionBy("cent_id"), path, 0L))
     graft.operators.Concurrently(writes)(_.apply())
   }
 
@@ -256,49 +234,22 @@ object IndexStore {
     val metaDf = spark.read.parquet(s"$path/meta")
     val metaRow = metaDf.head()
     val dim = metaRow.getAs[Int]("dim")
-    val cents = centroids(spark, path)
-    // ONE codebooks read+collect serves the rec-norm LUTs and all m
-    // encode argmaxes. The previous form re-read and re-collected the
-    // same m·k rows three ways per micro-batch (books → collect,
-    // bookFrames → max(sub) job, then m per-subspace collects inside
-    // the NearestCentroids build): ~10 extra driver round-trips.
-    val perSub = collectCodebookRows(spark, path)
-    val bks = PQ.collectBooksFromRows(perSub)
     val e = transformIn(
       newVectors.select(col("vec_id"), col("embedding")),
       permFromMeta(metaRow, metaDf.columns), rotation(spark, path))
       .withColumn("nrm", Ann.norm(col("embedding")))
     // assignment must match how build computed cent_id: routed stores
-    // route the batch through the stored top level
+    // route the batch through the stored top level. ONE codebooks
+    // read+collect serves the rec-norm LUTs and all m encode argmaxes.
     val ktop = ktopFromMeta(metaRow, metaDf.columns)
-    val assigned =
-      if (ktop == 0) KMeansVec.assign(e, cents)
-      else KMeansVec.assignRouted(
-        KMeansVec.assign(e, spark.read.parquet(s"$path/topcents"))
-          .withColumnRenamed("cent_id", "top_id"),
-        graft.functions.RoutedNearest.broadcastFrom(cents, ktop,
-          metaRow.getAs[Int]("nlist") / ktop))
-    PQ.encodeFromRows(
-      assigned.select(col("vec_id"), col("cent_id"), col("embedding")),
-      perSub, dim, passthrough = Seq("cent_id"))
-      .withColumn("rec_nrm", PQ.recNorm(col("codes"), bks))
+    val route =
+      if (ktop == 0) None
+      else Some((spark.read.parquet(s"$path/topcents"), ktop,
+        metaRow.getAs[Int]("nlist") / ktop))
+    Ann.encodeResident(e, centroids(spark, path), route,
+      PQ.collectRows(spark.read.parquet(s"$path/codebooks")), dim)
       .write.mode(SaveMode.Append)
       .partitionBy("cent_id").parquet(listsPath(spark, path))
-  }
-
-  /** One collect of the stored codebooks as per-subspace
-    * `(cent_id, c_emb)` rows — the shared source for both
-    * [[PQ.collectBooksFromRows]] and [[PQ.encodeFromRows]].
-    */
-  private def collectCodebookRows(spark: SparkSession,
-    path: String): Seq[Seq[(Long, Array[Float])]] = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .select(col("sub"), col("cent_id"), col("c_emb")).collect()
-    val m = rows.iterator.map(_.getInt(0)).max + 1
-    (0 until m).map { j =>
-      rows.filter(_.getInt(0) == j)
-        .map(r => r.getLong(1) -> r.getSeq[Float](2).toArray).toSeq
-    }
   }
 
   /** Delete vectors from the stored index — the right-to-be-forgotten
@@ -672,7 +623,7 @@ object IndexStore {
 
   /** The stored PQ codebooks as driver-resident [[PQ.PqBooks]]. */
   def books(spark: SparkSession, path: String): PQ.PqBooks =
-    PQ.collectBooksFromRows(collectCodebookRows(spark, path))
+    PQ.collectBooksFromRows(PQ.collectRows(spark.read.parquet(s"$path/codebooks")))
 
   /** A SERVED index, opened once: layout, coarse centroids, and PQ
     * codebooks are read and collected a single time (they are index

@@ -114,9 +114,9 @@ object SkewGate {
     // docs head domain src0 (~30%), and recommend a leveling salt
     sc.setJobGroup("skew_report", "skew_report")
     val evTop = operators.Skew.report(Tables.events(spark, dir), "user_id")
-      .limit(1).collect().head
+      .filter(col("rank") === 1).collect().head
     val docTop = operators.Skew.report(Tables.documents(spark, dir), "source")
-      .limit(1).collect().head
+      .filter(col("rank") === 1).collect().head
     sc.clearJobGroup()
     def share(r: org.apache.spark.sql.Row): Double =
       r.getAs[Long]("c").toDouble / r.getAs[Long]("n_rows")

@@ -65,7 +65,7 @@ object Ann {
     * via [[graft.functions.TopKByScore]]: partial top-k per partition
     * (map-side ObjectHashAggregate), so the one shuffle carries at most
     * k hits per query per partition — never the full score matrix.
-    * Ordering matches the oracle's row_number: cos_sim desc, vec_id asc;
+    * Ranks match the oracle's row_number: cos_sim desc, vec_id asc;
     * duplicate candidates collapse on insert (= SELECT DISTINCT).
     */
   private[graft] def rankTopK(s: SparkSession, scored: DataFrame, k: Int): DataFrame = {
@@ -79,7 +79,6 @@ object Ann {
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "h")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
         col("h.vec_id").as("vec_id"), col("h.cos_sim").as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Exact top-k cosine neighbours of each query vector over a vector
@@ -340,7 +339,6 @@ object Ann {
       .select(col("query_id"), col("hits"),
         graft.functions.TextSim.r6(
           col("dcg_micro").cast("double") / col("idcg_micro")).as("ndcg"))
-      .orderBy(col("query_id"))
   }
 
   /** q_ndcg — the IVF shortlist's ordering quality against the exact
@@ -626,7 +624,7 @@ object Ann {
     dim: Int, nlist: Int = 16, m: Int = 8, kcode: Int = 16,
     k: Int = TopK, nprobe: Int = NProbe): DataFrame = {
     val v = vectors.select(col("vec_id"), col("embedding"))
-    val (cents, _, perSub) = trainIvfPq(v, dim, m, kcode)(
+    val (cents, _, perSub) = trainIvfPq(v, dim, m, kcode, iters = 3)(
       KMeansVec.fit(v, nlist, iters = 3))
     val books = PQ.collectBooksFromRows(perSub)
     val q = withNorm(queries.select(col("vec_id"), col("embedding")))
@@ -636,16 +634,16 @@ object Ann {
 
   /** The IVF-PQ training prologue shared by [[ivfPqSearch]] and
     * [[graft.sources.IndexStore.build]]: the `coarse` quantizer chain
-    * and the fused PQ codebook chain ([[PQ.fitFrame]]) train on the
-    * same corpus but are independent, so they overlap (guide §2.6)
-    * and the PQ fits back-fill the executors the coarse rounds leave
-    * idle; then ONE collect of the codebook frame serves the PqBooks
-    * LUTs and all m encode argmaxes. Returns (coarse, codebook frame,
-    * per-subspace codebook rows).
+    * and the fused PQ codebook chain ([[PQ.fitFrame]], `iters` Lloyd
+    * rounds) train on the same corpus but are independent, so they
+    * overlap (guide §2.6) and the PQ fits back-fill the executors the
+    * coarse rounds leave idle; then ONE collect of the codebook frame
+    * serves the PqBooks LUTs and all m encode argmaxes. Returns
+    * (coarse, codebook frame, per-subspace codebook rows).
     */
   private[graft] def trainIvfPq[C](v: DataFrame, dim: Int, m: Int,
-    kcode: Int)(coarse: => C): (C, DataFrame, Seq[Seq[(Long, Array[Float])]]) = {
-    val (c, bookFrame) = Concurrently.both(coarse, PQ.fitFrame(v, dim, m, kcode))
+    kcode: Int, iters: Int)(coarse: => C): (C, DataFrame, Seq[Seq[(Long, Array[Float])]]) = {
+    val (c, bookFrame) = Concurrently.both(coarse, PQ.fitFrame(v, dim, m, kcode, iters))
     (c, bookFrame, PQ.collectRows(bookFrame))
   }
 
@@ -869,7 +867,6 @@ object Ann {
       .select(col("a_id"), col("b_id"),
         cosine(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** q_dedup_embed — [[nearDups]] on the dup-injected vector corpus. */
@@ -958,7 +955,6 @@ object Ann {
       .select(col("a_id"), col("b_id"),
         cosine(col("a_emb"), col("a_nrm"), col("b_emb"), col("b_nrm")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** q_dedup_embed_mp — [[nearDupsMultiProbe]] (probes = 2) on the
@@ -1089,7 +1085,6 @@ object Ann {
         }
       }
       .toDF("query_id", "rank", "vec_id", "cos_sim", "mmr_score")
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** MMR picks served per query (< shortlist depth so the diversity

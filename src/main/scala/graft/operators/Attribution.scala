@@ -83,7 +83,6 @@ object Attribution {
         coalesce(col("first_n"), lit(0L)).as("first_n"),
         coalesce(col("last_n"), lit(0L)).as("last_n"),
         coalesce(col("linear_micro"), lit(0L)).as("linear_micro"))
-      .orderBy(col("event_type"))
   }
 
   /** q_attribution — [[attribution]] over the events table. */

@@ -51,7 +51,6 @@ object Audience {
       .withColumn("jaccard",
         TextSim.r6(col("n_both").cast("double") /
           (col("n_a") + col("n_b") - col("n_both"))))
-      .orderBy(col("type_a"), col("type_b"))
   }
 
   /** q_audience_overlap — [[overlap]] over the events table. */

@@ -92,7 +92,6 @@ object Autocorr {
         when(col("den") =!= 0,
           TextSim.r6(col("num").cast("double") / col("den").cast("double")))
           .as("acf"))
-      .orderBy(col("event_type"), col("lag"))
   }
 
   val autocorrSql: String =

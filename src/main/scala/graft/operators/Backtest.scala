@@ -97,7 +97,6 @@ object Backtest {
       .select(col("event_type"), col("method"), col("horizon"), col("n"),
         expr("(sae * 1000000) div n").as("mae_micro"),
         expr("ssm div n").as("smape_micro"))
-      .orderBy(col("event_type"), col("method"), col("horizon"))
   }
 
   val backtestSql: String =

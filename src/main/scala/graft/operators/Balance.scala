@@ -77,7 +77,6 @@ object Balance {
       .select(col("covariate"), col("nt").as("n_treated"),
         col("nc").as("n_control"), col("mean_t_micro"), col("mean_c_micro"),
         col("smd"), col("imbalanced"))
-      .orderBy(col("covariate"))
   }
 
   val balanceSql: String = {

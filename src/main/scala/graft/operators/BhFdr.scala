@@ -114,7 +114,6 @@ object BhFdr {
       .withColumn("bh_rejected", when(col("p_micro").isNotNull,
         (col("p_rank") <= col("k")).cast("int")))
       .drop("k")
-      .orderBy(col("source"))
   }
 
   val bhFdrSql: String = {

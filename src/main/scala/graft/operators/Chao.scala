@@ -51,7 +51,6 @@ object Chao {
       .select(col("source"), col("n_tokens"), col("v_types"), col("f1"),
         col("f2"), col("chao1_micro"), col("unseen_micro"),
         col("coverage_micro"))
-      .orderBy(col("source"))
   }
 
   val chao1Sql: String =

@@ -81,7 +81,6 @@ object Churn {
         when(col("at_risk") > 0, expr("(1000000 * churned) div at_risk"))
           .as("hazard_micro"),
         col("cum_churned"))
-      .orderBy(col("k"))
   }
 
   val churnSql: String =

@@ -75,7 +75,6 @@ object Closeness {
         coalesce(col("harmonic_micro"), lit(0L)).as("harmonic_micro"),
         when(col("dist_sum") > 0,
           expr("(n_reached * 1000000) div dist_sum")).as("closeness_micro"))
-      .orderBy(col("node"))
   }
 
   val closenessSql: String =

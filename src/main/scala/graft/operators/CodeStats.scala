@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: pure per-row column arithmetic over one scan — the split
   * array never explodes (array lambdas fold in place), nothing
-  * shuffles but the presentation sort.
+  * shuffles.
   */
 object CodeStats {
 
@@ -62,7 +62,6 @@ object CodeStats {
         col("max_line") <= MaxLine &&
           col("comment_micro") <= MaxCommentMicro &&
           col("alnum_micro") >= MinAlnumMicro)
-      .orderBy(col("doc_id"))
 
   /** q_code_domain — per-source rollup of the screen: the dashboard a
     * curation run actually monitors (keep rate and mean signal per

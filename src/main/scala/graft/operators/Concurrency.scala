@@ -72,7 +72,6 @@ object Concurrency {
       .withColumn("active",
         sum(col("delta")).over(GridWindow.ord(col("h"))))
       .select(col("h"), col("started"), col("ended"), col("active"))
-      .orderBy(col("h"))
   }
 
   val concurrencySql: String =

@@ -644,7 +644,6 @@ object Corpus {
     counts.join(broadcast(totals), "cent_id")
       .select(col("cent_id"), col("source"), col("n_docs"),
         TextSim.r6(col("n_docs").cast("double") / col("t")).as("share"))
-      .orderBy(col("cent_id"), col("source"))
   }
 
   /** q_cluster_mix — [[clusterMix]] over the documents ⋈ embeddings

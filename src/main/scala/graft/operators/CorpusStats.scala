@@ -132,7 +132,6 @@ object CorpusStats {
       .groupBy(col("center"), col("context"))
       .agg(count(lit(1)).cast("long").as("n"))
       .filter(col("n") >= SkipMinCount)
-      .orderBy(col("center"), col("context"))
   }
 
   def skipgramQuery(s: SparkSession, d: String): DataFrame =
@@ -400,7 +399,6 @@ object CorpusStats {
         floor((log(col("p")) - log(col("q"))) * 1e6 + 0.5).cast("long").as("llr_micro"),
         TextSim.r6((col("p") * log(col("p") / col("m")) / 2 +
           col("q") * log(col("q") / col("m")) / 2) * 1e6).as("jsd_micro"))
-      .orderBy(col("cent_id"))
   }
 
   val embedDriftSql: String = {

@@ -94,7 +94,6 @@ object Cusum {
       .select(col("event_type"), col("n_hours"), col("n_ref"),
         col("mu0_micro"), col("max_up_micro"), col("max_down_micro"),
         col("first_alarm"), col("drifted"))
-      .orderBy(col("event_type"))
   }
 
   val cusumSql: String =

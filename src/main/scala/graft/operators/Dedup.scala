@@ -41,7 +41,6 @@ object Dedup {
       .filter(col("n_copies") > 1)
       .select(col("content_hash"), col("keep_id"), col("n_copies"),
         concat_ws(",", transform(col("all_ids"), x => x.cast("string"))).as("all_ids"))
-      .orderBy(col("keep_id"))
 
   /** The 100 TB keeper form of [[exactGroups]]: one
     * `(content_hash, keep_id, doc_id, is_kept, n_copies)` ROW per
@@ -384,7 +383,6 @@ object Dedup {
       .select(col("doc_id"), col("quality"),
         coalesce(col("best_id"), col("doc_id")).as("keep_id"),
         (coalesce(col("best_id"), col("doc_id")) === col("doc_id")).as("is_kept"))
-      .orderBy(col("doc_id"))
   }
 
   val keepBestSql: String =
@@ -567,7 +565,6 @@ object Dedup {
         sum(col("sz")).cast("long").as("n_docs"),
         sum(col("c_toks")).cast("long").as("n_tokens"),
         sum(col("c_dup")).cast("long").as("dup_tokens"))
-      .orderBy(col("cluster_size"))
   }
 
   val dupStatsSql: String =
@@ -679,7 +676,6 @@ object Dedup {
         TextSim.r6(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-      .orderBy(col("a_id"), col("b_id"))
   }
 
   /** q_dedup_ngram — [[ngramPairs]] on the dup-injected corpus. */

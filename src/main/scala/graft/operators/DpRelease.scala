@@ -420,7 +420,6 @@ object DpRelease {
         when(col("bin").isNotNull, (col("bin") + 1) * QBinWidth)
           .as("est_chars_le"),
         col("n_released"), lit(EpsMicro).as("eps_micro"))
-      .orderBy(col("q_pct"))
   }
 
   val dpQuantileSql: String = {

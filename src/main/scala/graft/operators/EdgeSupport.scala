@@ -47,7 +47,6 @@ object EdgeSupport {
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
       .withColumn("local_bridge", col("support") === 0L)
-      .orderBy(col("a"), col("b"))
   }
 
   val edgeSupportSql: String =

@@ -462,7 +462,6 @@ object Etl {
           .otherwise("unchanged").as("status"),
         col("content_hash"), col("last_edited"))
       .withColumn("needs_vector", col("status") =!= "unchanged")
-      .orderBy(col("id"))
   }
 
   val manifestDeltaSql: String =

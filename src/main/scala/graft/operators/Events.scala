@@ -65,7 +65,6 @@ object Events {
         col("n3").as("n_users"), TextSim.r6(col("n3") / col("n1")).as("conversion"))))
       .as("r"))
       .select(col("r.stage"), col("r.stage_name"), col("r.n_users"), col("r.conversion"))
-      .orderBy(col("stage"))
   }
 
   val funnelSql: String =
@@ -130,7 +129,6 @@ object Events {
       date_format(col("cohort"), "yyyy-MM-dd").as("cohort"),
       col("off"), col("n_users"),
       TextSim.r6(col("n_users") / col("cohort_size")).as("retention"))
-      .orderBy(col("cohort"), col("off"))
   }
 
   val retentionSql: String =
@@ -181,7 +179,6 @@ object Events {
       .select(col("event_type"), col("hour"), col("n_events"),
         TextSim.r6((col("n_events") - col("mean")) / col("sd")).as("z"),
         (abs((col("n_events") - col("mean")) / col("sd")) >= 2).cast("int").as("is_anomaly"))
-      .orderBy(col("event_type"), col("hour"))
   }
 
   /** Modified-z constant 0.6745 in micro units and the Iglewicz–
@@ -244,7 +241,6 @@ object Events {
         when(col("mad") > 0L,
           (abs(col("m_micro")) >= MadFlagMicro).cast("int"))
           .otherwise(lit(0)).as("is_anomaly"))
-      .orderBy(col("event_type"), col("hour"))
   }
 
   val anomalyMadSql: String =
@@ -683,7 +679,6 @@ object Events {
             col("sy").cast("decimal(38,0)") * col("sy")).cast("double") /
             ((col("h_n") - 1).cast("double") * col("sy").cast("double"))))
           .as("fano"))
-      .orderBy(col("event_type"))
   }
 
   def burstinessQuery(s: SparkSession, d: String): DataFrame =

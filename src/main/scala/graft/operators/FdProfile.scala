@@ -109,7 +109,6 @@ object FdProfile {
     scored.crossJoin(broadcast(total))
       .select(col("a"), col("b"), col("o").as("n_obs"), col("exp_r6"),
         col("contrib_r6"), col("chi2_total"), col("dof"))
-      .orderBy(col("a"), col("b"))
   }
 
   /** q_chi2 — source × lang contingency over documents. */

@@ -80,7 +80,6 @@ object FpOverlap {
       .select(col("doc_a"), col("doc_b"), col("shared"),
         TextSim.r6(col("shared").cast("double") / least(col("na"), col("nb")))
           .as("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** q_fp_overlap — [[overlapPairs]] on the dup-injected corpus:

@@ -60,7 +60,6 @@ object GTest {
       .withColumn("dof", (col("n_a") - 1L) * (col("n_b") - 1L))
       .select(col("a"), col("b"), col("o"), col("r"), col("c"), col("n"),
         col("g_micro"), col("g2_total_micro"), col("dof"))
-      .orderBy(col("a"), col("b"))
   }
 
   val gTestSql: String = {

@@ -50,7 +50,6 @@ object Hhi {
           .otherwise("concentrated"))
       .select(col("slice"), col("n"), col("n_holders"), col("hhi_micro"),
         col("eff_holders_micro"), col("band"))
-      .orderBy(col("slice"))
   }
 
   val hhiSql: String =

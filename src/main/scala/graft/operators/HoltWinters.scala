@@ -79,7 +79,6 @@ object HoltWinters {
         when(col("n_hours") > 1L,
           TextSim.r6(col("abs_err_micro").cast("double") /
             ((col("n_hours") - 1L).cast("double") * 1e6))).as("mae"))
-      .orderBy(col("event_type"))
   }
 
   val hwSql: String = {

@@ -205,8 +205,9 @@ object IncrementalRunner {
     * classified frame (all rows flow through the node; the
     * needs_vector filter sits above it), `processed`/`failed` on the
     * delta⋈docs join, `vectorizedChunks` on the chunk rows.
-    * `maxSources`' `orderBy(id).limit(n)` sits above a sort that drains
-    * its input, so `skipped` still sees every classified row. Dry-run
+    * `maxSources`' `orderBy(id).limit(n)` plans as a top-n
+    * (TakeOrderedAndProject) that reads every input row before it emits
+    * one, so `skipped` still sees every classified row. Dry-run
     * swaps only the sink: the join is written to `noop` instead of the
     * chunk rows to the store, so no chunk is counted.
     */

@@ -232,7 +232,6 @@ object Kanon {
           (lit(2.0) * col("n_g").cast("double") * col("n_tot").cast("double")))
           .as("tv_dist"))
       .withColumn("t_ok", col("tv_dist") <= T)
-      .orderBy(col("source"), col("len_bucket"))
   }
 
   val tClosenessSql: String =

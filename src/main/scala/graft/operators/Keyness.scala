@@ -89,7 +89,6 @@ object Keyness {
       .filter(col("rank") <= TopK)
       .select(col("source"), col("rank"), col("term"), col("y"),
         col("yr").as("y_rest"), col("delta_micro"), col("z"))
-      .orderBy(col("source"), col("rank"))
   }
 
   val keynessSql: String = {

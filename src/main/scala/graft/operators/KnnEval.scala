@@ -63,7 +63,6 @@ object KnnEval {
           .as("acc"),
         TextSim.r6(col("sum_agree").cast("double") /
           (col("n_queries") * K)).as("agree"))
-      .orderBy(col("label"))
   }
 
   /** q_knn_eval — [[knnLabelEval]] with the vec_id % 10 eval slice. */

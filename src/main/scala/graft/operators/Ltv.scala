@@ -62,7 +62,6 @@ object Ltv {
         sum(col("week_value_micro")).over(
           Window.partitionBy(col("cohort")).orderBy(col("off"))))
       .withColumn("ltv_micro", expr("cum_value_micro div cohort_users"))
-      .orderBy(col("cohort"), col("off"))
   }
 
   val cohortLtvSql: String =

@@ -59,7 +59,6 @@ object Mojibake {
           .as("bad_micro"))
       .withColumn("corrupt",
         col("n_fffd") > 0L || col("n_double") > 0L || col("n_ctrl") > 0L)
-      .orderBy(col("doc_id"))
 
   val mojibakeSql: String =
     s"""WITH ${Tables.mojibakeAugSql},

@@ -191,7 +191,6 @@ object NaiveBayes {
           col("n_correct").cast("double") / col("n_docs")).as("acc_r6"),
         graft.functions.TextSim.r6(
           col("sum_margin").cast("double") / col("n_docs") / 1e6).as("mean_margin"))
-      .orderBy(col("band"))
 
   lazy val nbCalibrationSql: String = {
     val r6 = graft.functions.TextSim.r6Sql _
@@ -317,7 +316,6 @@ object NaiveBayes {
         expr("(1000000 * n_suspect) div n_docs").as("noise_micro"),
         col("top_confused"),
         coalesce(col("top_confused_n"), lit(0L)).as("top_confused_n"))
-      .orderBy(col("lang"))
   }
 
   lazy val labelNoiseSql: String =

@@ -58,7 +58,6 @@ object Novelty {
         coalesce(sum(col("hit")), lit(0L)).cast("long").as("n_seen"))
       .select(col("eval_id"), col("n_grams"), col("n_seen"),
         expr("(1000000 * (n_grams - n_seen)) div n_grams").as("novelty_micro"))
-      .orderBy(col("eval_id"))
   }
 
   val noveltySql: String =

@@ -79,13 +79,14 @@ object PQ {
 
   /** `(vec_id[, passthrough...], codes: array<long>)` — code j is the
     * nearest subspace-j centroid of the vector's j-th slice
-    * ([[encodeFromRows]] over the m collected codebook frames).
+    * ([[encodeFromRows]] over the m codebook frames, tagged with their
+    * `sub` and collected in one job).
     */
   def encode(vectors: DataFrame, codebooks: Seq[DataFrame], dim: Int,
     passthrough: Seq[String] = Nil): DataFrame =
-    encodeFromRows(vectors, codebooks.map(_.select(col("cent_id"), col("c_emb"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq),
-      dim, passthrough)
+    encodeFromRows(vectors, collectRows(codebooks.zipWithIndex
+      .map { case (b, j) => b.select(lit(j).as("sub"), col("cent_id"), col("c_emb")) }
+      .reduce(_ unionAll _)), dim, passthrough)
 
   /** [[encode]] from already-collected `(cent_id, c_emb)` codebook
     * rows, one per subspace. One narrow pass, no shuffle;

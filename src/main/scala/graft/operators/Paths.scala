@@ -43,7 +43,6 @@ object Paths {
     counts.join(broadcast(fromTotals), Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
         TextSim.r6(col("n").cast("double") / col("t")).as("p_next"))
-      .orderBy(col("from_type"), col("to_type"))
   }
 
   /** q_session_paths — the transition table of the events stream. */

@@ -109,7 +109,6 @@ object Prf {
       .select(col("rank"), col("doc_id"), col("matched"),
         col("bm25").as("base_bm25"),
         TextSim.r6(col("s_micro").cast("double") / 1e6).as("prf_score"))
-      .orderBy(col("rank"))
   }
 
   val prfSql: String = {

@@ -51,7 +51,6 @@ object Quantize {
             floor((x.cast("double") - mn) / (mx - mn) * lit(254.0) + lit(0.5)) - 127)
             .otherwise(lit(0L)).cast("string")
         })).as("quant"))
-      .orderBy(col("vec_id"))
   }
 
   /** q_vec_quant — [[quantize]] over the embeddings table. */

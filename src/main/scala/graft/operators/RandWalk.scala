@@ -76,7 +76,6 @@ object RandWalk {
     }
     walks.select(col("start"), col("steps").as("n_steps"),
       col("cur").as("final_node"), col("path"))
-      .orderBy(col("start"))
   }
 
   /** q_rand_walk — walks over the shared events-derived crawl graph. */

@@ -80,7 +80,6 @@ object RatioMetric {
       when(ok, TextSim.r6(se)).as("se"),
       when(ok, TextSim.r6(r - lit(ZAlpha) * se)).as("ci_lo"),
       when(ok, TextSim.r6(r + lit(ZAlpha) * se)).as("ci_hi"))
-      .orderBy(col("variant"))
   }
 
   val ratioMetricSql: String = {

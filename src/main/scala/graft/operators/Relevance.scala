@@ -158,7 +158,6 @@ object Relevance {
     Ann.rankTopK(s, fused, FuseK)
       .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"),
         col("cos_sim").as("rrf"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** [[hybrid]] with the vector arm SERVED FROM THE STORED INDEX — the
@@ -305,7 +304,6 @@ object Relevance {
           lit(1.0) - lit(6.0) * col("sd2") /
             (col("n_common") * (col("n_common") * col("n_common") - lit(1.0)))))
           .as("rho"))
-      .orderBy(col("query_id"))
   }
 
   val rankCorrSql: String =

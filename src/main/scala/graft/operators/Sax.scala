@@ -88,7 +88,6 @@ object Sax {
           col("letter")))), s => s.getField("letter")), "").as("sax_word"),
         min(col("paa_micro")).as("paa_min_micro"),
         max(col("paa_micro")).as("paa_max_micro"))
-      .orderBy(col("event_type"))
   }
 
   val saxSql: String =

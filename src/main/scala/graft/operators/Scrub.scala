@@ -55,7 +55,6 @@ object Scrub {
       .groupBy(col("unit"))
       .agg(count_distinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
-      .orderBy(desc("n_docs"), col("unit"))
 
   /** q_boilerplate — [[boilerplateUnits]] on the dup-injected corpus
     * (copies guarantee cross-doc repeats; the organic word soup
@@ -99,7 +98,6 @@ object Scrub {
         TextSim.r6(lit(1.0) - size(array_distinct(col("us"))).cast("double") /
           size(col("us"))).as("rep_ratio"),
         md5(concat_ws(" ", array_sort(array_distinct(col("us"))))).as("clean_hash"))
-      .orderBy(col("doc_id"))
 
   /** q_para_dedup — [[paraDedupStats]] on the plain corpus. */
   def paraDedup(s: SparkSession, d: String): DataFrame =
@@ -175,7 +173,6 @@ object Scrub {
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"),
         col("a_docs"), col("b_docs"))
       .filter(col("jaccard") >= ParaFuzzyJ)
-      .orderBy(col("a_unit"), col("b_unit"))
   }
 
   /** q_para_dedup_fuzzy — [[paraFuzzyPairs]] on the dup-injected
@@ -259,7 +256,6 @@ object Scrub {
       regexp_count(t, lit(PhoneRe)).cast("long").as("n_phones"),
       regexp_count(t, lit(IpRe)).cast("long").as("n_ips"),
       md5(redact(t)).as("scrub_hash"))
-      .orderBy(col("doc_id"))
   }
 
   /** q_pii_scrub — [[scrubPii]] over the corpus with deterministically

@@ -115,7 +115,6 @@ object Seasonal {
         TextSim.r6(col("bm").cast("double") / 1e6).as("baseline"),
         when(col("sd") > 0, z).as("z_seasonal"),
         when(col("sd") > 0 && abs(z) >= 2, 1).otherwise(0).as("is_anomaly"))
-      .orderBy(col("event_type"), col("hour"))
   }
 
   /** q_seasonal_strength — "is this feed periodic at all": per type,
@@ -161,7 +160,6 @@ object Seasonal {
     sse.join(peaks, Seq("event_type"))
       .select(col("event_type"), col("n_hours"), col("strength"),
         col("peak_hw"), col("peak_baseline"))
-      .orderBy(col("event_type"))
   }
 
   val strengthSql: String =

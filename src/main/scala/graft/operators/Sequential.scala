@@ -81,7 +81,6 @@ object Sequential {
     wide.select(col("look"), col("na"), col("ca"), col("nb"), col("cb"),
       zExpr.as("z"), bExpr.as("boundary"),
       coalesce(abs(zExpr) >= bExpr, lit(false)).as("may_stop"))
-      .orderBy(col("look"))
   }
 
   val sequentialSql: String = {

@@ -106,7 +106,6 @@ object Skew {
       .select(col("rank"), col("k").as("key"), col("c"),
         col("n_keys"), col("n_rows"), col("max_c"),
         col("mean_micro"), col("skew_micro"), col("rec_salt"))
-      .orderBy(col("rank"))
   }
 
   /** q_skew_report — skew diagnosis of the events fact table on its

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Determinism: coordinates are exact integers — price in cents
   * (⌊100·p + 0.5⌋, both engines), recency in epoch DAYS (integer
   * div of epoch-µs) — so dominance is integer comparison and the
-  * frontier is bit-stable; output ordered by (segment, price desc).
+  * frontier is bit-stable.
   *
   * Scale: the compaction is one map-side-combinable fold to
   * |segments|·|distinct prices| rows; the window partitions by
@@ -70,7 +70,6 @@ object Skyline {
       .join(broadcast(kept.select(col("segment"), col("x"), col("y"))),
         Seq("segment", "x", "y"))
       .select(col("segment"), col("x"), col("y"), col("n_points"))
-      .orderBy(col("segment"), col("x").desc)
   }
 
   val skylineSql: String =

@@ -94,7 +94,6 @@ object SourceJsd {
            div (cast(na as decimal(38,0)) * nb * 4) as long)"""))
       .select(col("src_a"), col("src_b"), col("n_shared_terms"),
         col("jsd_micro"))
-      .orderBy(col("src_a"), col("src_b"))
   }
 
   val sourceJsdSql: String = {

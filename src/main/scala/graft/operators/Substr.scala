@@ -93,7 +93,6 @@ object Substr {
       .join(docs.select(col("doc_id"), length(col("text")).as("len")), "doc_id")
       .select(col("doc_id"), col("n_spans"), col("dup_chars"),
         TextSim.r6(col("dup_chars").cast("double") / col("len")).as("dup_frac"))
-      .orderBy(col("doc_id"))
   }
 
   /** Maximal merged spans from flagged gram positions: `(doc_id,

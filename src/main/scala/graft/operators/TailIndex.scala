@@ -61,7 +61,6 @@ object TailIndex {
         when(denom > 0,
           (TextSim.r6(col("k").cast("double") / denom) <= 2.0).cast("int"))
           .as("infinite_variance"))
-      .orderBy(col(keyCol))
   }
 
   val tailIndexSql: String =

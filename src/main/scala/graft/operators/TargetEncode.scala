@@ -60,7 +60,6 @@ object TargetEncode {
         min(col("te_loo_micro")).as("loo_min_micro"),
         max(col("te_loo_micro")).as("loo_max_micro"),
         expr("sum(te_loo_micro) div count(1)").as("loo_mean_micro"))
-      .orderBy(col("bucket"))
   }
 
   val targetEncodeSql: String =

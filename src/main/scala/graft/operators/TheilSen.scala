@@ -69,7 +69,6 @@ object TheilSen {
         col("sm").as("slope_micro"),
         when(col("sm") > 0L, "rising").when(col("sm") < 0L, "falling")
           .otherwise("flat").as("direction"))
-      .orderBy(col("event_type"))
   }
 
   val theilSenSql: String =

@@ -91,7 +91,6 @@ object Uplift {
       .select(col("decile"), col("n_treated"), col("n_control"),
         col("y_treated"), col("y_control"), col("uplift_micro"),
         col("qini_micro"), col("qini_area_micro"))
-      .orderBy(col("decile"))
   }
 
   val upliftSql: String = {

@@ -70,7 +70,6 @@ object Woe {
       .select(col("bucket"), (col("good") + col("bad")).as("n_docs"),
         col("good"), col("bad"), col("woe_micro"), col("iv_contrib"),
         col("iv_total"))
-      .orderBy(col("bucket"))
   }
 
   val woeIvSql: String = {

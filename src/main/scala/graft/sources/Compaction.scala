@@ -74,7 +74,6 @@ object Compaction {
         lit("keep").as("action"), lit(null).cast("long").as("bin"),
         lit(1L).as("bin_files"), col("bytes").as("bin_bytes"))
     compact.unionAll(keeps)
-      .orderBy(col("source"), col("action"), col("bin"), col("file_id"))
   }
 
   val compactionSql: String =

@@ -94,7 +94,7 @@ object IndexStore {
     // The coarse quantizer and the PQ codebooks train concurrently,
     // then ONE collect of the codebook frame serves the rec-norm LUTs
     // and all m encode argmaxes (`Ann.trainIvfPq`).
-    val ((cents, topOpt), bookFrame, perSub) = Ann.trainIvfPq(v, dim, m, kcode)(
+    val ((cents, topOpt), bookFrame, perSub) = Ann.trainIvfPq(v, dim, m, kcode, iters)(
       if (routeTop > 0 && routeBudget > 0) {
         val (t, l) = KMeansVec.fitRoutedBalanced(v, routeTop,
           nlist / routeTop, routeBudget, iters)

@@ -94,7 +94,6 @@ object PruneStats {
         col("file_hits"),
         expr(s"(1000000 * (n_files * n_preds - file_hits)) div (n_files * n_preds)")
           .as("prune_micro"))
-      .orderBy(col("layout"), col("kind"))
   }
 
   val pruneStatsSql: String = {

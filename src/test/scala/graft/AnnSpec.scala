@@ -77,6 +77,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val got = Ann.bruteForce(spark, sf)
       .select("query_id", "rank", "vec_id", "cos_sim")
+      .orderBy("query_id", "rank")
       .as[(Long, Long, Long, Double)].collect().toSeq
     val e = Tables.embeddings(spark, sf).selectExpr("vec_id", "embedding")
       .withColumn("nrm", Ann.norm(col("embedding")))
@@ -108,10 +109,10 @@ class AnnSpec extends AnyFunSuite {
 
     // a margin admitting every list is exactly fixed full probing
     val full = Ann.ivfSearch(spark, vecs, queries, cents, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .orderBy("query_id", "rank").as[(Long, Long, Long, Double)].collect().toSeq
     val wide = Ann.ivfSearchAdaptive(spark, vecs, queries, cents, k = 10,
       nprobeMax = 8, margin = 2.0)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .orderBy("query_id", "rank").as[(Long, Long, Long, Double)].collect().toSeq
     assert(wide.nonEmpty && wide == full)
 
     // narrow margin: candidates ⊇ the rank-1 list, so recall (vs the

@@ -15,6 +15,7 @@ class AudienceSpec extends AnyFunSuite {
       ("c", 9L)).toDF("event_type", "user_id")
     val got = Audience.overlap(ev)
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
+      .sortBy(r => (r._1, r._2))
     assert(got == Seq(
       ("a", "b", 3L, 3L, 2L, 0.5),
       ("a", "c", 3L, 1L, 0L, 0.0),

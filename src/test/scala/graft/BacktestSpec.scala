@@ -65,8 +65,10 @@ class BacktestSpec extends AnyFunSuite {
       mem.addData(b1.toSeq); q.processAllAvailable()
       mem.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
-    val streamed = Backtest.backtestFromCells(spark.table("bt_cells")).collect()
-    val batch = Backtest.backtest(evOf(counts)).collect()
+    val streamed = Backtest.backtestFromCells(spark.table("bt_cells"))
+      .orderBy("event_type", "method", "horizon").collect()
+    val batch = Backtest.backtest(evOf(counts))
+      .orderBy("event_type", "method", "horizon").collect()
     assert(streamed.toSeq == batch.toSeq)
   }
 

@@ -13,8 +13,8 @@ class ConcurrencySpec extends AnyFunSuite {
   private def ts(min: Int) = new Timestamp(base + min * 60000L)
 
   private def run(ev: Seq[(Long, Long, Timestamp)]) =
-    Concurrency.concurrency(ev.toDF("user_id", "event_id", "ts")).collect()
-      .map(r => (r.getAs[Long]("h") - r.getAs[Long]("h"), r)).map(_._2)
+    Concurrency.concurrency(ev.toDF("user_id", "event_id", "ts"))
+      .orderBy("h").collect()
       .map(r => (r.getAs[Long]("started"), r.getAs[Long]("ended"),
         r.getAs[Long]("active")))
 

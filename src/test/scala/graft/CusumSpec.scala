@@ -61,8 +61,9 @@ class CusumSpec extends AnyFunSuite {
       mem.addData(b1.toSeq); q.processAllAvailable()
       mem.addData(b2.toSeq); q.processAllAvailable()
     } finally q.stop()
-    val streamed = Cusum.cusumFromCells(spark.table("cusum_cells")).collect()
-    val batch = Cusum.cusum(evOf(counts)).collect()
+    val streamed = Cusum.cusumFromCells(spark.table("cusum_cells"))
+      .orderBy("event_type").collect()
+    val batch = Cusum.cusum(evOf(counts)).orderBy("event_type").collect()
     assert(streamed.toSeq == batch.toSeq)
     assert(batch.head.getAs[Int]("drifted") == 1)
   }

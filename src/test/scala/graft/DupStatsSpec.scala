@@ -33,9 +33,9 @@ class DupStatsSpec extends AnyFunSuite {
     val labels = graft.operators.Components.fromPairs(pairs)
     val viaLabels = Dedup
       .dupStatsFromLabels(docs.select(col("doc_id")), labels, toks)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
     val direct = Dedup.dupStats(spark, sf)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
     assert(viaLabels == direct)
   }
 }

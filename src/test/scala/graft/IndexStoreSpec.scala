@@ -26,9 +26,9 @@ class IndexStoreSpec extends AnyFunSuite {
   test("stored-index search equals the self-contained ivfPqSearch") {
     val direct = Ann.ivfPqSearch(spark, vecs, queries, Dim,
       nlist = 8, m = 8, kcode = 16, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val stored = IndexStore.search(spark, queries, path, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(direct.nonEmpty)
     assert(stored == direct,
       s"stored-index search must reproduce the direct path exactly " +
@@ -111,7 +111,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // every query id is % 100 == 0, i.e. part of the APPENDED batch:
     // new vectors probing a store trained only on the old corpus
     val got = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     // reference: the whole corpus encoded in memory with the SAME
     // stored quantizers, scored through the same ADC kernels
     val cents = IndexStore.centroids(spark, p)
@@ -125,7 +125,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val q = queries.withColumn("nrm", Ann.norm(col("embedding")))
     val want = Ann.rankCodes(spark, resident,
       Ann.adcProbes(q, cents, bks, Dim, 2), bks, 10)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.nonEmpty)
     assert(got == want,
       s"append+search must equal one-pass encoding of the union " +
@@ -136,9 +136,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val h = IndexStore.open(spark, path)
     for (np <- Seq(2, 4)) {
       val viaHandle = h.search(queries, k = 10, nprobe = np)
-        .as[(Long, Long, Long, Double)].collect().toSeq
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
       val oneShot = IndexStore.search(spark, queries, path, k = 10, nprobe = np)
-        .as[(Long, Long, Long, Double)].collect().toSeq
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
       assert(viaHandle.nonEmpty && viaHandle == oneShot)
     }
   }
@@ -158,7 +158,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(filesPerList(s"$p/lists").exists(_ > 1),
       "appends must have left multiple files in at least one list")
     val before = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(before.nonEmpty)
 
     val gen = IndexStore.compact(spark, p)
@@ -167,7 +167,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(perList.nonEmpty && perList.forall(_ == 1),
       s"compaction must leave exactly one file per list, got $perList")
     val after = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(after == before, "compaction must not change search results")
 
     IndexStore.vacuum(spark, p)
@@ -179,7 +179,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(filesPerList(s"$p/lists_g1").exists(_ > 1),
       "post-compact append must land in the current generation")
     val withExtra = IndexStore.search(spark, queries, p, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(withExtra.exists(_._3 >= 1000000L),
       "full-probe search must surface the vector appended after compaction")
   }
@@ -191,19 +191,19 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.append(vecs.filter(col("vec_id") % 2 === 1), p)
     val pinned = IndexStore.open(spark, p)
     val before = pinned.search(queries, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(before.nonEmpty)
     // the pinned handle must keep serving its sealed generation
     // byte-identically across compact (gen 0 still on disk —
     // vacuum's grace window is what makes this safe)
     assert(IndexStore.compact(spark, p) == 1L)
     val after = pinned.search(queries, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(after == before, "a pinned handle must not see the new generation")
     // a handle opened after compact serves the compacted generation
     // with the same results
     val fresh = IndexStore.open(spark, p).search(queries, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(fresh == before)
   }
 
@@ -224,10 +224,10 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.rotation(spark, p).isEmpty,
       "rebuild must not inherit a stale rotation")
     val rebuilt = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val direct = Ann.ivfPqSearch(spark, vecs, queries, Dim,
       nlist = 8, m = 8, kcode = 16, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(rebuilt == direct,
       "the rebuilt store must search exactly like a fresh one")
   }
@@ -236,9 +236,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val h = IndexStore.open(spark, path)
     // a margin admitting every list is exactly fixed full probing
     val fixed = h.search(queries, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val wide = h.search(queries, k = 10, nprobe = 8, margin = Some(2.0))
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(wide.nonEmpty && wide == fixed)
     // a tight margin narrows the union of probed lists — the scan's
     // partition filter covers fewer directories than the fixed probe
@@ -283,9 +283,9 @@ class IndexStoreSpec extends AnyFunSuite {
     // must equal the direct pipeline run in permuted space
     val direct = Ann.ivfPqSearch(spark, permuted(vecs), permuted(queries),
       Dim, nlist = 8, m = 8, kcode = 16, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val stored = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(stored.nonEmpty && stored == direct)
     // appends are permuted by the store too: an appended copy of a
     // query vector must surface under full probing
@@ -293,7 +293,7 @@ class IndexStoreSpec extends AnyFunSuite {
       .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
     IndexStore.append(extra, p)
     val got = IndexStore.search(spark, queries, p, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.exists(_._3 >= 2000000L),
       "appended vector must be searchable through the stored permutation")
   }
@@ -309,9 +309,9 @@ class IndexStoreSpec extends AnyFunSuite {
       df.select(col("vec_id"), OPQ.rotate(col("embedding"), rot).as("embedding"))
     val direct = Ann.ivfPqSearch(spark, rotated(vecs), rotated(queries),
       Dim, nlist = 8, m = 8, kcode = 16, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val stored = IndexStore.search(spark, queries, p, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(stored.nonEmpty && stored == direct,
       "raw queries against the rotated store must equal the direct " +
         "pipeline in rotated space")
@@ -319,7 +319,7 @@ class IndexStoreSpec extends AnyFunSuite {
       .select((col("vec_id") + 3000000L).as("vec_id"), col("embedding"))
     IndexStore.append(extra, p)
     val got = IndexStore.search(spark, queries, p, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.exists(_._3 >= 3000000L),
       "appended vector must be searchable through the stored rotation")
   }
@@ -348,9 +348,9 @@ class IndexStoreSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
     val got = IndexStore.search(spark, queries, pStream, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val want = IndexStore.search(spark, queries, pBatch, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.nonEmpty)
     assert(got == want, "streamed store must search identically to batch append")
   }
@@ -552,7 +552,7 @@ class IndexStoreSpec extends AnyFunSuite {
     IndexStore.build(oldV, p, Dim, nlist = 8, m = 8, kcode = 16, iters = 3)
     val q = queries.limit(5)
     val before = IndexStore.search(spark, q, p, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     // seal gen 1, then ingest a new batch INTO gen 1
     val g1 = IndexStore.compact(spark, p)
     assert(g1 == 1L)
@@ -561,7 +561,7 @@ class IndexStoreSpec extends AnyFunSuite {
         .withColumn("vec_id", col("vec_id") + lit(700000000L)), p)
     // the pinned read reproduces the pre-ingest result bit-for-bit...
     val pinned = IndexStore.openAt(spark, p, 0L).search(q, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(pinned == before, "gen-0 read must be unaffected by later ingest")
     // ...while the current generation serves the appended vectors too
     val now = IndexStore.open(spark, p).search(q, k = 10, nprobe = 8)
@@ -589,7 +589,7 @@ class IndexStoreSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(s"$p/gen"), true)
     assert(IndexStore.currentGen(spark, p) == 1L)
     val got = IndexStore.search(spark, queries, p, k = 10, nprobe = 8)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.exists(_._3 >= 3000000L),
       "the vector appended after compaction must stay searchable")
   }

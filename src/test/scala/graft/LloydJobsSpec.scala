@@ -32,4 +32,18 @@ class LloydJobsSpec extends AnyFunSuite {
     val got = Seq(1, 2).map(iters => jobs(PQ.fitFrame(v, Dim, 4, 8, iters)))
     assert(got == Seq(7, 11))
   }
+
+  test("index build: each Lloyd round trains both the coarse and the PQ quantizer") {
+    val v = vecs
+    val dir = java.nio.file.Files.createTempDirectory("lloyd_build").toString
+    val got = Seq(1, 2).map(iters => jobs(graft.sources.IndexStore.build(v,
+      s"$dir/i$iters", Dim, nlist = 8, m = 4, kcode = 8, iters = iters)))
+    assert(got(1) - got(0) == 8, s"jobs at iters 1, 2: $got")
+  }
+
+  test("PQ encode collects its m codebooks in one job") {
+    val v = vecs
+    val books = PQ.fit(v, Dim, 4, 8, 1)
+    assert(jobs(PQ.encode(v, books, Dim)) == 1)
+  }
 }

@@ -31,10 +31,10 @@ class MmrSpec extends AnyFunSuite {
     Ann.topKNeighbors(spark, corpus, query, k = 12)
 
   private def picks(df: DataFrame): Seq[Long] =
-    df.select("vec_id").as[Long].collect().toSeq
+    df.orderBy("query_id", "rank").select("vec_id").as[Long].collect().toSeq
 
   test("lambda = 1 reduces exactly to relevance order") {
-    val plain = shortlist.limit(5)
+    val plain = shortlist.filter(col("rank") <= 5)
     val mmr = Ann.mmrRerank(spark, corpus, shortlist, k = 5, lambda = 1.0)
     assert(picks(mmr) == picks(plain))
     // and the mmr_score IS the relevance at lambda = 1
@@ -43,7 +43,7 @@ class MmrSpec extends AnyFunSuite {
   }
 
   test("diversity: MMR page spans both clusters where plain top-k is single-cluster") {
-    val plainTop = picks(shortlist.limit(4))
+    val plainTop = picks(shortlist.filter(col("rank") <= 4))
     assert(plainTop.forall(_ < 200L), "sanity: relevance page is all cluster A")
     val mmr = picks(Ann.mmrRerank(spark, corpus, shortlist, k = 4, lambda = 0.5))
     assert(mmr.exists(_ >= 200L), "MMR must reach cluster B")
@@ -60,7 +60,7 @@ class MmrSpec extends AnyFunSuite {
       }
       ps.sum / ps.size
     }
-    val plain = meanPairSim(picks(shortlist.limit(5)))
+    val plain = meanPairSim(picks(shortlist.filter(col("rank") <= 5)))
     val diverse = meanPairSim(picks(Ann.mmrRerank(spark, corpus, shortlist, k = 5, lambda = 0.5)))
     assert(diverse <= plain + 1e-12, s"diverse=$diverse plain=$plain")
   }

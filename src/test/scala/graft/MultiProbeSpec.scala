@@ -39,9 +39,9 @@ class MultiProbeSpec extends AnyFunSuite {
 
   test("probes=0 reproduces single-probe nearDups exactly") {
     val single = Ann.nearDups(corpus, 0.95)
-      .as[(Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
     val zero = Ann.nearDupsMultiProbe(corpus, 0.95, probes = 0)
-      .as[(Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
     assert(single.nonEmpty)
     assert(zero == single,
       s"probes=0 must be the single-probe candidate set " +

@@ -28,7 +28,7 @@ class PrfSpec extends AnyFunSuite {
   }
 
   test("page is a valid ranking: rank dense from 1, scores non-increasing") {
-    val page = Prf.prfQuery(spark, sf).collect()
+    val page = Prf.prfQuery(spark, sf).orderBy("rank").collect()
     assert(page.map(_.getAs[Long]("rank")).toSeq == (1L to page.length).toSeq)
     val scores = page.map(_.getAs[Double]("prf_score")).toSeq
     assert(scores == scores.sorted.reverse)

@@ -88,7 +88,7 @@ class PsiSkipgramSpec extends AnyFunSuite {
       .filter(_._2 >= CorpusStats.SkipMinCount)
       .map { case ((c, x), n) => (c, x, n) }.sortBy(p => (p._1, p._2))
     val got = CorpusStats.skipgram(docs)
-      .as[(String, String, Long)].collect().toSeq
+      .as[(String, String, Long)].collect().toSeq.sortBy(p => (p._1, p._2))
     assert(got == expected)
     // the full directed matrix is symmetric by construction
     brute.foreach { case ((c, x), n) => assert(brute((x, c)) == n) }

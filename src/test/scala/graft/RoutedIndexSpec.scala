@@ -38,7 +38,7 @@ class RoutedIndexSpec extends AnyFunSuite {
     // the SAME stored tables.
     val h = IndexStore.open(spark, path)
     val routed = h.search(queries, k = 10, nprobe = 4, routeWidth = KTop)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val bks = IndexStore.books(spark, path)
     val q = queries.withColumn("nrm", Ann.norm(col("embedding")))
     val probes = Ann.adcProbes(q, IndexStore.centroids(spark, path), bks,
@@ -47,7 +47,7 @@ class RoutedIndexSpec extends AnyFunSuite {
       .select(col("cent_id").cast("long").as("cent_id"),
         col("vec_id"), col("codes"), col("rec_nrm"))
     val flat = Ann.rankCodes(spark, lists, probes, bks, 10)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(routed.nonEmpty)
     assert(routed == flat,
       s"first diff: ${routed.zip(flat).find(p => p._1 != p._2)}")
@@ -82,8 +82,8 @@ class RoutedIndexSpec extends AnyFunSuite {
     val fixed = h.search(queries, k = 10, nprobe = 4, routeWidth = 2)
     val loose = h.search(queries, k = 10, nprobe = 4, routeWidth = 2,
       routeMargin = Some(4.0))
-    assert(loose.as[(Long, Long, Long, Double)].collect().toSeq ==
-      fixed.as[(Long, Long, Long, Double)].collect().toSeq)
+    assert(loose.as[(Long, Long, Long, Double)].collect().toSeq.sorted ==
+      fixed.as[(Long, Long, Long, Double)].collect().toSeq.sorted)
     // margin 0 keeps only cells tied with each query's best — absent
     // exact r6-rounded top-cell ties (none in this corpus), the kept
     // group set IS routeWidth = 1, so results must match it exactly.
@@ -95,8 +95,8 @@ class RoutedIndexSpec extends AnyFunSuite {
     val tight = h.search(queries, k = 10, nprobe = 4, routeWidth = 2,
       routeMargin = Some(0.0))
     val one = h.search(queries, k = 10, nprobe = 4, routeWidth = 1)
-    assert(tight.as[(Long, Long, Long, Double)].collect().toSeq ==
-      one.as[(Long, Long, Long, Double)].collect().toSeq)
+    assert(tight.as[(Long, Long, Long, Double)].collect().toSeq.sorted ==
+      one.as[(Long, Long, Long, Double)].collect().toSeq.sorted)
     val plan = tight.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cent_id".r.findFirstIn(plan).isDefined,
       s"adaptive route fan-out must stay partition-pruned:\n$plan")
@@ -128,9 +128,9 @@ class RoutedIndexSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
     val got = IndexStore.search(spark, queries, pStream, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     val want = IndexStore.search(spark, queries, pBatch, k = 10, nprobe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSeq
+      .as[(Long, Long, Long, Double)].collect().toSeq.sorted
     assert(got.nonEmpty)
     assert(got == want,
       "a streamed routed store must search identically to batch append")

@@ -140,9 +140,11 @@ class ScaleSpec extends AnyFunSuite {
   test("library pair and label functions return unordered frames (no global Sort)") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.logical.Sort
-    import operators.{Dedup, MediaCrop, MediaDedup, PrefixJoin}
+    import operators._
     val docs = Tables.docsAug(spark, sf).select(col("doc_id"), col("text"))
     val media = Tables.mediaAug(spark, sf)
+    val events = Tables.events(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
     graft.sources.SignatureStore.build(docs.filter(col("doc_id") % 2 === 0),
       "sig_store_unordered", buckets = 4)
     val newSig = Dedup.minhashSignatures(Dedup.shingleDocs(
@@ -157,7 +159,80 @@ class ScaleSpec extends AnyFunSuite {
       "nearDupPairs" -> MediaDedup.nearDupPairs(media),
       "incrementalPairsFrom" -> graft.sources.SignatureStore
         .incrementalPairsFrom(spark, newSig, "sig_store_unordered"),
-      "cropPairs" -> MediaCrop.cropPairs(Tables.mediaCropAug(spark, sf)))
+      "cropPairs" -> MediaCrop.cropPairs(Tables.mediaCropAug(spark, sf)),
+      // a function whose fixture input takes more than a line is reached
+      // through the query or wrapper that only builds that input
+      "rankTopK" -> Ann.topKNeighbors(spark, emb, emb.filter(col("vec_id") % 100 === 0)),
+      "ndcgMicro" -> Ann.ndcgQuery(spark, sf),
+      "nearDups" -> Ann.nearDups(Tables.embAug(spark, sf)),
+      "nearDupsMultiProbe" -> Ann.nearDupsMultiProbe(Tables.embAug(spark, sf)),
+      "mmrRerank" -> Ann.mmrServed(spark, sf),
+      "attribution" -> Attribution.attribution(events),
+      "overlap" -> Audience.overlap(events),
+      "acf" -> Autocorr.autocorr(events),
+      "backtestFromCells" -> Backtest.backtest(events),
+      "balanceOf" -> Balance.balance(spark, sf),
+      "bhStep" -> BhFdr.bhFdr(spark, sf),
+      "chao1Of" -> Chao.chao1(spark, sf),
+      "churnFromSpans" -> Churn.churn(events),
+      "closeness" -> Closeness.closenessQuery(spark, sf),
+      "statsOf" -> CodeStats.statsOf(Tables.codeDocs(spark, sf)),
+      "concurrency" -> Concurrency.concurrency(events),
+      "clusterMix" -> Corpus.clusterMixQuery(spark, sf),
+      "skipgram" -> CorpusStats.skipgram(Tables.documents(spark, sf)),
+      "embedDrift" -> CorpusStats.embedDriftQuery(spark, sf),
+      "cusumFromCells" -> Cusum.cusum(events),
+      "exactGroups" -> Dedup.exactGroups(Tables.docsAug(spark, sf)),
+      "keepBestFromLabels" -> Dedup.keepBest(spark, sf),
+      "statsFromKeep" -> Dedup.dupStats(spark, sf),
+      "ngramPairs" -> Dedup.ngramPairs(Tables.docsAug(spark, sf)),
+      "dpQuantileOf" -> DpRelease.dpQuantileOf(spark, Tables.documents(spark, sf)),
+      "edgeSupport" -> EdgeSupport.edgeSupport(Tables.edgesShared(spark, sf)),
+      "manifestDeltaFrom" -> Etl.manifestDeltaFrom(Tables.currentSnapshot(spark, sf),
+        Tables.manifest(spark, sf)),
+      "funnel" -> Events.funnel(events),
+      "retention" -> Events.retention(events),
+      "anomaly" -> Events.anomaly(events),
+      "anomalyMad" -> Events.anomalyMad(events),
+      "burstiness" -> Events.burstiness(events),
+      "ewma" -> Ewma.ewma(events),
+      "chi2" -> FdProfile.chi2(Tables.documents(spark, sf), "source", "lang"),
+      "overlapPairs" -> FpOverlap.overlapPairs(Tables.docsAug(spark, sf)),
+      "gTestOf" -> GTest.gTest(spark, sf),
+      "hhiOf" -> Hhi.hhi(spark, sf),
+      "hw" -> HoltWinters.hw(events),
+      "tClosenessOf" -> Kanon.tClosenessOf(Kanon.meta(spark, sf)),
+      "keynessOf" -> Keyness.keyness(spark, sf),
+      "knnLabelEval" -> KnnEval.knnEval(spark, sf),
+      "cohortLtv" -> Ltv.cohortLtv(events),
+      "screen" -> Mojibake.screen(Tables.mojibakeAug(spark, sf)),
+      "calibration" -> NaiveBayes.nbCalibration(spark, sf),
+      "labelNoiseOf" -> NaiveBayes.labelNoise(spark, sf),
+      "novelty" -> Novelty.noveltyQuery(spark, sf),
+      "transitions" -> Paths.transitions(events),
+      "quantize" -> Quantize.quantize(Tables.embeddings(spark, sf)),
+      "walks" -> RandWalk.walks(Tables.edgesShared(spark, sf)),
+      "fromUsers" -> RatioMetric.ratioMetric(spark, sf),
+      "fuse" -> Relevance.hybrid(spark, sf),
+      "spearmanOf" -> Relevance.rankCorr(spark, sf),
+      "saxOf" -> Sax.sax(spark, sf),
+      "boilerplateUnits" -> Scrub.boilerplateUnits(Tables.docsAug(spark, sf)),
+      "paraDedupStats" -> Scrub.paraDedupStats(Tables.documents(spark, sf)),
+      "paraFuzzyPairs" -> Scrub.paraFuzzyPairs(Tables.docsAug(spark, sf)),
+      "scrubPii" -> Scrub.piiScrub(spark, sf),
+      "detect" -> Seasonal.seasonal(events),
+      "strength" -> Seasonal.strengthQuery(spark, sf),
+      "sequential" -> Sequential.sequential(events),
+      "skylineOf" -> Skyline.skyline(spark, sf),
+      "jsdOf" -> SourceJsd.sourceJsd(spark, sf),
+      "substrStats" -> Substr.substrStats(Tables.docsAug(spark, sf)),
+      "tailIndex" -> TailIndex.tailIndex(events, "event_type", "user_id"),
+      "targetEncodeOf" -> TargetEncode.targetEncode(spark, sf),
+      "theilSen" -> TheilSen.theilSen(events),
+      "upliftOf" -> Uplift.uplift(spark, sf),
+      "woeOf" -> Woe.woeIv(spark, sf),
+      "plan" -> graft.sources.Compaction.compactionQuery(spark, sf),
+      "pruneStats" -> graft.sources.PruneStats.pruneStatsQuery(spark, sf))
     frames.foreach { case (name, df) =>
       val sorts = df.queryExecution.optimizedPlan.collect {
         case s: Sort if s.global => s

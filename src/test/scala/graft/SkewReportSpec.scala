@@ -12,7 +12,7 @@ class SkewReportSpec extends AnyFunSuite {
     // 1 hot key with 90 rows + 30 cold keys with 1 row each
     val rows = Seq.fill(90)(7L) ++ (100L until 130L)
     val df = rows.toDF("k").select(col("k").as("user_id"))
-    val got = Skew.report(df, "user_id").collect()
+    val got = Skew.report(df, "user_id").orderBy("rank").collect()
     assert(got.length == Skew.ReportTopK)
     val top = got.head
     assert(top.getAs[Long]("key") == 7L && top.getAs[Long]("c") == 90L)

@@ -41,9 +41,9 @@ class StreamingAutocorrSpec extends AnyFunSuite {
     } finally q.stop()
 
     val a = Autocorr.acf(spark.table("acf_cells"))
-      .collect().map(_.toSeq)
+      .orderBy("event_type", "lag").collect().map(_.toSeq)
     val b = Autocorr.autocorr(rows.toSeq.toDF("event_type", "ts"))
-      .collect().map(_.toSeq)
+      .orderBy("event_type", "lag").collect().map(_.toSeq)
     assert(a.nonEmpty && a.toSeq == b.toSeq,
       "streamed ACF ladder diverges from batch")
   }

@@ -38,9 +38,9 @@ class StreamingChurnSpec extends AnyFunSuite {
       .as[StreamingChurn.Span].collect().toSeq
     q.stop()
 
-    val streamed = StreamingChurn.ladderOf(spark, spans).collect().toSeq
+    val streamed = StreamingChurn.ladderOf(spark, spans).orderBy("k").collect().toSeq
     val batch = Churn.churn(Tables.events(spark, sf)
-      .select(col("user_id"), col("ts"))).collect().toSeq
+      .select(col("user_id"), col("ts"))).orderBy("k").collect().toSeq
     assert(streamed == batch,
       s"stream ladder must equal batch: ${streamed.take(3)} vs ${batch.take(3)}")
   }

@@ -41,9 +41,9 @@ class StreamingSeasonalSpec extends AnyFunSuite {
     } finally q.stop()
 
     val a = Seasonal.detect(spark.table("seas_cells"))
-      .collect().map(_.toSeq)
+      .orderBy("event_type", "hour").collect().map(_.toSeq)
     val b = Seasonal.seasonal(rows.toSeq.toDF("event_type", "ts"))
-      .collect().map(_.toSeq)
+      .orderBy("event_type", "hour").collect().map(_.toSeq)
     assert(a.nonEmpty && a.toSeq == b.toSeq,
       "streamed seasonal verdicts diverge from batch")
   }

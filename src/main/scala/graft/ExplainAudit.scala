@@ -422,7 +422,7 @@ object ExplainAudit {
     // round-5 continuation: monitoring/eval/retrieval block
     val cpPlan = operators.Changepoint.changepointQuery(spark, d)
       .queryExecution.executedPlan.toString
-    // the cell fold is materialized (localCheckpoint → ExistingRDD):
+    // the cell fold is materialized (a lineage cut → ExistingRDD):
     // span/types/grid all read the barrier — the events corpus is
     // scanned ONCE at materialization, not once per reference, and
     // unlike a cache entry the blocks are GC'd with the frame (the
@@ -771,8 +771,8 @@ object ExplainAudit {
       val ev = Tables.events(spark, d).filter(col("value").isNotNull)
         .select(col("event_type"), col("event_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("vc"))
-      val sk = operators.Kmv.sketch(ev, "event_type", "event_id", "vc")
-        .localCheckpoint()
+      val sk = operators.Iterate.materialize(
+        operators.Kmv.sketch(ev, "event_type", "event_id", "vc"))
       operators.Winsorize.winsorizeServedFrom(ev, sk)
         .queryExecution.executedPlan.toString
     }
@@ -792,17 +792,15 @@ object ExplainAudit {
         l.contains("FileScan") && l.contains("events")) <= 1 &&
         !dpcPlan.contains("SortMergeJoin"))
 
-    val sccNodes = Tables.edgesShared(spark, d)
+    // the round pins below plan ONE round of each loop through the
+    // operator's own round function (each loop materializes per
+    // round, so the steady-state round plan is the honest unit)
+    val roundEdges = Tables.edgesShared(spark, d)
     val sccInner = {
-      val nodes = sccNodes.select(col("src").as("id"))
-        .unionAll(sccNodes.select(col("dst").as("id"))).distinct()
-      // audit ONE propagation round's plan shape (the loop materializes
-      // per round, so the steady-state round plan is the honest unit)
-      val labels = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint()
-      labels.join(sccNodes, labels("id") === sccNodes("src"))
-        .select(sccNodes("dst").as("id"), labels("lbl"))
-        .unionAll(labels)
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
+      val nodes = roundEdges.select(col("src").as("id"))
+        .unionAll(roundEdges.select(col("dst").as("id"))).distinct()
+      operators.Components.minLabelRound(operators.Iterate.materialize(
+        nodes.select(col("id"), col("id").as("lbl"))), roundEdges)
         .queryExecution.executedPlan.toString
     }
     // each SCC propagation hop is one edge-keyed join + a partial-agg
@@ -813,11 +811,9 @@ object ExplainAudit {
         !sccInner.contains("CartesianProduct"))
 
     val bwInner = {
-      val e = Tables.edgesShared(spark, d)
-      val w = e.select(col("src").as("p"), col("src").as("v"),
-        lit(1L).as("w")).distinct().localCheckpoint()
-      w.join(e, w("v") === e("src"))
-        .groupBy(col("p"), e("dst").as("v")).agg(sum(col("w")).as("w"))
+      val nodes = roundEdges.select(col("src").as("node")).distinct()
+      operators.Betweenness.walkRound(operators.Iterate.materialize(
+        operators.Betweenness.pivotWalks(nodes)), roundEdges, 1)
         .queryExecution.executedPlan.toString
     }
     // each betweenness round (forward sigma and backward delta alike)
@@ -828,17 +824,11 @@ object ExplainAudit {
         !bwInner.contains("CartesianProduct"))
 
     val pprInner = {
-      val e = Tables.edgesShared(spark, d)
-      val nodes = e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct()
-        .select(col("node"), (col("node") % 7 === 0).as("is_seed"))
-        .localCheckpoint()
-      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val pr = nodes.select(col("node"), col("is_seed"),
-        lit(1000000L).as("pr")).localCheckpoint()
-      pr.join(e, pr("node") === e("src")).join(outdeg, "src")
-        .select(col("dst"), expr("pr div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
+      val nodes = operators.Iterate.materialize(operators.Ppr.seededNodes(
+        roundEdges, col("node") % operators.Ppr.SeedMod === 0))
+      val pr = operators.Iterate.materialize(
+        nodes.withColumn("pr", lit(1000000L)))
+      operators.Ppr.round(pr, nodes, roundEdges, 1L)
         .queryExecution.executedPlan.toString
     }
     // each PPR round is the PageRank shape: edge-keyed join + a

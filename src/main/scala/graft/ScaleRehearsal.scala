@@ -63,17 +63,18 @@ object ScaleRehearsal {
     if (only.forall(s => s.contains("cc_full") || s.contains("cc_merge_batch"))) {
       // shared setup, untimed: the pair table (a real ingest reads it
       // from the SignatureStore) and the stored base labels
-      val ccPairs = operators.Dedup.minhashPairs(docs)
-        .select(col("a_id"), col("b_id")).localCheckpoint()
+      val ccPairs = operators.Iterate.materialize(
+        operators.Dedup.minhashPairs(docs).select(col("a_id"), col("b_id")))
       val ccBatchIds = docs.select(col("doc_id"))
         .filter(pmod(col("doc_id"), lit(10)) === 0)
-      val ccNew = ccPairs.join(ccBatchIds.select(col("doc_id").as("a_id")),
-        Seq("a_id"), "left_semi")
-        .unionByName(ccPairs.join(ccBatchIds.select(col("doc_id").as("b_id")),
-          Seq("b_id"), "left_semi").select(col("a_id"), col("b_id")))
-        .distinct().localCheckpoint()
-      val ccBase = operators.Components.fromPairs(
-        ccPairs.exceptAll(ccNew)).localCheckpoint()
+      val ccNew = operators.Iterate.materialize(
+        ccPairs.join(ccBatchIds.select(col("doc_id").as("a_id")),
+          Seq("a_id"), "left_semi")
+          .unionByName(ccPairs.join(ccBatchIds.select(col("doc_id").as("b_id")),
+            Seq("b_id"), "left_semi").select(col("a_id"), col("b_id")))
+          .distinct())
+      // fromPairs returns its materialized last round: no second cut
+      val ccBase = operators.Components.fromPairs(ccPairs.exceptAll(ccNew))
       t("cc_full") {
         val n = operators.Components.fromPairs(ccPairs).count()
         stages ::= (("cc_full_rounds", 0.0,
@@ -106,10 +107,10 @@ object ScaleRehearsal {
     // scratch. Setup (store build over the 90%) is untimed — a real
     // deployment amortized it across every prior week.
     if (only.forall(s => s.contains("curator_delta") || s.contains("curator_full"))) {
-      val curBatch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .localCheckpoint()
-      val curBase = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-        .localCheckpoint()
+      val curBatch = operators.Iterate.materialize(
+        docs.filter(pmod(col("doc_id"), lit(10)) === 0))
+      val curBase = operators.Iterate.materialize(
+        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0))
       Seq("reh_sigs", "reh_sigs_del", "reh_labels", "reh_labels_next")
         .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
       operators.IncrementalCurator.init(spark, curBase, "reh_sigs", "reh_labels")

@@ -548,9 +548,8 @@ object Tables {
     * `Dedup.sharedLabels` precedent): all ~17 graph queries start from
     * the SAME events → mod-150 → distinct edge frame, and each sweep
     * entry re-paid the events scan + distinct exchange to rebuild it.
-    * Memoized per (application, corpus dir) through a
-    * `localCheckpoint` — survives `clearCache()` between bench
-    * queries (the lineage-cut discipline); a fresh session re-derives.
+    * Memoized per (application, corpus dir) as an
+    * [[operators.Iterate.materialize]] cut; a fresh session re-derives.
     * The in-session mirror of the production story: one materialized
     * edge table serves every graph consumer.
     */
@@ -559,7 +558,7 @@ object Tables {
 
   def edgesShared(s: SparkSession, d: String): DataFrame =
     edgeMemo.computeIfAbsent(s.sparkContext.applicationId + "|" + d,
-      _ => edges(s, d).localCheckpoint())
+      _ => operators.Iterate.materialize(edges(s, d)))
 
   val edgesSql: String =
     """edges AS (

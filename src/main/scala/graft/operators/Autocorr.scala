@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * dead hour is evidence against periodicity, not missing data.
   *
   * Scale shape: ONE events fold to the sparse hour×type cell frame
-  * (localCheckpoint barrier — the span fold, type list, and grid join
+  * (materialized barrier — the span fold, type list, and grid join
   * all read it; the [[Changepoint.detect]] precedent), then everything
   * runs on bounded frames: the dense grid is H·|types| rows
   * (time-bounded, independent of event volume), the per-type stats

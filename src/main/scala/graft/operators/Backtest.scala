@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: ONE events fold to the sparse hourly cells (the
   * [[Changepoint.cells]] state), densified over the span grid and
-  * materialized ONCE (localCheckpoint — targets and both forecast
+  * materialized ONCE ([[Iterate.materialize]] — targets and both forecast
   * joins read it; the Seasonal barrier discipline); everything after
   * runs on H·|types|·3 bounded rows, independent of event volume.
   */

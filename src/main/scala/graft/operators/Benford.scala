@@ -48,7 +48,7 @@ object Benford {
     val spine = s.range(1, 10)
       .select(col("id").cast("string").as("digit"),
         element_at(typedLit(PMicro), col("id").cast("int")).as("benford_micro"))
-    val per = spine.join(digits, Seq("digit"), "left_outer")
+    val per = Iterate.materialize(spine.join(digits, Seq("digit"), "left_outer")
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         col("benford_micro"))
       .crossJoin(broadcast(
@@ -58,8 +58,7 @@ object Benford {
       .withColumn("chi2_contrib_micro", expr(
         """cast(cast(n * 1000000 - exp_micro as decimal(38,0))
           |     * cast(n * 1000000 - exp_micro as decimal(38,0))
-          |     div cast(exp_micro as decimal(38,0)) as bigint)""".stripMargin))
-      .localCheckpoint() // the total fold below re-reads it
+          |     div cast(exp_micro as decimal(38,0)) as bigint)""".stripMargin)))
     per.crossJoin(broadcast(per.agg(
       sum(col("chi2_contrib_micro")).cast("long").as("chi2_total_micro"))))
       .select(col("digit"), col("n"), col("share_micro"),

@@ -55,17 +55,10 @@ object Betweenness {
       .unionAll(e.select(col("dst").as("node"))).distinct().persist()
     // forward: walk counts per depth; depth-d rows for a node first
     // reached at d ARE its shortest-path counts
-    var w = Iterate.materialize(
-      nodes.filter(col("node") % PivotMod === 0)
-        .select(col("node").as("p"), col("node").as("v"), lit(1L).as("w"),
-          lit(0L).as("d")))
+    var w = Iterate.materialize(pivotWalks(nodes))
     var all = w
     for (d <- 1 to MaxDepth) {
-      w = Iterate.materialize(
-        w.join(e, w("v") === e("src"))
-          .groupBy(col("p"), e("dst").as("v"))
-          .agg(sum(col("w")).as("w"))
-          .select(col("p"), col("v"), col("w"), lit(d.toLong).as("d")))
+      w = Iterate.materialize(walkRound(w, e, d))
       all = all.unionAll(w)
     }
     val dists = all.groupBy(col("p"), col("v")).agg(min(col("d")).as("dist"))
@@ -109,6 +102,19 @@ object Betweenness {
     nodes.unpersist(); e.unpersist()
     out
   }
+
+  /** Depth-0 walks `(p, v, w, d)`: one unit walk per pivot node. */
+  private[graft] def pivotWalks(nodes: DataFrame): DataFrame =
+    nodes.filter(col("node") % PivotMod === 0)
+      .select(col("node").as("p"), col("node").as("v"), lit(1L).as("w"),
+        lit(0L).as("d"))
+
+  /** One forward round: depth-`d` walk counts from the depth-`d-1` `w`. */
+  private[graft] def walkRound(w: DataFrame, e: DataFrame, d: Int): DataFrame =
+    w.join(e, w("v") === e("src"))
+      .groupBy(col("p"), e("dst").as("v"))
+      .agg(sum(col("w")).as("w"))
+      .select(col("p"), col("v"), col("w"), lit(d.toLong).as("d"))
 
   val betweennessSql: String = {
     // forward rounds as MATERIALIZED CTEs (the q_markov unroll rule:

@@ -62,7 +62,7 @@ object BhFdr {
 
   /** The screened family over any (source, unit, y) frame. */
   def bhOfSlices(slicesRaw: DataFrame): DataFrame = {
-    val slices = slicesRaw.localCheckpoint() // obs fold + B-grid fold
+    val slices = Iterate.materialize(slicesRaw) // obs fold + B-grid fold
     def diffMicro(df: DataFrame, arm: Column, keys: Seq[String]): DataFrame =
       df.withColumn("a", arm)
         .groupBy(keys.map(col): _*)

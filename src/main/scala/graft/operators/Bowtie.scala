@@ -43,9 +43,8 @@ object Bowtie {
 
   def bowtie(s: SparkSession, d: String): DataFrame = {
     val e = Tables.edgesShared(s, d)
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
+    val nodes = Iterate.materialize(e.select(col("src").as("id"))
+      .unionAll(e.select(col("dst").as("id"))).distinct())
     classify(nodes, e).orderBy(col("id"))
   }
 
@@ -59,9 +58,8 @@ object Bowtie {
       .agg(count(lit(1)).cast("long").as("sz"))
       .agg(max(struct(col("sz").as("sz"), (-col("scc")).as("neg"))).as("g"))
       .select((-col("g.neg")).as("giant_scc"))
-    val lab = labels.crossJoin(broadcast(giant))
-      .select(col("id"), (col("scc") === col("giant_scc")).as("in_core"))
-      .localCheckpoint()
+    val lab = Iterate.materialize(labels.crossJoin(broadcast(giant))
+      .select(col("id"), (col("scc") === col("giant_scc")).as("in_core")))
     def seedFromCore = lab.select(col("id"),
       when(col("in_core"), lit(CoreSentinel)).otherwise(col("id")).as("lbl"))
     // forward propagation of the sentinel = reachable FROM core (OUT)

@@ -151,19 +151,17 @@ object Bpe {
     * assumption.
     */
   def bpeEncode(s: SparkSession, d: String): DataFrame = {
-    val words = Tables.documents(s, d)
+    val words = Iterate.materialize(Tables.documents(s, d)
       .select(col("source"), explode(TextSim.tokens(col("text"))).as("w"))
       .filter(!col("w").contains("|"))
       .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .localCheckpoint() // read twice: global vocab fold + the census
-    val vocab = words.groupBy(col("w"))
+      .agg(count(lit(1)).cast("long").as("tf")))
+    val vocab = Iterate.materialize(words.groupBy(col("w"))
       .agg(sum(col("tf")).cast("long").as("tf"))
       .select(col("w"),
         transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))).as("syms"),
-        col("tf"))
-      .localCheckpoint() // training rounds + final segmentation
+        col("tf")))
     val merges = trainVocab(vocab, EncodeRounds).collect()
       .sortBy(_.getInt(0))
       .map(r => (r.getString(1), r.getString(2))).toSeq

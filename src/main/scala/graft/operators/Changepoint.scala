@@ -55,19 +55,19 @@ object Changepoint {
     ev.groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
       .agg(count(lit(1)).cast("long").as("y"))
 
-  /** Materialized sparse cells + hour span, for the sequential
-    * time-series folds ([[Ewma]], [[Cusum]], [[HoltWinters]]): ONE
-    * corpus scan materializes the TIME-bounded `(event_type, hu, y)`
-    * frame (localCheckpoint — the [[Iterate.materialize]] lineage
-    * cut), and the span rides that same job as Observation metrics,
-    * so deriving `lo`/`nH` adds NO extra job and the returned frame's
-    * consumers re-read H·|types| checkpoint blocks, never events.
+  /** Materialized sparse cells + hour span of a `(h, event_type, y)`
+    * cell frame, for the sequential time-series folds ([[Ewma]],
+    * [[Cusum]], [[HoltWinters]]): ONE job materializes the
+    * TIME-bounded `(event_type, hu, y)` frame, and the span rides that
+    * same job as Observation metrics, so deriving `lo`/`nH` adds NO
+    * extra job and the returned frame's consumers re-read H·|types|
+    * materialized rows, never events.
     * Returns `(cells, loMicros, nHours)`; `nHours = 0` on empty.
     */
-  def cellsWithSpan(ev: DataFrame): (DataFrame, Long, Int) = {
+  def cellSpan(cellFrame: DataFrame): (DataFrame, Long, Int) = {
     val obs = org.apache.spark.sql.Observation()
     val c = Iterate.materialize(
-      cells(ev)
+      cellFrame
         .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y"))
         .observe(obs, count(lit(1)).as("n"),
           min(col("hu")).as("lo"), max(col("hu")).as("hi")))
@@ -88,11 +88,11 @@ object Changepoint {
     // barrier: span, the type list, and the grid join all read the
     // cell frame — unmaterialized, each reference re-derives the whole
     // events fold (3 corpus scans, caught by the ExplainAudit bounded-
-    // scan invariant). localCheckpoint, NOT persist: a per-trigger
+    // scan invariant). A lineage cut, NOT persist: a per-trigger
     // streaming detector calls this every batch, and CacheManager
-    // entries are never auto-released — checkpoint blocks are GC'd
-    // with the frame reference (the ContextCleaner contract), so a
-    // long-lived monitor cannot accumulate cache entries.
+    // entries are never auto-released — local checkpoint blocks are
+    // GC'd with the frame reference (the ContextCleaner contract), so
+    // a long-lived monitor cannot accumulate cache entries.
     val agg = Iterate.materialize(aggRaw)
     val span = agg.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
     val hours = span.select(

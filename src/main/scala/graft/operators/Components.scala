@@ -143,21 +143,7 @@ object Components {
     var rounds = 0
     while (changed > 0) {
       rounds += 1
-      val viaEdges = labels.join(edges, labels("id") === edges("src"))
-        .select(edges("dst").as("id"), labels("lbl").as("lbl"),
-          lit(null).cast("long").as("old"))
-      // every id keeps exactly one labels row, so min(old) recovers its
-      // previous label; the union keeps that row a min() candidate, so
-      // lbl <= old always and "changed" is a strict decrease. A null
-      // old means the id reached via an edge had NO labels row at all
-      // (caller passed a nodes frame missing a pair endpoint) — that id
-      // just acquired its first label, which must count as changed or
-      // the loop could stop a round early with unpropagated labels.
-      val merged = labels.select(col("id"), col("lbl"), col("lbl").as("old"))
-        .unionAll(viaEdges)
-        .groupBy(col("id"))
-        .agg(min(col("lbl")).as("lbl"), min(col("old")).as("old"))
-      val (next, n) = Iterate.materialize(merged,
+      val (next, n) = Iterate.materialize(minLabelRound(labels, edges),
         sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
           .otherwise(0L)), col("id"), col("lbl"))
       labels = next
@@ -165,5 +151,23 @@ object Components {
     }
     lastRounds = rounds
     labels
+  }
+
+  /** One [[minLabel]] round: `(id, lbl, old)`, the new min label
+    * beside the previous one. Every id keeps exactly one labels row, so
+    * min(old) recovers its previous label and lbl <= old: "changed" is
+    * a strict decrease. A null old means the id had NO labels row (a
+    * nodes frame missing a pair endpoint): its first label counts as
+    * changed, or the loop could stop with unpropagated labels.
+    */
+  private[graft] def minLabelRound(labels: DataFrame,
+    edges: DataFrame): DataFrame = {
+    val viaEdges = labels.join(edges, labels("id") === edges("src"))
+      .select(edges("dst").as("id"), labels("lbl").as("lbl"),
+        lit(null).cast("long").as("old"))
+    labels.select(col("id"), col("lbl"), col("lbl").as("old"))
+      .unionAll(viaEdges)
+      .groupBy(col("id"))
+      .agg(min(col("lbl")).as("lbl"), min(col("old")).as("old"))
   }
 }

@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+  Executors, TimeUnit}
+
+import org.apache.spark.sql.SparkSession
+
 /** Overlap INDEPENDENT Spark job chains from driver threads — the
   * guide's "overlap independent jobs" pattern (§2.6): Spark's scheduler
   * happily runs several jobs at once inside one application; actions
@@ -11,9 +16,12 @@ package graft.operators
   * current chain's straggler tail.
   *
   * Results are unchanged: each chain runs exactly the jobs it ran
-  * sequentially, FIFO scheduling gives earlier submissions priority,
-  * and failures propagate (the first failed chain's exception is
-  * rethrown after the pool drains).
+  * sequentially, and FIFO scheduling gives earlier submissions
+  * priority. Failure is fail-fast: the first chain to fail has its
+  * exception rethrown (unwrapped) at once; chains not yet started never
+  * start, and the Spark jobs of the running ones are cancelled through
+  * a per-call job tag. The call returns once those chains have ended,
+  * so no job of a failed call outlives it.
   */
 object Concurrently {
 
@@ -33,23 +41,27 @@ object Concurrently {
     */
   def apply[A, B](items: Seq[A], maxPool: Int = defaultPool)(f: A => B): Seq[B] = {
     if (items.lengthCompare(2) < 0) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(items.length, maxPool))
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-concurrently-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.min(items.length, maxPool))
+    val done = new ExecutorCompletionService[B](pool)
+    // the pool's threads are this call's own, so the tag marks only
+    // its chains' jobs (and those of chains nested in them)
+    val futures = items.map(a =>
+      done.submit(() => { sc.foreach(_.addJobTag(tag)); f(a) }))
     try {
-      import scala.jdk.CollectionConverters._
-      val tasks = items.map { a =>
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }
-      }
-      // invokeAll waits for every task; get() wraps a task failure in
-      // ExecutionException — unwrap so callers see the original
-      // exception type, exactly as in the sequential code path
-      pool.invokeAll(tasks.asJava).asScala.toSeq.map { fut =>
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
+      items.foreach(_ => try done.take().get() catch {
+        case e: ExecutionException =>
+          futures.foreach(_.cancel(false))
+          pool.shutdown()
+          // a running chain may start its next job after one cancel
+          // lands: cancel again until every running chain has ended
+          do sc.foreach(_.cancelJobsWithTag(tag))
+          while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
+          throw Option(e.getCause).getOrElse(e)
+      })
+      futures.map(_.get())
     } finally pool.shutdown()
   }
 

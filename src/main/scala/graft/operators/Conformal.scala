@@ -153,10 +153,9 @@ object Conformal {
     conformalServedOf(NaiveBayes.classify(Tables.documents(s, d)), TargetPct)
 
   def conformalServedOf(classified: DataFrame, targetPct: Long): DataFrame = {
-    val scored = classified
+    val scored = Iterate.materialize(classified
       .select(col("doc_id"), col("margin_micro"),
-        (col("pred") === col("label")).cast("long").as("ok"))
-      .localCheckpoint() // one barrier feeds sketch + eval folds
+        (col("pred") === col("label")).cast("long").as("ok")))
     val cal = scored.filter(col("doc_id") % 2 === 1)
     val eval_ = scored.filter(col("doc_id") % 2 === 0)
     val sk = Kmv.sketch(

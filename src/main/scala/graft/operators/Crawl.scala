@@ -119,7 +119,6 @@ object Crawl {
       val e = edges.select(col("src"), col("dst")).persist()
       val nodes = e.select(col("src").as("node"))
         .unionAll(e.select(col("dst").as("node"))).distinct().persist()
-      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       val n = nodes.count()
       val base = (3L * PrScale) / (20L * n) // 0.15/N in fixed point
       // the node frame carries a static has_out flag so each round's
@@ -138,17 +137,12 @@ object Crawl {
       var dm: Long = nodesF.filter(!col("has_out")).count() * (PrScale / n)
       var pr = nodes.select(col("node"), lit(PrScale / n).as("pr"))
       for (_ <- 1 to iters) {
-        val contrib = pr.join(e, pr("node") === e("src"))
-          .join(outdeg, "src")
-          .select(col("dst"), expr("pr div outdeg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("m"))
         // each node receives an equal integer share of the stranded
         // mass; the < n units lost to the floor are the "within
         // fixed-point rounding" of the conservation theorem. dm is a
         // driver-side long (bounded statistic), so the share is a
         // constant-folded literal.
-        val next = nodesF
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
+        val next = nodesF.join(Ppr.received(pr, e), Seq("node"), "left")
           .select(col("node"), col("has_out"),
             (lit(base) + expr(
               s"(850 * (coalesce(m, 0) + ${dm / n}L)) div 1000")).as("pr"))

@@ -53,18 +53,12 @@ object Cusum {
     // ONE scan materializes the TIME-bounded sparse cells (span rides
     // it as Observation metrics); the sequential monitor runs per type
     // INSIDE mapGroups — executor-side, densified per group
-    val obs = org.apache.spark.sql.Observation()
-    val cells = Iterate.materialize(cellsRaw
-      .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y"))
-      .observe(obs, count(lit(1)).as("n"),
-        min(col("hu")).as("lo"), max(col("hu")).as("hi")))
-    if (obs.get("n").asInstanceOf[Long] == 0L)
+    val (cells, lo, nH) = Changepoint.cellSpan(cellsRaw)
+    if (nH == 0)
       return s.emptyDataFrame.select(lit("").as("event_type"),
         lit(0L).as("n_hours"), lit(0L).as("n_ref"), lit(0L).as("mu0_micro"),
         lit(0L).as("max_up_micro"), lit(0L).as("max_down_micro"),
         lit(0L).as("first_alarm"), lit(0).as("drifted"))
-    val lo = obs.get("lo").asInstanceOf[Long]
-    val nH = ((obs.get("hi").asInstanceOf[Long] - lo) / HourUs).toInt + 1
     val n0 = nH / 2
     cells.as[(String, Long, Long)]
       .groupByKey(_._1)

@@ -260,12 +260,12 @@ object Dedup {
     * standalone driver query, but all three consume the SAME
     * shingle→minhash→pair→CC chain — re-deriving it per query tripled
     * the sweep cost (~3.4 s × 3 at sf0.1, r6 judge finding). The label
-    * table is memoized per (application, corpus dir) through a
-    * `localCheckpoint` (survives `clearCache()` — the lineage-cut
-    * discipline), so the first family member pays the chain and the
-    * rest reuse ≤|pair members| label rows. This is the in-session
-    * mirror of the production story, where one persisted
-    * [[graft.sources.SignatureStore]] serves every downstream consumer.
+    * table ([[Components.fromPairs]]' materialized last round) is
+    * memoized per (application, corpus dir), so the first family
+    * member pays the chain and the rest reuse ≤|pair members| label
+    * rows. This is the in-session mirror of the production story,
+    * where one persisted [[graft.sources.SignatureStore]] serves every
+    * downstream consumer.
     */
   private val labelMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
@@ -274,7 +274,7 @@ object Dedup {
     labelMemo.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
       val pairs = minhashPairs(Tables.docsAug(s, d))
         .select(col("a_id"), col("b_id")).persist()
-      val labels = Components.fromPairs(pairs).localCheckpoint()
+      val labels = Components.fromPairs(pairs)
       pairs.unpersist()
       labels
     })

@@ -492,14 +492,13 @@ object DpRelease {
     // the ONE corpus fold, materialized: three consumers reference it
     // (node sums, the cell grid, and — via both — the release), and
     // without a barrier each re-derives the whole scan (the
-    // multi-reference-fold rule; localCheckpoint so the printed plan
+    // multi-reference-fold rule; a lineage cut so the printed plan
     // shows the corpus touched once — the Changepoint/Psi precedent)
-    val deltas = df
+    val deltas = Iterate.materialize(df
       .select((keys.map(col) :+ epoch.cast("long").as("t")): _*)
       .filter(col("t") >= 0 && col("t") < horizon)
       .groupBy((keys.map(col) :+ col("t")): _*)
-      .agg(count(lit(1)).cast("long").as("d"))
-      .localCheckpoint()
+      .agg(count(lit(1)).cast("long").as("d")))
     val lvls = s.range(0, levels).select(col("id").cast("int").as("l"))
     // each delta row lands in exactly one node per level: i = t >> l
     val nodeSums = deltas.crossJoin(lvls)

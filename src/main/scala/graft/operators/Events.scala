@@ -209,11 +209,10 @@ object Events {
     anomalyMad(Tables.events(s, d))
 
   def anomalyMad(ev: DataFrame): DataFrame = {
-    val hourly = ev
+    val hourly = Iterate.materialize(ev
       .groupBy(col("event_type"),
         date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"))
-      .agg(count(lit(1)).as("n_events"))
-      .localCheckpoint() // med, mad and the output all read it
+      .agg(count(lit(1)).as("n_events"))) // med, mad and the output all read it
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("n_events"), col("hour"))
     val meds = hourly
@@ -758,14 +757,13 @@ object Events {
     * exact CDF.
     */
   def timeToConvertServed(s: SparkSession, d: String): DataFrame = {
-    val lat = Tables.events(s, d)
+    val lat = Iterate.materialize(Tables.events(s, d)
       .filter(col("event_type").isin("view", "purchase"))
       .groupBy(col("user_id"))
       .agg(min(when(col("event_type") === "view", unix_micros(col("ts")))).as("v"),
         min(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
       .filter(col("v").isNotNull && col("p").isNotNull && col("v") <= col("p"))
-      .select(col("user_id"), (col("p") - col("v")).as("lat_us"))
-      .localCheckpoint() // one barrier feeds sketch + exact folds
+      .select(col("user_id"), (col("p") - col("v")).as("lat_us")))
     val sk = Kmv.sketch(lat.withColumn("k", lit("all")), "k", "user_id", "lat_us")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
     val q = sk

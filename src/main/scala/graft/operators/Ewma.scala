@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * frame that grows with a data-cardinality dimension (r10 verdict
   * item: the old driver collect was bounded by H·|types|, which
   * grows with the type enum). The one corpus-sized operation is the
-  * shared cell fold ([[Changepoint.cellsWithSpan]]); span rides it
+  * shared cell fold ([[Changepoint.cellSpan]]); span rides it
   * as Observation metrics, so the whole query is the one scan plus
   * a |types|-group shuffle of H-row groups.
   */
@@ -50,7 +50,7 @@ object Ewma {
     // ONE corpus scan (cells materialized, span rides the same job);
     // the sequential fold runs per type INSIDE mapGroups — identical
     // integer recursion, executor-side, densified per group
-    val (cells, lo, nH) = Changepoint.cellsWithSpan(ev)
+    val (cells, lo, nH) = Changepoint.cellSpan(Changepoint.cells(ev))
     cells.as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (tpe, it) =>

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Scale: like [[Ewma]], the recursion is inherently sequential in t
   * but independent across types, so it runs EXECUTOR-SIDE per type
   * inside `mapGroups` over the H·|types| TIME-bounded cell frame; the
-  * one corpus-sized op is the shared [[Changepoint.cellsWithSpan]]
+  * one corpus-sized op is the shared [[Changepoint.cellSpan]]
   * fold (span rides it as Observation metrics). The oracle mirrors
   * the recursion as a recursive CTE carrying the 24-slot seasonal
   * state as a LIST (head = current phase, rotate-append per step).
@@ -49,7 +49,7 @@ object HoltWinters {
   def hw(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
     import s.implicits._
-    val (cells, lo, nH) = Changepoint.cellsWithSpan(ev)
+    val (cells, lo, nH) = Changepoint.cellSpan(Changepoint.cells(ev))
     cells.as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (tpe, it) =>

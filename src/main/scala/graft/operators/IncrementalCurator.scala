@@ -55,11 +55,14 @@ object IncrementalCurator {
     * frame is MATERIALIZED before the append: `incrementalPairs`
     * reads the store lazily, and appending first would violate its
     * ids-must-be-new contract mid-plan.
+    * The append commits only after the swap: a replay after a failure
+    * between them finds the batch's ids still new, and re-merging
+    * merged pairs leaves the labels as they are.
     */
   def ingest(spark: SparkSession, newDocs: DataFrame, sigTable: String,
     labelTable: String): Unit =
     ingestSig(spark,
-      Dedup.minhashSignatures(Dedup.shingleDocs(newDocs)).localCheckpoint(),
+      Iterate.materialize(Dedup.minhashSignatures(Dedup.shingleDocs(newDocs))),
       newDocs, sigTable, labelTable)
 
   /** [[ingest]] over an ALREADY-MATERIALIZED batch signature frame —
@@ -67,30 +70,24 @@ object IncrementalCurator {
     * a caller with several queued batches computes them concurrently
     * up front (guide §2.6) while only the store mutations serialize.
     *
-    * The signature frame must be eagerly materialized (localCheckpoint
-    * / storage-backed): one shingle+minhash pass is the dominant
-    * batch-side cost and both the pair derivation and the append need
-    * it — and AQE materializes independent broadcast stages (old×new
-    * bands, verify sides) concurrently, where concurrent first readers
-    * of a LAZY persist race the cache (measured: +18 jobs, 2× input
-    * bytes on q_curator_e2e without the checkpoint).
+    * The signature frame must be eagerly materialized
+    * ([[Iterate.materialize]] / storage-backed): one shingle+minhash
+    * pass is the dominant batch-side cost and both the pair derivation
+    * and the append need it — and AQE materializes independent
+    * broadcast stages (old×new bands, verify sides) concurrently, where
+    * concurrent first readers of a LAZY persist race the cache
+    * (measured: +18 jobs, 2× input bytes on q_curator_e2e without the
+    * checkpoint).
     */
   def ingestSig(spark: SparkSession, newSig: DataFrame, newDocs: DataFrame,
     sigTable: String, labelTable: String): Unit = {
-    val pairs = SignatureStore.incrementalPairsFrom(spark, newSig, sigTable)
-      .select(col("a_id"), col("b_id")).localCheckpoint()
-    val merged = Components.mergePairs(spark.table(labelTable), pairs)
-      .localCheckpoint()
-    // After merged materializes, the label swap and the signature
-    // append touch DISJOINT state (label table vs signature store), so
-    // the two write chains overlap from driver threads (guide §2.6) —
-    // the append's tasks back-fill the swap write's tail. merged and
-    // newSig are both materialized/cached BEFORE this point, so
-    // neither chain lazily reads state the other mutates.
-    Concurrently.both(
-      SignatureStore.replaceTable(spark, labelTable, merged.write),
-      SignatureStore.appendSignatures(newSig, newDocs, sigTable))
-    ()
+    val pairs = Iterate.materialize(
+      SignatureStore.incrementalPairsFrom(spark, newSig, sigTable)
+        .select(col("a_id"), col("b_id")))
+    val merged = Iterate.materialize(
+      Components.mergePairs(spark.table(labelTable), pairs))
+    SignatureStore.replaceTable(spark, labelTable, merged.write)
+    SignatureStore.appendSignatures(newSig, newDocs, sigTable)
   }
 
   /** Keeper refresh — the curated corpus over everything ingested so
@@ -130,8 +127,8 @@ object IncrementalCurator {
     * contract); the readout is one left join + a 2-value fold.
     */
   def curatorE2e(s: SparkSession, d: String): DataFrame = {
-    val docs = graft.Tables.docsAug(s, d)
-      .select(col("doc_id"), col("text")).localCheckpoint()
+    val docs = Iterate.materialize(graft.Tables.docsAug(s, d)
+      .select(col("doc_id"), col("text")))
     val tag = java.lang.Long.toHexString(System.nanoTime())
     val sigT = s"cur_e2e_sigs_$tag"
     val lblT = s"cur_e2e_labels_$tag"
@@ -146,12 +143,11 @@ object IncrementalCurator {
     val cur = curated(s, sigT, lblT).persist()
     val counts = cur.agg(count(lit(1)).cast("long").as("n_docs"),
       sum((!col("is_kept")).cast("long")).cast("long").as("n_dropped"))
-    val out = cur.crossJoin(broadcast(counts))
+    val out = Iterate.materialize(cur.crossJoin(broadcast(counts))
       .withColumn("n_batches", lit(NumBatches.toLong))
       .select(col("doc_id"), col("keep_id"), col("is_kept"),
         col("n_batches"), col("n_docs"), col("n_dropped"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint() // state tables drop below; the frame survives
+      .orderBy(col("doc_id"))) // state tables drop below; the frame survives
     cur.unpersist()
     Seq(sigT, s"${sigT}_del", lblT, s"${lblT}_next")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))

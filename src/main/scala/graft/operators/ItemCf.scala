@@ -35,10 +35,9 @@ object ItemCf {
   val TopK = 3
 
   def itemCf(s: SparkSession, d: String): DataFrame = {
-    val baskets = Tables.lineitem(s, d)
+    val baskets = Iterate.materialize(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("part"))
-      .distinct()
-      .localCheckpoint() // read three times: pairs + two support joins
+      .distinct()) // read three times: pairs + two support joins
     val support = baskets.groupBy(col("part"))
       .agg(count(lit(1)).cast("long").as("n_ord"))
     val pairs = baskets.as("x").join(baskets.as("y"),

@@ -3,10 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{coalesce, lit}
 
-/** Materialization for iterative drivers (BFS frontier, Lloyd rounds,
-  * label propagation): every hop must cut lineage — at depth 20 over
-  * 100 TB of edges one recursive plan would not even compile — and
-  * mint fresh attribute ids so hop N+1's self-joins aren't ambiguous.
+/** graft's one lineage cut. Iterative drivers (BFS frontier, Lloyd
+  * rounds, label propagation) cut every hop — at depth 20 over 100 TB
+  * of edges one recursive plan would not even compile — and mint fresh
+  * attribute ids so hop N+1's self-joins aren't ambiguous. So does a
+  * frame read more than once, memoized across `clearCache()`, or whose
+  * source is about to be overwritten or dropped; an output of this cut
+  * (e.g. [[Components.minLabel]]'s) needs no second one.
   *
   * The strategy follows the session, never a per-call argument:
   * reliable `checkpoint` happens iff the SparkContext has a checkpoint
@@ -19,7 +22,10 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   *   and kills the job. Right for local/interactive runs.
   * - reliable `checkpoint`: blocks written to shared storage
   *   (HDFS/S3 on a cluster); an executor loss just re-reads. Right
-  *   for long multi-hour iterative jobs at scale.
+  *   for long multi-hour iterative jobs at scale. Spark deletes the
+  *   files only under `spark.cleaner.referenceTracking.cleanCheckpoints`
+  *   (graft never sets it): per-trigger cuts ([[Changepoint.detect]],
+  *   [[Psi]]) leave files until the deployment cleans the directory.
   */
 object Iterate {
 

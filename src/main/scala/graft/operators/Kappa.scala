@@ -40,9 +40,8 @@ object Kappa {
 
   /** κ over any two-rater (r1, r2) label frame. */
   private[graft] def kappaOf(pairs: DataFrame): DataFrame = {
-    val conf = pairs.groupBy(col("r1"), col("r2"))
-      .agg(count(lit(1)).cast("long").as("o"))
-      .localCheckpoint() // totals + both marginals read it
+    val conf = Iterate.materialize(pairs.groupBy(col("r1"), col("r2"))
+      .agg(count(lit(1)).cast("long").as("o")))
     val tot = conf.agg(sum(col("o")).cast("long").as("n"),
       sum(when(col("r1") === col("r2"), col("o")).otherwise(0L))
         .cast("long").as("agree"))

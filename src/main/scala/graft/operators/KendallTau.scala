@@ -60,7 +60,7 @@ object KendallTau {
 
   /** τ-b over any (t, x, y) cell frame. */
   private[graft] def kendallOfCells(cellsRaw: DataFrame): DataFrame = {
-    val cells = cellsRaw.localCheckpoint() // both sides of the pair join
+    val cells = Iterate.materialize(cellsRaw) // both sides of the pair join
     val b = cells.select(col("t").as("t2"), col("x").as("x2"),
       col("y").as("y2"))
     val pairs = cells.join(b, col("t2") > col("t"))

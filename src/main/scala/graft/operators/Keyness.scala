@@ -51,9 +51,8 @@ object Keyness {
   /** Top-k keyness terms per source over a (source, term) token frame. */
   private[graft] def keynessOf(toks: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = toks.groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).cast("long").as("y"))
-      .localCheckpoint() // vocab totals + source totals re-fold from it
+    val tf = Iterate.materialize(toks.groupBy(col("source"), col("term"))
+      .agg(count(lit(1)).cast("long").as("y")))
     val vocab = tf.groupBy(col("term"))
       .agg(sum(col("y")).cast("long").as("ty"))
       .filter(col("ty") >= MinCount)

@@ -41,13 +41,12 @@ object KnSmooth {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), TextSim.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
-    val bigrams = toks.select(explode(transform(
+    val bigrams = Iterate.materialize(toks.select(explode(transform(
       sequence(lit(1), size(col("t")) - 1),
       i => struct(element_at(col("t"), i).as("w1"),
         element_at(col("t"), (i + 1).cast("int")).as("w2")))).as("b"))
       .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .agg(count(lit(1)).cast("long").as("c12"))
-      .localCheckpoint() // read four times below
+      .agg(count(lit(1)).cast("long").as("c12")))
     val c1 = bigrams.groupBy(col("w1"))
       .agg(sum(col("c12")).cast("long").as("c1"),
         count(lit(1)).cast("long").as("n1_w1"))

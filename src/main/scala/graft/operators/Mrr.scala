@@ -49,12 +49,11 @@ object Mrr {
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
       col("label").as("q_lbl"))
-    val scored = vectors.crossJoin(q)
+    val scored = Iterate.materialize(vectors.crossJoin(q)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("q_lbl"), col("vec_id"), col("label"),
         Ann.cosine(col("q_emb"), col("q_nrm"), col("embedding"), col("nrm"))
-          .as("cos_sim"))
-      .localCheckpoint() // best-relevant argmax + rank count both read it
+          .as("cos_sim"))) // best-relevant argmax + rank count both read it
     val best = scored.filter(col("label") === col("q_lbl"))
       .groupBy(col("query_id"))
       .agg(max(struct(col("cos_sim"), (-col("vec_id")).as("nvid"))).as("b"))

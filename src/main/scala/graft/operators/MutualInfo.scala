@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * (single-valued ⇒ H = 0) reports NULL NMI, never ±inf/NaN.
   *
   * Scale shape: ONE corpus fold to the |X|·|Y| contingency frame
-  * (map-side combined groupBy; localCheckpoint barrier — both
+  * (map-side combined groupBy; materialized barrier — both
   * marginal re-folds and the joint fold read it, the corpus is
   * scanned once, plan-asserted). Everything downstream runs on
   * bounded frames and 1-row broadcast scalars.

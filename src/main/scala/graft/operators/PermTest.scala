@@ -45,8 +45,7 @@ object PermTest {
 
   /** The test over any per-user (user_id, y) frame. */
   def permTestOfUsers(usersRaw: DataFrame): DataFrame = {
-    val users = usersRaw
-      .localCheckpoint() // observed fold + the B-grid fold read it
+    val users = Iterate.materialize(usersRaw)
     def diffMicro(df: DataFrame, arm: org.apache.spark.sql.Column,
       keys: Seq[String]): DataFrame =
       df.withColumn("a", arm)

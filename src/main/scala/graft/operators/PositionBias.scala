@@ -50,11 +50,10 @@ object PositionBias {
         Window.partitionBy(col("user_id"), col("session_seq"))
           .orderBy(col("ts"), col("event_id"))).cast("long"),
         lit(MaxPos.toLong)))
-    val perPos = pos.groupBy(col("pos"))
+    val perPos = Iterate.materialize(pos.groupBy(col("pos"))
       .agg(count(lit(1)).cast("long").as("n_events"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .cast("long").as("n_purchases"))
-      .localCheckpoint() // read twice: rows + the global totals
+          .cast("long").as("n_purchases")))
     perPos.crossJoin(broadcast(perPos.agg(
       sum(col("n_events")).cast("long").as("tot_e"),
       sum(col("n_purchases")).cast("long").as("tot_p"))))

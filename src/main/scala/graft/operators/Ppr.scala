@@ -44,25 +44,14 @@ object Ppr {
   def personalizedPageRank(edges: DataFrame, seedPred: Column,
     iters: Int = Iters): DataFrame = {
     val e = edges.select(col("src"), col("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .select(col("node"), seedPred.as("is_seed")).persist()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val nodes = seededNodes(e, seedPred).persist()
     val nSeeds = nodes.filter(col("is_seed")).count()
     require(nSeeds > 0, "personalizedPageRank: empty seed set")
     val base = (3L * Scale) / (20L * nSeeds) // 0.15/|S| in fixed point
     var pr = nodes.select(col("node"), col("is_seed"),
       when(col("is_seed"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("pr"))
     for (i <- 1 to iters) {
-      val contrib = pr.join(e, pr("node") === e("src"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr("pr div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      val next = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"), col("is_seed"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L))
-            + expr("(850 * coalesce(m, 0)) div 1000")).as("pr"))
+      val next = round(pr, nodes, e, base)
       // rank frames are constant-size: two rounds of lineage are safe,
       // halve the eager-materialization jobs (the pageRank schedule)
       pr = if (i % 2 == 0 || i == iters) Iterate.materialize(next) else next
@@ -70,6 +59,30 @@ object Ppr {
     nodes.unpersist(); e.unpersist()
     pr.select(col("node"), col("pr"))
   }
+
+  /** Every node of `e` as `(node, is_seed)`. */
+  private[graft] def seededNodes(e: DataFrame, seedPred: Column): DataFrame =
+    e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct()
+      .select(col("node"), seedPred.as("is_seed"))
+
+  /** Mass `(node, m)` each node receives over `e` from `(node, pr)`
+    * ranks: one edge-keyed join + a partial-agg sum.
+    */
+  private[graft] def received(pr: DataFrame, e: DataFrame): DataFrame = {
+    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    pr.join(e, pr("node") === e("src")).join(outdeg, "src")
+      .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
+      .groupBy(col("node")).agg(sum(col("c")).as("m"))
+  }
+
+  /** One PPR round: teleport `base` on seeds plus damped [[received]]. */
+  private[graft] def round(pr: DataFrame, nodes: DataFrame, e: DataFrame,
+    base: Long): DataFrame =
+    nodes.join(received(pr, e), Seq("node"), "left")
+      .select(col("node"), col("is_seed"),
+        (when(col("is_seed"), lit(base)).otherwise(lit(0L))
+          + expr("(850 * coalesce(m, 0)) div 1000")).as("pr"))
 
   /** q_ppr — PPR on the crawl edge graph seeded at node % 7 == 0,
     * 5 rounds, 1e-12 integer units.

@@ -68,13 +68,13 @@ object Psi {
     * [[Ks.mergeCells]]).
     */
   def fromCells(cellFrame: DataFrame): DataFrame = {
-    // materialized barrier (localCheckpoint → ExistingRDD, the
+    // materialized barrier (a lineage cut → ExistingRDD, the
     // Changepoint.detect precedent): edges, buckets and totals all
     // read the grid-bounded cell frame; a persist would re-print the
     // corpus lineage per reference, and — for the per-trigger
     // streaming detector — accumulate cache entries trigger over
     // trigger, while the checkpoint blocks are GC'd with the frame
-    val counts = cellFrame.localCheckpoint()
+    val counts = Iterate.materialize(cellFrame)
     val tot = counts.groupBy(col("event_type"))
       .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("value"))

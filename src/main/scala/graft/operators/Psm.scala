@@ -60,7 +60,7 @@ object Psm {
 
   /** ATT readout over any per-user (t, views, signups, y) frame. */
   private[graft] def psmOf(usersRaw: DataFrame): DataFrame = {
-    val users = usersRaw.localCheckpoint() // cells + scoring + arms read it
+    val users = Iterate.materialize(usersRaw) // cells + scoring + arms read it
     val cells = users.groupBy(col("views"), col("signups"))
       .agg(expr("(sum(t) * 1000000) div count(1)").as("score_micro"))
     val scored = users.join(broadcast(cells), Seq("views", "signups"))

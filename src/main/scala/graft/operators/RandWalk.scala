@@ -42,9 +42,9 @@ object RandWalk {
     */
   def walks(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    val ranked = e.withColumn("rk",
+    val ranked = Iterate.materialize(e.withColumn("rk",
       (row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
-        - 1).cast("long")).localCheckpoint()
+        - 1).cast("long")))
     val deg = ranked.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("outdeg"))
     val nodes = e.select(col("src").as("node"))

@@ -32,15 +32,14 @@ object Rfm {
   def rfm(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
     val hi = ev.agg(max(unix_micros(col("ts"))).as("hi_us"))
-    val users = ev.crossJoin(broadcast(hi))
+    val users = Iterate.materialize(ev.crossJoin(broadcast(hi))
       .groupBy(col("user_id"))
       .agg(min(expr(s"(hi_us - unix_micros(ts)) div $HourUs")).as("rec"),
         count(lit(1)).cast("long").as("freq"),
         (coalesce(sum(floor(col("value") * 100 + 0.5).cast("long")), lit(0L)))
           .as("mon_c"))
       .withColumn("mon", expr("mon_c div 100"))
-      .select(col("user_id"), col("rec"), col("freq"), col("mon"))
-      .localCheckpoint() // three grid folds + the final join read it
+      .select(col("user_id"), col("rec"), col("freq"), col("mon")))
     def scores(dim: String, bestIsHigh: Boolean): DataFrame = {
       val grid = users.groupBy(col(dim)).agg(count(lit(1)).as("c"))
       val w = GridWindow.ord(col(dim))

@@ -54,7 +54,7 @@ object RunsTest {
   /** The runs readout over any (t, y) series frame. */
   private[graft] def runsOf(cellsRaw: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = cellsRaw.localCheckpoint() // median rank + sign pass
+    val cells = Iterate.materialize(cellsRaw) // median rank + sign pass
     val rw = Window.orderBy(col("y"), col("t"))
     val med = cells.withColumn("rk", row_number().over(rw).cast("long"))
       .withColumn("n", count(lit(1)).over(

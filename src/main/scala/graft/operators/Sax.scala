@@ -64,11 +64,10 @@ object Sax {
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val hspan = cells.agg((max(col("t")) + 1L).as("hh"))
-    val paa = cells.crossJoin(broadcast(hspan))
+    val paa = Iterate.materialize(cells.crossJoin(broadcast(hspan))
       .withColumn("f", expr(s"(t * $Frames) div hh"))
       .groupBy(col("event_type"), col("f"))
-      .agg(expr("(sum(y) * 1000000) div count(1)").as("paa_micro"))
-      .localCheckpoint() // breakpoint ranks + symbol join both read it
+      .agg(expr("(sum(y) * 1000000) div count(1)").as("paa_micro")))
     val rw = Window.orderBy(col("paa_micro"), col("event_type"), col("f"))
     val bps = paa.withColumn("rk", row_number().over(rw).cast("long"))
       .withColumn("n", count(lit(1)).over(all))

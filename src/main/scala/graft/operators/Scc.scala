@@ -154,8 +154,8 @@ object Scc {
     import org.apache.spark.sql.functions.broadcast
     val batchKeys = batch.select(col("src").as("id"))
       .unionAll(batch.select(col("dst").as("id"))).distinct()
-    val rel = labels.join(broadcast(batchKeys), Seq("id"), "left_semi")
-      .localCheckpoint()
+    val rel = Iterate.materialize(
+      labels.join(broadcast(batchKeys), Seq("id"), "left_semi"))
     val la = rel.select(col("id").as("src"), col("scc").as("s_lbl"))
     val lb = rel.select(col("id").as("dst"), col("scc").as("d_lbl"))
     batch.join(broadcast(la), Seq("src"), "left_outer")
@@ -170,7 +170,7 @@ object Scc {
     // the bounded batch with zero stored-side exchange
     val batch = newEdges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    val looked = lookupLabels(labels, batch).localCheckpoint()
+    val looked = Iterate.materialize(lookupLabels(labels, batch))
     val contracted = looked
       .select(coalesce(col("s_lbl"), col("src")).as("src"),
         coalesce(col("d_lbl"), col("dst")).as("dst"))
@@ -184,7 +184,7 @@ object Scc {
       .unionAll(newIdCols.select(col("nb").as("id"))
         .filter(col("nb").isNotNull))
       .distinct()
-    val delta = cond.unionByName(contracted).distinct().localCheckpoint()
+    val delta = Iterate.materialize(cond.unionByName(contracted).distinct())
     val nodes = delta.select(col("src").as("id"))
       .unionAll(delta.select(col("dst").as("id")))
       .unionAll(newIds).distinct()

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * (the q_gapfill rule) — a silent dead hour must both depress its
   * cell's baseline and be screenable itself.
   *
-  * Scale: ONE events fold to the sparse cell frame (localCheckpoint
+  * Scale: ONE events fold to the sparse cell frame (materialized
   * barrier — span, type list and grid join all read it; the
   * Changepoint.detect precedent), then everything runs on bounded
   * frames: the grid is H·|types| (time-bounded), the profile

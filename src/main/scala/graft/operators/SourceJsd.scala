@@ -43,9 +43,8 @@ object SourceJsd {
 
   /** The |S|×|S| JSD matrix (upper triangle) over (source, term). */
   private[graft] def jsdOf(toks: DataFrame): DataFrame = {
-    val tf = toks.groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint() // pair join reads both sides + totals
+    val tf = Iterate.materialize(toks.groupBy(col("source"), col("term"))
+      .agg(count(lit(1)).cast("long").as("c")))
     val tot = tf.groupBy(col("source"))
       .agg(sum(col("c")).cast("long").as("n"))
     val a = tf.join(tot, Seq("source"))

@@ -38,14 +38,13 @@ object Survival {
     val ev = Tables.events(s, d)
     val horizon = ev.agg(max(unix_micros(col("ts"))).as("hx"))
     val DayUs = 86400000000L
-    val users = ev.groupBy(col("user_id"))
+    val users = Iterate.materialize(ev.groupBy(col("user_id"))
       .agg(min(unix_micros(col("ts"))).as("first_us"),
         max(unix_micros(col("ts"))).as("last_us"))
       .crossJoin(broadcast(horizon))
       .select(expr("(last_us - first_us) div 86400000000").as("t_days"),
         (col("last_us") >= col("hx") - lit(CensorDays * DayUs))
-          .cast("long").as("censored"))
-      .localCheckpoint() // read twice: the day-grid fold + the total
+          .cast("long").as("censored")))
     val byT = users.groupBy(col("t_days"))
       .agg(count(lit(1)).cast("long").as("n_at_t"),
         sum(lit(1L) - col("censored")).cast("long").as("d_churn"),

@@ -48,10 +48,10 @@ object TheilSen {
     val agg = ev
       .groupBy(date_trunc("hour", col("ts")).as("h"), col("event_type"))
       .agg(count(lit(1)).as("y"))
-    val cells = grid.join(agg, Seq("h", "event_type"), "left")
-      .select(col("event_type"), col("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .localCheckpoint() // the pair join reads it twice
+    val cells = Iterate.materialize(
+      grid.join(agg, Seq("h", "event_type"), "left")
+        .select(col("event_type"), col("t"),
+          coalesce(col("y"), lit(0L)).as("y"))) // the pair join reads it twice
     val b = cells.select(col("event_type").as("et2"), col("t").as("t2"),
       col("y").as("y2"))
     val pairs = cells.join(b,

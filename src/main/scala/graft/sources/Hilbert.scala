@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.operators.Iterate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: codes are per-row projections on the scan; the occupied
   * grid is ≤ 4^bits rows (bounded), materialized once
-  * (localCheckpoint — two neighbor self-joins read it); the report
+  * ([[Iterate.materialize]] — two neighbor self-joins read it); the report
   * is 1 row.
   */
 object Hilbert {
@@ -107,11 +108,10 @@ object Hilbert {
         (floor(unix_timestamp(col("o_orderdate")) / 86400L).cast("long") % 64)
           .as("y"))
       .distinct()
-    val coded = withHilbert(cellsRaw)
+    val coded = Iterate.materialize(withHilbert(cellsRaw)
       .withColumn("z", Layout.morton(col("x"), col("y"), Bits))
       .withColumn("bx", expr(s"x div $BoxEdge"))
-      .withColumn("by", expr(s"y div $BoxEdge"))
-      .localCheckpoint()
+      .withColumn("by", expr(s"y div $BoxEdge")))
     def starts(code: String): DataFrame = {
       val prev = coded.select(col("bx").as("pbx"), col("by").as("pby"),
         col(code).as("pc"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.{Ann, KMeansVec, OPQ, PQ}
+import graft.operators.{Ann, Iterate, KMeansVec, OPQ, PQ}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -306,7 +306,7 @@ object IndexStore {
     // and defers partition deletion to job commit — after every read
     // task has finished. A refactor to static overwrite (or any mode
     // that deletes target partitions up front) would silently corrupt
-    // the store; if the overwrite mode must change, localCheckpoint
+    // the store; if the overwrite mode must change, materialize
     // `survivors` first to sever lineage from the target path (the
     // refreshNeighborsDelta pattern).
     survivors.repartition(col("cent_id"))
@@ -486,8 +486,8 @@ object IndexStore {
         .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("vec_id"))
         .filter(col("query_id") =!= col("vec_id"))
     }
-    var nbrs = topR(intraSampled.unionByName(sampled(-2)).distinct())
-      .localCheckpoint()
+    var nbrs = Iterate.materialize(
+      topR(intraSampled.unionByName(sampled(-2)).distinct()))
     var it = 0
     while (it < iters) {
       val edges = nbrs.select(col("query_id").as("src_id"),
@@ -502,7 +502,7 @@ object IndexStore {
           col("nbr_id").as("vec_id")))
         .unionByName(sampled(it))
         .distinct()
-      nbrs = topR(cand).localCheckpoint()
+      nbrs = Iterate.materialize(topR(cand))
       it += 1
     }
     nbrs
@@ -571,7 +571,7 @@ object IndexStore {
           col("query_id").as("vec_id")))
         .unionByName(oldEdges)
         .distinct()
-      val merged = Ann.rankTopK(spark,
+      val merged = Iterate.materialize(Ann.rankTopK(spark,
         cand.join(aSide, "query_id").join(bSide, "vec_id")
           .select(col("query_id"), col("vec_id"),
             graft.functions.TextSim.r6(
@@ -580,8 +580,7 @@ object IndexStore {
         .join(lists.select(col("vec_id"), col("cent_id").as("nbr_cent")),
           "vec_id")
         .select(col("query_id").as("src_id"), col("vec_id").as("nbr_id"),
-          col("nbr_cent"))
-        .localCheckpoint() // sever lineage from nbrs/ before overwriting it
+          col("nbr_cent"))) // sever lineage from nbrs/ before overwriting it
       merged.write.mode(SaveMode.Overwrite).parquet(s"$path/nbrs")
     }
     lists.unpersist(); oldEdges.unpersist(); newRows.unpersist()

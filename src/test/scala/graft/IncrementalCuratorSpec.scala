@@ -43,4 +43,43 @@ class IncrementalCuratorSpec extends AnyFunSuite {
     Seq(sigT, s"${sigT}_del", lblT).foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
+
+  test("a failed label swap commits no signatures; a replay equals the uninterrupted run") {
+    val docs = Tables.docsAug(spark, sf).select(col("doc_id"), col("text"))
+      .localCheckpoint()
+    def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
+    val (sigT, lblT) = ("icr_sigs", "icr_labels")
+    val (refSig, refLbl) = ("icr_ref_sigs", "icr_ref_labels")
+    def dropAll(): Unit = Seq(sigT, lblT, refSig, refLbl)
+      .flatMap(t => Seq(t, s"${t}_del", s"${t}_next"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    def rows(t: String) = spark.table(t).collect().map(_.toString).toSet
+    dropAll()
+
+    IncrementalCurator.init(spark, batch(0), refSig, refLbl)
+    IncrementalCurator.ingest(spark, batch(1), refSig, refLbl)
+    IncrementalCurator.ingest(spark, batch(2), refSig, refLbl)
+
+    IncrementalCurator.init(spark, batch(0), sigT, lblT)
+    val sigsBefore = rows(sigT)
+    val lblsBefore = rows(lblT)
+    // a stray directory where the swap writes `<label>_next` makes
+    // saveAsTable refuse the location: the swap fails mid-ingest
+    val blocker = new java.io.File(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${lblT}_next")))
+    assert(blocker.mkdirs())
+    java.nio.file.Files.writeString(blocker.toPath.resolve("stray"), "x")
+    intercept[Exception](IncrementalCurator.ingest(spark, batch(1), sigT, lblT))
+    val (sigsKept, lblsKept) = (rows(sigT) == sigsBefore, rows(lblT) == lblsBefore)
+    assert(sigsKept, "signatures committed without labels")
+    assert(lblsKept, "labels changed by a failed swap")
+
+    org.apache.commons.io.FileUtils.deleteDirectory(blocker)
+    IncrementalCurator.ingest(spark, batch(1), sigT, lblT)
+    IncrementalCurator.ingest(spark, batch(2), sigT, lblT)
+    val (sigsEq, lblsEq) = (rows(sigT) == rows(refSig), rows(lblT) == rows(refLbl))
+    assert(sigsEq, "replayed signatures diverge")
+    assert(lblsEq, "replayed labels diverge")
+    dropAll()
+  }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.operators.Skew
 import graft.streaming.{DocIn, StreamingDedup}
-import org.apache.spark.CheckpointDirScope
+import org.apache.spark.{CheckpointDirScope, JobCounter}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -381,6 +381,50 @@ class ScaleSpec extends AnyFunSuite {
     // set: the operators read it, never rewrite it
     assert(during == Some(tmp), s"checkpoint dir rewritten to $during")
     assert(sc.getCheckpointDir == before)
+  }
+
+  test("a set checkpoint dir reaches every cut of curator ingest, scc merge and neighbor refresh") {
+    // operators that cut lineage directly before every cut went
+    // through Iterate.materialize; the memoized edgesShared and
+    // sharedLabels frames are avoided, since they may already exist
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_cuts").toString
+    val docs = Tables.docsAug(spark, sf).select(col("doc_id"), col("text"))
+    def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === i)
+    val (e0, e1) = Tables.edges(spark, sf).as[(Long, Long)].collect().toSeq
+      .partition(p => (p._1 + p._2) % 2 == 0)
+    val idx = java.nio.file.Files.createTempDirectory("graft_ckpt_nbrs").toString
+    graft.sources.IndexStore.build(
+      Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding")),
+      idx, 64, nlist = 4, m = 8, kcode = 16, iters = 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSet
+    def run(tag: String) = {
+      val (sigT, lblT) = (s"ckpt_cuts_sigs_$tag", s"ckpt_cuts_labels_$tag")
+      operators.IncrementalCurator.init(spark, batch(0), sigT, lblT)
+      operators.IncrementalCurator.ingest(spark, batch(1), sigT, lblT)
+      val labels = rows(spark.table(lblT))
+      Seq(sigT, lblT, s"${lblT}_next").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      val g0 = e0.toDF("src", "dst")
+      val s0 = operators.Scc.scc(
+        (e0.map(_._1) ++ e0.map(_._2)).distinct.toDF("id"), g0)
+      val (s1, c1) = operators.Scc.mergeEdges(s0,
+        operators.Scc.condensation(s0, g0), e1.toDF("src", "dst"))
+      graft.sources.IndexStore.refreshNeighbors(spark, idx, r = 4, iters = 1)
+      (labels, rows(s1), rows(c1), rows(spark.read.parquet(s"$idx/nbrs")))
+    }
+    val local = run("local")
+    val sc = spark.sparkContext
+    val (reliable, sites) = CheckpointDirScope(sc, tmp) {
+      JobCounter.callSites(sc)(run("reliable"))
+    }
+    val same = reliable == local
+    assert(same, "reliable-checkpoint outputs diverge")
+    assert(local._1.nonEmpty && local._2.nonEmpty && local._4.nonEmpty)
+    assert(rddFiles(new java.io.File(tmp)) > 0,
+      s"no checkpoint files written under $tmp")
+    val localCuts = sites.filter(_.startsWith("localCheckpoint at"))
+    assert(localCuts.isEmpty, s"local cuts under a set checkpoint dir: $localCuts")
   }
 
   test("heavy-family count laws are exactly linear under distinct-replica growth") {

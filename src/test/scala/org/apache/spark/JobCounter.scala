@@ -1,6 +1,6 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Runs `body` and returns its result with the number of Spark jobs it
@@ -15,12 +15,20 @@ object JobCounter {
   private val Key = "graft.test.jobCounter"
 
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val (out, sites) = callSites(sc)(body)
+    (out, sites.size)
+  }
+
+  /** [[apply]] with each job's call site (its result stage's name,
+    * e.g. "count at Foo.scala:12") instead of the count.
+    */
+  def callSites[T](sc: SparkContext)(body: => T): (T, Seq[String]) = {
     val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger()
+    val sites = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (j.properties != null && j.properties.getProperty(Key) == tag)
-          jobs.incrementAndGet()
+          sites.add(j.stageInfos.maxBy(_.stageId).name)
     }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
@@ -29,7 +37,8 @@ object JobCounter {
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (out, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (out, sites.asScala.toSeq)
     } finally {
       sc.setLocalProperty(Key, prev)
       sc.removeSparkListener(listener)

@@ -1019,6 +1019,16 @@ object ExplainAudit {
         !hopPlan.contains("CartesianProduct") &&
         !hopPlan.contains("BroadcastNestedLoopJoin"))
 
+    // a driver BFS round — Iterate's size rule held the frontier on the
+    // driver: one filtered scan of the persisted edges, then a collect
+    bfsEdges.persist()
+    val roundPlan = operators.Crawl.outEdges(bfsEdges, Seq(0L, 1L, 2L))
+      .queryExecution.executedPlan.toString
+    bfsEdges.unpersist()
+    flag("driver bfs round: one scan of the persisted edges, no Exchange, no Join",
+      roundPlan.linesIterator.count(_.contains("InMemoryTableScan")) == 1 &&
+        !roundPlan.contains("Exchange") && !roundPlan.contains("Join"))
+
     spark.stop()
     println(s"== ExplainAudit: ${checked - violated}/$checked OK, $violated VIOLATED")
     if (violated > 0) sys.exit(1)

@@ -52,17 +52,12 @@ object Autocorr {
     * ([[Changepoint.detect]] / [[Seasonal.detect]] precedent).
     */
   def acf(cellsRaw: DataFrame): DataFrame = {
-    val agg = Iterate.materialize(
-      cellsRaw.select(col("event_type"), unix_micros(col("h")).as("hu"),
-        col("y")))
-    // 1-row bounded statistic: the span collects once (the q_heaps rule)
-    val b = agg.agg(min(col("hu")).as("lo"), max(col("hu")).as("hi")).head()
-    if (b.isNullAt(0))
+    // the span rides the cells' materialization job
+    val (agg, lo, nH) = Changepoint.cellSpan(cellsRaw)
+    if (nH == 0)
       return cellsRaw.sparkSession.emptyDataFrame
         .select(lit("").as("event_type"), lit(0L).as("lag"),
           lit(0L).as("n_pairs"), lit(0.0).as("acf"))
-    val lo = b.getLong(0)
-    val nH = ((b.getLong(1) - lo) / HourUs + 1L).toInt
     val types = agg.select(col("event_type").as("et")).distinct()
       .select(col("et").as("event_type"))
     val grid = types.crossJoin(

@@ -51,17 +51,12 @@ object Backtest {
     */
   def backtestFromCells(cellsRaw: DataFrame): DataFrame = {
     val spark = cellsRaw.sparkSession
-    val agg = Iterate.materialize(
-      cellsRaw
-        .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y")))
-    // 1-row bounded statistic, collected once (the q_heaps rule)
-    val b = agg.agg(min(col("hu")).as("lo"), max(col("hu")).as("hi")).head()
-    if (b.isNullAt(0))
+    // the span rides the cells' materialization job
+    val (agg, lo, nH) = Changepoint.cellSpan(cellsRaw)
+    if (nH == 0)
       return spark.emptyDataFrame.select(lit("").as("event_type"),
         lit("").as("method"), lit(0L).as("horizon"), lit(0L).as("n"),
         lit(0L).as("mae_micro"), lit(0L).as("smape_micro"))
-    val lo = b.getLong(0)
-    val nH = ((b.getLong(1) - lo) / HourUs + 1L).toInt
     val types = agg.select(col("event_type").as("et")).distinct()
       .select(col("et").as("event_type"))
     val dense = Iterate.materialize(

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextSim
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,27 +56,31 @@ object Changepoint {
       .agg(count(lit(1)).cast("long").as("y"))
 
   /** Materialized sparse cells + hour span of a `(h, event_type, y)`
-    * cell frame, for the sequential time-series folds ([[Ewma]],
-    * [[Cusum]], [[HoltWinters]]): ONE job materializes the
+    * cell frame, for the time-series folds over a dense hour grid
+    * ([[Ewma]], [[Cusum]], [[HoltWinters]], [[Backtest]], [[Autocorr]],
+    * [[Seasonal]]): ONE job materializes the
     * TIME-bounded `(event_type, hu, y)` frame, and the span rides that
     * same job as Observation metrics, so deriving `lo`/`nH` adds NO
     * extra job and the returned frame's consumers re-read H·|types|
     * materialized rows, never events.
-    * Returns `(cells, loMicros, nHours)`; `nHours = 0` on empty.
+    * Returns `(cells, loMicros, nHours)`; `nHours = 0` on empty. An
+    * observed node whose stage AQE dropped reports no metrics (the
+    * hole [[IncrementalRunner.runWithStats]] covers): the span is then
+    * read off the materialized cells.
     */
   def cellSpan(cellFrame: DataFrame): (DataFrame, Long, Int) = {
+    val span = Seq(count(lit(1)).as("n"), min(col("hu")).as("lo"),
+      max(col("hu")).as("hi"))
     val obs = org.apache.spark.sql.Observation()
     val c = Iterate.materialize(
       cellFrame
         .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y"))
-        .observe(obs, count(lit(1)).as("n"),
-          min(col("hu")).as("lo"), max(col("hu")).as("hi")))
-    if (obs.get("n").asInstanceOf[Long] == 0L) (c, 0L, 0)
-    else {
-      val lo = obs.get("lo").asInstanceOf[Long]
-      val hi = obs.get("hi").asInstanceOf[Long]
-      (c, lo, ((hi - lo) / 3600000000L).toInt + 1)
-    }
+        .observe(obs, span.head, span.tail: _*))
+    val m = obs.get
+    val r = if (m.contains("n")) Row(m("n"), m("lo"), m("hi"))
+      else c.agg(span.head, span.tail: _*).head()
+    if (r.getLong(0) == 0L) (c, 0L, 0)
+    else (c, r.getLong(1), ((r.getLong(2) - r.getLong(1)) / 3600000000L).toInt + 1)
   }
 
   /** Detection over a sparse `(h, event_type, y)` cell frame: densify

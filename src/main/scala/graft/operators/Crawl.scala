@@ -1,18 +1,27 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Distributed graph crawl — the reference's recursive page traversal
   * (NotionCrawler.crawl_page/crawl_blocks/crawl_database,
   * Notion_openai_vector_etl.py:480-596) re-expressed as frontier BFS:
-  * the visited set and frontier are DataFrames, each hop is a join.
+  * a visited set and a frontier, each hop one scan of the edges on the
+  * driver while they are small and one join once they are not.
   *
-  * Scale: each hop shuffles only the frontier (broadcast when small);
-  * visited accumulates via union + distinct on the node key. Frontier
-  * and visited are persisted per hop and the plan is cut via
+  * Scale: while the visited set plus frontier fits under the broadcast
+  * threshold ([[Iterate]]'s size rule) they stay on the driver, and a
+  * hop is one filtered scan of the persisted edges plus a collect —
+  * the reference's one-machine crawl, with no per-hop shuffle jobs.
+  * Past it they are DataFrames: each hop shuffles only the frontier
+  * (broadcast when small), visited accumulates via union + anti-join
+  * on the node key, and each hop's frontier is cut via
   * checkpoint-like materialization to stop lineage growth — at depth
   * 20 on 100 TB of edges the alternative (one giant recursive plan)
   * would not compile, let alone run.
@@ -29,22 +38,40 @@ object Crawl {
     * ([[Closeness.landmarkDistances]]); an all-nodes `(x, node)` seed
     * gives all-pairs balls ([[Neighborhood.pairBalls]]).
     *
-    * Each hop's frontier is materialized via [[Iterate.materialize]]:
-    * cuts the iterative lineage and mints fresh attribute ids (so hop
-    * N+1's join with `edges` isn't an ambiguous self-join); the
-    * frontier size rides that one job as an observe() metric instead
-    * of a separate isEmpty scan.
+    * Rounds run on the driver first, while the state fits
+    * [[Iterate]]'s size rule ([[Held]]: roots whose plan statistics fit
+    * and whose rows collect within the rule). The first round that
+    * would outgrow it hands the state over to the distributed [[hop]],
+    * and the run stays there. Each distributed hop's frontier is
+    * materialized via [[Iterate.materialize]]: cuts the iterative
+    * lineage and mints fresh attribute ids (so hop N+1's join with
+    * `edges` isn't an ambiguous self-join); the frontier size rides
+    * that one job as an observe() metric instead of a separate
+    * isEmpty scan. A run that ends on the driver returns a local
+    * relation, which the caller reads without a job. Either way the
+    * frame, schema included, is the same.
     */
   def bfs(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
     val keys = roots.columns.toSeq.filter(_ != "node")
     edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val (seed, seedN) = Iterate.materialize(
-      roots.select(keys.map(col) :+ col("node") :+ lit(0L).as("depth"): _*),
-      count(lit(1)))
-    var visited = seed
-    var frontier = seed
-    var frontierN = seedN
+    val seed = roots.select(keys.map(col) :+ col("node") :+ lit(0L).as("depth"): _*)
+    val Seq(src, dst) = Seq("src", "dst").map(c => edges.select(col(c)).schema.head)
+    val node = seed.schema(keys.size)
+    // past the seed, the node column is the union of the roots' and dst
+    val grown = StructType(seed.schema.updated(keys.size,
+      node.copy(nullable = node.nullable || dst.nullable)))
+    val held = Option.when(seed.schema.forall(f => exactEq(f.dataType)) &&
+      Seq(src, dst).forall(_.dataType == node.dataType) && Iterate.fitsDriver(seed))(())
+      .flatMap(_ => Iterate.collectIfFits(seed)).map(new Held(seed, grown, _))
     var depth = 0L
+    for (h <- held)
+      while (depth < maxDepth && h.frontierN > 0 && h.hop(edges, depth + 1)) depth += 1
+    var (visited, frontier, frontierN) = held match {
+      case Some(h) => (h.frame, h.frontierFrame, h.frontierN)
+      case None =>
+        val (s, n) = Iterate.materialize(seed, count(lit(1)))
+        (s, s, n)
+    }
     while (depth < maxDepth && frontierN > 0) {
       depth += 1
       val (next, n) = Iterate.materialize(
@@ -62,9 +89,82 @@ object Crawl {
     visited
   }
 
-  /** One [[bfs]] hop: the frontier's out-neighbors per key, minus
-    * every `(key…, node)` already visited, at `depth`. Each hop is an
-    * equi-join on `node` = `src` (both sides bucket by node id at
+  /** Types whose driver-side equality is Spark's join and distinct
+    * equality; anything else (floating point, binary, collated strings,
+    * nested) runs the distributed hop.
+    */
+  private def exactEq(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+      DateType | TimestampType | TimestampNTZType | StringType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** [[bfs]]'s state while it fits the driver: the visited frame's rows
+    * in visit order — duplicate roots keep their duplicate depth-0
+    * rows — whose last round, from `from` on, is the frontier. Null
+    * semantics are the distributed hop's: a null node has no
+    * out-edges, and a `(key…, node)` holding a null is never visited,
+    * so it is new in every round that reaches it (the anti-join never
+    * matches a null), once per round (distinct groups nulls).
+    */
+  private final class Held(seed: DataFrame, grownSchema: StructType,
+    seedRows: Array[Row]) {
+    private val rows = ArrayBuffer.from(seedRows)
+    private val seen = mutable.HashSet.from(rows.iterator.map(tuple))
+    private val seedN = rows.size
+    private val cap = Iterate.maxRows(seed)
+    private var from = 0
+    private def tuple(r: Row): Seq[Any] = r.toSeq.init
+
+    def frontierN: Long = rows.size - from
+
+    /** One hop on the driver: the frontier's out-edges in one scan of
+      * `edges`, deduplicated against the visited set here. False, with
+      * the state unchanged, when the collect or the grown state
+      * (visited plus the new frontier) would not fit the size rule.
+      */
+    def hop(edges: DataFrame, depth: Long): Boolean = {
+      val frontier = rows.view.slice(from, rows.size).map(tuple).toSeq
+      val nodes = frontier.map(_.last).filter(_ != null).distinct
+      val out = if (nodes.isEmpty) Some(Array.empty[Row])
+        else Iterate.collectIfFits(outEdges(edges, nodes))
+      out.exists { es =>
+        val adj = es.groupMap(_.get(0))(_.get(1))
+        val fresh = mutable.LinkedHashSet.empty[Seq[Any]]
+        val fits = (for (f <- frontier.iterator;
+          d <- adj.getOrElse(f.last, Array.empty[Any])) yield f.init :+ d).forall { c =>
+          if (c.contains(null) || !seen(c)) fresh += c
+          rows.size + 2L * fresh.size <= cap
+        }
+        if (fits) {
+          from = rows.size
+          rows ++= fresh.iterator.map(c => Row.fromSeq(c :+ depth))
+          seen ++= fresh
+        }
+        fits
+      }
+    }
+
+    /** The visited frame and the frontier as local relations, with the
+      * distributed frame's schema: the seed's until a round adds rows.
+      */
+    def frame: DataFrame = local(rows)
+    def frontierFrame: DataFrame = local(rows.drop(from))
+
+    private def local(rs: collection.Seq[Row]): DataFrame =
+      seed.sparkSession.createDataFrame(rs.asJava,
+        if (rows.size > seedN) grownSchema else seed.schema)
+  }
+
+  /** A driver round's scan: the out-edges of `nodes`, one filter on the
+    * persisted edges — no join, no exchange (ExplainAudit pins that).
+    */
+  private[graft] def outEdges(edges: DataFrame, nodes: Seq[Any]): DataFrame =
+    edges.filter(col("src").isin(nodes: _*)).select(col("src"), col("dst"))
+
+  /** One distributed [[bfs]] hop: the frontier's out-neighbors per key,
+    * minus every `(key…, node)` already visited, at `depth`. Each hop
+    * is an equi-join on `node` = `src` (both sides bucket by node id at
     * scale) plus one anti-join keyed on `(key…, node)` — ExplainAudit
     * pins that shape.
     */

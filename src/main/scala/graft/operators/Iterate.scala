@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{coalesce, lit}
 
 /** graft's one lineage cut. Iterative drivers (BFS frontier, Lloyd
@@ -26,6 +27,18 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   *   files only under `spark.cleaner.referenceTracking.cleanCheckpoints`
   *   (graft never sets it): per-trigger cuts ([[Changepoint.detect]],
   *   [[Psi]]) leave files until the deployment cleans the directory.
+  *
+  * The size rule: a round whose carried state (a BFS's visited set plus
+  * frontier, ...) fits under `spark.sql.autoBroadcastJoinThreshold`
+  * keeps that state on the driver and runs as one scan of the
+  * persisted large side plus one collect ([[fitsDriver]], [[maxRows]],
+  * [[collectIfFits]]) — the size Spark already agrees to hold on the
+  * driver for a broadcast, measured the way its broadcast rule measures
+  * it (plan statistics; rows × the schema's per-row size), times the
+  * [[HeldOverhead]] of rows held as objects. A threshold ≤ 0 means
+  * never. Above it the round stays a distributed plan of
+  * cut rounds, so the plans at scale do not change. graft never sets
+  * the threshold: a deployment or a test session does.
   */
 object Iterate {
 
@@ -47,5 +60,52 @@ object Iterate {
     val observed = df.observe(obs, coalesce(metric, lit(0L)).as("m"))
     val out = materialize(if (keep.isEmpty) observed else observed.select(keep: _*))
     (out, obs.get("m").asInstanceOf[Long])
+  }
+
+  private def threshold(df: DataFrame): Long =
+    df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Driver bytes per byte of Spark's row-size estimate for a row held
+    * on the driver. A broadcast keeps compact UnsafeRow bytes; a held
+    * `(node, depth)` row is a boxed `Row` (object, value array, boxed
+    * longs) plus its key tuple and hash-set entry — about 155 bytes by
+    * object layout where Spark estimates 24 — and a round adds
+    * transient copies (the frontier's tuples, the scan's `isin` list).
+    */
+  val HeldOverhead = 8
+
+  /** The size rule by `df`'s plan statistics — Spark's broadcast test,
+    * with the held rows' [[HeldOverhead]].
+    */
+  def fitsDriver(df: DataFrame): Boolean = {
+    val t = threshold(df)
+    t > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes * HeldOverhead <= t
+  }
+
+  /** The size rule in rows: the most rows of `df`'s schema it keeps on
+    * the driver; -1 when it keeps none.
+    */
+  def maxRows(df: DataFrame): Long = {
+    val t = threshold(df)
+    if (t <= 0) -1L
+    else t / (EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong *
+      HeldOverhead)
+  }
+
+  /** `df`'s rows in one job, or None when they would not fit the size
+    * rule. Each of the P partitions sends at most its share of the
+    * rule's rows plus one, and a partition that fills that share says
+    * no, so telling costs the driver at most the rule's rows plus P.
+    */
+  def collectIfFits(df: DataFrame): Option[Array[Row]] = {
+    val cap = maxRows(df)
+    if (cap < 0) None
+    else {
+      val rdd = df.rdd
+      val share = math.min(cap / math.max(rdd.getNumPartitions, 1) + 1,
+        Int.MaxValue.toLong).toInt
+      val parts = rdd.mapPartitions(it => Iterator(it.take(share).toArray)).collect()
+      Option.when(parts.forall(_.length < share))(parts.flatten)
+    }
   }
 }

@@ -57,14 +57,9 @@ object Seasonal {
     * carrying (event_type, hu, hw, y, bm, r).
     */
   private def devFrame(cellsRaw: DataFrame): Option[(DataFrame, DataFrame)] = {
-    val agg = Iterate.materialize(
-      cellsRaw
-        .select(col("event_type"), unix_micros(col("h")).as("hu"), col("y")))
-    // 1-row bounded statistic: the span collects once (the q_heaps rule)
-    val b = agg.agg(min(col("hu")).as("lo"), max(col("hu")).as("hi")).head()
-    if (b.isNullAt(0)) return None
-    val lo = b.getLong(0)
-    val nH = ((b.getLong(1) - lo) / HourUs + 1L).toInt
+    // the span rides the cells' materialization job
+    val (agg, lo, nH) = Changepoint.cellSpan(cellsRaw)
+    if (nH == 0) return None
     val types = agg.select(col("event_type").as("et")).distinct()
       .select(col("et").as("event_type"))
     val grid = types.crossJoin(

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.{Md5Buckets, Md5Kit, TextSim}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The STORED lexical index — the [[SignatureStore]]/[[IndexStore]]
@@ -126,30 +126,35 @@ object PostingsStore {
     Generations.reset(spark, path, Seq(Postings, Stats),
       Set("commits", "doclens"))
 
-  /** Corpus stats ride the postings write as an `observe()` metric on
-    * the token frame (every tokenized row flows through the node on
-    * its way into the explode) — one action instead of write + a
-    * second full agg pass over the (previously persisted) tokens.
+  /** Runs `write` over the token frame with the corpus stats
+    * `(n_docs, dl_sum)` riding it as an `observe()` metric (every
+    * tokenized row flows through the node on its way into the explode)
+    * — one action instead of write + a second full agg pass over the
+    * tokens. A batch with no token rows (empty, or every text blank)
+    * reports no metrics at all — the hole
+    * [[graft.operators.IncrementalRunner.runWithStats]] covers for
+    * AQE-dropped stages — so a missing metric counts the tokens again;
+    * a sum over no rows is 0.
     */
-  private def statsObs(toks: DataFrame)
-    : (DataFrame, org.apache.spark.sql.Observation) = {
+  private def writeCounting(toks: DataFrame)(write: DataFrame => Unit): (Long, Long) = {
+    val stats = Seq(count(lit(1)).cast("long").as("n_docs"),
+      sum(size(col("t"))).cast("long").as("dl_sum"))
     val obs = org.apache.spark.sql.Observation()
-    (toks.observe(obs, count(lit(1)).cast("long").as("n_docs"),
-      sum(size(col("t"))).cast("long").as("dl_sum")), obs)
+    write(toks.observe(obs, stats.head, stats.tail: _*))
+    val m = obs.get
+    val r = if (m.contains("n_docs")) Row(m("n_docs"), m("dl_sum"))
+      else toks.agg(stats.head, stats.tail: _*).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
-
-  private def obsLong(obs: org.apache.spark.sql.Observation, k: String): Long =
-    obs.get(k) match { case null => 0L; case v => v.asInstanceOf[Long] }
 
   def build(docs: DataFrame, path: String,
     nBuckets: Int = DefaultBuckets): Unit = {
     val spark = docs.sparkSession
     resetLayout(spark, path)
-    val (toks, obs) = statsObs(tokenize(docs))
-    Postings.write(postingsOf(toks, nBuckets).write.partitionBy("bkt"),
-      path, 0L)
-    writeStatsGen(spark, path, obsLong(obs, "n_docs"), obsLong(obs, "dl_sum"),
-      lastBatch = -1L, gen = 0L)
+    val (nDocs, dlSum) = writeCounting(tokenize(docs)) { toks =>
+      Postings.write(postingsOf(toks, nBuckets).write.partitionBy("bkt"), path, 0L)
+    }
+    writeStatsGen(spark, path, nDocs, dlSum, lastBatch = -1L, gen = 0L)
     // the bucket spec is part of the STORE, not a caller argument:
     // append/search read it back, so a mismatched count can't silently
     // route new postings into buckets pruning will never read (the
@@ -199,13 +204,14 @@ object PostingsStore {
       batchId.exists(_ == statsRow.getAs[Long]("last_batch"))
     if (!statsApplied) {
       val nBuckets = bucketsOf(spark, path)
-      val (toks, obs) = statsObs(tokenize(docs))
-      postingsOf(toks, nBuckets)
-        .write.mode("append").partitionBy("bkt")
-        .parquet(postingsPath(spark, path))
+      val (nDocs, dlSum) = writeCounting(tokenize(docs)) { toks =>
+        postingsOf(toks, nBuckets)
+          .write.mode("append").partitionBy("bkt")
+          .parquet(postingsPath(spark, path))
+      }
       writeStatsGen(spark, path,
-        statsRow.getAs[Long]("n_docs") + obsLong(obs, "n_docs"),
-        statsRow.getAs[Long]("dl_sum") + obsLong(obs, "dl_sum"),
+        statsRow.getAs[Long]("n_docs") + nDocs,
+        statsRow.getAs[Long]("dl_sum") + dlSum,
         lastBatch = batchId.getOrElse(-1L), gen = statsGen + 1L)
       pruneStatsGens(spark, path)
     }

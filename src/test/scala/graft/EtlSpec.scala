@@ -97,14 +97,22 @@ class EtlSpec extends AnyFunSuite {
       "one vector file per source")
   }
 
+  // both BFS paths: every round distributed (−1), and on the driver
+  // (the default threshold)
+  private def bothPaths(body: => Unit): Unit =
+    Seq(-1L, spark.sessionState.conf.autoBroadcastJoinThreshold)
+      .foreach(t => BroadcastThreshold(spark, t)(body))
+
   test("bfs finds min depth") {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L))
       .toDF("src", "dst")
     val roots = Seq(0L).toDF("node")
-    val got = Crawl.bfs(edges, roots, 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L))
+    bothPaths {
+      val got = Crawl.bfs(edges, roots, 10).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L))
+    }
   }
 
   test("keyed bfs equals the union of single-root runs tagged with their root") {
@@ -113,15 +121,17 @@ class EtlSpec extends AnyFunSuite {
     // different depths, plus a node only one of them reaches
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
       (4L, 2L), (3L, 5L), (6L, 4L)).toDF("src", "dst")
-    val keyed = Crawl.bfs(edges, Seq((0L, 0L), (4L, 4L)).toDF("root", "node"), 10)
-      .as[(Long, Long, Long)].collect().toSet
-    val single = Seq(0L, 4L).flatMap { r =>
-      Crawl.bfs(edges, Seq(r).toDF("node"), 10).as[(Long, Long)].collect()
-        .map { case (n, d) => (r, n, d) }
-    }.toSet
-    assert(keyed == single)
-    assert(keyed.contains((0L, 3L, 2L)) && keyed.contains((4L, 3L, 2L)) &&
-      keyed.contains((4L, 0L, 3L)) && !keyed.exists(_._2 == 6L))
+    bothPaths {
+      val keyed = Crawl.bfs(edges, Seq((0L, 0L), (4L, 4L)).toDF("root", "node"), 10)
+        .as[(Long, Long, Long)].collect().toSet
+      val single = Seq(0L, 4L).flatMap { r =>
+        Crawl.bfs(edges, Seq(r).toDF("node"), 10).as[(Long, Long)].collect()
+          .map { case (n, d) => (r, n, d) }
+      }.toSet
+      assert(keyed == single)
+      assert(keyed.contains((0L, 3L, 2L)) && keyed.contains((4L, 3L, 2L)) &&
+        keyed.contains((4L, 0L, 3L)) && !keyed.exists(_._2 == 6L))
+    }
   }
 
   test("sessionize splits on 30-minute gaps") {

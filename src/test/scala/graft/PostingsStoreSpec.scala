@@ -229,4 +229,28 @@ class PostingsStoreSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect()
     assert(mixed.toSeq == clean.toSeq)
   }
+
+  test("observed corpus stats: an empty batch and a batch with no tokens count zero") {
+    val docs = Tables.documents(spark, sf)
+    val d = java.nio.file.Files.createTempDirectory("postings_obs_").toString
+    def stats(gen: Int): (Long, Long) = spark.read.parquet(s"$d/stats_g$gen")
+      .select(col("n_docs"), col("dl_sum")).as[(Long, Long)].head()
+    // optimized away (an empty relation) and empty only at run time
+    PostingsStore.build(docs.limit(0), d)
+    assert(stats(0) == ((0L, 0L)))
+    PostingsStore.append(docs.filter(col("doc_id") < 0L), d)
+    assert(stats(1) == ((0L, 0L)))
+    PostingsStore.append(docs.limit(0), d, batchId = Some(1L))
+    assert(stats(2) == ((0L, 0L)))
+    // every text blank: each doc tokenizes to nothing and is dropped
+    PostingsStore.append(docs.withColumn("text", lit("   ")), d)
+    assert(stats(3) == ((0L, 0L)))
+    // and a real batch after them is still counted exactly
+    val batch = docs.filter(col("doc_id") % 2 === 0)
+    PostingsStore.append(batch, d)
+    val dl = batch.select(size(graft.functions.TextSim.tokens(col("text"))).as("n"))
+      .filter(col("n") >= 1)
+      .agg(count(lit(1)), sum(col("n")).cast("long")).as[(Long, Long)].head()
+    assert(stats(4) == dl)
+  }
 }

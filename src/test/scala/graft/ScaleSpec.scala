@@ -363,24 +363,28 @@ class ScaleSpec extends AnyFunSuite {
     else 0L
 
   test("bfs with reliable checkpoint matches localCheckpoint bfs") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_bfs").toString
-    val edges = Tables.edges(spark, sf)
-    val roots = spark.range(1).select(lit(0L).as("node"))
-    val local = operators.Crawl.bfs(edges, roots, 20)
-      .as[(Long, Long)].collect().toSet
-    val sc = spark.sparkContext
-    val before = sc.getCheckpointDir
-    val (reliable, during) = CheckpointDirScope(sc, tmp) {
-      (operators.Crawl.bfs(edges, roots, 20).as[(Long, Long)].collect().toSet,
-        sc.getCheckpointDir)
+    // threshold −1: every hop takes the distributed, cut path — on the
+    // driver a small crawl would never reach the checkpoint
+    BroadcastThreshold(spark, -1L) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_bfs").toString
+      val edges = Tables.edges(spark, sf)
+      val roots = spark.range(1).select(lit(0L).as("node"))
+      val local = operators.Crawl.bfs(edges, roots, 20)
+        .as[(Long, Long)].collect().toSet
+      val sc = spark.sparkContext
+      val before = sc.getCheckpointDir
+      val (reliable, during) = CheckpointDirScope(sc, tmp) {
+        (operators.Crawl.bfs(edges, roots, 20).as[(Long, Long)].collect().toSet,
+          sc.getCheckpointDir)
+      }
+      assert(reliable == local && reliable.nonEmpty)
+      assert(rddFiles(new java.io.File(tmp)) > 0,
+        s"no checkpoint files written under $tmp")
+      // a 20-hop reliable BFS leaves the session's directory exactly as
+      // set: the operators read it, never rewrite it
+      assert(during == Some(tmp), s"checkpoint dir rewritten to $during")
+      assert(sc.getCheckpointDir == before)
     }
-    assert(reliable == local && reliable.nonEmpty)
-    assert(rddFiles(new java.io.File(tmp)) > 0,
-      s"no checkpoint files written under $tmp")
-    // a 20-hop reliable BFS leaves the session's directory exactly as
-    // set: the operators read it, never rewrite it
-    assert(during == Some(tmp), s"checkpoint dir rewritten to $during")
-    assert(sc.getCheckpointDir == before)
   }
 
   test("a set checkpoint dir reaches every cut of curator ingest, scc merge and neighbor refresh") {

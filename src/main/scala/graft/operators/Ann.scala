@@ -172,22 +172,23 @@ object Ann {
        |FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
-  /** Probe rows: each query exploded to its `n` nearest centroid lists
-    * — a per-row [[graft.functions.NearestCentroids]] pass, no shuffle.
+  /** Probe rows: each query exploded to the lists of `ranked`, its
+    * per-row ranked centroid array `(cent_id, c_sim)`, best first — a
+    * [[graft.functions.NearestCentroids]] (flat) or
+    * [[graft.functions.RoutedNearest]] (routed) pass, no shuffle.
     * `extra` columns (e.g. a per-query ADC lookup table, computed ONCE
     * per query before the explode) ride along.
     */
-  private def probeLists(q: DataFrame, cents: DataFrame, n: Int,
+  private[graft] def probeLists(q: DataFrame, ranked: Column,
     extra: Seq[String] = Nil, margin: Option[Double] = None): DataFrame = {
-    val nc = graft.functions.NearestCentroids.fromFrame(col("embedding"), cents, n)
     // the fixed-width path references the ranked array exactly once
     // (no __best column), so project-collapse cannot duplicate the
-    // O(nlist·dim) NearestCentroids evaluation; the adaptive path may
-    // pay a second evaluation for __best, but only over the |Q| query
-    // rows, never the corpus
+    // O(nlist·dim) ranking; the adaptive path may pay a second
+    // evaluation for __best, but only over the |Q| query rows, never
+    // the corpus
     val base = q.select(Seq(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"), col("nrm").as("q_nrm")) ++
-      extra.map(col) :+ nc.as("__nc"): _*)
+      extra.map(col) :+ ranked.as("__nc"): _*)
     // adaptive width (the coarse distance-gap rule): drop probes whose
     // list similarity trails the query's best by more than the margin
     val kept = margin match {
@@ -204,6 +205,9 @@ object Ann {
     kept.select(Seq(col("query_id"), col("p.cent_id").as("cent_id"),
       col("q_emb"), col("q_nrm")) ++ extra.map(col): _*)
   }
+
+  private def nearest(cents: DataFrame, n: Int): Column =
+    graft.functions.NearestCentroids.fromFrame(col("embedding"), cents, n)
 
   /** IVF search over pre-normed vectors and a `(cent_id, c_emb, c_nrm)`
     * centroid frame: shuffle-free nearest-centroid assignment (the
@@ -242,7 +246,7 @@ object Ann {
     queriesWithNorm: DataFrame, cents: DataFrame, k: Int, nprobe: Int,
     margin: Option[Double]): DataFrame = {
     val assigned = KMeansVec.assign(vectorsWithNorm, cents)
-    val scored = probeLists(queriesWithNorm, cents, nprobe, margin = margin)
+    val scored = probeLists(queriesWithNorm, nearest(cents, nprobe), margin = margin)
       .join(assigned, "cent_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -583,26 +587,37 @@ object Ann {
   private[graft] def adcProbes(queriesWithNorm: DataFrame, cents: DataFrame,
     books: PQ.PqBooks, dim: Int, nprobe: Int,
     margin: Option[Double] = None): DataFrame =
+    adcProbesBy(queriesWithNorm, nearest(cents, nprobe), books, dim, margin)
+
+  /** [[adcProbes]] over a per-row `ranked` centroid array ([[probeLists]]). */
+  private[graft] def adcProbesBy(queriesWithNorm: DataFrame, ranked: Column,
+    books: PQ.PqBooks, dim: Int, margin: Option[Double]): DataFrame =
     probeLists(
       queriesWithNorm.withColumn("lut", PQ.adcLut(col("embedding"), books, dim)),
-      cents, nprobe, extra = Seq("lut"), margin = margin)
+      ranked, extra = Seq("lut"), margin = margin)
 
   /** Rank a `(cent_id, vec_id, codes, rec_nrm)` resident code table
-    * against ADC probe rows: broadcast the probes past the code table
-    * (the resident side is never shuffled — at 100 TB it's a
-    * partition-pruned read, [[graft.sources.IndexStore]]), score each
-    * candidate with m table lookups ([[PQ.adcDot]] — no decode join,
-    * no reconstruction), partial top-k.
+    * against ADC probe rows ([[scoreCodes]]), partial top-k.
     */
   private[graft] def rankCodes(s: SparkSession, resident: DataFrame,
-    probes: DataFrame, books: PQ.PqBooks, k: Int): DataFrame = {
-    val scored = resident.join(broadcast(probes), "cent_id")
+    probes: DataFrame, books: PQ.PqBooks, k: Int): DataFrame =
+    rankTopK(s, scoreCodes(resident, probes, books), k)
+
+  /** Score a `(cent_id, vec_id, codes, rec_nrm)` resident code table
+    * against ADC probe rows joined `on` their shared keys: broadcast the
+    * probes past the code table (the resident side is never shuffled —
+    * at 100 TB it's a partition-pruned read, [[graft.sources.IndexStore]]),
+    * score each candidate with m table lookups ([[PQ.adcCosine]] — no
+    * decode join, no reconstruction). Returns `(query_id, vec_id,
+    * cos_sim)`.
+    */
+  private[graft] def scoreCodes(resident: DataFrame, probes: DataFrame,
+    books: PQ.PqBooks, on: Seq[String] = Seq("cent_id")): DataFrame =
+    resident.join(broadcast(probes), on)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        graft.functions.TextSim.r6(PQ.adcDot(col("lut"), col("codes"), books.m) /
-          (col("q_nrm") * col("rec_nrm"))).as("cos_sim"))
-    rankTopK(s, scored, k)
-  }
+        PQ.adcCosine(col("lut"), col("q_nrm"), col("codes"), col("rec_nrm"),
+          books.m).as("cos_sim"))
 
   /** IVF-PQ search — the full compressed-index composition: coarse
     * [[KMeansVec]] lists prune WHICH vectors a query scores;
@@ -640,12 +655,17 @@ object Ann {
     * coarse rounds leave idle; then ONE collect of the codebook frame
     * serves the PqBooks LUTs and all m encode argmaxes. Returns
     * (coarse, codebook frame, per-subspace codebook rows).
+    *
+    * Both chains read `v` through one cache entry that this prologue
+    * owns ([[KMeansVec.cached]]): neither fit drops it while the other
+    * still reads it.
     */
   private[graft] def trainIvfPq[C](v: DataFrame, dim: Int, m: Int,
-    kcode: Int, iters: Int)(coarse: => C): (C, DataFrame, Seq[Seq[(Long, Array[Float])]]) = {
-    val (c, bookFrame) = Concurrently.both(coarse, PQ.fitFrame(v, dim, m, kcode, iters))
-    (c, bookFrame, PQ.collectRows(bookFrame))
-  }
+    kcode: Int, iters: Int)(coarse: => C): (C, DataFrame, Seq[Seq[(Long, Array[Float])]]) =
+    KMeansVec.cached(v.select(col("vec_id"), col("embedding"))) { _ =>
+      val (c, bookFrame) = Concurrently.both(coarse, PQ.fitFrame(v, dim, m, kcode, iters))
+      (c, bookFrame, PQ.collectRows(bookFrame))
+    }
 
   /** The one resident encoder — what [[ivfPqSearch]] scores and
     * [[graft.sources.IndexStore.build]]/`append` write: coarse list

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic Lloyd k-means over an `embedding: array<float>`
   * column — trains the coarse quantizer for [[Ann.ivfTrained]]
@@ -38,6 +39,21 @@ object KMeansVec {
 
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", Ann.norm(col("embedding")))
+
+  /** Runs `body` over `df` cached, and drops only a cache entry it
+    * created: Spark keys cache entries by plan, so unpersisting a plan
+    * the caller had already cached would drop the caller's entry. Two
+    * chains that run at once and both find the plan uncached would
+    * share one entry that the first to finish drops under the other, so
+    * a caller that runs fits concurrently caches their input itself
+    * first ([[Ann.trainIvfPq]]).
+    */
+  private[operators] def cached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist()
+    try body(df)
+    finally if (owned) df.unpersist()
+  }
 
   /** One Lloyd recentering over assigned `(keys…, cent_id, embedding)`
     * rows: per-centroid means dim by dim — posexplode + one
@@ -91,37 +107,36 @@ object KMeansVec {
     parts: Seq[Column], keyed: Boolean): DataFrame = {
     val spark = vectors.sparkSession
     val keys = if (keyed) Seq("sub") else Nil
-    val e = vectors.select(col("vec_id"), col("embedding")).persist()
-    // one `(keys…, cent_id, embedding)` row per (vector, part): part j's
-    // slice labeled with `cid(j)`
-    def perPart(df: DataFrame, cid: Int => Column): DataFrame =
-      df.select(explode(array(parts.zipWithIndex.map { case (p, j) =>
-        struct(lit(j).as("sub"), cid(j).as("cent_id"), p.as("embedding"))
-      }: _*)).as("x"))
-        .select(keys.map(c => col(s"x.$c")) ++
-          Seq(col("x.cent_id"), col("x.embedding")): _*)
-    val initIds = e.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted
-    val idMap = spark.createDataFrame(
-      initIds.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
-      .toDF("vec_id", "cent_id")
-    val init = Iterate.materialize(
-      perPart(e.join(broadcast(idMap), "vec_id"), _ => col("cent_id"))
-        .select(keys.map(col) ++ Seq(col("cent_id"),
-          col("embedding").as("c_emb"), Ann.norm(col("embedding")).as("c_nrm")): _*))
-    val out = lloyd(init, iters, keys) { cents =>
-      val rows = cents.collect()
-      perPart(e, j => {
-        val rj = rows.filter(r => !keyed || r.getAs[Int]("sub") == j)
-          .sortBy(_.getAs[Long]("cent_id"))
-        element_at(graft.functions.NearestCentroids(parts(j),
-          rj.map(_.getAs[Long]("cent_id")),
-          rj.map(_.getAs[Seq[Float]]("c_emb").toArray),
-          rj.map(_.getAs[Double]("c_nrm")), 1), 1).getField("cent_id")
-      })
+    cached(vectors.select(col("vec_id"), col("embedding"))) { e =>
+      // one `(keys…, cent_id, embedding)` row per (vector, part): part
+      // j's slice labeled with `cid(j)`
+      def perPart(df: DataFrame, cid: Int => Column): DataFrame =
+        df.select(explode(array(parts.zipWithIndex.map { case (p, j) =>
+          struct(lit(j).as("sub"), cid(j).as("cent_id"), p.as("embedding"))
+        }: _*)).as("x"))
+          .select(keys.map(c => col(s"x.$c")) ++
+            Seq(col("x.cent_id"), col("x.embedding")): _*)
+      val initIds = e.orderBy(col("vec_id")).limit(k)
+        .select(col("vec_id")).collect().map(_.getLong(0)).sorted
+      val idMap = spark.createDataFrame(
+        initIds.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
+        .toDF("vec_id", "cent_id")
+      val init = Iterate.materialize(
+        perPart(e.join(broadcast(idMap), "vec_id"), _ => col("cent_id"))
+          .select(keys.map(col) ++ Seq(col("cent_id"),
+            col("embedding").as("c_emb"), Ann.norm(col("embedding")).as("c_nrm")): _*))
+      lloyd(init, iters, keys) { cents =>
+        val rows = cents.collect()
+        perPart(e, j => {
+          val rj = rows.filter(r => !keyed || r.getAs[Int]("sub") == j)
+            .sortBy(_.getAs[Long]("cent_id"))
+          element_at(graft.functions.NearestCentroids(parts(j),
+            rj.map(_.getAs[Long]("cent_id")),
+            rj.map(_.getAs[Seq[Float]]("c_emb").toArray),
+            rj.map(_.getAs[Double]("c_nrm")), 1), 1).getField("cent_id")
+        })
+      }
     }
-    e.unpersist()
-    out
   }
 
   /** Two-level ROUTED coarse quantizer: [[fit]] trains `kTop` top
@@ -182,25 +197,21 @@ object KMeansVec {
     * and train all leaves on the `grid` layout with [[lloydLeaves]].
     */
   private def fitTwoLevel(vectors: DataFrame, kTop: Int, grid: Int,
-    iters: Int)(caps: DataFrame => (DataFrame, Column)): (DataFrame, DataFrame) = {
-    val e = withNorm(vectors.select(col("vec_id"), col("embedding")))
-      .persist()
-    val top = fit(vectors, kTop, iters)
-    val routed = assign(e, top)
-      .select(col("cent_id").as("top_id"), col("vec_id"),
-        col("embedding"), col("nrm"))
-      .persist()
-    val (capped, cap) = caps(routed)
-    val wInit = Window.partitionBy(col("top_id")).orderBy(col("vec_id"))
-    val init = Iterate.materialize(
-      capped.withColumn("rn", row_number().over(wInit).cast("long"))
-        .filter(col("rn") <= cap)
-        .select(((col("top_id") - 1) * grid + col("rn")).as("cent_id"),
-          col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
-    val leaves = lloydLeaves(routed, init, kTop, grid, iters)
-    routed.unpersist(); e.unpersist()
-    (top, leaves)
-  }
+    iters: Int)(caps: DataFrame => (DataFrame, Column)): (DataFrame, DataFrame) =
+    cached(withNorm(vectors.select(col("vec_id"), col("embedding")))) { e =>
+      val top = fit(vectors, kTop, iters)
+      cached(assign(e, top).select(col("cent_id").as("top_id"), col("vec_id"),
+        col("embedding"), col("nrm"))) { routed =>
+        val (capped, cap) = caps(routed)
+        val wInit = Window.partitionBy(col("top_id")).orderBy(col("vec_id"))
+        val init = Iterate.materialize(
+          capped.withColumn("rn", row_number().over(wInit).cast("long"))
+            .filter(col("rn") <= cap)
+            .select(((col("top_id") - 1) * grid + col("rn")).as("cent_id"),
+              col("embedding").as("c_emb"), col("nrm").as("c_nrm")))
+        (top, lloydLeaves(routed, init, kTop, grid, iters))
+      }
+    }
 
   /** Capped highest-averages leaf allocation: every live cell starts
     * at one leaf, then each remaining unit of budget goes to the cell

@@ -214,6 +214,13 @@ object PQ {
       element_at(element_at(lut, j + 1),
         element_at(codes, j + 1).cast("int"))).reduce(_ + _)
 
+  /** ADC cosine, rounded to 6 places: [[adcDot]] over the query norm
+    * times the code row's reconstruction norm ([[recNorm]]).
+    */
+  def adcCosine(lut: Column, qNrm: Column, codes: Column, recNrm: Column,
+    m: Int): Column =
+    graft.functions.TextSim.r6(adcDot(lut, codes, m) / (qNrm * recNrm))
+
   /** All k×k subspace-codebook dot products — the driver-side half of
     * SDC scoring ([[graft.functions.SdcDot]]): code-pair similarity
     * with no vectors and no decode. Folded in [[graft.functions.VecDot]]

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.{Ann, Iterate, KMeansVec, OPQ, PQ}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage-backed IVF-PQ index — the [[SignatureStore]] pattern applied
@@ -126,27 +126,24 @@ object IndexStore {
 
   /** The stored coarse quantizer. */
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
+    new Geometry(spark, path).centroids
 
   /** The stored OPQ permutation (empty = identity, incl. pre-OPQ
     * stores whose meta lacks the column).
     */
-  def permutation(spark: SparkSession, path: String): Array[Int] = {
-    val meta = spark.read.parquet(s"$path/meta")
-    permFromMeta(meta.head(), meta.columns)
-  }
+  def permutation(spark: SparkSession, path: String): Array[Int] =
+    new Geometry(spark, path).perm
 
-  private def permFromMeta(row: org.apache.spark.sql.Row,
-    cols: Array[String]): Array[Int] =
-    if (!cols.contains("perm")) Array.empty
-    else normalizePerm(row.getSeq[Int](cols.indexOf("perm")).toArray)
+  /** The stored full-OPQ rotation (empty = none). */
+  def rotation(spark: SparkSession, path: String): Array[Array[Double]] =
+    new Geometry(spark, path).rot
 
-  /** Routing width of the stored coarse quantizer (0 = flat, incl.
-    * pre-routing stores whose meta lacks the column).
-    */
-  private def ktopFromMeta(row: org.apache.spark.sql.Row,
-    cols: Array[String]): Int =
-    if (!cols.contains("ktop")) 0 else row.getInt(cols.indexOf("ktop"))
+  /** The stored PQ codebooks as driver-resident [[PQ.PqBooks]]. */
+  def books(spark: SparkSession, path: String): PQ.PqBooks =
+    new Geometry(spark, path).books
+
+  private def exists(spark: SparkSession, dir: String): Boolean =
+    Generations.fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(dir))
 
   /** Identity permutations collapse to empty so the no-OPQ path never
     * pays a reorder projection.
@@ -154,21 +151,6 @@ object IndexStore {
   private def normalizePerm(perm: Array[Int]): Array[Int] =
     if (perm.zipWithIndex.forall { case (v, i) => v == i }) Array.empty
     else perm
-
-  private def maybePermute(v: DataFrame, perm: Array[Int]): DataFrame =
-    if (perm.isEmpty) v
-    else v.select(col("vec_id"),
-      OPQ.permute(col("embedding"), perm).as("embedding"))
-
-  /** The stored full-OPQ rotation (empty = none). */
-  def rotation(spark: SparkSession, path: String): Array[Array[Double]] = {
-    val rotPath = new org.apache.hadoop.fs.Path(s"$path/rot")
-    val fs = rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rotPath)) Array.empty
-    else spark.read.parquet(s"$path/rot")
-      .orderBy(col("j")).collect()
-      .map(r => r.getSeq[Double](1).toArray)
-  }
 
   /** Apply the stored input transform: dense rotation wins over the
     * cheaper permutation reorder (they are never both stored).
@@ -178,7 +160,70 @@ object IndexStore {
     if (rot.nonEmpty)
       v.select(col("vec_id"),
         OPQ.rotate(col("embedding"), rot).as("embedding"))
-    else maybePermute(v, perm)
+    else if (perm.nonEmpty)
+      v.select(col("vec_id"),
+        OPQ.permute(col("embedding"), perm).as("embedding"))
+    else v
+
+  /** The one reader of the stored geometry at `path`: the meta row
+    * (dim, nlist, ktop, perm), the full-OPQ rotation, the coarse
+    * centroids, the routed top cells and the PQ codebooks. Each piece
+    * is read on first use and then held, so a caller pays only for what
+    * it reads ([[refreshNeighbors]] reads the codebooks alone) and a
+    * [[Handle]] pays for all of it once, at open. Stores written before
+    * a column existed read its default: no `ktop` = flat, no `perm` =
+    * identity, no `rot/` = no rotation.
+    */
+  private final class Geometry(spark: SparkSession, path: String) {
+    private def table(name: String): DataFrame =
+      spark.read.parquet(s"$path/$name")
+    private lazy val (meta, metaCols) = {
+      val df = spark.read.parquet(s"$path/meta")
+      (df.head(), df.columns)
+    }
+    lazy val dim: Int = meta.getAs[Int]("dim")
+    lazy val ktop: Int =
+      if (!metaCols.contains("ktop")) 0 else meta.getAs[Int]("ktop")
+    lazy val perm: Array[Int] =
+      if (!metaCols.contains("perm")) Array.empty
+      else normalizePerm(meta.getAs[Seq[Int]]("perm").toArray)
+    lazy val rot: Array[Array[Double]] =
+      if (!exists(spark, s"$path/rot")) Array.empty
+      else table("rot").orderBy(col("j")).collect()
+        .map(r => r.getSeq[Double](1).toArray)
+    def centroids: DataFrame = table("centroids")
+    lazy val centRows: Array[Row] = cells(centroids)
+    lazy val topRows: Array[Row] =
+      if (ktop == 0) Array.empty else cells(table("topcents"))
+    lazy val bookRows: Seq[Seq[(Long, Array[Float])]] =
+      PQ.collectRows(table("codebooks"))
+    lazy val books: PQ.PqBooks = PQ.collectBooksFromRows(bookRows)
+
+    private def cells(df: DataFrame): Array[Row] =
+      df.select(col("cent_id"), col("c_emb"), col("c_nrm")).collect()
+
+    /** Collected rows as a driver-local frame (no storage read, no job). */
+    private def local(rows: Array[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), rows.head.schema)
+    lazy val centsLocal: DataFrame = local(centRows)
+
+    /** Routed stores: the top cells as a driver-local frame, with the
+      * routing width and the per-cell leaf grid — the route
+      * [[Ann.encodeResident]] assigns through.
+      */
+    lazy val route: Option[(DataFrame, Int, Int)] =
+      if (ktop == 0) None
+      else Some((local(topRows), ktop, meta.getAs[Int]("nlist") / ktop))
+
+    /** `(vec_id, embedding)` rows into the stored space, with their
+      * norm: the one preparation of query and append batches.
+      */
+    lazy val prepare: DataFrame => DataFrame = {
+      val (p, r) = (perm, rot)
+      v => transformIn(v.select(col("vec_id"), col("embedding")), p, r)
+        .withColumn("nrm", Ann.norm(col("embedding")))
+    }
+  }
 
   private val Lists = Generations("lists")
 
@@ -203,20 +248,6 @@ object IndexStore {
   def listsPath(spark: SparkSession, path: String): String =
     Lists.dir(path, currentGen(spark, path))
 
-  /** The stored PQ codebooks as `(cent_id, c_emb, c_nrm)` frames, one
-    * per subspace — the shape [[PQ.encode]] consumes. `c_nrm` is
-    * recomputed from the stored floats with the same fold
-    * ([[Ann.norm]]) that produced it at fit time, so it is bit-equal.
-    */
-  def bookFrames(spark: SparkSession, path: String): Seq[DataFrame] = {
-    val all = spark.read.parquet(s"$path/codebooks")
-    val m = all.agg(max(col("sub"))).head().getInt(0) + 1
-    (0 until m).map(j =>
-      all.filter(col("sub") === j)
-        .select(col("cent_id"), col("c_emb"),
-          Ann.norm(col("c_emb")).as("c_nrm")))
-  }
-
   /** Append a new vector batch to the stored index, encoded with the
     * STORED quantizers — no retraining: the index geometry is fixed at
     * build time and refreshed by periodic rebuilds, exactly the
@@ -228,28 +259,13 @@ object IndexStore {
     * store is the identity authority, like [[SignatureStore.append]].
     */
   def append(newVectors: DataFrame, path: String): Unit = {
-    val spark = newVectors.sparkSession
-    // one meta read serves dim AND the stored transform — append runs
-    // per micro-batch, so every avoided round-trip counts
-    val metaDf = spark.read.parquet(s"$path/meta")
-    val metaRow = metaDf.head()
-    val dim = metaRow.getAs[Int]("dim")
-    val e = transformIn(
-      newVectors.select(col("vec_id"), col("embedding")),
-      permFromMeta(metaRow, metaDf.columns), rotation(spark, path))
-      .withColumn("nrm", Ann.norm(col("embedding")))
+    val g = new Geometry(newVectors.sparkSession, path)
     // assignment must match how build computed cent_id: routed stores
-    // route the batch through the stored top level. ONE codebooks
-    // read+collect serves the rec-norm LUTs and all m encode argmaxes.
-    val ktop = ktopFromMeta(metaRow, metaDf.columns)
-    val route =
-      if (ktop == 0) None
-      else Some((spark.read.parquet(s"$path/topcents"), ktop,
-        metaRow.getAs[Int]("nlist") / ktop))
-    Ann.encodeResident(e, centroids(spark, path), route,
-      PQ.collectRows(spark.read.parquet(s"$path/codebooks")), dim)
+    // route the batch through the stored top level
+    Ann.encodeResident(g.prepare(newVectors), g.centsLocal, g.route,
+      g.bookRows, g.dim)
       .write.mode(SaveMode.Append)
-      .partitionBy("cent_id").parquet(listsPath(spark, path))
+      .partitionBy("cent_id").parquet(listsPath(newVectors.sparkSession, path))
   }
 
   /** Delete vectors from the stored index — the right-to-be-forgotten
@@ -342,8 +358,7 @@ object IndexStore {
     */
   def compact(spark: SparkSession, path: String): Long = {
     val next = currentGen(spark, path) + 1L
-    Lists.write(spark.read.parquet(Lists.dir(path, next - 1))
-      .select(col("cent_id"), col("vec_id"), col("codes"), col("rec_nrm"))
+    Lists.write(listRows(spark, Lists.dir(path, next - 1))
       .repartition(col("cent_id"))
       .write.partitionBy("cent_id"), path, next)
     next
@@ -390,31 +405,65 @@ object IndexStore {
   def buildNeighbors(vectors: DataFrame, path: String, r: Int = 8,
     nprobe: Int = 8): Unit = {
     val spark = vectors.sparkSession
-    val metaDf = spark.read.parquet(s"$path/meta")
-    val metaRow = metaDf.head()
-    val dim = metaRow.getAs[Int]("dim")
-    val bks = books(spark, path)
-    val e = transformIn(vectors.select(col("vec_id"), col("embedding")),
-      permFromMeta(metaRow, metaDf.columns), rotation(spark, path))
-      .withColumn("nrm", Ann.norm(col("embedding")))
-    val cents = centroids(spark, path)
-    val lists = spark.read.parquet(listsPath(spark, path))
-      .select(col("cent_id").cast("long").as("cent_id"),
-        col("vec_id"), col("codes"), col("rec_nrm"))
+    val g = new Geometry(spark, path)
+    val lists = listRows(spark, listsPath(spark, path))
     // corpus-sized probe side: hint the shuffle join (a broadcast here
     // would ship the whole corpus's LUTs to every task)
     val scored = lists.hint("shuffle_hash")
-      .join(Ann.adcProbes(e, cents, bks, dim, nprobe), "cent_id")
+      .join(Ann.adcProbes(g.prepare(vectors), g.centsLocal, g.books, g.dim,
+        nprobe), "cent_id")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        graft.functions.TextSim.r6(
-          PQ.adcDot(col("lut"), col("codes"), bks.m) /
-            (col("q_nrm") * col("rec_nrm"))).as("cos_sim"))
-    Ann.rankTopK(spark, scored, r)
+        PQ.adcCosine(col("lut"), col("q_nrm"), col("codes"), col("rec_nrm"),
+          g.books.m).as("cos_sim"))
+    writeNeighbors(Ann.rankTopK(spark, scored, r), lists, path)
+  }
+
+  /** The list table's scoring columns `(cent_id, vec_id, codes,
+    * rec_nrm)`, `cent_id` as long. `cents` prunes the read to those
+    * lists: Int literals on purpose — partition-type inference reads
+    * cent_id as int, and a cast around the partition attribute would
+    * keep the IN out of PartitionFilters (post-scan filtering instead
+    * of directory pruning).
+    */
+  private def listRows(spark: SparkSession, dir: String,
+    cents: Option[Array[Int]] = None): DataFrame = {
+    val all = spark.read.parquet(dir)
+    cents.fold(all)(c => all.filter(col("cent_id").isin(c: _*)))
+      .select(col("cent_id").cast("long").as("cent_id"),
+        col("vec_id"), col("codes"), col("rec_nrm"))
+  }
+
+  /** The one `nbrs/` writer: ranked `(query_id, vec_id)` neighbor rows
+    * as `(src_id, nbr_id, nbr_cent)`, each neighbor tagged with its list
+    * from the `lists` rows.
+    */
+  private def writeNeighbors(ranked: DataFrame, lists: DataFrame,
+    path: String): Unit =
+    ranked
       .join(lists.select(col("vec_id"), col("cent_id").as("nbr_cent")), "vec_id")
       .select(col("query_id").as("src_id"), col("vec_id").as("nbr_id"),
         col("nbr_cent"))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/nbrs")
+
+  /** The one SDC scorer: the top `r` of candidate `(query_id, vec_id)`
+    * pairs by SDC cosine, both ends read from their stored codes in
+    * `lists` ([[PQ.sdcTables]]/[[graft.functions.SdcDot]] — no vectors,
+    * no decode).
+    */
+  private def sdcTopR(spark: SparkSession, lists: DataFrame,
+    books: PQ.PqBooks, r: Int): DataFrame => DataFrame = {
+    val sdc = PQ.sdcTables(books)
+    val aSide = lists.select(col("vec_id").as("query_id"),
+      col("codes").as("a_codes"), col("rec_nrm").as("a_nrm"))
+    val bSide = lists.select(col("vec_id"),
+      col("codes").as("b_codes"), col("rec_nrm").as("b_nrm"))
+    cand => Ann.rankTopK(spark,
+      cand.join(aSide, "query_id").join(bSide, "vec_id")
+        .select(col("query_id"), col("vec_id"),
+          graft.functions.TextSim.r6(
+            graft.functions.SdcDot(col("a_codes"), col("b_codes"), sdc) /
+              (col("a_nrm") * col("b_nrm"))).as("cos_sim")), r)
   }
 
   /** Rebuild the neighbor table from STORED CODES ALONE — no original
@@ -448,46 +497,26 @@ object IndexStore {
 
   def refreshNeighbors(spark: SparkSession, path: String, r: Int = 8,
     iters: Int = 2): Unit = {
-    val bks = books(spark, path)
-    val sdc = PQ.sdcTables(bks)
-    val lists = spark.read.parquet(listsPath(spark, path))
-      .select(col("cent_id").cast("long").as("cent_id"),
-        col("vec_id"), col("codes"), col("rec_nrm"))
-      .persist()
-    val aSide = lists.select(col("vec_id").as("query_id"),
-      col("codes").as("a_codes"), col("rec_nrm").as("a_nrm"))
-    val bSide = lists.select(col("vec_id"),
-      col("codes").as("b_codes"), col("rec_nrm").as("b_nrm"))
-    def topR(cand: DataFrame): DataFrame =
-      Ann.rankTopK(spark,
-        cand.join(aSide, "query_id").join(bSide, "vec_id")
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.TextSim.r6(
-              graft.functions.SdcDot(col("a_codes"), col("b_codes"), sdc) /
-                (col("a_nrm") * col("b_nrm"))).as("cos_sim")), r)
+    val lists = listRows(spark, listsPath(spark, path)).persist()
+    val topR = sdcTopR(spark, lists, books(spark, path), r)
     val n = lists.count()
     val nBuckets = math.max(1L, n / SampleBucketRows)
     val nLists = lists.select("cent_id").distinct().count()
     // ~SampleBucketRows-sized buckets WITHIN each list: O(n) init
     // candidates (never the O(Σ list²) intra-list self-join)
     val nListBuckets = math.max(1L, n / math.max(1L, nLists) / SampleBucketRows)
-    val intraSampled = {
-      val b = lists.select(col("cent_id"), col("vec_id"),
-        pmod(hash(col("vec_id"), lit(-1)), lit(nListBuckets)).as("bkt"))
-      b.as("x").join(b.as("y"),
-        col("x.cent_id") === col("y.cent_id") && col("x.bkt") === col("y.bkt"))
+    // the pairs of rows sharing a `hash(vec_id, seed) % buckets` bucket
+    // (and the `within` columns)
+    def pairs(buckets: Long, seed: Int, within: String*): DataFrame = {
+      val b = lists.select((within :+ "vec_id").map(col) :+
+        pmod(hash(col("vec_id"), lit(seed)), lit(buckets)).as("bkt"): _*)
+      b.as("x").join(b.as("y"), within :+ "bkt")
         .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("vec_id"))
         .filter(col("query_id") =!= col("vec_id"))
     }
-    def sampled(round: Int): DataFrame = {
-      val b = lists.select(col("vec_id"),
-        pmod(hash(col("vec_id"), lit(round)), lit(nBuckets)).as("bkt"))
-      b.as("x").join(b.as("y"), col("x.bkt") === col("y.bkt"))
-        .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("vec_id"))
-        .filter(col("query_id") =!= col("vec_id"))
-    }
-    var nbrs = Iterate.materialize(
-      topR(intraSampled.unionByName(sampled(-2)).distinct()))
+    def sampled(round: Int): DataFrame = pairs(nBuckets, round)
+    var nbrs = Iterate.materialize(topR(pairs(nListBuckets, -1, "cent_id")
+      .unionByName(sampled(-2)).distinct()))
     var it = 0
     while (it < iters) {
       val edges = nbrs.select(col("query_id").as("src_id"),
@@ -505,11 +534,7 @@ object IndexStore {
       nbrs = Iterate.materialize(topR(cand))
       it += 1
     }
-    nbrs
-      .join(lists.select(col("vec_id"), col("cent_id").as("nbr_cent")), "vec_id")
-      .select(col("query_id").as("src_id"), col("vec_id").as("nbr_id"),
-        col("nbr_cent"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/nbrs")
+    writeNeighbors(nbrs, lists, path)
     lists.unpersist()
   }
 
@@ -532,10 +557,7 @@ object IndexStore {
     */
   def refreshNeighborsDelta(spark: SparkSession, path: String,
     r: Int = 8): Long = {
-    val lists = spark.read.parquet(listsPath(spark, path))
-      .select(col("cent_id").cast("long").as("cent_id"),
-        col("vec_id"), col("codes"), col("rec_nrm"))
-      .persist()
+    val lists = listRows(spark, listsPath(spark, path)).persist()
     val oldEdges = spark.read.parquet(s"$path/nbrs")
       .select(col("src_id").as("query_id"), col("nbr_id").as("vec_id"))
       .persist()
@@ -546,12 +568,6 @@ object IndexStore {
       .persist()
     val nNew = newRows.count()
     if (nNew > 0) {
-      val bks = books(spark, path)
-      val sdc = PQ.sdcTables(bks)
-      val aSide = lists.select(col("vec_id").as("query_id"),
-        col("codes").as("a_codes"), col("rec_nrm").as("a_nrm"))
-      val bSide = lists.select(col("vec_id"),
-        col("codes").as("b_codes"), col("rec_nrm").as("b_nrm"))
       val intraNew = newRows.select(col("cent_id"),
         col("vec_id").as("query_id"))
         .join(lists.select(col("cent_id"), col("vec_id")), "cent_id")
@@ -571,17 +587,10 @@ object IndexStore {
           col("query_id").as("vec_id")))
         .unionByName(oldEdges)
         .distinct()
-      val merged = Iterate.materialize(Ann.rankTopK(spark,
-        cand.join(aSide, "query_id").join(bSide, "vec_id")
-          .select(col("query_id"), col("vec_id"),
-            graft.functions.TextSim.r6(
-              graft.functions.SdcDot(col("a_codes"), col("b_codes"), sdc) /
-                (col("a_nrm") * col("b_nrm"))).as("cos_sim")), r)
-        .join(lists.select(col("vec_id"), col("cent_id").as("nbr_cent")),
-          "vec_id")
-        .select(col("query_id").as("src_id"), col("vec_id").as("nbr_id"),
-          col("nbr_cent"))) // sever lineage from nbrs/ before overwriting it
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$path/nbrs")
+      // the cut severs lineage from nbrs/ before overwriting it
+      writeNeighbors(
+        Iterate.materialize(sdcTopR(spark, lists, books(spark, path), r)(cand)),
+        lists, path)
     }
     lists.unpersist(); oldEdges.unpersist(); newRows.unpersist()
     nNew
@@ -599,9 +608,7 @@ object IndexStore {
     */
   def maintainNeighbors(spark: SparkSession, path: String, r: Int = 8,
     iters: Int = 2, fullAt: Double = 0.25): String = {
-    val nbrsPath = new org.apache.hadoop.fs.Path(s"$path/nbrs")
-    val fs = nbrsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(nbrsPath)) {
+    if (!exists(spark, s"$path/nbrs")) {
       refreshNeighbors(spark, path, r, iters)
       return "full"
     }
@@ -620,10 +627,6 @@ object IndexStore {
     }
   }
 
-  /** The stored PQ codebooks as driver-resident [[PQ.PqBooks]]. */
-  def books(spark: SparkSession, path: String): PQ.PqBooks =
-    PQ.collectBooksFromRows(PQ.collectRows(spark.read.parquet(s"$path/codebooks")))
-
   /** A SERVED index, opened once: layout, coarse centroids, and PQ
     * codebooks are read and collected a single time (they are index
     * metadata — nlist + m·k small rows), so EVERY query batch after
@@ -633,50 +636,41 @@ object IndexStore {
     * storage. This is the steady-state serving shape — `search(path)`
     * below is the one-shot convenience that opens per call.
     *
+    * A Handle is the one holder of the stored geometry it serves (read
+    * through the one private reader at open), and it owns the one
+    * search body: [[search]], [[searchFiltered]] and [[searchExpanded]]
+    * each prepare the queries, probe, read only the probed lists and
+    * score the codes through it, so a change to how a query is served
+    * lands in one place.
+    *
     * The handle pins the list-table GENERATION current at open time:
     * a concurrent [[compact]] never changes (or breaks) an open
     * handle's reads; re-[[open]] to serve from the compacted table.
     */
   final class Handle private[IndexStore] (spark: SparkSession,
-    path: String, listsLocation: String, val dim: Int,
-    centRows: Array[org.apache.spark.sql.Row], val books: PQ.PqBooks,
-    perm: Array[Int], rot: Array[Array[Double]], ktop: Int = 0,
-    nlist: Int = 0, topRows: Array[org.apache.spark.sql.Row] = Array.empty) {
+    path: String, listsLocation: String, g: Geometry) {
+    val dim: Int = g.dim
+    val books: PQ.PqBooks = g.books
+    private val centsLocal = g.centsLocal
+    private val prepare = g.prepare
 
-    private def localCentFrame(rows: Array[org.apache.spark.sql.Row]):
-        DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cent_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("c_emb",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, containsNull = false)),
-        org.apache.spark.sql.types.StructField("c_nrm",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
-
-    /** Driver-local centroid frame (no storage read, no job). */
-    private val centsLocal: DataFrame = localCentFrame(centRows)
-
-    /** Routed serving (ktop > 0): top cells as a driver-local frame
-      * for the route argmax, leaves as the grouped Broadcast matrix —
-      * both built once at open, like every other piece of Handle
-      * metadata.
+    /** Routed serving: the leaves as the grouped Broadcast matrix,
+      * built once at open like every other piece of Handle metadata.
       */
-    private val topLocal: Option[DataFrame] =
-      if (ktop > 0) Some(localCentFrame(topRows)) else None
     private val routedBc:
         Option[org.apache.spark.broadcast.Broadcast[graft.functions.RoutedCents]] =
-      if (ktop > 0) Some(graft.functions.RoutedNearest.broadcastFromRows(
-        spark.sparkContext, centRows, ktop, nlist / ktop))
-      else None
+      g.route.map { case (_, ktop, kSub) =>
+        graft.functions.RoutedNearest.broadcastFromRows(
+          spark.sparkContext, g.centRows, ktop, kSub)
+      }
 
-    /** Probe rows for a routed index: route each query to its
-      * `routeWidth` nearest TOP cells (kTop dots), then the
+    /** ADC probe rows of prepared queries. Flat stores rank all
+      * leaves; routed stores route each query to its `routeWidth`
+      * nearest TOP cells (kTop dots), then the
       * [[graft.functions.RoutedNearest]] argmax picks `nprobe` leaves
       * among only those cells' leaves — kTop + routeWidth·kSub dots
-      * per query instead of nlist. Same margin gap rule, same probe
-      * row shape as the flat [[Ann.adcProbes]].
+      * per query instead of nlist. Either way `margin` applies
+      * [[Ann.probeLists]]' distance-gap rule to the ranked leaves.
       *
       * `routeMargin` is the adaptive-nprobe distance-gap rule applied
       * ONE LEVEL UP: `routeWidth` becomes the cap and each query drops
@@ -685,34 +679,43 @@ object IndexStore {
       * a boundary query keeps its full fan-out. A per-row HOF filter
       * over the ≤routeWidth ranked cells: no extra pass, no join.
       */
-    private def routedAdcProbes(q: DataFrame, nprobe: Int,
+    private def adcProbes(q: DataFrame, nprobe: Int,
       margin: Option[Double], routeWidth: Int,
-      routeMargin: Option[Double]): DataFrame = {
-      val tc = graft.functions.NearestCentroids.fromFrame(
-        col("embedding"), topLocal.get, routeWidth)
-      val groups = routeMargin match {
-        case None => transform(col("__tc"), s => s("cent_id"))
-        case Some(rm) => transform(
-          filter(col("__tc"), s => s("c_sim") >=
-            element_at(col("__tc"), 1).getField("c_sim") - lit(rm)),
-          s => s("cent_id"))
-      }
-      val base = q.select(col("vec_id").as("query_id"),
-        PQ.adcLut(col("embedding"), books, dim).as("lut"),
-        col("nrm").as("q_nrm"), col("embedding"), tc.as("__tc"))
-        .withColumn("__nc", graft.functions.RoutedNearest(
-          groups, col("embedding"), routedBc.get, nprobe))
-      val kept = margin match {
-        case None => base.select(col("query_id"), col("lut"),
-          col("q_nrm"), explode(col("__nc")).as("p"))
-        case Some(mm) => base.select(col("query_id"), col("lut"),
-          col("q_nrm"),
-          element_at(col("__nc"), 1).getField("c_sim").as("__best"),
-          explode(col("__nc")).as("p"))
-          .filter(col("p.c_sim") >= col("__best") - mm)
-      }
-      kept.select(col("query_id"), col("p.cent_id").as("cent_id"),
-        col("lut"), col("q_nrm"))
+      routeMargin: Option[Double]): DataFrame = g.route match {
+      case None =>
+        Ann.adcProbes(q, centsLocal, books, dim, nprobe, margin)
+      case Some((top, _, _)) =>
+        val groups = routeMargin match {
+          case None => transform(col("__tc"), s => s("cent_id"))
+          case Some(rm) => transform(
+            filter(col("__tc"), s => s("c_sim") >=
+              element_at(col("__tc"), 1).getField("c_sim") - lit(rm)),
+            s => s("cent_id"))
+        }
+        Ann.adcProbesBy(
+          q.withColumn("__tc", graft.functions.NearestCentroids.fromFrame(
+            col("embedding"), top, routeWidth)),
+          graft.functions.RoutedNearest(groups, col("embedding"),
+            routedBc.get, nprobe),
+          books, dim, margin)
+    }
+
+    /** The one search body: prepare the queries, `probe` them, read
+      * only the lists the probe rows name — the probed ids are
+      * collected so the `IN` lands in the scan's PartitionFilters —
+      * `restrict` that read, and score the codes against the probe rows
+      * joined `on` their shared keys ([[Ann.scoreCodes]]). Callers rank
+      * the `(query_id, vec_id, cos_sim)` rows ([[Ann.rankTopK]]).
+      */
+    private def probeAndScore(queries: DataFrame,
+      on: Seq[String] = Seq("cent_id"),
+      restrict: DataFrame => DataFrame = identity)(
+      probe: DataFrame => DataFrame): DataFrame = {
+      val probes = probe(prepare(queries))
+      val probed = probes.select(col("cent_id")).distinct()
+        .collect().map(_.getLong(0).toInt).sorted
+      Ann.scoreCodes(restrict(listRows(spark, listsLocation, Some(probed))),
+        probes, books, on)
     }
 
     /** `margin` switches to per-query ADAPTIVE probe widths
@@ -725,26 +728,9 @@ object IndexStore {
     def search(queries: DataFrame, k: Int = Ann.TopK,
       nprobe: Int = Ann.NProbe, margin: Option[Double] = None,
       routeWidth: Int = RouteWidth,
-      routeMargin: Option[Double] = None): DataFrame = {
-      val q = transformIn(
-        queries.select(col("vec_id"), col("embedding")), perm, rot)
-        .withColumn("nrm", Ann.norm(col("embedding")))
-      val probes =
-        if (ktop > 0) routedAdcProbes(q, nprobe, margin, routeWidth,
-          routeMargin)
-        else Ann.adcProbes(q, centsLocal, books, dim, nprobe, margin)
-      val probed = probes.select(col("cent_id")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      // Int literals on purpose: partition-type inference reads cent_id
-      // as int, and a cast around the partition attribute would keep
-      // the IN out of PartitionFilters (post-scan filtering instead of
-      // directory pruning).
-      val lists = spark.read.parquet(listsLocation)
-        .filter(col("cent_id").isin(probed.map(_.toInt): _*))
-        .select(col("cent_id").cast("long").as("cent_id"),
-          col("vec_id"), col("codes"), col("rec_nrm"))
-      Ann.rankCodes(spark, lists, probes, books, k)
-    }
+      routeMargin: Option[Double] = None): DataFrame =
+      Ann.rankTopK(spark, probeAndScore(queries)(
+        adcProbes(_, nprobe, margin, routeWidth, routeMargin)), k)
 
     /** METADATA-FILTERED [[search]] (the vector-store
       * query-with-filter capability): candidates are restricted to
@@ -762,22 +748,10 @@ object IndexStore {
     def searchFiltered(queries: DataFrame, allowed: DataFrame,
       k: Int = Ann.TopK, nprobe: Int = Ann.NProbe,
       margin: Option[Double] = None,
-      routeWidth: Int = RouteWidth): DataFrame = {
-      val q = transformIn(
-        queries.select(col("vec_id"), col("embedding")), perm, rot)
-        .withColumn("nrm", Ann.norm(col("embedding")))
-      val probes =
-        if (ktop > 0) routedAdcProbes(q, nprobe, margin, routeWidth, None)
-        else Ann.adcProbes(q, centsLocal, books, dim, nprobe, margin)
-      val probed = probes.select(col("cent_id")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      val lists = spark.read.parquet(listsLocation)
-        .filter(col("cent_id").isin(probed.map(_.toInt): _*))
-        .select(col("cent_id").cast("long").as("cent_id"),
-          col("vec_id"), col("codes"), col("rec_nrm"))
-        .join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      Ann.rankCodes(spark, lists, probes, books, k)
-    }
+      routeWidth: Int = RouteWidth): DataFrame =
+      Ann.rankTopK(spark, probeAndScore(queries, restrict =
+        _.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi"))(
+        adcProbes(_, nprobe, margin, routeWidth, None)), k)
 
     /** [[search]] plus ONE hop of [[buildNeighbors]] expansion: the
       * shortlist's stored neighbors (a broadcast join of the |Q|·k
@@ -786,45 +760,35 @@ object IndexStore {
       * reaches lists the probe skipped while every join stays
       * broadcast-or-pruned (no traversal, no corpus shuffle). Exact
       * re-rank downstream ([[Ann.rerank]]) converts the candidate
-      * coverage into exact recall.
+      * coverage into exact recall. The shortlist is read three times,
+      * so it is cut once ([[Iterate.materialize]]); nothing stays
+      * cached.
       */
     def searchExpanded(queries: DataFrame, k: Int = Ann.TopK,
       nprobe: Int = Ann.NProbe, margin: Option[Double] = None,
       routeWidth: Int = RouteWidth): DataFrame = {
-      val shortlist = search(queries, k, nprobe, margin, routeWidth).persist()
-      val nbrs = spark.read.parquet(s"$path/nbrs")
+      val shortlist = Iterate.materialize(
+        search(queries, k, nprobe, margin, routeWidth))
+        .select(col("query_id"), col("vec_id"), col("cos_sim"))
       val expansion = broadcast(shortlist.select(
         col("query_id"), col("vec_id").as("src_id")))
-        .join(nbrs, "src_id")
-        .select(col("query_id"), col("nbr_id").as("vec_id"), col("nbr_cent"))
+        .join(spark.read.parquet(s"$path/nbrs"), "src_id")
+        .select(col("query_id"), col("nbr_id").as("vec_id"),
+          col("nbr_cent").as("cent_id"))
         // the query itself can be its neighbor's neighbor
         .filter(col("vec_id") =!= col("query_id"))
         // a neighbor already in the shortlist is already scored
         .join(shortlist.select(col("query_id"), col("vec_id")),
           Seq("query_id", "vec_id"), "left_anti")
         .distinct()
-      val cents = expansion.select(col("nbr_cent")).distinct()
-        .collect().map(_.getLong(0)).map(_.toInt).sorted
-      if (cents.isEmpty) { shortlist.unpersist(); return shortlist }
-      val q = transformIn(
-        queries.select(col("vec_id"), col("embedding")), perm, rot)
-        .withColumn("nrm", Ann.norm(col("embedding")))
-      val qlut = q.select(col("vec_id").as("query_id"),
-        PQ.adcLut(col("embedding"), books, dim).as("lut"),
-        col("nrm").as("q_nrm"))
-      val lists = spark.read.parquet(listsLocation)
-        .filter(col("cent_id").isin(cents: _*))
-        .select(col("vec_id"), col("codes"), col("rec_nrm"))
-      val expScored = lists
-        .join(broadcast(expansion.join(qlut, "query_id")), "vec_id")
-        .select(col("query_id"), col("vec_id"),
-          graft.functions.TextSim.r6(
-            PQ.adcDot(col("lut"), col("codes"), books.m) /
-              (col("q_nrm") * col("rec_nrm"))).as("cos_sim"))
-      val out = Ann.rankTopK(spark,
-        shortlist.select(col("query_id"), col("vec_id"), col("cos_sim"))
-          .unionByName(expScored), k)
-      out
+      val expScored = probeAndScore(queries, on = Seq("cent_id", "vec_id"))(
+        // every expansion row's query is in `q`, so the outer join is
+        // the inner one; the probe-id collect reads only `expansion`'s
+        // columns, and Spark drops an outer join under such a distinct
+        q => expansion.join(q.select(col("vec_id").as("query_id"),
+          PQ.adcLut(col("embedding"), books, dim).as("lut"),
+          col("nrm").as("q_nrm")), Seq("query_id"), "left_outer"))
+      Ann.rankTopK(spark, shortlist.unionByName(expScored), k)
     }
   }
 
@@ -845,20 +809,7 @@ object IndexStore {
   def openAt(spark: SparkSession, path: String, gen: Long): Handle = {
     require(Lists.isSealed(spark, path, gen),
       s"generation $gen of $path is not sealed (vacuumed, torn, or never written)")
-    val ld = Lists.dir(path, gen)
-    val metaDf = spark.read.parquet(s"$path/meta")
-    val metaRow = metaDf.head()
-    val dim = metaRow.getAs[Int]("dim")
-    val centRows = centroids(spark, path)
-      .select(col("cent_id"), col("c_emb"), col("c_nrm")).collect()
-    val ktop = ktopFromMeta(metaRow, metaDf.columns)
-    val topRows =
-      if (ktop == 0) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(s"$path/topcents")
-        .select(col("cent_id"), col("c_emb"), col("c_nrm")).collect()
-    new Handle(spark, path, ld, dim, centRows,
-      books(spark, path), permFromMeta(metaRow, metaDf.columns),
-      rotation(spark, path), ktop, metaRow.getAs[Int]("nlist"), topRows)
+    new Handle(spark, path, Lists.dir(path, gen), new Geometry(spark, path))
   }
 
   /** Top-k ADC search of a `(vec_id, embedding)` query frame against

@@ -76,11 +76,9 @@ class EditSimSpec extends AnyFunSuite {
   test("text never rides the blocking self-join: prefix-keyed exchanges carry ids only") {
     // kill broadcast so the plan takes the shuffle shape it would at
     // scale — that's the shape the invariant is about
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    BroadcastThreshold(spark, -1) {
       checkBandExchanges()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   private def checkBandExchanges(): Unit = {

@@ -38,15 +38,13 @@ class FpOverlapSpec extends AnyFunSuite {
   }
 
   test("plan: no cartesian/nested-loop; df join stays a shuffle join under broadcast kill") {
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    BroadcastThreshold(spark, -1) {
       val out = FpOverlap.overlapPairs(Tables.docsAug(spark, sf))
       out.count()
       val plan = out.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), "cartesian product in plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   test("viral boilerplate fingerprints are cut before the self-join") {

@@ -117,10 +117,11 @@ class IndexStoreSpec extends AnyFunSuite {
     val cents = IndexStore.centroids(spark, p)
     val bks = IndexStore.books(spark, p)
     val e = vecs.withColumn("nrm", Ann.norm(col("embedding")))
-    val resident = PQ.encode(
+    val resident = PQ.encodeFromRows(
       KMeansVec.assign(e, cents)
         .select(col("vec_id"), col("cent_id"), col("embedding")),
-      IndexStore.bookFrames(spark, p), Dim, passthrough = Seq("cent_id"))
+      PQ.collectRows(spark.read.parquet(s"$p/codebooks")), Dim,
+      passthrough = Seq("cent_id"))
       .withColumn("rec_nrm", PQ.recNorm(col("codes"), bks))
     val q = queries.withColumn("nrm", Ann.norm(col("embedding")))
     val want = Ann.rankCodes(spark, resident,
@@ -415,6 +416,28 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(rExp >= rPlain,
       s"expansion recall $rExp must not trail plain recall $rPlain")
     plain.unpersist(); expanded.unpersist()
+  }
+
+  test("searchExpanded leaves no cache entry behind") {
+    IndexStore.buildNeighbors(vecs, path, r = 8, nprobe = 8)
+    val h = IndexStore.open(spark, path)
+    val plain = h.search(queries, k = 10, nprobe = 1)
+      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
+    val entries = org.apache.spark.sql.CacheEntries(spark)
+    val expanded = h.searchExpanded(queries, k = 10, nprobe = 1)
+      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
+    assert((expanded -- plain).nonEmpty, "the expansion must add candidates")
+    assert(org.apache.spark.sql.CacheEntries(spark) == entries,
+      "an expanded search must not leave its shortlist cached")
+  }
+
+  test("one search body on OPQ stores: filter, full-width filter, expansion") {
+    Seq("opq" -> false, "full-opq" -> true).foreach { case (kind, full) =>
+      val p = java.nio.file.Files.createTempDirectory(s"graft_body_$kind").toString
+      IndexStore.build(vecs, p, Dim, nlist = 8, m = 8, kcode = 16, iters = 3,
+        opq = !full, fullOpq = full)
+      SearchBodyChecks.check(kind, p, vecs, queries, fullProbe = 8)
+    }
   }
 
   test("NN-descent refresh maintains neighbors from stored codes alone") {

@@ -41,6 +41,22 @@ class LloydJobsSpec extends AnyFunSuite {
     assert(got(1) - got(0) == 8, s"jobs at iters 1, 2: $got")
   }
 
+  test("fits drop only the cache entries they created") {
+    val v = vecs
+    val mine = v.select(col("vec_id"), col("embedding")).persist()
+    try {
+      mine.count()
+      val entries = org.apache.spark.sql.CacheEntries(spark)
+      KMeansVec.fit(v, 8, 1)
+      PQ.fitFrame(v, Dim, 4, 8, 1)
+      KMeansVec.fitRouted(v, 2, 4, 1)
+      assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "a fit must not drop the caller's cache entry for its input plan")
+      assert(org.apache.spark.sql.CacheEntries(spark) == entries,
+        "a fit must leave no cache entry of its own behind")
+    } finally mine.unpersist()
+  }
+
   test("PQ encode collects its m codebooks in one job") {
     val v = vecs
     val books = PQ.fit(v, Dim, 4, 8, 1)

@@ -63,15 +63,13 @@ class PrefixJoinSpec extends AnyFunSuite {
   }
 
   test("plan: no cartesian/nested-loop under broadcast kill; df join stays shuffled") {
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    BroadcastThreshold(spark, -1) {
       val out = PrefixJoin.prefixPairs(Tables.docsAug(spark, sf))
       out.count()
       val plan = out.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), "cartesian product in plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   test("prefix length arithmetic is integer-exact at the n % 5 == 0 boundary") {

@@ -102,6 +102,11 @@ class RoutedIndexSpec extends AnyFunSuite {
       s"adaptive route fan-out must stay partition-pruned:\n$plan")
   }
 
+  test("one search body on a routed store: filter, full-width filter, expansion") {
+    SearchBodyChecks.check("routed", path, vecs, queries, fullProbe = NList,
+      fullRoute = KTop)
+  }
+
   test("streaming ingest into a routed store equals batch append") {
     // the whole streaming face inherits routing through append: each
     // micro-batch encodes through the stored two-level quantizer

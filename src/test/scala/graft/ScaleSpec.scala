@@ -29,9 +29,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("salted LSH self-join splits a hot bucket and preserves pairs exactly") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    BroadcastThreshold(spark, -1) {
       // synthetic viral bucket: 200 docs share band value 7; tail of
       // small buckets
       val bands = spark.range(2000).select(
@@ -53,7 +51,7 @@ class ScaleSpec extends AnyFunSuite {
       val plan = saltedDf.queryExecution.executedPlan.toString
       assert("hashpartitioning\\([^)]*__salt".r.findFirstIn(plan).isDefined,
         s"band exchange must include the salt key:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("ngram rare-shingle join never broadcasts (corpus-sized build side)") {
@@ -70,9 +68,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed manifest join is shuffle-free (both sides pre-bucketed on id)") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    BroadcastThreshold(spark, -1) {
       Tables.manifest(spark, sf).write.mode("overwrite")
         .bucketBy(8, "id").sortBy("id").saveAsTable("m_bucketed")
       Tables.currentSnapshot(spark, sf).write.mode("overwrite")
@@ -83,7 +79,7 @@ class ScaleSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange"),
         s"bucketed join must not shuffle:\n$plan")
       assert(joined.count() == Tables.currentSnapshot(spark, sf).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("approx_percentile tracks the exact order-statistic quantiles") {

@@ -1029,6 +1029,23 @@ object ExplainAudit {
       roundPlan.linesIterator.count(_.contains("InMemoryTableScan")) == 1 &&
         !roundPlan.contains("Exchange") && !roundPlan.contains("Join"))
 
+    // the vector-store upsert: the delta's buckets reach the store
+    // scan's PartitionFilters and its sources leave by a broadcast
+    // anti-join — the store rows are never shuffled
+    val vsDir = java.nio.file.Files.createTempDirectory("audit_vstore_").toString + "/s"
+    val vsRows = spark.range(0, 400).select(col("id").as("src_id"),
+      col("id").cast("string").as("chunk_text"))
+    sources.VectorStoreWriter.init(vsRows, vsDir)
+    val upsertPlan = sources.VectorStoreWriter
+      .merged(vsRows.filter(col("src_id") < 3), vsDir).get
+      .queryExecution.executedPlan.toString
+    flag("vector-store upsert reads only the affected buckets: bucket " +
+      "PartitionFilter, broadcast delta ids, no Exchange over store rows",
+      "PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(upsertPlan).isDefined &&
+        upsertPlan.contains("BroadcastHashJoin") && upsertPlan.contains("LeftAnti") &&
+        !upsertPlan.linesIterator.exists(l =>
+          l.contains("Exchange") && !l.contains("BroadcastExchange")))
+
     spark.stop()
     println(s"== ExplainAudit: ${checked - violated}/$checked OK, $violated VIOLATED")
     if (violated > 0) sys.exit(1)

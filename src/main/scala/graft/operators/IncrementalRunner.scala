@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * The incremental property that matters at 100 TB: the chunker and
   * the sink only ever see the delta. A daily run over an unchanged
-  * corpus reads the snapshot + manifest, classifies, and touches zero
-  * store partitions.
+  * corpus reads the snapshot + manifest, classifies, and rewrites no
+  * store bucket; a run with a delta rewrites only the buckets its
+  * sources hash to ([[VectorStoreWriter]]).
   */
 object IncrementalRunner {
 
@@ -27,8 +28,7 @@ object IncrementalRunner {
   case class Config(
     maxSources: Option[Int] = None,
     sourceFilter: Option[org.apache.spark.sql.Column] = None,
-    dryRun: Boolean = false,
-    snapshotFilter: Option[org.apache.spark.sql.Column] = None)
+    dryRun: Boolean = false)
 
   /** Run accounting — the reference's end-of-run counter line
     * (`processed/skipped/failed/vectorized`,
@@ -66,17 +66,13 @@ object IncrementalRunner {
   /** Initialize the store from the manifest (the "already processed"
     * sources), as the reference's first full run would have left it.
     */
-  def initStore(s: SparkSession, d: String, path: String,
-    filter: Option[org.apache.spark.sql.Column] = None): Unit = {
-    val m = Tables.manifest(s, d)
-    val srcs = filter.map(m.filter).getOrElse(m)
-      .select(col("id"), col("content_hash"))
-    VectorStoreWriter.init(vectorRows(s, d, srcs), path)
-  }
+  def initStore(s: SparkSession, d: String, path: String): Unit =
+    VectorStoreWriter.init(vectorRows(s, d,
+      Tables.manifest(s, d).select(col("id"), col("content_hash"))), path)
 
   /** One incremental run: classify, re-chunk the delta, upsert.
     * Returns the post-run store. Idempotent — rerunning with the same
-    * snapshot rewrites the same partitions identically.
+    * snapshot yields the same store rows.
     */
   def run(s: SparkSession, d: String, path: String): DataFrame =
     run(s, d, path, Config())
@@ -92,45 +88,31 @@ object IncrementalRunner {
   /** q_etl_e2e — the reference's WHOLE run_etl loop
     * (Notion_openai_vector_etl.py:617-779) as one hash-checked query:
     * initialize the store from the manifest, run one real incremental
-    * pass ([[initStore]] → [[runWithStats]] — real parquet partitions,
-    * real dynamic-partition-overwrite upsert, store read BACK from
-    * disk, not from lineage), then report the post-run store state
-    * per source — `(src_id, n_chunks, chunks_sig, provenance)` where
-    * `chunks_sig` = md5 over the source's ordered chunk-id list (the
-    * store partition's content identity) and provenance says whether
-    * this run rewrote the partition — with the run's [[RunStats]]
+    * pass over the whole corpus ([[initStore]] → [[runWithStats]] —
+    * real bucketed parquet store, real staged bucket upsert, store read
+    * BACK from disk, not from lineage), then report the post-run store
+    * state per source — `(src_id, n_chunks, chunks_sig, provenance)`
+    * where `chunks_sig` = md5 over the source's ordered chunk-id list
+    * (the source's content identity in the store) and provenance says
+    * whether this run rewrote the source — with the run's [[RunStats]]
     * counters riding every row. The DuckDB mirror recomputes the same
-    * post-run state purely (retained manifest partitions keep the
+    * post-run state purely (retained manifest sources keep the
     * manifest hash, upserted ones take the snapshot hash) — if the
-    * writer dropped, duplicated, or failed to overwrite a partition,
-    * the per-source signature hash catches it.
+    * writer dropped, duplicated, or failed to replace a source (or
+    * lost an untouched source sharing a rewritten bucket), the
+    * per-source signature hash catches it.
     *
-    * Scale: the sink rewrites only delta partitions; the readback
-    * groups by the partition key (src_id), so the census shuffle is
-    * partition-aligned; stats are `observe()` metrics on the upsert
-    * write.
-    *
-    * The query runs a deterministic 1-in-[[E2eMod]] SOURCE SUBSET:
-    * the pipeline is per-source independent, so the subset exercises
-    * every path (retained / changed / new / failed — the mod is chosen
-    * coprime to the fixture's 10/7/13 class periods so no class
-    * degenerates) while the bench
-    * pays a fraction of the sink's per-source partition directories —
-    * the local-FS small-file cost that dominated the full run (92 s
-    * at sf0.1, ~6k parquet dirs twice). Production runs unfiltered;
-    * at real scale the per-source layout itself is the knob
-    * ([[graft.sources.VectorStoreWriter]]'s bucket note).
+    * Scale: the sink rewrites only the delta's buckets; the readback
+    * census groups by `src_id`, a data column of the bucketed store,
+    * so it shuffles the store rows once; stats are `observe()` metrics
+    * on the upsert's one pass over the delta.
     */
-  val E2eMod = 11L
-
   def etlE2e(s: SparkSession, d: String): DataFrame = {
-    val sub = col("id") % E2eMod === 0
     val path = java.nio.file.Files
       .createTempDirectory("graft_e2e_store").toString
-    initStore(s, d, path, Some(sub))
-    val (store, stats) = runWithStats(s, d, path,
-      Config(snapshotFilter = Some(sub)))
-    val delta = Etl.manifestDelta(s, d).filter(col("needs_vector") && sub)
+    initStore(s, d, path)
+    val (store, stats) = runWithStats(s, d, path)
+    val delta = Etl.manifestDelta(s, d).filter(col("needs_vector"))
       .select(col("id"))
     val perSrc = store.groupBy(col("src_id"))
       .agg(count(lit(1)).cast("long").as("n_chunks"),
@@ -158,9 +140,8 @@ object IncrementalRunner {
        |delta AS (
        |  SELECT c.id, c.content_hash
        |  FROM current c LEFT JOIN manifest m ON m.id = c.id
-       |  WHERE c.id % 11 = 0
-       |    AND (m.id IS NULL OR m.content_hash <> c.content_hash
-       |         OR m.last_edited <> c.last_edited)
+       |  WHERE m.id IS NULL OR m.content_hash <> c.content_hash
+       |     OR m.last_edited <> c.last_edited
        |), good AS (
        |  SELECT d.id, d.content_hash
        |  FROM delta d JOIN documents dd ON dd.doc_id = d.id
@@ -168,7 +149,7 @@ object IncrementalRunner {
        |), srcs AS (
        |  SELECT m.id AS src_id, m.content_hash, 'retained' AS provenance
        |  FROM manifest m
-       |  WHERE m.id % 11 = 0 AND m.id NOT IN (SELECT id FROM delta)
+       |  WHERE m.id NOT IN (SELECT id FROM delta)
        |  UNION ALL
        |  SELECT id, content_hash, 'upserted' FROM good
        |), per_src AS MATERIALIZED (
@@ -183,7 +164,7 @@ object IncrementalRunner {
        |  SELECT
        |    (SELECT count(*) FROM good)::BIGINT AS processed,
        |    (SELECT count(*) FROM current c JOIN manifest m ON m.id = c.id
-       |     WHERE c.id % 11 = 0 AND m.content_hash = c.content_hash
+       |     WHERE m.content_hash = c.content_hash
        |       AND m.last_edited = c.last_edited)::BIGINT AS skipped,
        |    (SELECT count(*) FROM delta d
        |     LEFT JOIN documents dd ON dd.doc_id = d.id
@@ -200,7 +181,8 @@ object IncrementalRunner {
     * failed and excluded from chunking — the run completes like the
     * reference's skip-and-continue loop, it doesn't abort.
     *
-    * Every counter rides the ONE sink write as an `observe()` metric
+    * Every counter rides the sink's ONE pass over the delta (the
+    * upsert's cut of the chunk rows) as an `observe()` metric
     * (optimization guide §1.4/§5 — no extra actions): `skipped` on the
     * classified frame (all rows flow through the node; the
     * needs_vector filter sits above it), `processed`/`failed` on the
@@ -213,14 +195,12 @@ object IncrementalRunner {
     */
   def runWithStats(s: SparkSession, d: String, path: String,
     cfg: Config = Config()): (DataFrame, RunStats) = {
-    val classified0 = Etl.manifestDelta(s, d)
     val bad = col("text").isNull || trim(col("text")) === ""
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val obsC = org.apache.spark.sql.Observation()
     val obsJ = org.apache.spark.sql.Observation()
     val obsR = org.apache.spark.sql.Observation()
-    val classified = cfg.snapshotFilter.map(classified0.filter)
-      .getOrElse(classified0)
+    val classified = Etl.manifestDelta(s, d)
       .observe(obsC, sum((!col("needs_vector")).cast("long")).as("skipped"))
     var delta = classified.filter(col("needs_vector"))
       .select(col("id"), col("content_hash"))

@@ -556,24 +556,37 @@ object IndexStore {
     * (0 = nothing stale, nothing rewritten).
     */
   def refreshNeighborsDelta(spark: SparkSession, path: String,
-    r: Int = 8): Long = {
-    val lists = listRows(spark, listsPath(spark, path)).persist()
-    val oldEdges = spark.read.parquet(s"$path/nbrs")
+    r: Int = 8): Long =
+    foldInStale(spark, path, r, new Stale(spark, path))
+
+  /** The list rows with no `src_id` in `nbrs/` — appended since the
+    * last refresh — computed once, with the list table and old edges
+    * they were measured against (both persisted until `release`).
+    */
+  private final class Stale(spark: SparkSession, path: String) {
+    val lists: DataFrame = listRows(spark, listsPath(spark, path)).persist()
+    val oldEdges: DataFrame = spark.read.parquet(s"$path/nbrs")
       .select(col("src_id").as("query_id"), col("nbr_id").as("vec_id"))
       .persist()
-    val newRows = lists
+    val (rows, n) = Iterate.materialize(lists
       .join(oldEdges.select(col("query_id").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
-      .select(col("cent_id"), col("vec_id"))
-      .persist()
-    val nNew = newRows.count()
+      .select(col("cent_id"), col("vec_id")), count(lit(1)))
+    lazy val total: Long = lists.count()
+    def release(): Unit = { lists.unpersist(); oldEdges.unpersist() }
+  }
+
+  /** [[refreshNeighborsDelta]]'s merge round over a measured stale set. */
+  private def foldInStale(spark: SparkSession, path: String, r: Int,
+    stale: Stale): Long = {
+    import stale.{lists, oldEdges, rows => newRows, n => nNew}
     if (nNew > 0) {
       val intraNew = newRows.select(col("cent_id"),
         col("vec_id").as("query_id"))
         .join(lists.select(col("cent_id"), col("vec_id")), "cent_id")
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"))
-      val nBuckets = math.max(1L, lists.count() / SampleBucketRows)
+      val nBuckets = math.max(1L, stale.total / SampleBucketRows)
       val bkt = lists.select(col("vec_id"),
         pmod(hash(col("vec_id"), lit(0)), lit(nBuckets)).as("bkt"))
       val sampledNew = bkt.join(newRows.select(col("vec_id")), "vec_id")
@@ -592,19 +605,20 @@ object IndexStore {
         Iterate.materialize(sdcTopR(spark, lists, books(spark, path), r)(cand)),
         lists, path)
     }
-    lists.unpersist(); oldEdges.unpersist(); newRows.unpersist()
+    stale.release()
     nNew
   }
 
   /** The [[maintain]] pattern applied to the neighbor table: measure
     * staleness (fraction of list rows with no `src_id` in `nbrs/` —
     * i.e. appended since the last refresh) and pick the cheapest
-    * sufficient repair. Below `fullAt`, [[refreshNeighborsDelta]]
-    * folds the appends in at O(delta); past it the incremental merge
-    * would churn most of the table through single-round candidates
-    * anyway, so the full descent ([[refreshNeighbors]]) is both better
-    * and simpler. Returns what ran: "noop" | "delta" | "full"
-    * ("full" also covers a missing neighbor table).
+    * sufficient repair. Below `fullAt`, [[refreshNeighborsDelta]]'s
+    * merge folds the measured stale rows in at O(delta); past it the
+    * incremental merge would churn most of the table through
+    * single-round candidates anyway, so the full descent
+    * ([[refreshNeighbors]]) is both better and simpler. Returns what
+    * ran: "noop" | "delta" | "full" ("full" also covers a missing
+    * neighbor table).
     */
   def maintainNeighbors(spark: SparkSession, path: String, r: Int = 8,
     iters: Int = 2, fullAt: Double = 0.25): String = {
@@ -612,17 +626,14 @@ object IndexStore {
       refreshNeighbors(spark, path, r, iters)
       return "full"
     }
-    val ids = spark.read.parquet(listsPath(spark, path)).select("vec_id")
-    val total = ids.count()
-    val fresh = spark.read.parquet(s"$path/nbrs")
-      .select(col("src_id").as("vec_id")).distinct()
-    val stale = ids.join(fresh, Seq("vec_id"), "left_anti").count()
-    if (stale == 0L) "noop"
-    else if (total > 0 && stale.toDouble / total > fullAt) {
+    val stale = new Stale(spark, path)
+    if (stale.n == 0L) { stale.release(); "noop" }
+    else if (stale.n.toDouble / stale.total > fullAt) {
+      stale.release()
       refreshNeighbors(spark, path, r, iters)
       "full"
     } else {
-      refreshNeighborsDelta(spark, path, r)
+      foldInStale(spark, path, r, stale)
       "delta"
     }
   }
@@ -760,9 +771,9 @@ object IndexStore {
       * reaches lists the probe skipped while every join stays
       * broadcast-or-pruned (no traversal, no corpus shuffle). Exact
       * re-rank downstream ([[Ann.rerank]]) converts the candidate
-      * coverage into exact recall. The shortlist is read three times,
-      * so it is cut once ([[Iterate.materialize]]); nothing stays
-      * cached.
+      * coverage into exact recall. The shortlist is read three times
+      * and the expansion candidates twice, so each is cut once
+      * ([[Iterate.materialize]]); nothing stays cached.
       */
     def searchExpanded(queries: DataFrame, k: Int = Ann.TopK,
       nprobe: Int = Ann.NProbe, margin: Option[Double] = None,
@@ -770,7 +781,9 @@ object IndexStore {
       val shortlist = Iterate.materialize(
         search(queries, k, nprobe, margin, routeWidth))
         .select(col("query_id"), col("vec_id"), col("cos_sim"))
-      val expansion = broadcast(shortlist.select(
+      // the |Q|·k·r candidates feed the probe-id collect and the
+      // scoring plan: cut once, so they are built once
+      val expansion = Iterate.materialize(broadcast(shortlist.select(
         col("query_id"), col("vec_id").as("src_id")))
         .join(spark.read.parquet(s"$path/nbrs"), "src_id")
         .select(col("query_id"), col("nbr_id").as("vec_id"),
@@ -780,7 +793,7 @@ object IndexStore {
         // a neighbor already in the shortlist is already scored
         .join(shortlist.select(col("query_id"), col("vec_id")),
           Seq("query_id", "vec_id"), "left_anti")
-        .distinct()
+        .distinct())
       val expScored = probeAndScore(queries, on = Seq("cent_id", "vec_id"))(
         // every expansion row's query is in `q`, so the outer join is
         // the inner one; the probe-id collect reads only `expansion`'s

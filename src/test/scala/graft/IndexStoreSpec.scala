@@ -431,6 +431,19 @@ class IndexStoreSpec extends AnyFunSuite {
       "an expanded search must not leave its shortlist cached")
   }
 
+  test("searchExpanded builds its expansion candidates once") {
+    IndexStore.buildNeighbors(vecs, path, r = 8, nprobe = 8)
+    val h = IndexStore.open(spark, path)
+    def call(): Array[org.apache.spark.sql.Row] =
+      h.searchExpanded(queries, k = 10, nprobe = 1).collect()
+    val warm = call()
+    val (again, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(call())
+    assert(again.toSet == warm.toSet)
+    // 22 when the candidates were built under the probe-id collect and
+    // again in the scoring plan
+    assert(jobs <= 19, s"$jobs jobs for one warm ${warm.length}-row expanded search")
+  }
+
   test("one search body on OPQ stores: filter, full-width filter, expansion") {
     Seq("opq" -> false, "full-opq" -> true).foreach { case (kind, full) =>
       val p = java.nio.file.Files.createTempDirectory(s"graft_body_$kind").toString

@@ -1029,6 +1029,26 @@ object ExplainAudit {
       roundPlan.linesIterator.count(_.contains("InMemoryTableScan")) == 1 &&
         !roundPlan.contains("Exchange") && !roundPlan.contains("Join"))
 
+    // the driver mergePairs rewrite — Iterate's size rule held the
+    // batch and its contracted CC on the driver: the moved
+    // representatives come back as a local relation, and the stored
+    // labels stream past their broadcast once, never shuffled
+    val lblDir = java.nio.file.Files.createTempDirectory("audit_labels_").toString + "/l"
+    spark.range(0, 400).select(col("id"), (col("id") - col("id") % 10).as("lbl"))
+      .write.parquet(lblDir)
+    val rewritePlan = operators.Components.relabel(spark.read.parquet(lblDir),
+      operators.Iterate.local(spark, Seq(org.apache.spark.sql.Row(10L, 0L),
+        org.apache.spark.sql.Row(20L, 0L)), org.apache.spark.sql.types.StructType.fromDDL(
+        "rep BIGINT, new_lbl BIGINT")))
+      .queryExecution.executedPlan.toString
+    flag("driver mergePairs rewrite: one scan of the stored labels, broadcast " +
+      "join against the local moved reps, no Exchange over stored rows",
+      rewritePlan.linesIterator.count(_.contains("FileScan")) == 1 &&
+        rewritePlan.contains("BroadcastHashJoin") &&
+        rewritePlan.contains("LocalTableScan") &&
+        !rewritePlan.linesIterator.exists(l =>
+          l.contains("Exchange") && !l.contains("BroadcastExchange")))
+
     // the vector-store upsert: the delta's buckets reach the store
     // scan's PartitionFilters and its sources leave by a broadcast
     // anti-join — the store rows are never shuffled

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Connected components by iterative min-label propagation — the
   * pairs→clusters step every near-dup pipeline needs to materialize an
@@ -13,9 +16,10 @@ import org.apache.spark.sql.functions._
   * map-side). Labels only ever decrease, so the fixpoint check is a
   * strict count of decreased labels; rounds are bounded by the cluster
   * diameter — for dedup graphs (near-cliques from LSH buckets) that's
-  * 2-3 rounds, never the corpus size. Each round's labels are
-  * materialized via [[Iterate.materialize]] like the [[Crawl.bfs]]
-  * frontier.
+  * 2-3 rounds, never the corpus size. While the edges and the seed fit
+  * [[Iterate]]'s size rule the same rounds run on the driver over one
+  * collect of each; past it each round's labels are materialized via
+  * [[Iterate.materialize]] like the [[Crawl.bfs]] frontier.
   */
 object Components {
 
@@ -60,10 +64,17 @@ object Components {
     val sym = symmetric(pairs).persist()
     val seed = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl"))
-    val labels = minLabel(sym, seed)
+    val labels = minLabel(sym, seed, Some(pairSeed(_, _)))
     sym.unpersist()
     labels
   }
+
+  /** [[fromPairs]]' seed over held symmetric edges: each source labeled
+    * with the least of itself and its neighbours.
+    */
+  private def pairSeed(sym: Seq[(Any, Any)], ord: Ordering[Any]): Iterator[(Any, Any)] =
+    sym.groupMapReduce(_._1)(_._2)(ord.min).iterator
+      .map { case (id, mn) => (id, ord.min(id, mn)) }
 
   /** Incremental label maintenance — merge a BATCH of new pairs into a
     * stored fixpoint label table (`(id, lbl)`, e.g. last week's
@@ -74,51 +85,102 @@ object Components {
     * Shape: the stored graph is already CONTRACTED by its labels (every
     * old component is one representative = its min id), so the merge
     * reduces to CC over `new pairs mapped through the stored labels` —
-    * a graph bounded by 2·|batch|, never the corpus. The stored table
-    * is touched by exactly two broadcast joins (endpoint lookup, label
-    * rewrite): streamed, never shuffled, never iterated. Min-label
+    * a graph bounded by 2·|batch|, never the corpus. Min-label
     * semantics are preserved: the min id of a merged component is the
     * min over its old components' mins and the new ids.
+    *
+    * While the batch fits [[Iterate]]'s size rule it is collected, its
+    * endpoints' stored labels come back from one `isin`-filtered scan
+    * of the stored table, and the contracted CC runs on the driver
+    * ([[mergeOnDriver]]). Past it the endpoint lookup is two broadcast
+    * joins and the contracted CC is [[fromPairs]]. Either way the
+    * stored table is then touched once more, by the broadcast label
+    * rewrite ([[relabel]]): streamed, never shuffled, never iterated.
     */
   def mergePairs(labels: DataFrame, newPairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     // self-pairs carry no edge information but would leak their endpoint
     // into the new-node set below — drop them at the door
     val pairs = newPairs.select(col("a_id"), col("b_id"))
-      .filter(col("a_id") =!= col("b_id")).persist()
-    // endpoint → stored representative (itself if unseen). right_outer
-    // with the bounded batch as build side: the stored table streams.
-    val la = labels.select(col("id").as("a_id"), col("lbl").as("a_lbl"))
-    val lb = labels.select(col("id").as("b_id"), col("lbl").as("b_lbl"))
-    val looked = lb.join(
-      broadcast(la.join(broadcast(pairs), Seq("a_id"), "right_outer")),
-      Seq("b_id"), "right_outer").persist()
-    val contracted = looked.select(
-      coalesce(col("a_lbl"), col("a_id")).as("a_id"),
-      coalesce(col("b_lbl"), col("b_id")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
-    // CC over representatives + new ids only
-    val rep = fromPairs(contracted)
-    // ids the store has never seen (they were their own contraction)
-    val newIds = looked.select(
-      when(col("a_lbl").isNull, col("a_id")).as("na"),
-      when(col("b_lbl").isNull, col("b_id")).as("nb"))
-    val newNodes = newIds.select(col("na").as("id")).filter(col("na").isNotNull)
-      .unionAll(newIds.select(col("nb").as("id")).filter(col("nb").isNotNull))
-      .distinct()
-    val moved = rep.select(col("id").as("rep"), col("lbl").as("new_lbl"))
-    // rewrite stored rows whose representative merged (one broadcast
-    // join over the stored table), and label the new ids
-    val updated = labels.join(broadcast(moved),
-      labels("lbl") === col("rep"), "left_outer")
-      .select(labels("id"), coalesce(col("new_lbl"), labels("lbl")).as("lbl"))
-    val newLabeled = newNodes.join(moved, newNodes("id") === col("rep"), "left_outer")
-      .select(newNodes("id"), coalesce(col("new_lbl"), newNodes("id")).as("lbl"))
-    val out = updated.unionAll(newLabeled)
-    pairs.unpersist()
-    looked.unpersist()
-    out
+    mergeOnDriver(labels, pairs).getOrElse {
+      // endpoint → stored representative (itself if unseen). right_outer
+      // with the bounded batch as build side: the stored table streams.
+      // The cut lives as long as the returned frame, which reads it.
+      val la = labels.select(col("id").as("a_id"), col("lbl").as("a_lbl"))
+      val lb = labels.select(col("id").as("b_id"), col("lbl").as("b_lbl"))
+      val looked = Iterate.materialize(lb.join(
+        broadcast(la.join(broadcast(pairs), Seq("a_id"), "right_outer")),
+        Seq("b_id"), "right_outer"))
+      val contracted = looked.select(
+        coalesce(col("a_lbl"), col("a_id")).as("a_id"),
+        coalesce(col("b_lbl"), col("b_id")).as("b_id"))
+        .filter(col("a_id") =!= col("b_id"))
+      // CC over representatives + new ids only
+      val rep = fromPairs(contracted)
+      // ids the store has never seen (they were their own contraction)
+      val newIds = looked.select(
+        when(col("a_lbl").isNull, col("a_id")).as("na"),
+        when(col("b_lbl").isNull, col("b_id")).as("nb"))
+      val newNodes = newIds.select(col("na").as("id")).filter(col("na").isNotNull)
+        .unionAll(newIds.select(col("nb").as("id")).filter(col("nb").isNotNull))
+        .distinct()
+      val moved = rep.select(col("id").as("rep"), col("lbl").as("new_lbl"))
+      val newLabeled = newNodes.join(moved, newNodes("id") === col("rep"), "left_outer")
+        .select(newNodes("id"), coalesce(col("new_lbl"), newNodes("id")).as("lbl"))
+      relabel(labels, moved).unionAll(newLabeled)
+    }
   }
+
+  /** Stored rows whose representative merged take its new label: one
+    * broadcast join of the bounded `(rep, new_lbl)` frame over the
+    * stored table.
+    */
+  private[graft] def relabel(labels: DataFrame, moved: DataFrame): DataFrame =
+    labels.join(broadcast(moved), labels("lbl") === col("rep"), "left_outer")
+      .select(labels("id"), coalesce(col("new_lbl"), labels("lbl")).as("lbl"))
+
+  /** [[mergePairs]] with the batch on the driver, or None — after at
+    * most its two collects — when the batch or its stored labels would
+    * not fit [[Iterate]]'s size rule, or hold a null or a type the
+    * driver does not compare as Spark does. The moved representatives
+    * and the labeled new ids are local relations; the result has the
+    * distributed merge's schema.
+    */
+  private def mergeOnDriver(labels: DataFrame, pairs: DataFrame): Option[DataFrame] = {
+    val t = labels.schema("id").dataType
+    val types = Seq(labels.schema("lbl"), pairs.schema("a_id"), pairs.schema("b_id"))
+    if (!Iterate.exactEq(t) || types.exists(_.dataType != t)) return None
+    for {
+      ps <- Iterate.collectIfFits(pairs).flatMap(pairsOf)
+      ends = ps.iterator.flatMap(p => Iterator(p._1, p._2)).toSeq.distinct
+      stored <- (if (ends.isEmpty) Some(Array.empty[(Any, Any)])
+        else Iterate.collectIfFits(labels.filter(col("id").isin(ends: _*))
+          .select(col("id"), col("lbl"))).flatMap(pairsOf))
+    } yield {
+      // an endpoint maps to each of its stored labels (one, for a
+      // well-formed table), or to itself when the store never saw it
+      val looked = stored.groupMap(_._1)(_._2)
+      def reps(x: Any): Seq[Any] = looked.get(x).fold(Seq(x))(_.toSeq)
+      val contracted = for ((a, b) <- ps.toSeq; ra <- reps(a); rb <- reps(b)
+        if ra != rb) yield (ra, rb)
+      val sym = contracted ++ contracted.map(_.swap)
+      val ord = Iterate.order(t)
+      val rep = fixpoint(sym, pairSeed(sym, ord), ord)
+      def local(rows: Iterable[(Any, Any)], a: String, b: String) =
+        Iterate.local(labels.sparkSession, rows.map { case (x, y) => Row(x, y) }.toSeq,
+          StructType(Seq(StructField(a, t), StructField(b, t))))
+      val moved = rep.filter { case (id, l) => id != l }
+      val newLabeled = ends.filterNot(looked.contains).map(x => (x, rep.getOrElse(x, x)))
+      relabel(labels, local(moved, "rep", "new_lbl"))
+        .unionAll(local(newLabeled, "id", "lbl"))
+    }
+  }
+
+  /** Collected two-column rows as pairs; None when one holds a null. */
+  private def pairsOf(rows: Array[Row]): Option[Array[(Any, Any)]] =
+    Option.when(!rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))(
+      rows.map(r => (r.get(0), r.get(1))))
 
   private def symmetric(pairs: DataFrame): DataFrame =
     pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -131,23 +193,83 @@ object Components {
     * edges: min descendant) and, seeded with a sentinel, [[Bowtie]]'s
     * reachability-from-core.
     *
-    * Each round is ONE job: the round frame carries the previous label
-    * (`old`) alongside the new min, and the changed-label count rides
-    * the materialization job as an observe() metric — no second
-    * fixpoint-detection scan over the labels (which at 10^10 nodes is
-    * a full pass per round saved). Records [[lastRounds]].
+    * When the edges and then the seed collect within [[Iterate]]'s
+    * size rule, with no null and an [[Iterate.exactEq]] id type shared
+    * by `src` and `dst`, the rounds run on the driver ([[fixpoint]])
+    * and the result is a local relation with the distributed result's
+    * schema; `seedOf`, when given, derives the seed from the held edges
+    * instead of collecting it. Otherwise each round is ONE job: the
+    * round frame carries the previous label (`old`) alongside the new
+    * min, and the changed-label count rides the materialization job as
+    * an observe() metric — no second fixpoint-detection scan over the
+    * labels (which at 10^10 nodes is a full pass per round saved).
+    * Either way the rounds, and [[lastRounds]], are the same.
     */
-  private[graft] def minLabel(edges: DataFrame, seed: DataFrame): DataFrame = {
-    var labels = Iterate.materialize(seed.select(col("id"), col("lbl")))
-    var changed = 1L
+  private[graft] def minLabel(edges: DataFrame, seed: DataFrame,
+    seedOf: Option[(Seq[(Any, Any)], Ordering[Any]) => Iterator[(Any, Any)]] = None): DataFrame = {
+    val s = seed.select(col("id"), col("lbl"))
+    val e = edges.select(col("src"), col("dst"))
+    val (t, lt) = (s.schema("id").dataType, s.schema("lbl").dataType)
+    val ord = Iterate.order(lt)
+    val held = for {
+      _ <- Option.when(Iterate.exactEq(t) && Iterate.exactEq(lt) &&
+        e.schema.forall(_.dataType == t))(())
+      es <- Iterate.collectIfFits(e).flatMap(pairsOf)
+      ss <- seedOf match {
+        case Some(f) => Some(f(es.toSeq, ord))
+        case None => Iterate.collectIfFits(s).flatMap(pairsOf).map(_.iterator)
+      }
+    } yield (es, ss)
+    held match {
+      case Some((es, ss)) =>
+        val out = fixpoint(es, ss, ord)
+        // the round's schema, planned over empty frames of the inputs'
+        // schemas: no lineage shared with the inputs, no job
+        val spark = s.sparkSession
+        def empty(df: DataFrame) = spark.createDataFrame(List.empty[Row].asJava, df.schema)
+        Iterate.local(spark, out.iterator.map { case (id, l) => Row(id, l) }.toSeq,
+          minLabelRound(empty(s), empty(e)).select(col("id"), col("lbl")).schema)
+      case None =>
+        var labels = Iterate.materialize(s)
+        var changed = 1L
+        var rounds = 0
+        while (changed > 0) {
+          rounds += 1
+          val (next, n) = Iterate.materialize(minLabelRound(labels, e),
+            sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
+              .otherwise(0L)), col("id"), col("lbl"))
+          labels = next
+          changed = n
+        }
+        lastRounds = rounds
+        labels
+    }
+  }
+
+  /** [[minLabelRound]]s on the driver until no label changes: each
+    * round every id takes the min of its label and the labels of its
+    * in-edges' sources, all read from the previous round; an id with
+    * no label yet takes its in-edges' min and counts as changed.
+    * Records [[lastRounds]].
+    */
+  private def fixpoint(edges: Iterable[(Any, Any)], seed: Iterator[(Any, Any)],
+    ord: Ordering[Any]): collection.Map[Any, Any] = {
+    def lower(m: mutable.Map[Any, Any], id: Any, l: Any): Unit =
+      m.updateWith(id)(o => Some(o.fold(l)(ord.min(_, l))))
+    val labels = mutable.HashMap.empty[Any, Any]
+    seed.foreach { case (id, l) => lower(labels, id, l) }
+    val out = edges.groupMap(_._1)(_._2)
+    var changed = 1
     var rounds = 0
     while (changed > 0) {
       rounds += 1
-      val (next, n) = Iterate.materialize(minLabelRound(labels, edges),
-        sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
-          .otherwise(0L)), col("id"), col("lbl"))
-      labels = next
-      changed = n
+      val via = mutable.HashMap.empty[Any, Any]
+      for ((id, l) <- labels; d <- out.getOrElse(id, Nil)) lower(via, d, l)
+      changed = 0
+      for ((d, l) <- via if labels.get(d).forall(ord.lt(l, _))) {
+        labels(d) = l
+        changed += 1
+      }
     }
     lastRounds = rounds
     labels

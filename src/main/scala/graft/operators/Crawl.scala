@@ -60,7 +60,7 @@ object Crawl {
     // past the seed, the node column is the union of the roots' and dst
     val grown = StructType(seed.schema.updated(keys.size,
       node.copy(nullable = node.nullable || dst.nullable)))
-    val held = Option.when(seed.schema.forall(f => exactEq(f.dataType)) &&
+    val held = Option.when(seed.schema.forall(f => Iterate.exactEq(f.dataType)) &&
       Seq(src, dst).forall(_.dataType == node.dataType) && Iterate.fitsDriver(seed))(())
       .flatMap(_ => Iterate.collectIfFits(seed)).map(new Held(seed, grown, _))
     var depth = 0L
@@ -87,16 +87,6 @@ object Crawl {
     }
     edges.unpersist()
     visited
-  }
-
-  /** Types whose driver-side equality is Spark's join and distinct
-    * equality; anything else (floating point, binary, collated strings,
-    * nested) runs the distributed hop.
-    */
-  private def exactEq(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType | BooleanType |
-      DateType | TimestampType | TimestampNTZType | StringType | _: DecimalType => true
-    case _ => false
   }
 
   /** [[bfs]]'s state while it fits the driver: the visited frame's rows

@@ -57,7 +57,9 @@ object IncrementalCurator {
     * ids-must-be-new contract mid-plan.
     * The append commits only after the swap: a replay after a failure
     * between them finds the batch's ids still new, and re-merging
-    * merged pairs leaves the labels as they are.
+    * merged pairs leaves the labels as they are. A swap that stopped
+    * after dropping the old labels is rolled forward before the labels
+    * are read, here and in [[curated]].
     */
   def ingest(spark: SparkSession, newDocs: DataFrame, sigTable: String,
     labelTable: String): Unit =
@@ -81,6 +83,7 @@ object IncrementalCurator {
     */
   def ingestSig(spark: SparkSession, newSig: DataFrame, newDocs: DataFrame,
     sigTable: String, labelTable: String): Unit = {
+    SignatureStore.rollForward(spark, labelTable)
     val pairs = Iterate.materialize(
       SignatureStore.incrementalPairsFrom(spark, newSig, sigTable)
         .select(col("a_id"), col("b_id")))
@@ -96,11 +99,13 @@ object IncrementalCurator {
     * iteration). `filter(is_kept)` is the training set.
     */
   def curated(spark: SparkSession, sigTable: String,
-    labelTable: String): DataFrame =
+    labelTable: String): DataFrame = {
+    SignatureStore.rollForward(spark, labelTable)
     Dedup.keepFromLabels(
       SignatureStore.liveSignatures(spark, sigTable)
         .select(col("doc_id")).distinct(),
       spark.table(labelTable))
+  }
 
   /** Batches the e2e query slices the corpus into (mod split, so the
     * planted dup pairs straddle batches and every ingest exercises

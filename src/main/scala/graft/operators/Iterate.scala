@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** graft's one lineage cut. Iterative drivers (BFS frontier, Lloyd
   * rounds, label propagation) cut every hop — at depth 20 over 100 TB
@@ -38,7 +44,11 @@ import org.apache.spark.sql.functions.{coalesce, lit}
   * [[HeldOverhead]] of rows held as objects. A threshold ≤ 0 means
   * never. Above it the round stays a distributed plan of
   * cut rounds, so the plans at scale do not change. graft never sets
-  * the threshold: a deployment or a test session does.
+  * the threshold: a deployment or a test session does. Its users:
+  * [[Crawl.bfs]]'s frontier, [[Components.minLabel]]'s labels and edges
+  * (and [[Components.mergePairs]]' batch), and the vectors of
+  * [[KMeansVec]]'s Lloyd loop, counted at their real width
+  * ([[takeWithin]]) since Spark's estimate counts one array element.
   */
 object Iterate {
 
@@ -93,19 +103,70 @@ object Iterate {
   }
 
   /** `df`'s rows in one job, or None when they would not fit the size
-    * rule. Each of the P partitions sends at most its share of the
-    * rule's rows plus one, and a partition that fills that share says
-    * no, so telling costs the driver at most the rule's rows plus P.
+    * rule. Each of the P partitions reads at most its share of the
+    * rule's rows plus one and sends at most its share; a partition that
+    * passes its share says no ([[takeWithin]]).
     */
   def collectIfFits(df: DataFrame): Option[Array[Row]] = {
     val cap = maxRows(df)
-    if (cap < 0) None
-    else {
-      val rdd = df.rdd
-      val share = math.min(cap / math.max(rdd.getNumPartitions, 1) + 1,
-        Int.MaxValue.toLong).toInt
-      val parts = rdd.mapPartitions(it => Iterator(it.take(share).toArray)).collect()
-      Option.when(parts.forall(_.length < share))(parts.flatten)
-    }
+    if (cap < 0) None else takeWithin(df.rdd, cap)(_ => 1L)
+  }
+
+  /** The size rule in bytes of compactly held rows (primitive arrays,
+    * not boxed values): the threshold over [[HeldOverhead]]; -1 when it
+    * keeps none.
+    */
+  def maxBytes(df: DataFrame): Long = {
+    val t = threshold(df)
+    if (t <= 0) -1L else t / HeldOverhead
+  }
+
+  /** A result built on the driver as a local relation in one partition —
+    * what adaptive execution makes of a distributed result this small,
+    * so a writer downstream writes the same one file.
+    */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
+  /** `rdd`'s items in one job, or None when their total `weight` would
+    * pass `budget`: each of the P partitions sends items while their
+    * weight stays within its share, budget / P, and says no at the
+    * first item past it. A weight of `Long.MaxValue` never fits.
+    */
+  def takeWithin[T: ClassTag](rdd: RDD[T], budget: Long)(
+    weight: T => Long): Option[Array[T]] = {
+    val share = budget / math.max(rdd.getNumPartitions, 1)
+    val parts = rdd.mapPartitions { it =>
+      val kept = ArrayBuffer.empty[T]
+      var left = share
+      var fits = true
+      while (fits && it.hasNext) {
+        val x = it.next()
+        val w = weight(x)
+        fits = w <= left
+        if (fits) { left -= w; kept += x }
+      }
+      Iterator((fits, kept.toArray))
+    }.collect()
+    Option.when(parts.forall(_._1))(parts.flatMap(_._2))
+  }
+
+  /** Types whose driver-side equality and order are Spark's join,
+    * distinct and min semantics ([[order]]); anything else (floating
+    * point, binary, collated strings, nested) stays distributed.
+    */
+  def exactEq(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+      DateType | TimestampType | TimestampNTZType | StringType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** Spark's order on the external values of an [[exactEq]] type:
+    * strings by their UTF-8 bytes, everything else by its own
+    * `compareTo`.
+    */
+  def order(t: DataType): Ordering[Any] = t match {
+    case StringType => Ordering.by((s: Any) => UTF8String.fromString(s.asInstanceOf[String]))
+    case _ => (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 }

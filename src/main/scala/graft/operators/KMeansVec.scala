@@ -1,9 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.NearestCentroidsExpr
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 
 /** Deterministic Lloyd k-means over an `embedding: array<float>`
   * column — trains the coarse quantizer for [[Ann.ivfTrained]]
@@ -18,7 +25,11 @@ import org.apache.spark.storage.StorageLevel
   * groupBy shuffles (cent_id, dim) pairs — k·dim groups, partial-
   * aggregated map-side. Each round's centroids are materialized
   * ([[Iterate.materialize]]): k rows, cuts the iterative lineage
-  * exactly like [[Crawl.bfs]] does for its frontier.
+  * exactly like [[Crawl.bfs]] does for its frontier. Vectors that fit
+  * [[Iterate]]'s size rule at their real width are collected once and
+  * [[fit]] / [[PQ.fitFrame]] run every round on the driver instead,
+  * with the same arithmetic; the routed [[lloydLeaves]] stays
+  * distributed.
   *
   * Determinism: init = the k lowest vec_ids; ties in assignment break
   * on lowest cent_id; means are exact double sums in dim order.
@@ -61,16 +72,20 @@ object KMeansVec {
     * order — normalized and materialized as the next
     * `(keys…, cent_id, c_emb, c_nrm)` centroids.
     */
-  private def recenter(assigned: DataFrame, keys: Seq[String]): DataFrame = {
+  private def recenter(assigned: DataFrame, keys: Seq[String]): DataFrame =
+    Iterate.materialize(recentered(assigned, keys))
+
+  /** [[recenter]]'s plan, unmaterialized. */
+  private def recentered(assigned: DataFrame, keys: Seq[String]): DataFrame = {
     val g = keys.map(col) :+ col("cent_id")
-    Iterate.materialize(assigned
+    assigned
       .select(g :+ posexplode(col("embedding")).as(Seq("dim", "v")): _*)
       .groupBy(g :+ col("dim"): _*)
       .agg(avg(col("v").cast("double")).as("m"))
       .groupBy(g: _*)
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
         s => s("m").cast("float")).as("c_emb"))
-      .withColumn("c_nrm", Ann.norm(col("c_emb"))))
+      .withColumn("c_nrm", Ann.norm(col("c_emb")))
   }
 
   /** `iters` Lloyd rounds from `init`: each round recenters the rows
@@ -81,8 +96,7 @@ object KMeansVec {
     (1 to iters).foldLeft(init)((cents, _) => recenter(assigned(cents), keys))
 
   /** `iters` Lloyd rounds from a deterministic init; returns
-    * (cent_id, c_emb, c_nrm), every round's centroids materialized
-    * ([[Iterate.materialize]]).
+    * (cent_id, c_emb, c_nrm) ([[fitParts]]).
     */
   def fit(vectors: DataFrame, k: Int, iters: Int): DataFrame =
     fitParts(vectors, k, iters, Seq(col("embedding")), keyed = false)
@@ -90,53 +104,151 @@ object KMeansVec {
   /** The one Lloyd chain behind [[fit]] and [[PQ.fitFrame]]: every
     * `parts` view of the embedding (the whole vector for flat k-means,
     * the m subspace slices for PQ) trains its own k centroids, all in
-    * one chain of jobs. `keyed` tags each centroid with its part index
-    * as `sub`. Returns the materialized
-    * `([sub,] cent_id, c_emb, c_nrm)` frame.
-    *  - init: the k lowest vec_ids, shared by every part. The ids come
-    *    back via TakeOrdered (partial top-k per partition, never a full
-    *    sort) and the k-row rank map is built driver-side and broadcast
-    *    back — a k-long bounded-statistic collect, not an unpartitioned
-    *    row_number window.
-    *  - each round: ONE centroid collect feeds one
-    *    [[graft.functions.NearestCentroids]] argmax per part (rows
-    *    sorted by cent_id, as `fromFrame` does), and ONE [[recenter]]
-    *    covers all parts.
+    * one chain. `keyed` tags each centroid with its part index as
+    * `sub`. Returns the `([sub,] cent_id, c_emb, c_nrm)` frame.
+    *  - init: the k lowest vec_ids, shared by every part.
+    *  - each round: one [[graft.functions.NearestCentroids]] argmax per
+    *    part (centroids sorted by cent_id, as `fromFrame` does), and
+    *    one recentering of all parts: per-dim double means cast to
+    *    float, normalized.
+    *
+    * When the vectors fit [[Iterate]]'s size rule at their real width
+    * ([[heldVectors]]: one collect) the rounds run on the driver
+    * ([[lloydOnDriver]]) and the result is a local relation with the
+    * distributed result's schema. Otherwise every round is distributed
+    * and materialized:
+    *  - init ids come back via TakeOrdered (partial top-k per
+    *    partition, never a full sort) and the k-row rank map is built
+    *    driver-side and broadcast back — a k-long bounded-statistic
+    *    collect, not an unpartitioned row_number window.
+    *  - each round: ONE centroid collect feeds the per-part argmaxes,
+    *    and ONE [[recenter]] covers all parts.
     */
   private[operators] def fitParts(vectors: DataFrame, k: Int, iters: Int,
     parts: Seq[Column], keyed: Boolean): DataFrame = {
     val spark = vectors.sparkSession
     val keys = if (keyed) Seq("sub") else Nil
-    cached(vectors.select(col("vec_id"), col("embedding"))) { e =>
-      // one `(keys…, cent_id, embedding)` row per (vector, part): part
-      // j's slice labeled with `cid(j)`
-      def perPart(df: DataFrame, cid: Int => Column): DataFrame =
-        df.select(explode(array(parts.zipWithIndex.map { case (p, j) =>
-          struct(lit(j).as("sub"), cid(j).as("cent_id"), p.as("embedding"))
-        }: _*)).as("x"))
-          .select(keys.map(c => col(s"x.$c")) ++
-            Seq(col("x.cent_id"), col("x.embedding")): _*)
-      val initIds = e.orderBy(col("vec_id")).limit(k)
-        .select(col("vec_id")).collect().map(_.getLong(0)).sorted
+    val in = vectors.select(col("vec_id"), col("embedding"))
+    // one `(keys…, cent_id, embedding)` row per (vector, part): part
+    // j's slice labeled with `cid(j)`
+    def perPart(df: DataFrame, cid: Int => Column): DataFrame =
+      df.select(explode(array(parts.zipWithIndex.map { case (p, j) =>
+        struct(lit(j).as("sub"), cid(j).as("cent_id"), p.as("embedding"))
+      }: _*)).as("x"))
+        .select(keys.map(c => col(s"x.$c")) ++
+          Seq(col("x.cent_id"), col("x.embedding")): _*)
+    // the init centroids: the vectors `ids` name, `ids(i)` as cent_id i + 1
+    def initFrame(df: DataFrame, ids: Seq[Long]): DataFrame = {
       val idMap = spark.createDataFrame(
-        initIds.toIndexedSeq.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
+        ids.zipWithIndex.map { case (v, i) => (v, (i + 1).toLong) })
         .toDF("vec_id", "cent_id")
-      val init = Iterate.materialize(
-        perPart(e.join(broadcast(idMap), "vec_id"), _ => col("cent_id"))
-          .select(keys.map(col) ++ Seq(col("cent_id"),
-            col("embedding").as("c_emb"), Ann.norm(col("embedding")).as("c_nrm")): _*))
-      lloyd(init, iters, keys) { cents =>
-        val rows = cents.collect()
-        perPart(e, j => {
-          val rj = rows.filter(r => !keyed || r.getAs[Int]("sub") == j)
-            .sortBy(_.getAs[Long]("cent_id"))
-          element_at(graft.functions.NearestCentroids(parts(j),
-            rj.map(_.getAs[Long]("cent_id")),
-            rj.map(_.getAs[Seq[Float]]("c_emb").toArray),
-            rj.map(_.getAs[Double]("c_nrm")), 1), 1).getField("cent_id")
-        })
-      }
+      perPart(df.join(broadcast(idMap), "vec_id"), _ => col("cent_id"))
+        .select(keys.map(col) ++ Seq(col("cent_id"),
+          col("embedding").as("c_emb"), Ann.norm(col("embedding")).as("c_nrm")): _*)
     }
+    // part j's nearest of `cs`, its centroids sorted by cent_id
+    def nearest(j: Int, cs: Seq[Cent]): Column = {
+      val rj = cs.sortBy(_.id)
+      element_at(graft.functions.NearestCentroids(parts(j), rj.map(_.id).toArray,
+        rj.map(_.emb).toArray, rj.map(_.nrm).toArray, 1), 1).getField("cent_id")
+    }
+    heldVectors(in, parts) match {
+      case Some(held) =>
+        // the distributed result's schema, from its plan: no job
+        val shape = if (iters == 0) initFrame(in, Nil)
+          else recentered(perPart(in, j => nearest(j, Nil)), keys)
+        val rows = lloydOnDriver(held, k, iters, parts.size).map { c =>
+          val r = Seq(c.id, ArraySeq.unsafeWrapArray(c.emb), c.nrm)
+          Row.fromSeq(if (keyed) c.sub +: r else r)
+        }
+        Iterate.local(spark, rows, shape.schema)
+      case None =>
+        cached(in) { e =>
+          val initIds = e.orderBy(col("vec_id")).limit(k)
+            .select(col("vec_id")).collect().map(_.getLong(0)).sorted
+          val init = Iterate.materialize(initFrame(e, initIds.toIndexedSeq))
+          lloyd(init, iters, keys) { cents =>
+            val cs = cents.collect().map(r => Cent(if (keyed) r.getAs[Int]("sub") else 0,
+              r.getAs[Long]("cent_id"), r.getSeq[Float](r.fieldIndex("c_emb")).toArray,
+              r.getAs[Double]("c_nrm"))).toSeq
+            perPart(e, j => nearest(j, cs.filter(_.sub == j)))
+          }
+        }
+    }
+  }
+
+  /** A centroid of part `sub`. */
+  private final case class Cent(sub: Int, id: Long, emb: Array[Float], nrm: Double)
+
+  /** `in`'s `(vec_id, parts…)` rows on the driver, each part as a
+    * compact float array, or None when they would not fit [[Iterate]]'s
+    * size rule counted at their real width — n × (8 + 4 × floats)
+    * bytes, where Spark's row estimate counts an array as one element —
+    * or when an id repeats or is null, a part is null, holds a null or
+    * is not `array<float>`, or a part's length varies. One job.
+    */
+  private def heldVectors(in: DataFrame,
+    parts: Seq[Column]): Option[Array[(Long, Array[ArrayData])]] = {
+    val m = parts.size
+    val cols = in.select(col("vec_id") +: parts.zipWithIndex.map {
+      case (p, j) => p.as(s"p$j") }: _*)
+    val budget = Iterate.maxBytes(in)
+    val typed = cols.schema.head.dataType == LongType && cols.schema.tail.forall(
+      _.dataType match { case ArrayType(FloatType, _) => true; case _ => false })
+    if (budget < 0 || !typed || !Iterate.fitsDriver(in)) return None
+    val rows = cols.rdd.map { r =>
+      val ok = (0 to m).forall(!r.isNullAt(_)) &&
+        (1 to m).forall(i => !r.getSeq[Any](i).contains(null))
+      (if (ok) r.getLong(0) else 0L,
+        if (ok) Array.tabulate(m)(j => r.getSeq[Float](j + 1).toArray) else null)
+    }
+    Iterate.takeWithin(rows, budget)(r =>
+      if (r._2 == null) Long.MaxValue else 8L + 4L * r._2.iterator.map(_.length.toLong).sum)
+      .filter(rs => rs.iterator.map(_._1).distinct.size == rs.length &&
+        (0 until m).forall(j => rs.iterator.map(_._2(j).length).distinct.size <= 1))
+      .map(_.map { case (id, ps) =>
+        (id, ps.map(p => UnsafeArrayData.fromPrimitiveArray(p): ArrayData)) })
+  }
+
+  /** [[fitParts]]' init and `iters` rounds over held rows, in the
+    * distributed rounds' arithmetic: assignment is
+    * [[graft.functions.NearestCentroidsExpr]]'s own evaluation, and a
+    * new centroid is each dim's double mean cast to float, summed in
+    * row order (the collect's order, which a one-partition input's
+    * aggregation also follows). A centroid no row is assigned to is
+    * dropped, as the groupBy drops it. Centroids sorted by part, id.
+    */
+  private def lloydOnDriver(held: Array[(Long, Array[ArrayData])], k: Int,
+    iters: Int, m: Int): Seq[Cent] = {
+    def cent(j: Int, id: Long, emb: Array[Float]): Cent =
+      Cent(j, id, emb, math.sqrt(PQ.dot(emb, emb)))
+    val init = held.sortBy(_._1).take(k).zipWithIndex.toSeq.flatMap {
+      case ((_, ps), i) => (0 until m).map(j => cent(j, i + 1L, ps(j).toFloatArray))
+    }
+    val arg = BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = false)
+    (1 to iters).foldLeft(init) { (cents, _) =>
+      val nearest = (0 until m).map { j =>
+        val cs = cents.filter(_.sub == j).sortBy(_.id)
+        NearestCentroidsExpr(arg, cs.map(_.id).toArray, cs.map(_.emb).toArray,
+          cs.map(_.nrm).toArray, 1)
+      }
+      // a part's length is the same in every row: one count per centroid
+      val sums = mutable.HashMap.empty[(Int, Long), Array[Double]]
+      val counts = mutable.HashMap.empty[(Int, Long), Long].withDefaultValue(0L)
+      for ((_, ps) <- held; j <- 0 until m) {
+        val p = ps(j)
+        val nc = nearest(j).eval(InternalRow(p)).asInstanceOf[ArrayData]
+        if (nc.numElements() > 0) {
+          val key = (j, nc.getStruct(0, 2).getLong(0))
+          val sum = sums.getOrElseUpdate(key, new Array[Double](p.numElements()))
+          for (d <- sum.indices) sum(d) += p.getFloat(d).toDouble
+          counts(key) += 1
+        }
+      }
+      sums.toSeq.collect { case (key @ (j, id), sum) if sum.nonEmpty =>
+        cent(j, id, sum.map(x => (x / counts(key)).toFloat))
+      }
+    }.sortBy(c => (c.sub, c.id))
   }
 
   /** Two-level ROUTED coarse quantizer: [[fit]] trains `kTop` top

@@ -120,7 +120,7 @@ object PQ {
     * [[graft.functions.VecDot]] order every norm and codebook table
     * here is computed in.
     */
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
+  private[operators] def dot(a: Array[Float], b: Array[Float]): Double = {
     var s = 0.0
     var i = 0
     val n = math.min(a.length, b.length)

@@ -59,14 +59,26 @@ object SignatureStore {
 
   /** Replace catalog table `table` with `w`'s output: write
     * `<table>_next`, then drop `table` and rename. `table` stays intact
-    * until the write has committed, so `w` may read it.
+    * until the write has committed, so `w` may read it. A swap that
+    * stopped between the drop and the rename is finished first
+    * ([[rollForward]]).
     */
   private[graft] def replaceTable(spark: SparkSession, table: String,
     w: DataFrameWriter[Row]): Unit = {
+    rollForward(spark, table)
     w.mode(SaveMode.Overwrite).saveAsTable(s"${table}_next")
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE ${table}_next RENAME TO $table")
   }
+
+  /** Finishes a [[replaceTable]] that stopped between its drop and its
+    * rename: `table` is missing and `<table>_next` holds its committed
+    * replacement, which takes the name. Otherwise a no-op. Readers of
+    * a swapped table call it before they read.
+    */
+  private[graft] def rollForward(spark: SparkSession, table: String): Unit =
+    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(s"${table}_next"))
+      spark.sql(s"ALTER TABLE ${table}_next RENAME TO $table")
 
   /** Stored signatures minus tombstoned docs — what every consumer
     * reads. Deletion is a broadcast anti-join against the (bounded)

@@ -339,11 +339,12 @@ class ScaleSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 5L))
       .toDF("a_id", "b_id")
     // reliable checkpointing follows the session's checkpoint dir,
-    // scoped so the shared test session never keeps it
-    val got = CheckpointDirScope(spark.sparkContext, tmp) {
+    // scoped so the shared test session never keeps it; threshold −1:
+    // a fixpoint this small would run on the driver and never cut
+    val got = BroadcastThreshold(spark, -1L)(CheckpointDirScope(spark.sparkContext, tmp) {
       operators.Components.connectedComponents(nodes, pairs)
         .as[(Long, Long)].collect().toMap
-    }
+    })
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L) ++
       Seq(4L, 6L, 7L, 8L, 9L, 12L).map(i => i -> i)
@@ -413,10 +414,11 @@ class ScaleSpec extends AnyFunSuite {
       graft.sources.IndexStore.refreshNeighbors(spark, idx, r = 4, iters = 1)
       (labels, rows(s1), rows(c1), rows(spark.read.parquet(s"$idx/nbrs")))
     }
-    val local = run("local")
-    val sc = spark.sparkContext
-    val (reliable, sites) = CheckpointDirScope(sc, tmp) {
-      JobCounter.callSites(sc)(run("reliable"))
+    // threshold −1: every label fixpoint and Lloyd round takes its
+    // distributed, cut path — on the driver they never reach a cut
+    val (local, (reliable, sites)) = BroadcastThreshold(spark, -1L) {
+      val sc = spark.sparkContext
+      (run("local"), CheckpointDirScope(sc, tmp)(JobCounter.callSites(sc)(run("reliable"))))
     }
     val same = reliable == local
     assert(same, "reliable-checkpoint outputs diverge")

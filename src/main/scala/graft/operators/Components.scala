@@ -61,20 +61,33 @@ object Components {
     * by a final left join ([[Dedup.keepFrom]]), not by the iteration.
     */
   def fromPairs(pairs: DataFrame): DataFrame = {
-    val sym = symmetric(pairs).persist()
+    val sym = symmetric(pairs)
     val seed = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl"))
-    val labels = minLabel(sym, seed, Some(pairSeed(_, _)))
-    sym.unpersist()
-    labels
+    // on the driver the pairs alone are held: the seed is derived from them
+    val t = pairs.schema("a_id").dataType
+    Option.when(Iterate.exactEq(t) && pairs.schema("b_id").dataType == t)(())
+      .flatMap(_ => Iterate.collectIfFits(pairs.select(col("a_id"), col("b_id"))))
+      .flatMap(pairsOf)
+      .map(ps => labelsOf(seed, sym, ccOnDriver(ps.toSeq, Iterate.order(t))))
+      .getOrElse {
+        sym.persist()
+        val labels = rounds(seed, sym)
+        sym.unpersist()
+        labels
+      }
   }
 
-  /** [[fromPairs]]' seed over held symmetric edges: each source labeled
-    * with the least of itself and its neighbours.
+  /** [[fromPairs]] over pairs held on the driver: the same seed (each
+    * endpoint labeled with the least of itself and its neighbours) and
+    * the same rounds ([[fixpoint]]) over the symmetric edges.
     */
-  private def pairSeed(sym: Seq[(Any, Any)], ord: Ordering[Any]): Iterator[(Any, Any)] =
-    sym.groupMapReduce(_._1)(_._2)(ord.min).iterator
+  private def ccOnDriver(pairs: Seq[(Any, Any)], ord: Ordering[Any]): collection.Map[Any, Any] = {
+    val sym = pairs ++ pairs.map(_.swap)
+    val seed = sym.groupMapReduce(_._1)(_._2)(ord.min).iterator
       .map { case (id, mn) => (id, ord.min(id, mn)) }
+    fixpoint(sym, seed, ord)
+  }
 
   /** Incremental label maintenance — merge a BATCH of new pairs into a
     * stored fixpoint label table (`(id, lbl)`, e.g. last week's
@@ -164,9 +177,7 @@ object Components {
       def reps(x: Any): Seq[Any] = looked.get(x).fold(Seq(x))(_.toSeq)
       val contracted = for ((a, b) <- ps.toSeq; ra <- reps(a); rb <- reps(b)
         if ra != rb) yield (ra, rb)
-      val sym = contracted ++ contracted.map(_.swap)
-      val ord = Iterate.order(t)
-      val rep = fixpoint(sym, pairSeed(sym, ord), ord)
+      val rep = ccOnDriver(contracted, Iterate.order(t))
       def local(rows: Iterable[(Any, Any)], a: String, b: String) =
         Iterate.local(labels.sparkSession, rows.map { case (x, y) => Row(x, y) }.toSeq,
           StructType(Seq(StructField(a, t), StructField(b, t))))
@@ -193,57 +204,67 @@ object Components {
     * edges: min descendant) and, seeded with a sentinel, [[Bowtie]]'s
     * reachability-from-core.
     *
-    * When the edges and then the seed collect within [[Iterate]]'s
-    * size rule, with no null and an [[Iterate.exactEq]] id type shared
-    * by `src` and `dst`, the rounds run on the driver ([[fixpoint]])
-    * and the result is a local relation with the distributed result's
-    * schema; `seedOf`, when given, derives the seed from the held edges
-    * instead of collecting it. Otherwise each round is ONE job: the
+    * When the edges and the seed collect together (one job) within
+    * [[Iterate]]'s size rule, with no null and one [[Iterate.exactEq]]
+    * type for `src`, `dst`, `id` and `lbl`, the rounds run on the
+    * driver ([[fixpoint]]) and the result is a local relation with the
+    * distributed result's schema. Otherwise each round is ONE job: the
     * round frame carries the previous label (`old`) alongside the new
     * min, and the changed-label count rides the materialization job as
     * an observe() metric — no second fixpoint-detection scan over the
     * labels (which at 10^10 nodes is a full pass per round saved).
     * Either way the rounds, and [[lastRounds]], are the same.
     */
-  private[graft] def minLabel(edges: DataFrame, seed: DataFrame,
-    seedOf: Option[(Seq[(Any, Any)], Ordering[Any]) => Iterator[(Any, Any)]] = None): DataFrame = {
+  private[graft] def minLabel(edges: DataFrame, seed: DataFrame): DataFrame = {
     val s = seed.select(col("id"), col("lbl"))
     val e = edges.select(col("src"), col("dst"))
-    val (t, lt) = (s.schema("id").dataType, s.schema("lbl").dataType)
-    val ord = Iterate.order(lt)
-    val held = for {
-      _ <- Option.when(Iterate.exactEq(t) && Iterate.exactEq(lt) &&
-        e.schema.forall(_.dataType == t))(())
-      es <- Iterate.collectIfFits(e).flatMap(pairsOf)
-      ss <- seedOf match {
-        case Some(f) => Some(f(es.toSeq, ord))
-        case None => Iterate.collectIfFits(s).flatMap(pairsOf).map(_.iterator)
+    val t = s.schema("id").dataType
+    val held = Option.when(Iterate.exactEq(t) &&
+      (s.schema ++ e.schema).forall(_.dataType == t))(())
+      .flatMap(_ => Iterate.collectIfFits(e.withColumn("edge", lit(true))
+        .unionAll(s.withColumn("edge", lit(false)))))
+      .flatMap { rows =>
+        val (es, ss) = rows.partition(_.getBoolean(2))
+        pairsOf(es).zip(pairsOf(ss))
       }
-    } yield (es, ss)
     held match {
-      case Some((es, ss)) =>
-        val out = fixpoint(es, ss, ord)
-        // the round's schema, planned over empty frames of the inputs'
-        // schemas: no lineage shared with the inputs, no job
-        val spark = s.sparkSession
-        def empty(df: DataFrame) = spark.createDataFrame(List.empty[Row].asJava, df.schema)
-        Iterate.local(spark, out.iterator.map { case (id, l) => Row(id, l) }.toSeq,
-          minLabelRound(empty(s), empty(e)).select(col("id"), col("lbl")).schema)
-      case None =>
-        var labels = Iterate.materialize(s)
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0) {
-          rounds += 1
-          val (next, n) = Iterate.materialize(minLabelRound(labels, e),
-            sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
-              .otherwise(0L)), col("id"), col("lbl"))
-          labels = next
-          changed = n
-        }
-        lastRounds = rounds
-        labels
+      case Some((es, ss)) => labelsOf(s, e, fixpoint(es, ss.iterator, Iterate.order(t)))
+      case None => rounds(s, e)
     }
+  }
+
+  /** Driver-computed labels as a local relation with the schema of
+    * [[minLabel]]'s distributed result over `seed` and `edges`, planned
+    * over empty frames of their schemas: no lineage shared with the
+    * inputs, no job.
+    */
+  private def labelsOf(seed: DataFrame, edges: DataFrame,
+    labels: collection.Map[Any, Any]): DataFrame = {
+    val spark = seed.sparkSession
+    def empty(df: DataFrame) = spark.createDataFrame(List.empty[Row].asJava, df.schema)
+    Iterate.local(spark, labels.iterator.map { case (id, l) => Row(id, l) }.toSeq,
+      minLabelRound(empty(seed.select(col("id"), col("lbl"))),
+        empty(edges.select(col("src"), col("dst")))).select(col("id"), col("lbl")).schema)
+  }
+
+  /** [[minLabel]]'s distributed loop: one materialized round per job
+    * until no label decreases. Records [[lastRounds]].
+    */
+  private def rounds(seed: DataFrame, edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    var labels = Iterate.materialize(seed.select(col("id"), col("lbl")))
+    var changed = 1L
+    var n = 0
+    while (changed > 0) {
+      n += 1
+      val (next, c) = Iterate.materialize(minLabelRound(labels, e),
+        sum(when(col("old").isNull || col("lbl") < col("old"), 1L)
+          .otherwise(0L)), col("id"), col("lbl"))
+      labels = next
+      changed = c
+    }
+    lastRounds = n
+    labels
   }
 
   /** [[minLabelRound]]s on the driver until no label changes: each

@@ -103,13 +103,20 @@ object Iterate {
   }
 
   /** `df`'s rows in one job, or None when they would not fit the size
-    * rule. Each of the P partitions reads at most its share of the
-    * rule's rows plus one and sends at most its share; a partition that
-    * passes its share says no ([[takeWithin]]).
+    * rule. Each of the P partitions sends at most its share of the
+    * rule's rows plus one, and a partition that fills that share says
+    * no, so telling costs the driver at most the rule's rows plus P.
     */
   def collectIfFits(df: DataFrame): Option[Array[Row]] = {
     val cap = maxRows(df)
-    if (cap < 0) None else takeWithin(df.rdd, cap)(_ => 1L)
+    if (cap < 0) None
+    else {
+      val rdd = df.rdd
+      val share = math.min(cap / math.max(rdd.getNumPartitions, 1) + 1,
+        Int.MaxValue.toLong).toInt
+      val parts = rdd.mapPartitions(it => Iterator(it.take(share).toArray)).collect()
+      Option.when(parts.forall(_.length < share))(parts.flatten)
+    }
   }
 
   /** The size rule in bytes of compactly held rows (primitive arrays,
@@ -131,7 +138,9 @@ object Iterate {
   /** `rdd`'s items in one job, or None when their total `weight` would
     * pass `budget`: each of the P partitions sends items while their
     * weight stays within its share, budget / P, and says no at the
-    * first item past it. A weight of `Long.MaxValue` never fits.
+    * first item past it. A weight of `Long.MaxValue` never fits. The
+    * weighted form of [[collectIfFits]], for rows whose size Spark's
+    * per-row estimate does not see (arrays).
     */
   def takeWithin[T: ClassTag](rdd: RDD[T], budget: Long)(
     weight: T => Long): Option[Array[T]] = {

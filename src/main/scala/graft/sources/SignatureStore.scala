@@ -80,6 +80,17 @@ object SignatureStore {
     if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(s"${table}_next"))
       spark.sql(s"ALTER TABLE ${table}_next RENAME TO $table")
 
+  /** [[rollForward]] of both swapped tables of a store, the signatures
+    * ([[compactTombstones]]) and the tombstones ([[appendSignatures]]):
+    * every entry point that reads or writes either one calls it first,
+    * so a stranded `<sig>_del_next` is renamed in, not hidden from the
+    * anti-join and then overwritten by the next swap.
+    */
+  private def rollForwardStore(spark: SparkSession, table: String): Unit = {
+    rollForward(spark, table)
+    rollForward(spark, tombTable(table))
+  }
+
   /** Stored signatures minus tombstoned docs — what every consumer
     * reads. Deletion is a broadcast anti-join against the (bounded)
     * tombstone table, not a table rewrite: a bucketed catalog table
@@ -91,6 +102,7 @@ object SignatureStore {
     */
   def liveSignatures(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
+    rollForwardStore(spark, table)
     val sigs = spark.table(table)
     if (!spark.catalog.tableExists(tombTable(table))) sigs
     else sigs.join(broadcast(spark.table(tombTable(table))),
@@ -104,9 +116,11 @@ object SignatureStore {
     * immediately: [[pairs]] / [[incrementalPairs]] read through
     * [[liveSignatures]].
     */
-  def forget(ids: DataFrame, table: String): Unit =
+  def forget(ids: DataFrame, table: String): Unit = {
+    rollForwardStore(ids.sparkSession, table)
     ids.select("doc_id").distinct()
       .write.mode(SaveMode.Append).saveAsTable(tombTable(table))
+  }
 
   /** Fold tombstones into the physical table: rewrite the signature
     * table filtered (same bucket spec, read off the catalog) and drop
@@ -114,6 +128,7 @@ object SignatureStore {
     * delete.
     */
   def compactTombstones(spark: SparkSession, table: String): Unit = {
+    rollForwardStore(spark, table)
     if (!spark.catalog.tableExists(tombTable(table))) return
     replaceTable(spark, table,
       bucketedWriter(liveSignatures(spark, table), table))
@@ -188,6 +203,7 @@ object SignatureStore {
   def appendSignatures(newSig: DataFrame, newDocs: DataFrame,
     table: String): Unit = {
     val spark = newDocs.sparkSession
+    rollForwardStore(spark, table)
     bucketedWriter(newSig, table).mode(SaveMode.Append).saveAsTable(table)
     // a NEW observation of an id supersedes its tombstone (re-consent /
     // takedown reversal): without this, a doc forgotten then re-ingested

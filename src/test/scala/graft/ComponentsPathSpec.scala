@@ -81,9 +81,10 @@ class ComponentsPathSpec extends AnyFunSuite {
     val sym = pairs.select(col("a_id").as("src"), col("b_id").as("dst")).localCheckpoint()
     val seed = sym.select(col("src").as("id"), col("src").as("lbl")).localCheckpoint()
     // the result is a local relation: building it costs the collects
+    // edges and seed come back in one collect
     val (_, fixJobs) = JobCounter(spark.sparkContext)(Components.minLabel(sym, seed))
-    assert(fixJobs == 2, s"$fixJobs jobs")
-    // fromPairs derives its seed from the held edges: one collect
+    assert(fixJobs == 1, s"$fixJobs jobs")
+    // fromPairs holds the pairs alone and derives the seed from them
     val cut = pairs.localCheckpoint()
     val (_, ccJobs) = JobCounter(spark.sparkContext)(Components.fromPairs(cut))
     assert(ccJobs == 1, s"$ccJobs jobs")

@@ -145,4 +145,36 @@ class ForgetSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSeq.sorted
     assert(after == wantAll)
   }
+
+  test("a signature or tombstone swap stopped before its rename is rolled forward") {
+    val docs = Tables.docsAug(spark, sf).filter(col("doc_id") % 3 === 0)
+    val table = "sig_swap_t"
+    Seq(table, s"${table}_next", s"${table}_del", s"${table}_del_next")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    SignatureStore.build(docs, table)
+    def pairsOver(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashPairsFrom(Dedup.minhashSignatures(Dedup.shingleDocs(d)))
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+    def live = SignatureStore.pairs(spark, table)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    val a = docs.filter(col("doc_id") >= 1000000L).select(col("doc_id"))
+    val b = docs.filter(col("doc_id") < 1000000L && col("doc_id") % 2 === 0)
+      .select(col("doc_id"))
+    val wantA = pairsOver(docs.join(a, Seq("doc_id"), "left_anti"))
+    val wantAB = pairsOver(docs.join(a.unionAll(b), Seq("doc_id"), "left_anti"))
+    assert(wantA != pairsOver(docs) && wantAB != wantA, "forgetting must change the pairs")
+
+    SignatureStore.forget(a, table)
+    // appendSignatures' tombstone swap dropped `_del` and stopped
+    spark.sql(s"ALTER TABLE ${table}_del RENAME TO ${table}_del_next")
+    assert(live == wantA, "stranded tombstones must still hide their docs")
+    spark.sql(s"ALTER TABLE ${table}_del RENAME TO ${table}_del_next")
+    SignatureStore.forget(b, table)
+    // compactTombstones' signature swap dropped the table and stopped
+    spark.sql(s"ALTER TABLE $table RENAME TO ${table}_next")
+    assert(live == wantAB, "a forget after the crash must keep the stranded tombstones")
+    SignatureStore.compactTombstones(spark, table)
+    assert(!spark.catalog.tableExists(s"${table}_del"))
+    assert(live == wantAB)
+  }
 }
